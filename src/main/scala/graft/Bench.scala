@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark harness. Prints ONE short JSON line (driver contract) and
   * writes the FULL per-query detail to bench_out.json (committed to git at
@@ -90,59 +90,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val cpusN = scala.util.Try(cpus.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // data-adaptive default, env-overridable — see shuffleDefault above
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", shuffleDefault(cpusN, inputBytes(sfDir)).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.EventsNanosConf, "true")
-      // 8MB threshold (round-8 matrix A/B, docs/BENCH_NOTES.md): true
-      // dimension tables (≤ a few MB) still broadcast, but the 150 k-row
-      // orders FACT side no longer does — its per-execution driver-side
-      // broadcast build cost ~0.3–0.4 s/query (q3 1.09 → 0.67 s as a
-      // shuffle join). That is also the honest scale plan: at 100 TB a
-      // fact side is never broadcast-able.
-      .config("spark.sql.autoBroadcastJoinThreshold", sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "8MB"))
-      // AQE off for the local bench (round-8 matrix A/B): with pre-spread
-      // cached inputs and sub-second stages, AQE's per-stage
-      // materialize-and-replan roundtrips cost 0.05–0.3 s/query and its
-      // runtime re-optimizations (coalesce, skew split, join demotion)
-      // have nothing to improve at this size. A cluster deployment keeps
-      // it on — this is harness latency tuning, recorded in the artifact.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // shuffle/spill codec A/B knob (guide §2.3) — default is Spark's own
-      // default (lz4); zstd measured at sf3 in BENCH_NOTES §52
-      .config("spark.io.compression.codec", sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      // local-harness opt-in: test tables are single-row-group files, so
-      // heavy-compute queries repartition them across cores (queries.Det)
-      .config(graft.queries.Det.SpreadConf, sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
-      .getOrCreate()
-    // ERROR, not WARN: each WindowExec "No Partition Defined" WARN is ~190
-    // chars and the round-4 run emitted 8 of them — ~1.5 KB of the driver's
-    // 2000-char tail capture, crowding the one line that matters.
-    spark.sparkContext.setLogLevel("ERROR")
+    val benchAction = sys.env.getOrElse("SPARK_GRAFT_ACTION", "noop")
+    require(actions.contains(benchAction),
+      s"SPARK_GRAFT_ACTION must be one of ${actions.keys.toSeq.sorted.mkString("|")}, got '$benchAction'")
+    val runAction = actions(benchAction)
+    val spark = session(cpus, sfDir)
     // Warm-cache the input tables (default on; SPARK_GRAFT_CACHE=false for
-    // the cold-scan variant). BASELINE.md's DuckDB numbers are WARM runs —
-    // data resident in the buffer pool / OS page cache — so the comparable
-    // Spark posture is the cached-table one (spark.catalog.cacheTable is
-    // the idiomatic form). Mechanism: persisting each Tables.table plan
-    // once makes Spark's CacheManager substitute the InMemoryRelation into
-    // EVERY query by canonical-subtree match — no query code changes, and
-    // the ~0.2 s single-row-group parquet-open constant per scan
-    // (docs/BENCH_NOTES.md component floors) drops out, exactly as it has
-    // already dropped out of the DuckDB side. bench_out.json records the
-    // mode in the `cached` field.
-    val cacheTables = sys.env.getOrElse("SPARK_GRAFT_CACHE", "true").toBoolean
-    if (cacheTables) Tables.names.foreach { n =>
-      val df = Tables.table(spark, sfDir, n)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      df.count() // materialize now, not inside the first timed query
-    }
+    // the cold-scan variant); bench_out.json records the mode in `cached`.
+    val cached = sys.env.getOrElse("SPARK_GRAFT_CACHE", "true").toBoolean
+    if (cached) cacheTables(spark, sfDir)
     // Dev-only subset filter: SPARK_GRAFT_ONLY=headline (the BASELINE.md
     // 10-query suite) or a comma-separated query-name list. Used for quick
     // local A/Bs; the driver never sets it. A filtered run does NOT write
@@ -152,23 +109,6 @@ object Bench {
       case csv => csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
     }
     val benchQueries = only.fold(SparkEntry.queries)(s => SparkEntry.queries.view.filterKeys(s).toMap)
-    // Timed action: a noop-sink WRITE, not count(). count() plants an
-    // Aggregate on top of the plan, and the optimizer then legitimately
-    // prunes everything the count doesn't need — for a pure per-row
-    // projection query (string_funcs, lang_id, winnow_fingerprints, …)
-    // that collapses the whole operator to a metadata row count, and it
-    // elides every query's final ORDER BY. The DuckDB baseline MATERIALIZED
-    // its results (fetch over the full query, sort included), so the
-    // comparable — and honest — Spark action is full materialization into
-    // the no-op DSv2 sink: every column computed, the contract sort
-    // executed, nothing persisted. SPARK_GRAFT_ACTION=count keeps the old
-    // action for A/Bs (measured deltas in docs/BENCH_NOTES.md).
-    // Whitelisted + normalized via BenchAction (ADVICE r7): an unknown
-    // value fails fast instead of silently running noop while recording
-    // the raw (unescaped) env string in the artifact.
-    val benchAction = BenchAction.resolve()
-    def runAction(df: org.apache.spark.sql.DataFrame): Unit =
-      BenchAction.run(benchAction, df)
     // Untimed warmup at sfDir: compiles the generated code (Janino) and JITs
     // the hot paths the timed passes will take, including AQE's re-planned
     // stages at this scale.
@@ -190,7 +130,7 @@ object Bench {
     // the min is taken over SUCCESSFUL iterations, and the errors field
     // flags both fully-failed queries (excluded from total) and flaky ones
     // (timed, but marked) so breakage can never silently improve the total.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def timeOnce(fn: (SparkSession, String) => DataFrame)
         : (Double, Option[String]) = {
       val t0 = System.nanoTime()
       val err =
@@ -398,10 +338,10 @@ object Bench {
       s""""aqe":$aqe,"shuffle":$sh,"broadcast":"$bc""""
     }
     val line = shortLine(total, head, headKey, headTotal, timed.size, errJson,
-      sfDir, iters, retries, inflJson, inflAdjJson, canaryJson, cacheTables,
-      benchAction.toString, confJson)
+      sfDir, iters, retries, inflJson, inflAdjJson, canaryJson, cached,
+      benchAction, confJson)
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed.toSeq)},"baseline10_total":$headTotal,"errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":$cacheTables,"action":"$benchAction",$confJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed.toSeq)},"baseline10_total":$headTotal,"errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":$cached,"action":"$benchAction",$confJson}"""
     if (only.isEmpty) try {
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(fullLine) finally w.close()
@@ -413,4 +353,82 @@ object Bench {
     println(line)
     Console.out.flush()
   }
+
+  /** Local cores for every harness main: `SPARK_GRAFT_CPUS` when it is a
+    * positive count, else the JVM's available processors. */
+  private[graft] def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The bench session posture, shared by Bench and the dev tools
+    * (PlanAudit, PlanFormatted, LshOccupancy) so their plans are the
+    * benched plans. Each `SPARK_GRAFT_*` override below is read here only. */
+  private[graft] def session(cpus: Int, sfDir: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      // data-adaptive default, env-overridable — see shuffleDefault above
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", shuffleDefault(cpus, inputBytes(sfDir)).toString))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(Tables.EventsNanosConf, "true")
+      // 8MB threshold (round-8 matrix A/B, docs/BENCH_NOTES.md): true
+      // dimension tables (≤ a few MB) still broadcast, but the 150 k-row
+      // orders FACT side no longer does — its per-execution driver-side
+      // broadcast build cost ~0.3–0.4 s/query (q3 1.09 → 0.67 s as a
+      // shuffle join). That is also the honest scale plan: at 100 TB a
+      // fact side is never broadcast-able.
+      .config("spark.sql.autoBroadcastJoinThreshold", sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "8MB"))
+      // AQE off for the local bench (round-8 matrix A/B): with pre-spread
+      // cached inputs and sub-second stages, AQE's per-stage
+      // materialize-and-replan roundtrips cost 0.05–0.3 s/query and its
+      // runtime re-optimizations (coalesce, skew split, join demotion)
+      // have nothing to improve at this size. A cluster deployment keeps
+      // it on — this is harness latency tuning, recorded in the artifact.
+      // It also keeps static plans inspectable: the adaptive wrapper
+      // hides codegen spans and exchange reuse until execution.
+      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
+      // local-harness opt-in: test tables are single-row-group files, so
+      // heavy-compute queries repartition them across cores (queries.Det)
+      .config(graft.queries.Det.SpreadConf, sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
+      .getOrCreate()
+    // ERROR, not WARN: each WindowExec "No Partition Defined" WARN is ~190
+    // chars and the round-4 run emitted 8 of them — ~1.5 KB of the driver's
+    // 2000-char tail capture, crowding the one line that matters.
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** Warm-caches every input table. BASELINE.md's DuckDB numbers are WARM
+    * runs — data resident in the buffer pool / OS page cache — so the
+    * comparable Spark posture is the cached-table one. Persisting each
+    * Tables.table plan once makes Spark's CacheManager substitute the
+    * InMemoryRelation into EVERY query by canonical-subtree match — no
+    * query code changes, and the ~0.2 s single-row-group parquet-open
+    * constant per scan (docs/BENCH_NOTES.md component floors) drops out,
+    * exactly as it has already dropped out of the DuckDB side. */
+  private def cacheTables(spark: SparkSession, sfDir: String): Unit =
+    Tables.names.foreach { n =>
+      val df = Tables.table(spark, sfDir, n)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      df.count() // materialize now, not inside the first timed query
+    }
+
+  /** Timed actions, chosen by SPARK_GRAFT_ACTION (whitelisted, ADVICE r7:
+    * an unknown value fails fast instead of silently running noop while
+    * the raw env string lands in the artifact).
+    *  - noop (default): full materialization through Spark's no-op DSv2
+    *    sink — every column computed, the contract ORDER BY executed,
+    *    nothing persisted. The honest posture vs DuckDB's result fetch.
+    *    count() would plant an Aggregate the optimizer prunes under: a
+    *    pure per-row projection collapses to a metadata row count and
+    *    every final ORDER BY is elided (measured deltas in
+    *    docs/BENCH_NOTES.md).
+    *  - count: that legacy pruned action, kept for A/Bs against old
+    *    artifacts.
+    *  - rdd: toRdd.count() — measured ≈ noop; kept for cross-checks. */
+  private val actions: Map[String, DataFrame => Unit] = Map(
+    "noop" -> (df => df.write.mode("overwrite").format("noop").save()),
+    "count" -> (df => df.count(): Unit),
+    "rdd" -> (df => df.queryExecution.toRdd.count(): Unit))
 }

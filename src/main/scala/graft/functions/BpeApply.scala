@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * is semantically exact but physically explosive: each fold references
   * its input 3-4×, and CollapseProject re-inlines the chained
   * projections, so the executed plan grows ~4^k nodes (measured round
-  * 11, tools/BpeApplyProbe at sf0.01: plan text 7 KB at k=1, 114 KB at
+  * 11, BENCH_NOTES §22, at sf0.01: plan text 7 KB at k=1, 114 KB at
   * k=4, 1.0 MB at k=6 with 43 s execution; k=12 never returned).
   * Keeping the projections un-collapsed would still leave k interpreted
   * lambda passes per row. The expression replaces all of it with one

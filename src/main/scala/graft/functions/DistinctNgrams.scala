@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * runs INTERPRETED per element — the transform() lambda is a non-codegen
   * closure and each window pays a per-element Invoke + concat through the
   * interpreted eval path. (Attribution corrected round 11 after ADVICE
-  * r10 + a scaling profile, tools/ArrayDistinctProbe + BENCH_NOTES §20:
+  * r10 + a scaling profile, BENCH_NOTES §20:
   * ArrayDistinct itself is LINEAR on string arrays in Spark 4.1.2 — its
   * interpreted eval takes the SQLOpenHashSet O(n) path for any element
   * type with binary-equality semantics, strings included; the pairwise

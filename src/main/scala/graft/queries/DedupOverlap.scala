@@ -186,20 +186,26 @@ object DedupOverlap {
     // union inlined, the registered plan held THREE
     // DeduplicateRelations-cloned copies of the whole 7-screen subtree
     // (both self-join sides + the loners aggregate), and Catalyst walked
-    // all three every rule — PlanCost measured 2.2–2.9 s of pure DRIVER
-    // PLANNING per execution, ~35–45 % of the benched row (the rule dump's
-    // top entries — DeduplicateRelations / PruneFilters / ColumnPruning /
-    // RemoveRedundantAliases — all scale with tree size, and ReuseExchange
-    // already deduplicated the EXECUTION, so the extra copies bought
-    // nothing). The checkpoint truncates the lineage at the union's
-    // exchange barrier, so the join + aggregates plan over a
+    // all three every rule — 2.2–2.9 s of pure DRIVER PLANNING per
+    // execution, ~35–45 % of the benched row (BENCH_NOTES §56: the rule
+    // dump's top entries — DeduplicateRelations / PruneFilters /
+    // ColumnPruning / RemoveRedundantAliases — all scale with tree size,
+    // and ReuseExchange already deduplicated the EXECUTION, so the extra
+    // copies bought nothing). The checkpoint truncates the lineage at the
+    // union's exchange barrier, so the join + aggregates plan over a
     // flag-set-sized scan instead. State is duplicate-set-sized
     // ((method, doc_id) per flagged doc — 5885 rows at sf0.1, ≪ corpus),
     // the same bounded-intermediate localCheckpoint posture as the
     // k-means chains; the screens' stages still run concurrently inside
-    // the one checkpoint job (StageTimeline evidence in plans/r15/).
+    // the one checkpoint job (stage timelines in plans/r15/).
     // This is NOT the r12-rejected corpus-token-frame checkpoint: that
     // one materialized a corpus-sized stream; flags are output-sized.
+    // Cluster posture: localCheckpoint keeps the union's blocks in executor
+    // storage with no replica and truncates their lineage, so losing an
+    // executor that holds one fails the consuming action (Spark cannot
+    // recompute the block); re-running the query rebuilds the union. A
+    // deployment that must survive executor loss needs a reliable
+    // checkpoint() into a checkpoint dir on durable storage instead.
     val flags = flagUnion(spark, sf).localCheckpoint()
     val overlap = flags.select(col("method").as("method_a"), col("doc_id"))
       .join(flags.select(col("method").as("method_b"), col("doc_id")), Seq("doc_id"))

@@ -30,10 +30,10 @@ object Det {
   /** Conf key: when "true", [[graft.Tables.table]] repartitions every
     * loaded table across the session's cores (size-scaled — see
     * `Tables.spreadIfEnabled`). Set ONLY by local harness mains
-    * (Bench/Profile/Scratch), where each test table is one small parquet
-    * file (= one row group = one unsplittable scan task) yet the work
-    * above the scan is heavy (per-row hashing, explode fan-out). A real
-    * cluster never sets it: there the scan arrives in thousands of
+    * (Bench and the tools on its session), where each test table is one
+    * small parquet file (= one row group = one unsplittable scan task) yet
+    * the work above the scan is heavy (per-row hashing, explode fan-out).
+    * A real cluster never sets it: there the scan arrives in thousands of
     * row-group splits and injecting a corpus-wide shuffle would be a
     * scale bug.
     */

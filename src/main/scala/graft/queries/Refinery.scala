@@ -157,10 +157,10 @@ object Refinery {
     * The keyed repartition before the contract sort is a SAMPLER
     * BARRIER (r11): with the projection feeding orderBy directly, the
     * range exchange's bounds sampler re-executes the whole md5 + window-
-    * minima pipeline a second time (Scratch at sf1: two 0.86 s stages,
+    * minima pipeline a second time (sf1, BENCH_NOTES §26: two 0.86 s stages,
     * 24 s CPU each, identical 50k-row reads). The barrier shuffles only
     * the five small RESULT columns, so the sampler re-reads a shuffle
-    * file instead. Scratch A/B at sf1: 2.10 → 1.25 s wall, and the
+    * file instead. A/B at sf1: 2.10 → 1.25 s wall, and the
     * doubled 24 core-s projection stage collapses to one.
     */
   def winnowFingerprints(spark: SparkSession, sf: String): DataFrame =
@@ -354,7 +354,7 @@ object Refinery {
     // mergePairFold projections: CollapseProject re-inlines chained
     // fold steps into a ~4^k-node expression (measured: plan text 7 KB
     // at k=1 → 1.0 MB at k=6 with 43 s execution; k=12 never returned —
-    // tools/BpeApplyProbe, BENCH_NOTES §22). RefinerySpec pins the
+    // BENCH_NOTES §22). RefinerySpec pins the
     // expression element-for-element to the fold form at collapsible k.
     wf.select(col("wn"),
       explode(graft.functions.BpeApply.bpe_apply(col("w"), BpeMerges)).as("symbol"))

@@ -64,7 +64,7 @@ object Retrieval {
     // isNotNull seeds: data-level no-ops that mirror the constraints the
     // scoring joins infer into only their copies of the dl / tf subtrees —
     // without them the subtrees stop canonicalizing equal and each
-    // derived aggregate re-runs its own corpus explode (r14 GenScan: 4
+    // derived aggregate re-runs its own corpus explode (r14 Generate sweep: 4
     // Generates for the 2 fundamental passes; BENCH_NOTES §53).
     val toks = Tables.documents(spark, sf)
       .select(col("doc_id"), explode(TextOps.tokensCol).as("token"))
@@ -264,7 +264,7 @@ object Retrieval {
     // InferFiltersFromConstraints pushed DIFFERENT isnotnull predicates
     // into the c1 vs c2 subtrees (isnotnull(substring(bg,1,1)) vs
     // isnotnull(bg)), the exchanges no longer canonicalized equal, and
-    // the explode + partial-count pipeline ran TWICE (Scratch at sf1: two
+    // the explode + partial-count pipeline ran TWICE (sf1, BENCH_NOTES §26: two
     // CompletableFuture stages each writing the identical 4.59M rows at
     // ~36 s CPU). c1 is therefore now derived FROM c2 — c1(a) is the sum
     // of c2 over bigrams starting with a, an alphabet-sized aggregate of
@@ -278,7 +278,7 @@ object Retrieval {
     // InferFiltersFromConstraints has nothing to add in ANY branch and
     // every consumer of the docBg exchange canonicalizes identically
     // (semantically a no-op: substring of non-null text is never null).
-    // Combined Scratch A/B at sf1: 4.43-4.69 → 3.84 s wall, stage-time
+    // Combined A/B at sf1: 4.43-4.69 → 3.84 s wall, stage-time
     // 7.2 → 3.6 s; the 4.59M-row explode+partial-count stage now appears
     // exactly once (single-pass CPU rises ~36 → 52 core-s because the
     // seed filter evaluates two substrings per char row — still a net
@@ -293,7 +293,7 @@ object Retrieval {
     // and the main stream (replacing the old groupBy exchange); hash, not
     // roundRobin, because RoundRobinPartitioning pays a defensive
     // per-partition sort (sortBeforeRepartition) that a keyed exchange
-    // skips. Scratch A/B at sf1: 3.84 → 2.57 s wall (round open: 4.43-
+    // skips. A/B at sf1 (BENCH_NOTES §28): 3.84 → 2.57 s wall (round open: 4.43-
     // 4.69 s), sf3 10.3 → 5.5 s; identical output (oracle +
     // RetrievalSpec recompute).
     val docBg = docs

@@ -156,7 +156,7 @@ object TextOps {
     // isNotNull seeds (data no-ops): mirror the constraints the scoring
     // join infers into only ITS copy of the tf subtree, so both consumers
     // canonicalize equal and the tokenize explode is planned once
-    // (r14 GenScan found it planned twice; BENCH_NOTES §53).
+    // (the r14 Generate sweep found it planned twice; BENCH_NOTES §53).
     val tf = docs
       .select(col("doc_id"), explode(tokensCol).as("token"))
       .where(col("token") =!= "" && col("doc_id").isNotNull && col("token").isNotNull)
@@ -653,7 +653,7 @@ object TextOps {
     * two at diameter 11 and two at 12, max cluster 583 docs) — diameter
     * GROWS with corpus size, so a fixed unroll ([[CcRounds]]) or a
     * diameter-bound loop is the wrong 100 TB posture. Measured round
-    * counts over the sf1 pair graph (tools/CcRoundsProbe, identical
+    * counts over the sf1 pair graph (BENCH_NOTES §21, identical
     * labels): stars 5 vs label loop 11, equal wall time at this scale
     * (4.9 s both — a stars round does ~2 aggregates + 2 joins vs the
     * label round's 1 + 1), with the gap opening as diameter grows.
@@ -927,8 +927,9 @@ object TextOps {
     // filter output lands above the 8MB bar at sf1, turning both the anti
     // and the semi join into SortMergeJoins that each re-sort the 2.5M-row
     // exploded gram stream by its (lang,source,bg) string key. Measured
-    // (Scratch, sf1, isolated): those sorts were the bulk of 3 of the 4
-    // heavy stages; see the shuffle_hash note below for the combined A/B.
+    // (stage attribution, sf1, isolated; BENCH_NOTES §26): those sorts
+    // were the bulk of 3 of the 4 heavy stages; see the shuffle_hash note
+    // below for the combined A/B.
     val rare = bigrams.join(broadcast(hotBgs), Seq("lang", "source", "bg"), "left_anti")
     // shuffle_hash (r11): the self-join's equi-key is the string triple;
     // SMJ sorts BOTH 2.5M-row sides, and the sort dominates the probe.
@@ -937,7 +938,7 @@ object TextOps {
     // where a shuffled hash join beats SMJ. Combined with the hotBgs
     // broadcast + the three r11 changes below (length filter, UB
     // prefilter, repartition barrier), canary-matched stash A/B at sf1:
-    // 19.73 → 7.85 s (knn canary 13.98 both legs); Scratch wall
+    // 19.73 → 7.85 s (knn canary 13.98 both legs); isolated wall
     // 10.7-11.7 → 5.4 s; sf0.1 and sf3 unchanged within window noise.
     // Output identical (143/143 oracle + TextOpsAltSpec pins). At 100 TB
     // the same argument holds because the cap, not the corpus, bounds
@@ -991,11 +992,11 @@ object TextOps {
       // repartition BARRIER before the contract sort (r11): orderBy plans a
       // range exchange whose bounds SAMPLING re-executes the stage feeding
       // it — here the final agg + both hot joins + every array_intersect.
-      // Scratch(sf1) showed two 4.3 s stages each reading the identical
-      // 1.68M-row exchange with ~30 s CPU apiece: the whole reduce pipeline
-      // ran TWICE. The round-robin exchange materializes the (tiny,
-      // post-threshold) pair set so the sampler re-reads a shuffle file
-      // instead of recomputing the plan. Costs one extra shuffle of the
+      // Stage attribution at sf1 (BENCH_NOTES §26) showed two 4.3 s
+      // stages each reading the identical 1.68M-row exchange with ~30 s CPU
+      // apiece: the whole reduce pipeline ran TWICE. The round-robin
+      // exchange materializes the (tiny, post-threshold) pair set so the
+      // sampler re-reads a shuffle file instead of recomputing the plan. Costs one extra shuffle of the
       // RESULT rows only — scale-safe by construction.
       // keyed, not round-robin: hashpartitioning skips RoundRobin's
       // defensive sortBeforeRepartition and scales with

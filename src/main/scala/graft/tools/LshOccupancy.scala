@@ -1,7 +1,6 @@
 // dev measurement tool — not part of the shipped library surface
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Bucket-occupancy measurement for the LSH candidate generator (VERDICT r8
@@ -23,14 +22,8 @@ import org.apache.spark.sql.functions._
 object LshOccupancy {
   def main(args: Array[String]): Unit = {
     val sfDirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.Tables.EventsNanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session; shuffle partitions derive from the first sf dir
+    val spark = graft.Bench.session(graft.Bench.cpus, sfDirs.head)
     sfDirs.foreach { sfDir =>
       val tb = graft.queries.Vectors.lshBucketTable(spark, sfDir).cache()
       val n = tb.where(col("t") === 0).count()

@@ -2,7 +2,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Prints a scale-readiness audit line per registered query: number of
   * shuffle exchanges, join strategies chosen, whether any parquet scan
@@ -13,18 +12,10 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE off for the audit only: the adaptive wrapper hides codegen
-      // spans (and runtime join rewrites) until execution, and this tool
-      // inspects the STATIC plan. Runtime plans can only improve on it
-      // (AQE coalesces partitions / upgrades joins / splits skew).
-      .config("spark.sql.adaptive.enabled", "false")
-      .config(graft.Tables.EventsNanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the bench posture (AQE off, so the static plan shows codegen spans
+    // and exchange reuse; runtime plans can only improve on it), uncached:
+    // the audit reads parquet scans' ReadSchema
+    val spark = graft.Bench.session(graft.Bench.cpus, sfDir)
     // same subset knob as Bench: SPARK_GRAFT_ONLY=a,b,c audits those rows
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

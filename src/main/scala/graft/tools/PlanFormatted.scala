@@ -2,19 +2,15 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Writes `explain("formatted")` output for the named queries to
-  * `<outDir>/<query>_<suffix>.txt`, one file per query, under the same
-  * session CONFIGURATION Bench uses (shuffle partitions / broadcast
-  * threshold / AQE off). Two deliberate differences from the benched
+  * `<outDir>/<query>_<suffix>.txt`, one file per query, in Bench's session
+  * ([[graft.Bench.session]]). One deliberate difference from the benched
   * operator tree (ADVICE r14 item 4): Bench additionally warm-caches the
   * input tables, so its plans scan InMemoryRelation where these dumps
   * scan parquet — kept this way ON PURPOSE, because the dumps are the
   * evidence record for PushedFilters/ReadSchema claims, which an
-  * InMemoryTableScan would hide — and Bench's shuffle-partition default
-  * is data-derived while this tool pins the env default. Close to, not
-  * literally, the benched plans.
+  * InMemoryTableScan would hide.
   *
   * Usage: runMain graft.tools.PlanFormatted <sfDir> <outDir> <suffix> q1 q2 ...
   */
@@ -22,17 +18,7 @@ object PlanFormatted {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "8MB"))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config(graft.queries.Det.SpreadConf, sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
-      .config(graft.Tables.EventsNanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session(graft.Bench.cpus, sfDir)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

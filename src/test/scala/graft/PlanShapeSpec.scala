@@ -17,7 +17,9 @@ import SharedSpark._
   * These assert on `executedPlan.toString` of the STATIC plan (same posture
   * as tools/PlanAudit: AQE off — the adaptive wrapper renders exchange
   * reuse only at runtime), in an AQE-off child session sharing the test
-  * context. Cheap — nothing executes.
+  * context. The pinned plans never execute; only the builders' own eager
+  * steps do (the overlap report's flag-union checkpoint, the k-means and
+  * CC materializations), the same builder-side jobs GenBudgetSpec budgets.
   */
 class PlanShapeSpec extends AnyFunSuite {
 
@@ -95,7 +97,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // Round 15 (guide §3.3/§7.3): with the 7-screen union inlined, the
     // registered plan held three DeduplicateRelations-cloned copies of the
     // whole screen subtree and Catalyst planning alone cost 2.2–2.9 s per
-    // execution (PlanCost). The flag union is localCheckpoint'd
+    // execution (BENCH_NOTES §56). The flag union is localCheckpoint'd
     // (flag-set-sized state), so the registered plan must read it as
     // ExistingRDD scans — a FileScan or Generate here means the
     // truncation stopped working and the triple-copy plan is back.
