@@ -361,7 +361,7 @@ object Bench {
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** The bench session posture, shared by Bench and the dev tools
-    * (PlanAudit, PlanFormatted, LshOccupancy) so their plans are the
+    * (PlanAudit, PlanFormatted) so their plans are the
     * benched plans. Each `SPARK_GRAFT_*` override below is read here only. */
   private[graft] def session(cpus: Int, sfDir: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -425,10 +425,8 @@ object Bench {
     *    every final ORDER BY is elided (measured deltas in
     *    docs/BENCH_NOTES.md).
     *  - count: that legacy pruned action, kept for A/Bs against old
-    *    artifacts.
-    *  - rdd: toRdd.count() — measured ≈ noop; kept for cross-checks. */
+    *    artifacts. */
   private val actions: Map[String, DataFrame => Unit] = Map(
     "noop" -> (df => df.write.mode("overwrite").format("noop").save()),
-    "count" -> (df => df.count(): Unit),
-    "rdd" -> (df => df.queryExecution.toRdd.count(): Unit))
+    "count" -> (df => df.count(): Unit))
 }

@@ -43,12 +43,17 @@ object Tables {
     * and every later construction passes the schema explicitly. Keyed by
     * full path, so different scale dirs never cross; fixture files are
     * immutable for a session (regenerating testdata in place requires a
-    * new JVM, same as the cached-table posture).
+    * new JVM, same as the cached-table posture). Persisted indexes read
+    * through it too: a committed [[graft.ops.IndexStore]] directory's
+    * name embeds its source fingerprint and the directory only ever
+    * appears by atomic rename, so the schema under that path cannot
+    * change.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  private def readCachedSchema(spark: SparkSession, p: String): DataFrame = {
+  /** Reads immutable parquet at `p`, inferring its schema once per JVM. */
+  private[graft] def parquet(spark: SparkSession, p: String): DataFrame = {
     val schema = schemaCache.computeIfAbsent(p, _ => spark.read.parquet(p).schema)
     spark.read.schema(schema).parquet(p)
   }
@@ -62,7 +67,7 @@ object Tables {
         require(
           spark.conf.getOption(EventsNanosConf).contains("true"),
           s"reading events.parquet requires $EventsNanosConf=true in the session builder")
-        val raw = readCachedSchema(spark, path(sfDir, "events"))
+        val raw = parquet(spark, path(sfDir, "events"))
         // Layout-adaptive: the driver's file stores ts as TIMESTAMP(NANOS)
         // (reads as bigint ns under nanosAsLong); graft.tools.DataGen output
         // stores TIMESTAMP_NTZ(µs) directly (Spark cannot write nanos).
@@ -77,7 +82,7 @@ object Tables {
           case _ => raw.withColumn("ts", col("ts").cast("timestamp_ntz"))
         }
       case other =>
-        readCachedSchema(spark, path(sfDir, other))
+        parquet(spark, path(sfDir, other))
     }
     spreadIfEnabled(spark, sfDir, name, base)
   }

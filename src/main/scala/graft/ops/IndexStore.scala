@@ -15,6 +15,10 @@ package graft.ops
   *     — recipes are deterministic) index either wins the rename or finds
   *     the winner's complete directory and discards its own staging copy.
   *     No reader ever sees a half-written index.
+  *
+  * Every index is written through [[buildOnce]] and nothing else; probes
+  * read the committed part through [[graft.Tables.parquet]], whose schema
+  * cache is safe here because a committed directory never changes.
   */
 object IndexStore {
 
@@ -61,7 +65,7 @@ object IndexStore {
     * superclass, then verify the winner's `marker` file really exists
     * before discarding our staging copy.
     */
-  def commitAtomically(
+  private[graft] def commitAtomically(
       staging: java.nio.file.Path, dir: String, marker: String): Unit = {
     try
       java.nio.file.Files.move(staging, java.nio.file.Paths.get(dir),

@@ -114,7 +114,7 @@ object DocEmbed {
     // the derivation even when the materialized table exists.
     val hp = new org.apache.hadoop.fs.Path(p)
     val exists = hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
-    if (exists) spark.read.parquet(p)
+    if (exists) Tables.parquet(spark, p)
     else deriveDocEmbeddings(Tables.documents(spark, sf))
   }
 
@@ -255,13 +255,8 @@ object DocEmbed {
     * deterministic, so output is identical to the in-query form — the
     * probe registers against the SAME oracle SQL.
     */
-  def dedupEmbeddingDocProbe(spark: SparkSession, sf: String): DataFrame = {
-    val dir = docEmbedIndexDir(sf)
-    val resolved =
-      if (new java.io.File(s"$dir/vecs/_SUCCESS").exists()) dir
-      else buildDocEmbedIndex(spark, sf)
-    screenOverVectors(spark.read.parquet(s"$resolved/vecs"))
-  }
+  def dedupEmbeddingDocProbe(spark: SparkSession, sf: String): DataFrame =
+    screenOverVectors(Tables.parquet(spark, s"${buildDocEmbedIndex(spark, sf)}/vecs"))
 
   val dedupEmbeddingDocLshSql: String = {
     val compSums = (0 until Dims)

@@ -443,11 +443,7 @@ object Retrieval {
     * row multiplication.
     */
   def ngramNoveltyProbe(spark: SparkSession, sf: String): DataFrame = {
-    val dir = shingleIndexDir(sf)
-    val resolved =
-      if (new java.io.File(s"$dir/shingles/_SUCCESS").exists()) dir
-      else buildShingleIndex(spark, sf)
-    val ref = spark.read.parquet(s"$resolved/shingles")
+    val ref = Tables.parquet(spark, s"${buildShingleIndex(spark, sf)}/shingles")
       .select(col("sh"), lit(1).as("seen"))
     val probe = TextOps.distinctShinglesPerRow(
       Det.spreadSmallScan(spark, Tables.documents(spark, sf))

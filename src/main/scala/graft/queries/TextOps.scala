@@ -307,14 +307,9 @@ object TextOps {
     * math is deterministic, so output is identical to dedup_minhash_lsh
     * and it registers under the SAME oracle.
     */
-  def dedupMinhashProbe(spark: SparkSession, sf: String): DataFrame = {
-    val dir = minhashIndexDir(sf)
-    val resolved =
-      if (new java.io.File(s"$dir/bands/_SUCCESS").exists()) dir
-      else buildMinhashIndex(spark, sf)
-    bandPairs(spark.read.parquet(s"$resolved/bands"))
+  def dedupMinhashProbe(spark: SparkSession, sf: String): DataFrame =
+    bandPairs(Tables.parquet(spark, s"${buildMinhashIndex(spark, sf)}/bands"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   def buildMinhashIndex(spark: SparkSession, sf: String): String =
     graft.ops.IndexStore.buildOnce(minhashIndexDir(sf), "bands/_SUCCESS") { staging =>
@@ -1192,15 +1187,10 @@ object TextOps {
     * it. Deterministic md5 seed math ⇒ output identical to
     * [[dedupExactSubstring]]; registers under the SAME oracle.
     */
-  def dedupExactSubstringProbe(spark: SparkSession, sf: String): DataFrame = {
-    val dir = xsubIndexDir(sf)
-    val resolved =
-      if (new java.io.File(s"$dir/seeds/_SUCCESS").exists()) dir
-      else buildXsubIndex(spark, sf)
+  def dedupExactSubstringProbe(spark: SparkSession, sf: String): DataFrame =
     exactSubstringDedupWithIndex(
       Tables.documents(spark, sf),
-      spark.read.parquet(s"$resolved/seeds"))
-  }
+      Tables.parquet(spark, s"${buildXsubIndex(spark, sf)}/seeds"))
 
   def buildXsubIndex(spark: SparkSession, sf: String): String =
     graft.ops.IndexStore.buildOnce(xsubIndexDir(sf), "seeds/_SUCCESS") { staging =>

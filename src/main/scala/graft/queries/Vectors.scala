@@ -454,9 +454,10 @@ object Vectors {
     * output); at scale that is one bucket-keyed shuffle instead of four
     * join stages plus a union.
     */
-  /** The oracle twin of [[lshCandidatePairs]] — ONE definition consumed by
-    * both LSH oracles, so a bucketing change can never make the two
-    * registered queries disagree on candidate generation.
+  /** The oracle twin of the candidate pairs [[lshScoredPairs]] joins —
+    * ONE definition consumed by both LSH oracles, so a bucketing change
+    * can never make the two registered queries disagree on candidate
+    * generation.
     */
   // def, not val: dedupEmbeddingLshSql above interpolates this during
   // object init, and a val declared later would still be null at that point
@@ -503,11 +504,10 @@ object Vectors {
     * The embedding (and its norm, computed once per vector BEFORE the
     * 4-way explode) rides along so the self-join emits pairs already
     * carrying both sides' vectors — the r9 restructure that removed the
-    * post-candidate attach joins (see [[lshScoredPairs]]). Exposed
-    * private[graft] so tools/LshOccupancy measures the shipped scheme
-    * itself, never a re-derivation that could drift from it.
+    * post-candidate attach joins (see [[lshScoredPairs]]).
+    * docs/LSH_OCCUPANCY.md measured its occupancy.
     */
-  private[graft] def lshBucketTable(spark: SparkSession, sf: String): DataFrame =
+  private def lshBucketTable(spark: SparkSession, sf: String): DataFrame =
     lshBucketTableOf(Tables.embeddings(spark, sf))
 
   private[graft] def lshBucketTableOf(e: DataFrame): DataFrame = {
@@ -630,15 +630,6 @@ object Vectors {
         Seq("t", "bkt"))
       .where(col("vec_a") < col("vec_b"))
 
-  /** Distinct (vec_a < vec_b) candidate pairs — kept for measurement
-    * (tools/LshOccupancy's realized-candidate count) and recall specs;
-    * the registered queries use [[lshScoredPairs]] directly.
-    */
-  private[graft] def lshCandidatePairs(spark: SparkSession, sf: String): DataFrame =
-    lshScoredPairs(spark, sf)
-      .select(col("vec_a"), col("vec_b"))
-      .distinct()
-
   /** Top-20 distinct pairs WITHOUT a full distinct shuffle: a pair appears
     * in at most 4 tables, and its duplicates carry IDENTICAL (dot, vec_a,
     * vec_b) sort keys, so the 20th distinct pair's first copy sits at
@@ -682,37 +673,19 @@ object Vectors {
     * (sf, source fingerprint); PROBE reads it and runs only the bucket
     * self-join + exact re-rank. Bucketing is deterministic (sign bits +
     * an in-plan count), so output is identical to knn_lsh_bucketed and it
-    * registers under the SAME oracle. Reuses the IVF index machinery:
-    * source-fingerprinted dir name + staging + atomic rename (a concurrent
-    * builder either wins the rename or finds the winner's complete dir).
+    * registers under the SAME oracle.
     */
   def buildLshIndex(spark: SparkSession, sf: String): String =
-    buildBucketsIndex(lshIndexDir(sf), lshBucketTable(spark, sf))
-
-  /** Persist any (vec_id, embedding, norm, t, bkt) bucket table as a
-    * `buckets/` parquet index at `dir` — the shared build step of the
-    * radix ([[buildLshIndex]]) and equal-mass ([[buildLshEqmassIndex]])
-    * persisted-index regimes. By-name `tb` so no plan is constructed when
-    * the index already exists.
-    */
-  private def buildBucketsIndex(dir: String, tb: => DataFrame): String = {
-    if (new java.io.File(s"$dir/buckets/_SUCCESS").exists()) return dir
-    val staging = java.nio.file.Paths.get(
-      s"$dir.tmp.${java.lang.ProcessHandle.current().pid()}")
-    tb.write.mode("overwrite").parquet(s"$staging/buckets")
-    graft.ops.IndexStore.commitAtomically(staging, dir, "buckets/_SUCCESS")
-    dir
-  }
+    graft.ops.IndexStore.buildOnce(lshIndexDir(sf), "buckets/_SUCCESS") { staging =>
+      lshBucketTable(spark, sf).write.mode("overwrite").parquet(s"$staging/buckets")
+    }
 
   /** v1: round-9 bucket-table format (vec_id, embedding, norm, t, bkt). */
   private def lshIndexDir(sf: String): String =
     graft.ops.IndexStore.indexDir("graft_lsh_v1", sf, Tables.path(sf, "embeddings"))
 
   def knnLshProbe(spark: SparkSession, sf: String): DataFrame = {
-    val dir = lshIndexDir(sf)
-    val marker = new java.io.File(s"$dir/buckets/_SUCCESS")
-    val resolved = if (marker.exists()) dir else buildLshIndex(spark, sf)
-    val tb = spark.read.parquet(s"$resolved/buckets")
+    val tb = Tables.parquet(spark, s"${buildLshIndex(spark, sf)}/buckets")
     top20DistinctPairs(
       tb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("t"), col("bkt"))
         .join(
@@ -732,18 +705,15 @@ object Vectors {
     * in-plan histogram of the source data), so output is identical to the
     * in-query form and it registers under the SAME oracle.
     */
-  def dedupEmbeddingLshEqmassProbe(spark: SparkSession, sf: String): DataFrame = {
-    val dir = lshEqmassIndexDir(sf)
-    val resolved =
-      if (new java.io.File(s"$dir/buckets/_SUCCESS").exists()) dir
-      else buildLshEqmassIndex(spark, sf)
-    lshDedupPost(lshScoredPairsOf(spark.read.parquet(s"$resolved/buckets")))
-  }
+  def dedupEmbeddingLshEqmassProbe(spark: SparkSession, sf: String): DataFrame =
+    lshDedupPost(lshScoredPairsOf(
+      Tables.parquet(spark, s"${buildLshEqmassIndex(spark, sf)}/buckets")))
 
   def buildLshEqmassIndex(spark: SparkSession, sf: String): String =
-    buildBucketsIndex(
-      lshEqmassIndexDir(sf),
-      lshBucketTableEqualMass(Tables.embeddings(spark, sf)))
+    graft.ops.IndexStore.buildOnce(lshEqmassIndexDir(sf), "buckets/_SUCCESS") { staging =>
+      lshBucketTableEqualMass(Tables.embeddings(spark, sf))
+        .write.mode("overwrite").parquet(s"$staging/buckets")
+    }
 
   /** v1: same (vec_id, embedding, norm, t, bkt) format as the radix index
     * but histogram-binned — the two schemes bucket differently, so each
@@ -1128,26 +1098,14 @@ object Vectors {
     * for this query is steady-state query latency, while ann_ivf's stays
     * train+build+query end-to-end.
     */
-  def buildIvfIndex(spark: SparkSession, sf: String): String = {
-    val dir = ivfIndexDir(sf)
-    // The dir name embeds a source-data fingerprint and only a COMPLETE
-    // index can appear at it (atomic rename below), so an existing index
-    // is the one this build would produce — training is deterministic.
-    if (new java.io.File(s"$dir/assigned/_SUCCESS").exists()) return dir
-    // Build into a staging dir, then ATOMIC-rename into place (ADVICE r6):
-    // a concurrent JVM building the same index either wins the rename or
-    // finds the winner's complete directory — no reader ever sees a
-    // half-written index.
-    val staging = java.nio.file.Paths.get(
-      s"$dir.tmp.${java.lang.ProcessHandle.current().pid()}")
-    val emb = Tables.embeddings(spark, sf)
-    val params = quantizerParams(emb)
-    val cells = trainCells(emb, params)
-    cells.write.mode("overwrite").parquet(s"$staging/cells")
-    assignTop2(emb, cells, params).write.mode("overwrite").parquet(s"$staging/assigned")
-    graft.ops.IndexStore.commitAtomically(staging, dir, "assigned/_SUCCESS")
-    dir
-  }
+  def buildIvfIndex(spark: SparkSession, sf: String): String =
+    graft.ops.IndexStore.buildOnce(ivfIndexDir(sf), "assigned/_SUCCESS") { staging =>
+      val emb = Tables.embeddings(spark, sf)
+      val params = quantizerParams(emb)
+      val cells = trainCells(emb, params)
+      cells.write.mode("overwrite").parquet(s"$staging/cells")
+      assignTop2(emb, cells, params).write.mode("overwrite").parquet(s"$staging/assigned")
+    }
 
   /** Index location: one directory per (scale-factor dir, SOURCE-DATA
     * fingerprint) under the JVM temp root — [[graft.ops.IndexStore]]'s
@@ -1161,12 +1119,8 @@ object Vectors {
     // the unpinned routing.
     graft.ops.IndexStore.indexDir("graft_ivf_v5", sf, Tables.path(sf, "embeddings"))
 
-  def annIvfProbe(spark: SparkSession, sf: String): DataFrame = {
-    val dir = ivfIndexDir(sf)
-    val marker = new java.io.File(s"$dir/assigned/_SUCCESS")
-    val resolved = if (marker.exists()) dir else buildIvfIndex(spark, sf)
-    probeAssigned(spark.read.parquet(s"$resolved/assigned"))
-  }
+  def annIvfProbe(spark: SparkSession, sf: String): DataFrame =
+    probeAssigned(Tables.parquet(spark, s"${buildIvfIndex(spark, sf)}/assigned"))
 
   /** Oracle-side dot of a float list against a double centroid list — the
     * identical left fold the Spark side uses. Shared by the annIvf and
@@ -1339,12 +1293,8 @@ object Vectors {
     * the within-cell pair join runs per call. Training is deterministic,
     * so output is identical and it registers under the same oracle.
     */
-  def dedupSemanticProbe(spark: SparkSession, sf: String): DataFrame = {
-    val dir = ivfIndexDir(sf)
-    val marker = new java.io.File(s"$dir/assigned/_SUCCESS")
-    val resolved = if (marker.exists()) dir else buildIvfIndex(spark, sf)
-    semanticFromAssigned(spark.read.parquet(s"$resolved/assigned"))
-  }
+  def dedupSemanticProbe(spark: SparkSession, sf: String): DataFrame =
+    semanticFromAssigned(Tables.parquet(spark, s"${buildIvfIndex(spark, sf)}/assigned"))
 
   /** Within-cell near-dup search over a top-2 assignment table — the
     * shared tail of [[dedupSemantic]] (in-query training) and
@@ -1492,10 +1442,7 @@ object Vectors {
     * Training is deterministic, so output is identical — same oracle.
     */
   def clusterTopicsProbe(spark: SparkSession, sf: String): DataFrame = {
-    val dir = ivfIndexDir(sf)
-    val marker = new java.io.File(s"$dir/assigned/_SUCCESS")
-    val resolved = if (marker.exists()) dir else buildIvfIndex(spark, sf)
-    val inv = spark.read.parquet(s"$resolved/assigned")
+    val inv = Tables.parquet(spark, s"${buildIvfIndex(spark, sf)}/assigned")
       .where(col("rn") === 1)
       .select(col("vec_id"), col("cell"))
     topicsFromAssignment(spark, sf, inv)

@@ -105,7 +105,8 @@ class GenBudgetSpec extends AnyFunSuite {
     "multimodal_frame_sample" -> 1,
     "multimodal_meta" -> 1,
     "multimodal_resize" -> 1,
-    // IndexStore builds (cold) and the index read's schema job
+    // IndexStore builds (cold) and the index read's schema job, paid
+    // once per index path per JVM (Tables.parquet)
     "ann_ivf_probe" -> 20,
     "cluster_topics_probe" -> 3,
     "dedup_embedding_doc_probe" -> 2,
@@ -124,6 +125,12 @@ class GenBudgetSpec extends AnyFunSuite {
 
   private val QueryProp = "graft.budget.query"
 
+  /** Builder-side jobs of the `*_probe` builders once their indexes exist
+    * and their schemas are cached; absent probes have budget 0. */
+  private val warmProbeJobBudget: Map[String, Int] = Map(
+    // topicsFromAssignment's eager ctc localCheckpoint
+    "cluster_topics_probe" -> 2)
+
   /** Every registered query, plus the overlap report's flag union: the
     * registered report reads it checkpointed, so the seven screens'
     * Generates are only visible on the union builder. */
@@ -135,10 +142,15 @@ class GenBudgetSpec extends AnyFunSuite {
     * jobs started while its builder ran and that plan was forced (booked
     * by a local property, so jobs from other threads never count). */
   private lazy val registrySweep: Seq[(String, Int, Int)] = {
-    val sc = spark.sparkContext
     // the first read of each table infers its parquet schema (one job per
     // path per JVM, Tables.schemaCache): setup, not a per-build cost
     Tables.names.foreach(Tables.table(staticSession, Sf001, _))
+    sweep(swept)
+  }
+
+  private def sweep(
+      builders: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[(String, Int, Int)] = {
+    val sc = spark.sparkContext
     val jobs = scala.collection.concurrent.TrieMap.empty[String, Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -147,7 +159,7 @@ class GenBudgetSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      val gens = swept.map { case (name, fn) =>
+      val gens = builders.map { case (name, fn) =>
         sc.setLocalProperty(QueryProp, name)
         val plan =
           try fn(staticSession, Sf001).queryExecution.executedPlan.toString()
@@ -178,5 +190,18 @@ class GenBudgetSpec extends AnyFunSuite {
     assert(over.isEmpty,
       s"a query builder runs Spark jobs while the DataFrame is being built " +
         s"(an eager count/collect/checkpoint):\n  ${over.mkString("\n  ")}")
+  }
+
+  test("a warm *_probe builder runs no Spark jobs: the index is built and its schema read once") {
+    registrySweep // builds every index and caches each index schema
+    val probes = swept.filter(_._1.endsWith("_probe"))
+    assert(probes.size == 9, s"probe builders: ${probes.map(_._1)}")
+    val over = sweep(probes).flatMap { case (name, _, jobs) =>
+      val cap = warmProbeJobBudget.getOrElse(name, 0)
+      if (jobs > cap) Some(s"$name: $jobs warm builder jobs > budget $cap") else None
+    }
+    assert(over.isEmpty,
+      s"a warm probe re-checks, re-builds or re-infers its persisted index:\n  " +
+        over.mkString("\n  "))
   }
 }
