@@ -16,18 +16,12 @@ import graft.functions.{BloomContains, BpeApply, CharBigramCounts, DistinctNgram
   *   - an existing session: `GraftExtensions.register(spark)`
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.vecDotDescriptor)
-    ext.injectFunction(GraftExtensions.nfcNormalizeDescriptor)
-    ext.injectFunction(GraftExtensions.bloomContainsDescriptor)
-    ext.injectFunction(GraftExtensions.minGramMd5Descriptor)
-    ext.injectFunction(GraftExtensions.distinctNgramsDescriptor)
-    ext.injectFunction(GraftExtensions.bpeApplyDescriptor)
-    ext.injectFunction(GraftExtensions.charBigramCountsDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.descriptors.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
+  private type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
   /** Arity mismatch surfaces as the same WRONG_NUM_ARGS AnalysisException
     * Spark built-ins raise (SQL callers get a categorized 42605 analysis
@@ -56,127 +50,71 @@ object GraftExtensions {
         "functionName" -> s"`$fn`",
         "value" -> detail))
 
-  private def buildVecDot(children: Seq[Expression]): Expression = children match {
-    case Seq(a, b) => VecDot(a, b)
-    case other => wrongNumArgs("vec_dot", 2, other.size)
-  }
+  /** A gram-size argument `n`: any foldable INTEGRAL literal ≥ 1
+    * (ADVICE r7: a BIGINT-typed literal like CAST(8 AS BIGINT) is a fine
+    * gram size; rejecting it — or n < 1 — must surface as an
+    * invalid-PARAMETER error, not a misleading WRONG_NUM_ARGS arity
+    * error).
+    */
+  private def positiveIntLiteral(fn: String, n: Expression): Int =
+    if (!n.foldable) invalidParam(fn, "n", "expects a foldable positive integer literal")
+    else n.eval() match {
+      // SQL decimal literals (`8.0` is DECIMAL(2,1), whose eval is
+      // types.Decimal — NOT a java.lang.Number) are accepted when
+      // integral, consistent with the integral-DOUBLE case below
+      // (ADVICE r8: `8.0D` worked but `8.0` did not).
+      case d: org.apache.spark.sql.types.Decimal
+          if d.toBigDecimal.isWhole && d.toBigDecimal >= 1 &&
+            d.toBigDecimal <= Int.MaxValue =>
+        d.toBigDecimal.toIntExact
+      case num: java.lang.Number
+          if num.longValue().toDouble == num.doubleValue() &&
+            num.longValue() >= 1L && num.longValue() <= Int.MaxValue.toLong =>
+        num.intValue()
+      case other =>
+        invalidParam(fn, "n",
+          s"expects a positive integer literal, but got ${if (other == null) "NULL" else other.toString}")
+    }
 
-  /** (name, info, builder) triple in the shape injectFunction expects. */
-  val vecDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(
-      classOf[VecDot].getCanonicalName,
-      null,
-      "vec_dot",
-      "vec_dot(a, b) - sequential double dot product of two float arrays",
-      ""),
-    buildVecDot)
+  private def descriptor(name: String, cls: Class[_], usage: String)(
+      builder: Seq[Expression] => Expression): Descriptor =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getCanonicalName, null, name, usage, ""), builder)
 
-  val nfcNormalizeDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("nfc_normalize"),
-    new ExpressionInfo(
-      classOf[NfcNormalize].getCanonicalName,
-      null,
-      "nfc_normalize",
-      "nfc_normalize(s) - Unicode canonical composition (NFC) of a string",
-      ""),
-    {
+  /** The (name, info, builder) triples in the shape injectFunction and
+    * registerFunction expect. */
+  private val descriptors: Seq[Descriptor] = Seq(
+    descriptor("vec_dot", classOf[VecDot],
+      "vec_dot(a, b) - sequential double dot product of two float arrays") {
+      case Seq(a, b) => VecDot(a, b)
+      case other => wrongNumArgs("vec_dot", 2, other.size)
+    },
+    descriptor("nfc_normalize", classOf[NfcNormalize],
+      "nfc_normalize(s) - Unicode canonical composition (NFC) of a string") {
       case Seq(s) => NfcNormalize(s)
       case other => wrongNumArgs("nfc_normalize", 1, other.size)
-    })
-
-  val bloomContainsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bloom_contains"),
-    new ExpressionInfo(
-      classOf[BloomContains].getCanonicalName,
-      null,
-      "bloom_contains",
+    },
+    descriptor("bloom_contains", classOf[BloomContains],
       "bloom_contains(sketch, h) - probe a serialized Bloom filter (literal binary) for a bigint; " +
-        "false positives at the built fpp, false negatives never",
-      ""),
-    {
+        "false positives at the built fpp, false negatives never") {
       case Seq(s, h) => BloomContains(s, h)
       case other => wrongNumArgs("bloom_contains", 2, other.size)
-    })
-
-  val minGramMd5Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("min_gram_md5"),
-    new ExpressionInfo(
-      classOf[MinGramMd5].getCanonicalName,
-      null,
-      "min_gram_md5",
+    },
+    descriptor("min_gram_md5", classOf[MinGramMd5],
       "min_gram_md5(s, n) - minimum md5 hex over all character n-grams of s " +
-        "(n a positive integer literal); NULL when s has fewer than n characters",
-      ""),
-    {
-      // n: any foldable INTEGRAL literal ≥ 1 (ADVICE r7: a BIGINT-typed
-      // literal like CAST(8 AS BIGINT) is a fine gram size; rejecting it —
-      // or n < 1 — must surface as an invalid-PARAMETER error, not a
-      // misleading WRONG_NUM_ARGS arity error).
-      case Seq(s, n) if n.foldable =>
-        n.eval() match {
-          // SQL decimal literals (`8.0` is DECIMAL(2,1), whose eval is
-          // types.Decimal — NOT a java.lang.Number) are accepted when
-          // integral, consistent with the integral-DOUBLE case below
-          // (ADVICE r8: `8.0D` worked but `8.0` did not).
-          case d: org.apache.spark.sql.types.Decimal
-              if d.toBigDecimal.isWhole && d.toBigDecimal >= 1 &&
-                d.toBigDecimal <= Int.MaxValue =>
-            MinGramMd5(s, d.toBigDecimal.toIntExact)
-          case num: java.lang.Number
-              if num.longValue().toDouble == num.doubleValue() &&
-                num.longValue() >= 1L && num.longValue() <= Int.MaxValue.toLong =>
-            MinGramMd5(s, num.intValue())
-          case other =>
-            invalidParam("min_gram_md5", "n",
-              s"expects a positive integer literal, but got ${if (other == null) "NULL" else other.toString}")
-        }
-      case Seq(_, _) =>
-        invalidParam("min_gram_md5", "n", "expects a foldable positive integer literal")
+        "(n a positive integer literal); NULL when s has fewer than n characters") {
+      case Seq(s, n) => MinGramMd5(s, positiveIntLiteral("min_gram_md5", n))
       case other => wrongNumArgs("min_gram_md5", 2, other.size)
-    })
-
-  val distinctNgramsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("distinct_ngrams"),
-    new ExpressionInfo(
-      classOf[DistinctNgrams].getCanonicalName,
-      null,
-      "distinct_ngrams",
+    },
+    descriptor("distinct_ngrams", classOf[DistinctNgrams],
       "distinct_ngrams(t, n) - distinct space-joined word n-grams of a string array, " +
-        "first-occurrence order (n a positive integer literal); empty when t has fewer than n elements",
-      ""),
-    {
-      // same foldable-integral-literal contract as min_gram_md5's n
-      case Seq(t, n) if n.foldable =>
-        n.eval() match {
-          case d: org.apache.spark.sql.types.Decimal
-              if d.toBigDecimal.isWhole && d.toBigDecimal >= 1 &&
-                d.toBigDecimal <= Int.MaxValue =>
-            DistinctNgrams(t, d.toBigDecimal.toIntExact)
-          case num: java.lang.Number
-              if num.longValue().toDouble == num.doubleValue() &&
-                num.longValue() >= 1L && num.longValue() <= Int.MaxValue.toLong =>
-            DistinctNgrams(t, num.intValue())
-          case other =>
-            invalidParam("distinct_ngrams", "n",
-              s"expects a positive integer literal, but got ${if (other == null) "NULL" else other.toString}")
-        }
-      case Seq(_, _) =>
-        invalidParam("distinct_ngrams", "n", "expects a foldable positive integer literal")
+        "first-occurrence order (n a positive integer literal); empty when t has fewer than n elements") {
+      case Seq(t, n) => DistinctNgrams(t, positiveIntLiteral("distinct_ngrams", n))
       case other => wrongNumArgs("distinct_ngrams", 2, other.size)
-    })
-
-  val bpeApplyDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bpe_apply"),
-    new ExpressionInfo(
-      classOf[BpeApply].getCanonicalName,
-      null,
-      "bpe_apply",
+    },
+    descriptor("bpe_apply", classOf[BpeApply],
       "bpe_apply(w, firsts, seconds) - BPE rank-sweep encode of word w with the merge table " +
         "zip(firsts, seconds) (two equal-length non-empty array<string> literals — two arrays " +
-        "because symbols may contain any would-be delimiter character)",
-      ""),
-    {
+        "because symbols may contain any would-be delimiter character)") {
       case Seq(w, as, bs) if as.foldable && bs.foldable =>
         import org.apache.spark.sql.catalyst.util.ArrayData
         import org.apache.spark.sql.types.{ArrayType, StringType}
@@ -200,37 +138,17 @@ object GraftExtensions {
       case Seq(_, _, _) =>
         invalidParam("bpe_apply", "merges", "expects two foldable array<string> literals")
       case other => wrongNumArgs("bpe_apply", 3, other.size)
-    })
-
-  val charBigramCountsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("char_bigram_counts"),
-    new ExpressionInfo(
-      classOf[CharBigramCounts].getCanonicalName,
-      null,
-      "char_bigram_counts",
+    },
+    descriptor("char_bigram_counts", classOf[CharBigramCounts],
       "char_bigram_counts(s) - per-row histogram of the 2-codepoint windows of s as " +
-        "array<struct<bg string, cnt bigint>> in first-occurrence order (empty for < 2 codepoints)",
-      ""),
-    {
+        "array<struct<bg string, cnt bigint>> in first-occurrence order (empty for < 2 codepoints)") {
       case Seq(s) => CharBigramCounts(s)
       case other => wrongNumArgs("char_bigram_counts", 1, other.size)
     })
 
   /** Register into an already-built session (tests, notebooks). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      vecDotDescriptor._1, vecDotDescriptor._2, vecDotDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      nfcNormalizeDescriptor._1, nfcNormalizeDescriptor._2, nfcNormalizeDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      bloomContainsDescriptor._1, bloomContainsDescriptor._2, bloomContainsDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      minGramMd5Descriptor._1, minGramMd5Descriptor._2, minGramMd5Descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      distinctNgramsDescriptor._1, distinctNgramsDescriptor._2, distinctNgramsDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      bpeApplyDescriptor._1, bpeApplyDescriptor._2, bpeApplyDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      charBigramCountsDescriptor._1, charBigramCountsDescriptor._2, charBigramCountsDescriptor._3)
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    descriptors.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

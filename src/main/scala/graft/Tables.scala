@@ -87,30 +87,32 @@ object Tables {
     spreadIfEnabled(spark, sfDir, name, base)
   }
 
-  /** Harness-gated table spread (round-8, VERDICT r7 item 1): when
+  /** The one spread rule (harness-gated): when
     * [[graft.queries.Det.SpreadConf]] is true — set ONLY by the local
-    * bench/profile mains — every table is round-robin repartitioned to a
-    * size-scaled partition count right above its scan. The fixture
-    * parquet files are ONE row group each, so without this every map
-    * stage (scan, filter, project, partial agg, per-row compute) of every
-    * query runs in a single task no matter how many cores the session
-    * has; the r6 per-query floor decomposition attributes most of the
-    * sub-second queries' constant to exactly this. A real cluster table
-    * arrives in thousands of row-group splits and never needs it (the
-    * conf stays false outside the harness, keeping the library plan
-    * identical to production).
+    * harness sessions — every table is round-robin repartitioned right
+    * above its scan. The fixture parquet files are ONE row group each,
+    * so without this every map stage (scan, filter, project, partial
+    * agg, per-row compute) of every query runs in a single task no matter
+    * how many cores the session has. A real cluster table arrives in
+    * thousands of row-group splits and never needs it (the conf stays
+    * false outside the harness, keeping the library plan identical to
+    * production).
     *
-    * Putting the spread INSIDE the table loader (rather than per-query
-    * `spreadSmallScan`, its round-6 predecessor, now a pass-through)
-    * makes the repartitioned plan the canonical subtree every query
-    * shares, so Bench's `persist` of the loaded table substitutes an
-    * ALREADY-SPREAD InMemoryRelation into every query — the shuffle is
-    * paid once at cache build, not per execution.
+    * The spread lives in the loader, not in the queries, so the
+    * repartitioned plan is the canonical subtree every query shares:
+    * Bench's `persist` of the loaded table substitutes an ALREADY-SPREAD
+    * InMemoryRelation into every query, and the shuffle is paid once at
+    * cache build, not per execution.
     *
-    * Partition count scales with on-disk bytes (≈256 KB each, clamped to
-    * the session's core count) so 5-row dimension tables don't fan out
-    * into 32 near-empty tasks whose scheduling costs more than the
-    * parallelism buys.
+    * Partition count:
+    *  - `documents` and `embeddings` (the corpus tables): every core.
+    *    Their per-row work — hashing, explode fan-out, n² dot-product
+    *    loops — is compute-scaled, not size-scaled: `embeddings` is
+    *    ~0.5 MB (3 partitions by size), and on knn_brute_force the
+    *    size-scaled count cost 0.35 s vs 0.24 s with every core.
+    *  - every other table: on-disk bytes / ≈256 KB, clamped to the core
+    *    count, so 5-row dimension tables don't fan out into near-empty
+    *    tasks whose scheduling costs more than the parallelism buys.
     */
   private def spreadIfEnabled(
       spark: SparkSession, sfDir: String, name: String, df: DataFrame): DataFrame = {
@@ -118,9 +120,10 @@ object Tables {
     else {
       def bytes(f: java.io.File): Long =
         if (f.isDirectory) f.listFiles().map(bytes).sum else f.length()
-      val b = bytes(new java.io.File(path(sfDir, name)))
-      val n = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong, b / (256L * 1024) + 1)).toInt
+      val cores = spark.sparkContext.defaultParallelism
+      val n =
+        if (name == "documents" || name == "embeddings") cores
+        else math.min(cores.toLong, bytes(new java.io.File(path(sfDir, name))) / (256L * 1024) + 1).toInt
       // n == 1 is a pass-through, not a repartition(1) (r15): a
       // single-partition round-robin exchange adds no parallelism, costs
       // an exchange, and — measured at sf0.01 — defeats ReuseExchange

@@ -147,8 +147,7 @@ object MinGramMd5 {
     UTF8String.fromBytes(out)
   }
 
-  /** Column-API entry point: `min_gram_md5(s, n)` (bridged via the shared
-    * [[ColumnBridge]], same as VecDot/NfcNormalize — ADVICE r7). */
+  /** Column-API entry point: `min_gram_md5(s, n)` (bridged via [[ColumnBridge]]). */
   def min_gram_md5(s: Column, n: Int): Column =
     ColumnBridge.toColumn(MinGramMd5(ColumnBridge.toExpr(s), n))
 }

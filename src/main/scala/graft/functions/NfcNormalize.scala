@@ -53,13 +53,7 @@ object NfcNormalize {
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  private lazy val exprUtils = Class.forName("org.apache.spark.sql.classic.ExpressionUtils")
-  private lazy val toExpr = exprUtils.getMethod("expression", classOf[Column])
-  private lazy val toColumn = exprUtils.getMethod("column", classOf[Expression])
-
-  /** Column-API entry point: `nfc_normalize(s)`. */
-  def nfc_normalize(s: Column): Column = {
-    val es = toExpr.invoke(null, s).asInstanceOf[Expression]
-    toColumn.invoke(null, NfcNormalize(es)).asInstanceOf[Column]
-  }
+  /** Column-API entry point: `nfc_normalize(s)` (bridged via [[ColumnBridge]]). */
+  def nfc_normalize(s: Column): Column =
+    ColumnBridge.toColumn(NfcNormalize(ColumnBridge.toExpr(s)))
 }

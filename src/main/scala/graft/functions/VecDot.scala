@@ -119,22 +119,7 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 
 object VecDot {
 
-  /** Spark 4's Column wraps a ColumnNode and no longer exposes .expr; the
-    * classic-mode bridge (o.a.s.sql.classic.ExpressionUtils) is public at
-    * the bytecode level but private[sql] to Scala, so it is invoked via a
-    * one-time reflective handle (cold path only — the hot path is the
-    * generated code).
-    */
-  private lazy val exprUtils = Class.forName("org.apache.spark.sql.classic.ExpressionUtils")
-  private lazy val toExpr =
-    exprUtils.getMethod("expression", classOf[Column])
-  private lazy val toColumn =
-    exprUtils.getMethod("column", classOf[Expression])
-
-  /** Column-API entry point: `vec_dot(a, b)`. */
-  def vec_dot(a: Column, b: Column): Column = {
-    val ea = toExpr.invoke(null, a).asInstanceOf[Expression]
-    val eb = toExpr.invoke(null, b).asInstanceOf[Expression]
-    toColumn.invoke(null, VecDot(ea, eb)).asInstanceOf[Column]
-  }
+  /** Column-API entry point: `vec_dot(a, b)` (bridged via [[ColumnBridge]]). */
+  def vec_dot(a: Column, b: Column): Column =
+    ColumnBridge.toColumn(VecDot(ColumnBridge.toExpr(a), ColumnBridge.toExpr(b)))
 }

@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.queries.Det
 
 /** Multimodal column plumbing (north star): image/audio/video payloads as
   * opaque `binary` columns plus typed metadata, processed partition-wise in
@@ -287,10 +288,7 @@ object Multimodal {
     */
   def syntheticMedia(spark: SparkSession, sf: String, mediaType: Option[String] = None): DataFrame = {
     import spark.implicits._
-    // spreadSmallScan (harness-gated): the PNG/WAV encode in the typed map
-    // below is the cost, and a single-row-group scan would run it on one
-    // core (measured 23 s at sf1 — the codec, not the scan, is the work)
-    val docs = graft.queries.Det.spreadSmallScan(spark, Tables.documents(spark, sf))
+    val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"), col("text"))
     val wanted = mediaType match {
       case Some("image") => docs.where(col("n_chars") % 2 === 0)
@@ -371,14 +369,14 @@ object Multimodal {
     extractMeta(spark, syntheticMedia(spark, sf))
       .select(col("doc_id"), col("media_type"), col("width"), col("height"),
         col("sample_rate"), col("channels"), col("n_samples"))
-      // Materialize the SKINNY metadata (7 scalar columns, one row per
+      // Barrier on the SKINNY metadata (7 scalar columns, one row per
       // media item) before the total sort: a global ORDER BY range-samples
-      // its child to pick partition bounds, and un-materialized that
+      // its child to pick partition bounds, and without a barrier that
       // sampling pass re-ran the entire encode+decode pipeline — stage
       // attribution at sf1 showed two ~8 s codec stages for one query
-      // (docs/BENCH_NOTES.md round-8 §5). A production metadata table is
-      // persisted state anyway; the payloads never flow into the sort.
-      .localCheckpoint()
+      // (docs/BENCH_NOTES.md round-8 §5). The payloads never flow into
+      // the sort. See Det.sortBarrier.
+      .transform(Det.sortBarrier(col("doc_id")))
       .orderBy(col("doc_id"))
 
   val multimodalMetaSql: String =
@@ -407,9 +405,9 @@ object Multimodal {
         col("height"),
         expr("CAST(width AS BIGINT) * 256 div greatest(width, height)").as("out_w"),
         expr("CAST(height AS BIGINT) * 256 div greatest(width, height)").as("out_h"))
-      // same skinny-metadata materialization as multimodalMeta: the sort's
+      // same skinny-metadata barrier as multimodalMeta: the sort's
       // range-sampling pass must not re-run the PNG encode
-      .localCheckpoint()
+      .transform(Det.sortBarrier(col("doc_id")))
       .orderBy(col("doc_id"))
 
   val multimodalResizeSql: String =
@@ -439,9 +437,9 @@ object Multimodal {
         col("duration_s"),
         explode(expr("sequence(0, duration_s * 4 - 1, 8)")).as("frame_no"))
       .withColumn("t_offset_s", col("frame_no").cast("double") / 4.0)
-      // same skinny materialization: the sort sampling must not re-run the
-      // WAV encode (the frame rows carry 4 scalar columns)
-      .localCheckpoint()
+      // same skinny barrier: the sort sampling must not re-run the WAV
+      // encode (the frame rows carry 4 scalar columns)
+      .transform(Det.sortBarrier(col("doc_id")))
       .orderBy(col("doc_id"), col("frame_no"))
 
   val multimodalFrameSampleSql: String =
@@ -464,7 +462,7 @@ object Multimodal {
     * Same division of labor as [[extractMeta]]: the mapPartitions step
     * holds ONLY the codec pull (decode + integer reduce — a per-row
     * scalar fold, no state); rms stays a codegen'd projection on the
-    * exact integers. Skinny stats are checkpoint-materialized before the
+    * exact integers. A keyed barrier on the skinny stats precedes the
     * total sort so the range-sampler never re-runs the WAV encode.
     */
   def audioStats(spark: SparkSession, sf: String): DataFrame = {
@@ -481,7 +479,7 @@ object Multimodal {
       }
       .toDF("doc_id", "n_values", "peak_abs", "sum_sq")
       .withColumn("rms", sqrt(col("sum_sq").cast("double") / col("n_values")))
-      .localCheckpoint()
+      .transform(Det.sortBarrier(col("doc_id")))
       .orderBy(col("doc_id"))
   }
 
@@ -601,8 +599,8 @@ object Multimodal {
         df.withColumn(s"band$b", shiftright(col("ahash"), 16 * b).bitwiseAND(lit(0xffffL)))
       }
       // the PNG decode + aHash pass must not run twice for the sort
-      // sampler (r12 sweep: 0.8 s sampler CPU) — see queries.Det.sortBarrier
-      .transform(graft.queries.Det.sortBarrier(col("doc_id")))
+      // sampler (r12 sweep: 0.8 s sampler CPU) — see Det.sortBarrier
+      .transform(Det.sortBarrier(col("doc_id")))
       .orderBy(col("doc_id"))
   }
 

@@ -31,8 +31,7 @@ object Corpus {
     * chunk with its token count and joined text.
     */
   def docChunking(spark: SparkSession, sf: String): DataFrame =
-    Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(col("doc_id"), tokensCol.as("t"))
       .select(
         col("doc_id"),
@@ -96,8 +95,7 @@ object Corpus {
     * keyed by doc — no window over the raw bigram stream.
     */
   def repetitionScore(spark: SparkSession, sf: String): DataFrame = {
-    val bigrams = Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    val bigrams = Tables.documents(spark, sf)
       .select(col("doc_id"), tokensCol.as("t"))
       .where(size(col("t")) >= 2)
       .select(col("doc_id"), explode(expr(
@@ -227,8 +225,7 @@ object Corpus {
   def corpusYieldReport(spark: SparkSession, sf: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stop = Seq("the", "and", "of", "to", "in", "is", "a", "an")
-    val flagged = Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    val flagged = Tables.documents(spark, sf)
       .withColumn("toks", filter(tokensCol, t => t =!= ""))
       .withColumn("n_tokens", size(col("toks")).cast("long"))
       .withColumn(

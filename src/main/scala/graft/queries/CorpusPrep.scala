@@ -196,7 +196,7 @@ object CorpusPrep {
   def piiScrub(spark: SparkSession, sf: String): DataFrame = {
     val email = "[a-z0-9]+@[a-z]+\\.[a-z]+"
     val phone = "555-[0-9]+"
-    Det.spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .withColumn(
         "raw",
         concat(

@@ -66,7 +66,7 @@ object Curation {
     * degenerate repeated-token docs a quality gate drops.
     */
   def tokenDiversity(spark: SparkSession, sf: String): DataFrame =
-    Det.spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(col("doc_id"), explode(filter(TextOps.tokensCol, t => t =!= "")).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("c"))
@@ -346,7 +346,7 @@ object Curation {
     */
   def qualityLogitScore(spark: SparkSession, sf: String): DataFrame = {
     val toks = filter(TextOps.tokensCol, t => t =!= "")
-    Det.spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(
         col("doc_id"), col("source"),
         toks.as("t"),

@@ -85,19 +85,17 @@ object DedupOverlap {
     // stage at near-zero cost, while the checkpoint pays an eager
     // full-width JVM-object materialization (text AND token arrays) plus
     // a pipeline break per consumer, and the lazy shared frame pushes a
-    // full-corpus round-robin exchange (now carrying token ARRAYS, not
-    // text) into all seven screens where the registered plans spread only
-    // the three compute-heavy ones. The same argument holds at 100 TB:
+    // full-corpus round-robin exchange carrying token ARRAYS into all
+    // seven screens. The same argument holds at 100 TB:
     // checkpointing a corpus-sized token stream is exactly what a
     // pipeline avoids — share via a persisted pre-tokenized table through
     // the seams, not a driver-forced materialization.
     val docs = graft.Tables.documents(spark, sf)
-    def spread(d: DataFrame): DataFrame = Det.spreadSmallScan(spark, d)
     val exact = docs.select(col("doc_id"))
       .join(TextOps.dedupDocsExactFrom(docs).select(col("doc_id")), Seq("doc_id"), "left_anti")
-    val line = Refinery.lineDedupRebuildFrom(spread(docs))
+    val line = Refinery.lineDedupRebuildFrom(docs)
       .where(col("n_kept") < col("n_lines")).select(col("doc_id"))
-    val minhash = TextOps.dedupMinhashLshFrom(spread(docs))
+    val minhash = TextOps.dedupMinhashLshFrom(docs)
       .select(col("doc_b").as("doc_id")).distinct()
     val jaccard = TextOps.dedupNgramJaccardFrom(docs)
       .select(col("doc_b").as("doc_id")).distinct()
@@ -139,7 +137,7 @@ object DedupOverlap {
       .where(col("doc_id") > col("lo"))
       .select(col("doc_id"))
     val substring = TextOps.exactSubstringDedup(docs).select(col("doc_id"))
-    val embedding = DocEmbed.dedupEmbeddingDocLshFrom(spread(docs))
+    val embedding = DocEmbed.dedupEmbeddingDocLshFrom(docs)
       .select(col("dup_id").as("doc_id"))
     Seq("exact" -> exact, "line" -> line, "minhash" -> minhash,
       "jaccard" -> jaccard, "simhash" -> simhash, "substring" -> substring,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Determinism helpers (SURVEY §7.4): the DuckDB oracle hash-matches output
@@ -27,36 +27,12 @@ object Det {
     * (double / bigint division of identical operands is deterministic.) */
   def avgMoney(c: Column): Column = sumMoney(c) / count(lit(1))
 
-  /** Conf key: when "true", [[graft.Tables.table]] repartitions every
-    * loaded table across the session's cores (size-scaled — see
-    * `Tables.spreadIfEnabled`). Set ONLY by local harness mains
-    * (Bench and the tools on its session), where each test table is one
-    * small parquet file (= one row group = one unsplittable scan task) yet
-    * the work above the scan is heavy (per-row hashing, explode fan-out).
-    * A real cluster never sets it: there the scan arrives in thousands of
-    * row-group splits and injecting a corpus-wide shuffle would be a
-    * scale bug.
+  /** Conf key: when "true", [[graft.Tables.table]] spreads every loaded
+    * table across the session's cores (the rule is on
+    * `Tables.spreadIfEnabled`). Set ONLY by the local harness sessions;
+    * a real cluster never sets it.
     */
   val SpreadConf = "spark.graft.spreadSmallScans"
-
-  /** Identity unless the session opted in via [[SpreadConf]] — see there.
-    * Round-8 note: `Tables.table` now ALSO spreads every loaded table to
-    * a size-scaled partition count under the same conf (so the cached
-    * tables arrive parallel in every query). This call remains on the
-    * compute-heavy scans because size-scaled is not compute-scaled: the
-    * embeddings table is ~0.5 MB → 3 partitions from size, but the n²
-    * dot-product loops above it need every core — measured on
-    * knn_brute_force, identity here cost 0.35 s vs 0.24 s with the full
-    * repartition (the 2000-row exchange it adds is ~10 ms).
-    * (An earlier adaptive variant probed `df.rdd.getNumPartitions`; the
-    * probe itself re-planned the query per call and cost more than the
-    * parallelism bought — measured +0.6–1.5 s per query. Conf-gating is
-    * free.)
-    */
-  def spreadSmallScan(spark: SparkSession, df: DataFrame): DataFrame =
-    if (spark.conf.getOption(SpreadConf).exists(_.toBoolean))
-      df.repartition(spark.sparkContext.defaultParallelism)
-    else df
 
   /** Keyed exchange barrier between a heavy per-row projection and its
     * contract ORDER BY (use via `.transform(Det.sortBarrier(col(...)))`).

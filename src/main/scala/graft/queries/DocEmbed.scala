@@ -138,7 +138,7 @@ object DocEmbed {
     * (dup_id, canonical_id, cosine) shape as dedup_embedding_lsh.
     */
   def dedupEmbeddingDocLsh(spark: SparkSession, sf: String): DataFrame =
-    dedupEmbeddingDocLshFrom(Det.spreadSmallScan(spark, Tables.documents(spark, sf)))
+    dedupEmbeddingDocLshFrom(Tables.documents(spark, sf))
 
   /** [[dedupEmbeddingDocLsh]] over a caller-supplied documents frame (the
     * overlap report's shared-corpus seam). */
@@ -240,7 +240,7 @@ object DocEmbed {
 
   def buildDocEmbedIndex(spark: SparkSession, sf: String): String =
     graft.ops.IndexStore.buildOnce(docEmbedIndexDir(sf), "vecs/_SUCCESS") { staging =>
-      featurizedVectors(Det.spreadSmallScan(spark, Tables.documents(spark, sf)))
+      featurizedVectors(Tables.documents(spark, sf))
         .write.mode("overwrite").parquet(s"$staging/vecs")
     }
 

@@ -82,7 +82,7 @@ object Refinery {
       .select(col("doc_id"), col("l.line_id"), col("l.line_text"))
 
   def lineDedupRebuild(spark: SparkSession, sf: String): DataFrame =
-    lineDedupRebuildFrom(Det.spreadSmallScan(spark, Tables.documents(spark, sf)))
+    lineDedupRebuildFrom(Tables.documents(spark, sf))
 
   /** [[lineDedupRebuild]] over a caller-supplied documents frame (the
     * overlap report's shared-corpus seam). */
@@ -164,8 +164,7 @@ object Refinery {
     * doubled 24 core-s projection stage collapses to one.
     */
   def winnowFingerprints(spark: SparkSession, sf: String): DataFrame =
-    Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(col("doc_id"), tokensCol.as("t"))
       .where(size(col("t")) >= 6)
       .select(col("doc_id"), expr(
@@ -220,8 +219,7 @@ object Refinery {
     * TakeOrderedAndProject.
     */
   def bpeMergePairs(spark: SparkSession, sf: String): DataFrame = {
-    val wf = Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    val wf = Tables.documents(spark, sf)
       .select(explode(tokensCol).as("w"))
       .where(col("w") =!= "")
       .groupBy(col("w"))
@@ -344,8 +342,7 @@ object Refinery {
     * constant.
     */
   def bpeEncode(spark: SparkSession, sf: String): DataFrame = {
-    val wf = Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    val wf = Tables.documents(spark, sf)
       .select(explode(tokensCol).as("w"))
       .where(col("w") =!= "")
       .groupBy(col("w"))
@@ -410,8 +407,7 @@ object Refinery {
     */
   def gopherQualityRules(spark: SparkSession, sf: String): DataFrame = {
     val toks = filter(tokensCol, t => t =!= "")
-    Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(
         col("doc_id"), col("source"),
         toks.as("t"),
@@ -482,8 +478,7 @@ object Refinery {
     */
   def qualityCalibration(spark: SparkSession, sf: String): DataFrame = {
     val toks = filter(tokensCol, t => t =!= "")
-    val scored = Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    val scored = Tables.documents(spark, sf)
       .select(
         col("doc_id"),
         toks.as("t"),

@@ -245,10 +245,7 @@ object Retrieval {
     * doc-keyed fixed-point sum. No windows, no driver loops.
     */
   def bigramLmScore(spark: SparkSession, sf: String): DataFrame = {
-    // spreadSmallScan (harness-gated): the char explode + map-side count
-    // partials above the scan are the hot path — one task per parquet
-    // row group otherwise at fixture SFs (same treatment as minhash).
-    val docs = Det.spreadSmallScan(spark, Tables.documents(spark, sf))
+    val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     // Round-8 restructure (VERDICT r7 item 6): the old shape kept the raw
     // per-CHARACTER occurrence stream alive through both broadcast joins
@@ -372,9 +369,7 @@ object Retrieval {
     * it when small.
     */
   def ngramNovelty(spark: SparkSession, sf: String): DataFrame = {
-    // spreadSmallScan: same argument as bigramLmScore's — the shingle
-    // explode is the heavy pre-shuffle pass.
-    val docs = Det.spreadSmallScan(spark, Tables.documents(spark, sf))
+    val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), TextOps.tokensCol.as("t"))
       .where(size(col("t")) >= 3)
       .select(col("doc_id"),
@@ -446,7 +441,7 @@ object Retrieval {
     val ref = Tables.parquet(spark, s"${buildShingleIndex(spark, sf)}/shingles")
       .select(col("sh"), lit(1).as("seen"))
     val probe = TextOps.distinctShinglesPerRow(
-      Det.spreadSmallScan(spark, Tables.documents(spark, sf))
+      Tables.documents(spark, sf)
         .where(col("doc_id") % 10 === 0))
     probe.join(ref, Seq("sh"), "left")
       .groupBy(col("doc_id"))
@@ -466,7 +461,7 @@ object Retrieval {
       // per-row pre-dedup (codegen DistinctNgrams) shrinks the exploded
       // stream before the global distinct's partial aggregate
       TextOps.distinctShinglesPerRow(
-        Det.spreadSmallScan(spark, Tables.documents(spark, sf))
+        Tables.documents(spark, sf)
           .where(col("doc_id") % 10 =!= 0))
         .select(col("sh"))
         .distinct()
@@ -541,7 +536,7 @@ object Retrieval {
     * resampling race — plan shape documented on [[dsirImportanceTopk]].
     */
   private[graft] def dsirDocScores(spark: SparkSession, sf: String): DataFrame = {
-    val toks = Det.spreadSmallScan(spark, Tables.documents(spark, sf))
+    val toks = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), explode(TextOps.tokensCol).as("w"))
       .where(col("w") =!= "")
       .select(col("doc_id"), col("lang"),

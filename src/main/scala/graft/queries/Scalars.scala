@@ -48,8 +48,7 @@ object Scalars {
     * restricted to the Java-regex ∩ RE2 subset (no lookaround).
     */
   def regexClean(spark: SparkSession, sf: String): DataFrame =
-    Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(
         col("doc_id"),
         regexp_replace(col("text"), "\\b(the|a|an|of|and)\\b", "").as("no_stopwords"),
@@ -184,8 +183,7 @@ object Scalars {
     * (left fold over the same element order; float→double widening exact).
     */
   def arrayFuncs(spark: SparkSession, sf: String): DataFrame =
-    Det
-      .spreadSmallScan(spark, Tables.embeddings(spark, sf))
+    Tables.embeddings(spark, sf)
       .select(
         col("vec_id"),
         size(col("embedding")).cast("long").as("n_dims"),
@@ -320,8 +318,7 @@ object Scalars {
     */
   def arraySetops(spark: SparkSession, sf: String): DataFrame = {
     val toks = split(lower(col("text")), " ")
-    Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(
         col("doc_id"),
         slice(toks, 1, 10).as("head10"),
@@ -354,8 +351,7 @@ object Scalars {
     * repeat, left/right, greatest/least.
     */
   def stringFuncs2(spark: SparkSession, sf: String): DataFrame =
-    Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(
         col("doc_id"),
         expr("split_part(text, ' ', 2)").as("second_word"),

@@ -253,9 +253,7 @@ object TextOps {
     * ([[dedupMinhashProbe]]) and the in-query build step everywhere else.
     */
   private[queries] def minhashBandTable(spark: SparkSession, sf: String): DataFrame =
-    // spreadSmallScan (harness-gated): the 8-seeded-md5 partial agg above
-    // the scan is the hot part — 8 hashes per shingle row.
-    minhashBandTableOf(Det.spreadSmallScan(spark, Tables.documents(spark, sf)))
+    minhashBandTableOf(Tables.documents(spark, sf))
 
   /** [[minhashBandTable]] over a caller-supplied documents frame (the
     * overlap report's shared-corpus seam). */
@@ -403,14 +401,11 @@ object TextOps {
       .orderBy(col("dup_id"))
   }
 
-  // lazy: textually precedes dedupMinhashLshSql, whose CTE prefix it
-  // splices in (forced at registry init, after every plain val is set)
-  lazy val dedupEditDistanceSql: String = {
-    // same CTE-prefix reuse as dedupClustersSql: the minhash pipeline up to
-    // `bands` verbatim, then the band join as the candidate CTE
-    val splitAt = dedupMinhashLshSql.indexOf("\nSELECT a.doc_id")
-    val ctes = dedupMinhashLshSql.substring(0, splitAt)
-    s"""$ctes, cand AS (
+  // lazy: textually precedes minhashCtes, which it splices in (forced at
+  // registry init, after every plain val is set); the band join follows
+  // as the candidate CTE
+  lazy val dedupEditDistanceSql: String =
+    s"""$minhashCtes, cand AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2
@@ -428,7 +423,6 @@ object TextOps {
        |    row_number() OVER (PARTITION BY doc_b ORDER BY doc_a) AS rn
        |  FROM dists WHERE dist <= 16)
        |WHERE rn = 1 ORDER BY dup_id""".stripMargin
-  }
 
   val dedupMinhashLshSql: String = {
     val minCols = (0 until 8).map(i => s"min(md5(sh || '#$i')) AS m$i").mkString(",\n      |    ")
@@ -452,6 +446,20 @@ object TextOps {
        |FROM bands a JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
        |GROUP BY 1, 2 ORDER BY doc_a, doc_b""".stripMargin
   }
+
+  /** [[dedupMinhashLshSql]] split at its final SELECT, for the oracles
+    * that consume its candidate pairs: the CTE block ("WITH shingles AS
+    * (...), ..., bands AS (...)") verbatim, and the band self-join without
+    * its count and contract ORDER BY.
+    */
+  private val minhashCtes: String =
+    dedupMinhashLshSql.substring(0, dedupMinhashLshSql.indexOf("\nSELECT a.doc_id"))
+  private val minhashPairsBody: String =
+    dedupMinhashLshSql.substring(minhashCtes.length)
+      .replace("SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared_bands",
+        "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b")
+      .replace(" ORDER BY doc_a, doc_b", "")
+      .trim
 
   // --------------------------------------- north star: dedup clusters (CC)
   /** Rounds of min-label propagation in [[dedupClusters]]. Labels converge
@@ -509,15 +517,6 @@ object TextOps {
   }
 
   val dedupClustersSql: String = {
-    // reuse the minhash pipeline's CTE block verbatim; its final SELECT
-    // becomes the `pairs` CTE body (sans count and contract ORDER BY)
-    val splitAt = dedupMinhashLshSql.indexOf("\nSELECT a.doc_id")
-    val ctes = dedupMinhashLshSql.substring(0, splitAt) // "WITH shingles AS (...), ..., bands AS (...)"
-    val pairsBody = dedupMinhashLshSql.substring(splitAt)
-      .replace("SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared_bands",
-        "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b")
-      .replace(" ORDER BY doc_a, doc_b", "")
-      .trim
     val rounds = (1 to CcRounds).map { i =>
       s"""labels$i AS (
          |  SELECT e.dst AS v, min(l.lbl) AS lbl
@@ -525,8 +524,8 @@ object TextOps {
          |  GROUP BY e.dst
          |)""".stripMargin
     }.mkString(", ")
-    s"""$ctes, pairs AS (
-       |  $pairsBody
+    s"""$minhashCtes, pairs AS (
+       |  $minhashPairsBody
        |), edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
        |  UNION ALL
@@ -609,17 +608,9 @@ object TextOps {
     * Σ|C|² over components — candidate-pair components are tiny dup
     * clusters, so this stays small even though the corpus is not.
     */
-  val dedupClustersFixpointSql: String = {
-    val splitAt = dedupMinhashLshSql.indexOf("\nSELECT a.doc_id")
-    val ctes = dedupMinhashLshSql.substring(0, splitAt)
-      .replaceFirst("^WITH ", "WITH RECURSIVE ")
-    val pairsBody = dedupMinhashLshSql.substring(splitAt)
-      .replace("SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared_bands",
-        "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b")
-      .replace(" ORDER BY doc_a, doc_b", "")
-      .trim
-    s"""$ctes, pairs AS (
-       |  $pairsBody
+  val dedupClustersFixpointSql: String =
+    s"""${minhashCtes.replaceFirst("^WITH ", "WITH RECURSIVE ")}, pairs AS (
+       |  $minhashPairsBody
        |), edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
        |  UNION ALL
@@ -631,7 +622,6 @@ object TextOps {
        |)
        |SELECT v AS doc_id, MIN(lbl) AS cluster_id FROM reach
        |GROUP BY v ORDER BY doc_id""".stripMargin
-  }
 
   // -------------------------------- north star: large-star/small-star CC
   /** Large-star/small-star connected components (Kiveris et al. 2014,
@@ -769,8 +759,7 @@ object TextOps {
         "transform(sequence(1, size(t) - 2), i -> concat(element_at(t, i), ' ', element_at(t, i + 1), ' ', element_at(t, i + 2)))," +
         " array_repeat('~', 8)," +
         " (acc, sh) -> transform(sequence(0, 7), j -> least(element_at(acc, j + 1), md5(CAST(concat(sh, '#', j) AS BINARY)))))")
-    val minhash = Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    val minhash = Tables.documents(spark, sf)
       .select(col("doc_id"), tokensCol.as("t"))
       .where(size(col("t")) >= 3)
       .select(col("doc_id"), fp.as("fp"))
@@ -779,15 +768,9 @@ object TextOps {
         lit(bnd).as("band"),
         md5(concat(element_at(col("fp"), 2 * bnd + 1), element_at(col("fp"), 2 * bnd + 2)).cast("binary"))
           .as("h"))): _*)
-    val bands = minhash
+    bandPairs(minhash
       .select(col("doc_id"), explode(bandArr).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.h").as("band_hash"))
-    val a = bands.select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
-    val b = bands.select(col("doc_id").as("doc_b"), col("band"), col("band_hash"))
-    a.join(b, Seq("band", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.h").as("band_hash")))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1453,8 +1436,7 @@ object TextOps {
     val fr = Seq("le", "les", "et", "est", "dans", "pour")
     def hits(set: Seq[String], name: String): Column =
       sum(when(col("token").isin(set: _*), 1).otherwise(0)).as(name)
-    val toks = Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    val toks = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), explode(tokensCol).as("token"))
     toks
       .groupBy(col("doc_id"), col("lang"))
@@ -1490,8 +1472,7 @@ object TextOps {
     * digit runs / single non-space), long-word count.
     */
   def tokenCount(spark: SparkSession, sf: String): DataFrame =
-    Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(
         col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_ws_tokens"),
@@ -1514,8 +1495,7 @@ object TextOps {
     * banded quality label. All ratios are exact double divisions.
     */
   def textQualityScore(spark: SparkSession, sf: String): DataFrame =
-    Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .select(
         col("doc_id"),
         length(col("text")).cast("long").as("n_chars_m"),
@@ -1569,8 +1549,7 @@ object TextOps {
     * (and to the DuckDB twin): same char-based grams, same md5-hex min.
     */
   def docFingerprint(spark: SparkSession, sf: String): DataFrame =
-    Det
-      .spreadSmallScan(spark, Tables.documents(spark, sf))
+    Tables.documents(spark, sf)
       .where(length(col("text")) >= 8)
       .select(
         col("doc_id"),

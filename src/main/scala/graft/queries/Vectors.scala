@@ -66,19 +66,16 @@ object Vectors {
   // ---------------------------------------------------------------- §2.I8
   /** Brute-force kNN: all-pairs dot product, global top-20.
     *
-    * The stream side is explicitly repartitioned across all cores: the
-    * vectors arrive as ONE small parquet file (one scan partition), but the
-    * work is O(n²) in the row count — without the repartition the entire
-    * pair loop runs on a single task (measured: 1.6 s single-task vs ~0.5 s
-    * across 32 at sf0.1). Harness-gated via Det.spreadSmallScan so a real
-    * cluster (scan parallelism from row-group splits) never pays the
-    * exchange. TakeOrderedAndProject keeps top-k per partition before the
-    * driver merge — no global sort of the pair stream.
+    * The stream side's parallelism is the loaded table's: the work is
+    * O(n²) in the row count, so the harness spreads `embeddings` over every
+    * core at load (`Tables.spreadIfEnabled`). TakeOrderedAndProject keeps
+    * top-k per partition before the driver merge — no global sort of the
+    * pair stream.
     */
   def knnBruteForce(spark: SparkSession, sf: String): DataFrame = {
     val e = Tables.embeddings(spark, sf)
     guardAllPairs(spark, e.select(col("vec_id")), "knn_brute_force")
-    val a = Det.spreadSmallScan(spark, e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")))
+    val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
     a.join(b, col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"), dot(col("emb_a"), col("emb_b")).as("dot"))
@@ -118,7 +115,7 @@ object Vectors {
     // (Spark non-ANSI → 0, DuckDB → error). Mirrored in the oracle and in
     // embeddingQuantize (ADVICE r8). Fixtures contain no zero vectors, so
     // current hashes are unchanged.
-    val q8 = Det.spreadSmallScan(spark, Tables.embeddings(spark, sf))
+    val q8 = Tables.embeddings(spark, sf)
       .withColumn(
         "norm",
         sqrt(expr("aggregate(embedding, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))
@@ -174,8 +171,7 @@ object Vectors {
     val e = Tables
       .embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"), sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
-    val a = Det.spreadSmallScan(spark, // parallelize the n² loop (see knnBruteForce)
-      e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("norm").as("norm_a")))
+    val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("norm").as("norm_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"), col("norm").as("norm_b"))
     a.join(b, col("vec_a") < col("vec_b"))
       .select(
@@ -235,7 +231,7 @@ object Vectors {
     val bench = e.where(col("vec_id") % 50 === 0).select(
         col("vec_id").as("bench_id"), col("embedding").as("bemb"), col("norm").as("bnorm"))
       .orderBy(col("bench_id")).limit(256)
-    val corpus = Det.spreadSmallScan(spark, e.where(col("vec_id") % 50 =!= 0))
+    val corpus = e.where(col("vec_id") % 50 =!= 0)
     corpus.crossJoin(broadcast(bench))
       .groupBy(col("vec_id"))
       .agg(max(struct(
@@ -292,8 +288,7 @@ object Vectors {
     val e = Tables
       .embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"), sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
-    val a = Det.spreadSmallScan(spark,
-      e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("norm").as("norm_a")))
+    val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("norm").as("norm_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"), col("norm").as("norm_b"))
     a.join(b, col("vec_a") < col("vec_b"))
       .select(
@@ -1369,7 +1364,7 @@ object Vectors {
     * (pinned in ExtrasSpec).
     */
   def embeddingQuantize(spark: SparkSession, sf: String): DataFrame =
-    Det.spreadSmallScan(spark, Tables.embeddings(spark, sf))
+    Tables.embeddings(spark, sf)
       .withColumn(
         "norm",
         sqrt(expr("aggregate(embedding, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))

@@ -74,17 +74,17 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("decode runs distributed: plan has no driver-side collect") {
-    // inspect the pre-checkpoint pipeline: the registered multimodal_meta
-    // localCheckpoints the skinny metadata before its ORDER BY (so the
-    // sort's range sampling can't re-run the codec), which truncates the
-    // visible lineage — the decode stage itself lives in extractMeta
+    // inspect the decode pipeline itself: it lives in extractMeta, below
+    // the keyed barrier the registered multimodal_meta puts on the skinny
+    // metadata before its ORDER BY (so the sort's range sampling can't
+    // re-run the codec)
     val meta = Multimodal.extractMeta(spark, Multimodal.syntheticMedia(spark, Sf0001))
     // mapPartitions shows up as a (De)SerializeFromObject + MapPartitions plan
     val plan = meta.queryExecution.executedPlan.toString()
     assert(plan.contains("MapPartitions"), plan.take(500))
-    // localCheckpoint keeps partitions on executors — nothing in the
-    // registered query collects to the driver (the checkpointed scan shows
-    // as an RDD scan, not a LocalTableScan of collected rows)
+    // the barrier is a shuffle that keeps partitions on executors —
+    // nothing in the registered query collects to the driver (no
+    // LocalTableScan of collected rows)
     val registered = Multimodal.multimodalMeta(spark, Sf0001).queryExecution.executedPlan.toString()
     assert(!registered.contains("LocalTableScan"), registered.take(500))
   }

@@ -30,6 +30,20 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.lineitem(spark, Sf0001).schema("l_shipdate").dataType === TimestampNTZType)
   }
 
+  test("the harness spread puts the corpus tables on every core and passes a tiny table through") {
+    val s = spark.newSession()
+    s.conf.set(graft.queries.Det.SpreadConf, "true")
+    val cores = s.sparkContext.defaultParallelism
+    assert(cores > 1)
+    Seq("documents", "embeddings").foreach { name =>
+      assert(Tables.table(s, Sf001, name).rdd.getNumPartitions === cores, s"table $name")
+    }
+    // 5 rows, far under 256 KB: size-scaled count 1, so no exchange at all
+    val region = Tables.region(s, Sf001)
+    assert(region.rdd.getNumPartitions === 1)
+    assert(!region.queryExecution.executedPlan.toString.contains("Exchange"))
+  }
+
   test("embeddings are fixed 64-dim float arrays") {
     val e = Tables.embeddings(spark, Sf0001)
     assert(e.schema("embedding").dataType === ArrayType(FloatType, containsNull = true))
