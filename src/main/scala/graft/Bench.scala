@@ -41,38 +41,6 @@ object Bench {
     "dedup_overlap_report", "dedup_semantic", "cluster_topics", "ann_ivf",
     "dedup_clusters_stars", "dedup_exact_substring_capped")
 
-  /** Input bytes of the scale-factor directory (recursive over the table
-    * files/dirs) — the signal the shuffle-partition default derives from. */
-  private def inputBytes(dir: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
-      else f.length()
-    val d = new java.io.File(dir)
-    if (d.exists()) walk(d) else 0L
-  }
-
-  /** Scale-adaptive shuffle-partition default (round 15, VERDICT r14 item
-    * 1; guide §2.2 "derive partitioning from input size, not a constant"):
-    * one partition per 32 MB of compressed parquet input, clamped to
-    * [8, cpus]. The 32 MB knee is MEASURED, tax-matched both ways
-    * (BENCH_NOTES §55): at sf0.1 (17 MB → 8) shuffle=32 read +19–40% on
-    * the shuffle-heavy rows (32 reducer tasks on ≤ 600 k-row stages is
-    * scheduling overhead — re-confirming the r8 matrix); at sf1 (161 MB →
-    * 8) shuffle=32 regressed cluster_topics +68% / dedup_semantic +35% /
-    * tfidf +58% (their walls are k-row training-chain stages) and helped
-    * only dedup_ngram_jaccard (−17%); at sf3 (495 MB → 16) shuffle=16 won
-    * net (ngram_jaccard −26%, cluster_topics −16%, dedup_semantic −8%,
-    * overlap report +5%, rest flat). A static per-session count cannot fit
-    * both a corpus-sized token shuffle and a k-row training stage — the
-    * production mechanism is AQE coalescing per stage (kept OFF locally:
-    * measured r8, re-measured r15 — AQE's replan roundtrips also break
-    * this library's ReuseExchange shapes, dedup_overlap_report 15.3 →
-    * 51.1 s at sf1). SPARK_GRAFT_SHUFFLE still overrides; the sf0.1
-    * default is unchanged vs r14, so the driver's bench stays comparable.
-    */
-  private[graft] def shuffleDefault(cpus: Int, bytes: Long): Int =
-    math.max(8L, math.min(cpus.toLong, (bytes + (32L << 20) - 1) / (32L << 20))).toInt
-
   private[graft] def qJson(m: Seq[(String, Double)]): String =
     m.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
@@ -95,7 +63,7 @@ object Bench {
     require(actions.contains(benchAction),
       s"SPARK_GRAFT_ACTION must be one of ${actions.keys.toSeq.sorted.mkString("|")}, got '$benchAction'")
     val runAction = actions(benchAction)
-    val spark = session(cpus, sfDir)
+    val spark = Session.bench(sfDir)
     // Warm-cache the input tables (default on; SPARK_GRAFT_CACHE=false for
     // the cold-scan variant); bench_out.json records the mode in `cached`.
     val cached = sys.env.getOrElse("SPARK_GRAFT_CACHE", "true").toBoolean
@@ -352,51 +320,6 @@ object Bench {
     spark.stop()
     println(line)
     Console.out.flush()
-  }
-
-  /** Local cores for every harness main: `SPARK_GRAFT_CPUS` when it is a
-    * positive count, else the JVM's available processors. */
-  private[graft] def cpus: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).filter(_ > 0)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-
-  /** The bench session posture, shared by Bench and the dev tools
-    * (PlanAudit, PlanFormatted) so their plans are the
-    * benched plans. Each `SPARK_GRAFT_*` override below is read here only. */
-  private[graft] def session(cpus: Int, sfDir: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // data-adaptive default, env-overridable — see shuffleDefault above
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", shuffleDefault(cpus, inputBytes(sfDir)).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.EventsNanosConf, "true")
-      // 8MB threshold (round-8 matrix A/B, docs/BENCH_NOTES.md): true
-      // dimension tables (≤ a few MB) still broadcast, but the 150 k-row
-      // orders FACT side no longer does — its per-execution driver-side
-      // broadcast build cost ~0.3–0.4 s/query (q3 1.09 → 0.67 s as a
-      // shuffle join). That is also the honest scale plan: at 100 TB a
-      // fact side is never broadcast-able.
-      .config("spark.sql.autoBroadcastJoinThreshold", sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "8MB"))
-      // AQE off for the local bench (round-8 matrix A/B): with pre-spread
-      // cached inputs and sub-second stages, AQE's per-stage
-      // materialize-and-replan roundtrips cost 0.05–0.3 s/query and its
-      // runtime re-optimizations (coalesce, skew split, join demotion)
-      // have nothing to improve at this size. A cluster deployment keeps
-      // it on — this is harness latency tuning, recorded in the artifact.
-      // It also keeps static plans inspectable: the adaptive wrapper
-      // hides codegen spans and exchange reuse until execution.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // local-harness opt-in: test tables are single-row-group files, so
-      // heavy-compute queries repartition them across cores (queries.Det)
-      .config(graft.queries.Det.SpreadConf, sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
-      .getOrCreate()
-    // ERROR, not WARN: each WindowExec "No Partition Defined" WARN is ~190
-    // chars and the round-4 run emitted 8 of them — ~1.5 KB of the driver's
-    // 2000-char tail capture, crowding the one line that matters.
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
   }
 
   /** Warm-caches every input table. BASELINE.md's DuckDB numbers are WARM

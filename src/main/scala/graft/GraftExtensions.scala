@@ -12,7 +12,7 @@ import graft.functions.{BloomContains, BpeApply, CharBigramCounts, DistinctNgram
   *
   * Wire-up options, both standard Spark:
   *   - config: `spark.sql.extensions=graft.GraftExtensions`
-  *   - code:   `SparkSession.builder().withExtensions(new GraftExtensions)`
+  *   - code:   `.withExtensions(new GraftExtensions)` on the session builder
   *   - an existing session: `GraftExtensions.register(spark)`
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

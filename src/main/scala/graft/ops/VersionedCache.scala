@@ -1,8 +1,13 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** The reference's versioned directory cache relationalized
   * [R:directory_cache.py ~med]: it kept one file per (state, page) per
@@ -23,6 +28,29 @@ object VersionedCache {
       .partitionBy("run_id")
       .parquet(path)
 
+  /** Reads the history with an explicit schema: the data columns from one
+    * data file's footer (the Spark schema its writer stored there), read on
+    * the driver, plus `run_id` as a string. A bare `spark.read.parquet`
+    * runs a schema-inference job per call and infers partition types, which
+    * reads zero-padded run ids ("00009") back as integers.
+    */
+  private def history(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file = fs.listStatus(root).iterator
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("run_id="))
+      .flatMap(d => fs.listStatus(d.getPath).iterator.map(_.getPath))
+      .find(_.getName.startsWith("part-"))
+      .getOrElse(throw new IllegalArgumentException(s"no run data under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val json =
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)
+      finally reader.close()
+    val data = DataType.fromJson(json).asInstanceOf[StructType]
+    spark.read.schema(data.add("run_id", StringType)).parquet(path)
+  }
+
   /** Latest row per key over the whole history.
     *
     * Run-id contract: `run_id` is a string partition column compared
@@ -35,7 +63,7 @@ object VersionedCache {
     * the same data yields the same survivor on any cluster layout.
     */
   def latest(spark: SparkSession, path: String, key: String): DataFrame = {
-    val all = spark.read.parquet(path)
+    val all = history(spark, path)
     val tiebreak = xxhash64(struct(all.columns.map(col): _*))
     val w = Window.partitionBy(col(key)).orderBy(col("run_id").desc, tiebreak.asc)
     all
@@ -55,7 +83,7 @@ object VersionedCache {
       hashCol: String,
       runA: String,
       runB: String): DataFrame = {
-    val all = spark.read.parquet(path)
+    val all = history(spark, path)
     val a = all.where(col("run_id") === runA).select(col(key), col(hashCol).as("hash_a"))
     val b = all.where(col("run_id") === runB).select(col(key), col(hashCol).as("hash_b"))
     a.join(b, Seq(key), "full")

@@ -593,7 +593,7 @@ object Relational {
     * The interleave is 32 UNROLLED shift/mask terms built by a Scala
     * fold — a plain codegen'd expression tree, deliberately not an
     * `aggregate()` HOF lambda (interpreted per row — the measured loss
-    * documented on [[TextOps.dedupMinhashPerRow]]). At deployment scale
+    * in docs/BENCH_NOTES.md §60). At deployment scale
     * the same zval feeds repartitionByRange + sortWithinPartitions; the
     * registered query reports the layout, which is the oracle-able part.
     */

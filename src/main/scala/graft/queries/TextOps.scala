@@ -735,45 +735,6 @@ object TextOps {
       minhashCandidatePairs(spark, sf).select(col("doc_a"), col("doc_b")))._1
       .orderBy(col("doc_id"))
 
-  // ------------------------------------- north star: LSH, zero-shuffle form
-  /** MinHash-LSH with the signature computed as a PER-ROW fold instead of
-    * explode + groupBy: zero extra rows, O(1) state per doc, no Generate.
-    *
-    * Measured verdict (sf0.1, warm, local[32]): ~3× SLOWER than
-    * [[dedupMinhashLsh]] (3.6 s vs 1.3 s) — the nested-lambda HOF is
-    * interpreted (an 8-element array allocated per shingle step), while the
-    * explode form runs codegen'd AND its groupBy already reduces each doc
-    * to one row map-side (partial agg), so its shuffle is doc-keyed, not
-    * shingle-keyed. The explode form is therefore the production plan at
-    * every scale; this variant is kept as the measured counter-example
-    * (TextOpsAltSpec pins output equality) — the same fold pattern that
-    * WINS for doc_fingerprint (where the fold replaces a 1-row-per-
-    * character Generate and there is no aggregation to amortize it).
-    *
-    * Fold seed '~' (ASCII 0x7E > 'f') sorts above every md5 hex digest, so
-    * `least` needs no null handling.
-    */
-  def dedupMinhashPerRow(spark: SparkSession, sf: String): DataFrame = {
-    val fp = expr(
-      "aggregate(" +
-        "transform(sequence(1, size(t) - 2), i -> concat(element_at(t, i), ' ', element_at(t, i + 1), ' ', element_at(t, i + 2)))," +
-        " array_repeat('~', 8)," +
-        " (acc, sh) -> transform(sequence(0, 7), j -> least(element_at(acc, j + 1), md5(CAST(concat(sh, '#', j) AS BINARY)))))")
-    val minhash = Tables.documents(spark, sf)
-      .select(col("doc_id"), tokensCol.as("t"))
-      .where(size(col("t")) >= 3)
-      .select(col("doc_id"), fp.as("fp"))
-    val bandArr = array((0 until 4).map(bnd =>
-      struct(
-        lit(bnd).as("band"),
-        md5(concat(element_at(col("fp"), 2 * bnd + 1), element_at(col("fp"), 2 * bnd + 2)).cast("binary"))
-          .as("h"))): _*)
-    bandPairs(minhash
-      .select(col("doc_id"), explode(bandArr).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.h").as("band_hash")))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
   // --------------------------------------------------- north star: SimHash
   /** 16-bit SimHash per document: one bit per leading hex digit of each
     * distinct token's md5 — bit p is the sign of Σ(±1) over tokens, +1 when

@@ -36,10 +36,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n_events"))
       .select(col("w.start").as("hour_start"), col("n_events"))
 
-  /** J1 with watermark (required for append-mode streaming aggregation). */
-  def tumblingHourlyWatermarked(events: DataFrame): DataFrame =
-    tumblingHourly(events.withWatermark("ts", "1 hour"))
-
   // ---------------------------------------------------------------- §2.J3
   /** Session windows with a 30-minute gap, per user. */
   def sessionWindows(events: DataFrame): DataFrame =

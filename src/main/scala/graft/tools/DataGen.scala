@@ -241,14 +241,7 @@ object DataGen {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_testdata/sf1")
     val sf = args.lift(1).map(_.toDouble).getOrElse(1.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     generate(spark, outDir, sf)
     println(s"[datagen] wrote sf=$sf to $outDir")
     spark.stop()

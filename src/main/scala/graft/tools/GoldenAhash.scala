@@ -1,8 +1,6 @@
 // golden-table generator — not part of the library surface
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the committed golden aHash tables under
   * src/test/resources/golden/ (ahash_sf{0.001,0.01,0.1}.csv) that
   * MultimodalSpec pins exact equality against. Run only to re-seed after a
@@ -14,12 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GoldenAhash {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR")
     val outDir = new java.io.File("src/test/resources/golden")
     outDir.mkdirs()
     Seq("sf0.001", "sf0.01", "sf0.1").foreach { sf =>

@@ -7,15 +7,15 @@ import graft.SparkEntry
   * shuffle exchanges, join strategies chosen, whether any parquet scan
   * reads a full schema, and whole-stage-codegen coverage. Used to review
   * every plan after correctness lands (the brief's "explain and iterate"
-  * loop), not at runtime.
+  * loop), not at runtime. Plans are built in the bench posture
+  * ([[graft.Session.bench]]: AQE off, so the static plan shows codegen
+  * spans and exchange reuse; runtime plans can only improve on it), on
+  * uncached parquet, because the audit reads the scans' ReadSchema.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // the bench posture (AQE off, so the static plan shows codegen spans
-    // and exchange reuse; runtime plans can only improve on it), uncached:
-    // the audit reads parquet scans' ReadSchema
-    val spark = graft.Bench.session(graft.Bench.cpus, sfDir)
+    val spark = graft.Session.bench(sfDir)
     // same subset knob as Bench: SPARK_GRAFT_ONLY=a,b,c audits those rows
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

@@ -4,8 +4,8 @@ package graft.tools
 import graft.SparkEntry
 
 /** Writes `explain("formatted")` output for the named queries to
-  * `<outDir>/<query>_<suffix>.txt`, one file per query, in Bench's session
-  * ([[graft.Bench.session]]). One deliberate difference from the benched
+  * `<outDir>/<query>_<suffix>.txt`, one file per query, in the bench
+  * posture ([[graft.Session.bench]]). One deliberate difference from the benched
   * operator tree (ADVICE r14 item 4): Bench additionally warm-caches the
   * input tables, so its plans scan InMemoryRelation where these dumps
   * scan parquet — kept this way ON PURPOSE, because the dumps are the
@@ -18,7 +18,7 @@ object PlanFormatted {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val names = args.drop(3).toSeq
-    val spark = graft.Bench.session(graft.Bench.cpus, sfDir)
+    val spark = graft.Session.bench(sfDir)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

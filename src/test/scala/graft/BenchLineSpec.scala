@@ -50,16 +50,16 @@ class BenchLineSpec extends AnyFunSuite {
   test("shuffle-partition default derives from input size, clamped to [8, cpus]") {
     val mb = 1L << 20
     // sf0.1 is ~17 MB -> stays at the measured-best 8 on any core count
-    assert(Bench.shuffleDefault(32, 17 * mb) == 8)
-    assert(Bench.shuffleDefault(8, 17 * mb) == 8)
+    assert(Session.shuffleDefault(32, 17 * mb) == 8)
+    assert(Session.shuffleDefault(8, 17 * mb) == 8)
     // sf1 is ~161 MB -> still 8 (shuffle=32 measured worse there, §54)
-    assert(Bench.shuffleDefault(32, 161 * mb) == 8)
-    assert(Bench.shuffleDefault(8, 161 * mb) == 8)
+    assert(Session.shuffleDefault(32, 161 * mb) == 8)
+    assert(Session.shuffleDefault(8, 161 * mb) == 8)
     // sf3 ~495 MB -> 16 (measured better than 8 at matched windows)
-    assert(Bench.shuffleDefault(32, 495 * mb) == 16)
+    assert(Session.shuffleDefault(32, 495 * mb) == 16)
     // ...but never above the core count
-    assert(Bench.shuffleDefault(8, 495 * mb) == 8)
+    assert(Session.shuffleDefault(8, 495 * mb) == 8)
     // degenerate inputs never go below 8
-    assert(Bench.shuffleDefault(4, 0L) == 8)
+    assert(Session.shuffleDefault(4, 0L) == 8)
   }
 }

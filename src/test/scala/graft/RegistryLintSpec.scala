@@ -104,11 +104,10 @@ class RegistryLintSpec extends AnyFunSuite {
       ".collect()" -> "driver-side materialization in an operator",
       "monotonically_increasing_id" -> "retry-unsafe nondeterministic id (SPARK-23207 class)",
       "rand(" -> "nondeterministic function",
-      "udf(" -> "scala UDF (kills codegen; use built-ins or a Catalyst Expression)")
-    // one persisted-index path: ops/ owns the two legitimate uses
-    // (IndexStore's commit, VersionedCache's appended history)
+      "udf(" -> "scala UDF (kills codegen; use built-ins or a Catalyst Expression)",
+      "spark.read.parquet(" -> "schema-inference job per read (use Tables.parquet)")
+    // one persisted-index path: ops/ owns the legitimate use (IndexStore's commit)
     val bannedOutsideOps = Seq(
-      "spark.read.parquet(" -> "schema-inference job per read (use Tables.parquet)",
       "commitAtomically(" -> "hand-rolled index commit (use IndexStore.buildOnce)")
     // lint CODE only: scaladoc legitimately discusses the banned calls
     // (e.g. Skew.scala documents WHY monotonically_increasing_id is unsafe)
@@ -123,6 +122,24 @@ class RegistryLintSpec extends AnyFunSuite {
       if src.contains(pat)
     } yield s"$p: $pat ($why)"
     assert(offenders.isEmpty, s"discipline violations:\n${offenders.mkString("\n")}")
+  }
+
+  test("one session seam: only graft/Session.scala builds a SparkSession or reads SPARK_GRAFT_CPUS") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // the pattern is a regex so this file's own source never matches it
+    val builder = "SparkSession\\s*\\.\\s*builder\\s*\\(".r
+    val cpusVar = "\"SPARK_GRAFT_CPUS\""
+    val offenders = for {
+      dir <- Seq("src/main/scala", "src/test/scala")
+      p <- Files.walk(Paths.get(dir)).iterator().asScala
+      if p.toString.endsWith(".scala") && !p.endsWith(Paths.get("graft/Session.scala"))
+      src = Files.readString(p)
+      hit <- Seq(
+        builder.findFirstIn(src).map(_ => "builder call (use graft.Session)"),
+        Option.when(dir == "src/main/scala" && src.contains(cpusVar))(s"$cpusVar (use Session.cpus)")).flatten
+    } yield s"$p: $hit"
+    assert(offenders.isEmpty, s"session built or cores read outside graft.Session:\n${offenders.mkString("\n")}")
   }
 
   test("VecDot codegen expression is bit-identical to the HOF fold it replaced") {

@@ -8,14 +8,6 @@ import SharedSpark._
   */
 class TextOpsAltSpec extends AnyFunSuite {
 
-  test("per-row-fold minhash == explode-form minhash (bit-equal candidate pairs)") {
-    import graft.queries.TextOps
-    val viaExplode = TextOps.dedupMinhashLsh(spark, Sf001).collect().toSeq
-    val viaFold = TextOps.dedupMinhashPerRow(spark, Sf001).collect().toSeq
-    assert(viaFold === viaExplode)
-    assert(viaFold.nonEmpty)
-  }
-
   test("minhash persisted-index probe == in-query LSH; index builds once and is reused") {
     import graft.queries.TextOps
     val inQuery = TextOps.dedupMinhashLsh(spark, Sf001).collect().toSeq
