@@ -53,16 +53,12 @@ object Bench {
       headKey: String, headTotal: Double, nQueries: Int, errJson: String,
       sfDir: String, iters: Int, retries: Int, inflJson: String,
       inflAdjJson: String, canaryJson: String, cached: Boolean,
-      action: String, confJson: String): String =
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(head)},"$headKey":$headTotal,"n_queries":$nQueries,"full":"bench_out.json","errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":$cached,"action":"$action",$confJson}"""
+      confJson: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(head)},"$headKey":$headTotal,"n_queries":$nQueries,"full":"bench_out.json","errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":$cached,"action":"noop",$confJson}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val benchAction = sys.env.getOrElse("SPARK_GRAFT_ACTION", "noop")
-    require(actions.contains(benchAction),
-      s"SPARK_GRAFT_ACTION must be one of ${actions.keys.toSeq.sorted.mkString("|")}, got '$benchAction'")
-    val runAction = actions(benchAction)
     val spark = Session.bench(sfDir)
     // Warm-cache the input tables (default on; SPARK_GRAFT_CACHE=false for
     // the cold-scan variant); bench_out.json records the mode in `cached`.
@@ -307,9 +303,9 @@ object Bench {
     }
     val line = shortLine(total, head, headKey, headTotal, timed.size, errJson,
       sfDir, iters, retries, inflJson, inflAdjJson, canaryJson, cached,
-      benchAction, confJson)
+      confJson)
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed.toSeq)},"baseline10_total":$headTotal,"errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":$cached,"action":"$benchAction",$confJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed.toSeq)},"baseline10_total":$headTotal,"errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":$cached,"action":"noop",$confJson}"""
     if (only.isEmpty) try {
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(fullLine) finally w.close()
@@ -337,19 +333,13 @@ object Bench {
       df.count() // materialize now, not inside the first timed query
     }
 
-  /** Timed actions, chosen by SPARK_GRAFT_ACTION (whitelisted, ADVICE r7:
-    * an unknown value fails fast instead of silently running noop while
-    * the raw env string lands in the artifact).
-    *  - noop (default): full materialization through Spark's no-op DSv2
-    *    sink — every column computed, the contract ORDER BY executed,
-    *    nothing persisted. The honest posture vs DuckDB's result fetch.
-    *    count() would plant an Aggregate the optimizer prunes under: a
-    *    pure per-row projection collapses to a metadata row count and
-    *    every final ORDER BY is elided (measured deltas in
-    *    docs/BENCH_NOTES.md).
-    *  - count: that legacy pruned action, kept for A/Bs against old
-    *    artifacts. */
-  private val actions: Map[String, DataFrame => Unit] = Map(
-    "noop" -> (df => df.write.mode("overwrite").format("noop").save()),
-    "count" -> (df => df.count(): Unit))
+  /** The timed action: full materialization through Spark's no-op DSv2
+    * sink — every column computed, the contract ORDER BY executed,
+    * nothing persisted. The honest posture vs DuckDB's result fetch.
+    * count() would plant an Aggregate the optimizer prunes under: a pure
+    * per-row projection collapses to a metadata row count and every final
+    * ORDER BY is elided (measured deltas in docs/BENCH_NOTES.md). The
+    * artifact records it as `"action":"noop"`. */
+  private def runAction(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
 }

@@ -43,6 +43,7 @@ object Skew {
   /** count + exact-decimal sum of `valueCol` per `key`, computed via the
     * salted two-phase plan. The salt hashes EVERY input column, so any
     * distinguishing field (ids, timestamps) contributes spread.
+    * Library surface listed in the README layout ("salted agg"); SkewSpec is its only caller.
     */
   def saltedCountSum(df: DataFrame, key: String, valueCol: String, buckets: Int): DataFrame =
     df.withColumn("__salt", contentSalt(buckets, df.columns.map(col).toSeq: _*))

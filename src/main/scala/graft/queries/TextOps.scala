@@ -469,12 +469,11 @@ object TextOps {
     * TextOpsAltSpec pins the 4-round labels EQUAL to a union-find fixpoint
     * ground truth at every SF, so a component that ever needed a 5th round
     * would fail the suite rather than silently yield non-minimal labels.
-    * At 100 TB the same step runs loop-until-fixpoint with a
-    * localCheckpoint per round — the standard distributed
-    * connected-components recipe — but a FIXED unrolled count is what both
-    * engines can express identically, which is what the oracle contract
-    * needs; the honest boundary is that a deeper-than-4-hops chain would
-    * need the loop form.
+    * At 100 TB the same step runs to convergence ([[starsCc]], registered
+    * as `dedup_clusters_fixpoint`), but a FIXED unrolled count is what
+    * both engines can express identically, which is what the oracle
+    * contract needs; the honest boundary is that a deeper-than-4-hops
+    * chain needs the loop form.
     */
   private val CcRounds = 4
 
@@ -538,73 +537,14 @@ object TextOps {
        |SELECT v AS doc_id, lbl AS cluster_id FROM labels$CcRounds ORDER BY doc_id""".stripMargin
   }
 
-  /** Loop-until-fixpoint connected components — the 100 TB form of
-    * [[dedupClusters]] (VERDICT r5 item 6). Same output contract
-    * (doc_id, cluster_id = min reachable id); the round count is driven by
-    * convergence instead of the fixed oracle-expressible unroll, so a
-    * deeper-than-[[CcRounds]]-hop chain merges fully instead of silently
-    * under-merging. Each round's labels are localCheckpoint-materialized —
-    * without the cut, round r's lineage re-executes all prior rounds per
-    * consumer (the 2^rounds blowup documented on [[dedupClusters]]) — and
-    * the convergence probe is ONE aggregate over the new labels, no join:
-    * with self-edges, every label is non-increasing per round, so the
-    * label SUM (exact decimal(38,0) — no overflow, no float drift) is
-    * strictly decreasing until the fixpoint and stationary exactly there.
-    * (Replaced the round-9-original join-back+count probe: one fewer
-    * corpus-wide shuffle per round, same decision.) `maxRounds` bounds
-    * the loop against a pathological corpus; hitting it raises rather
-    * than returning non-converged labels.
-    */
-  def connectedComponentsFixpoint(
-      docs: DataFrame,
-      pairs: DataFrame,
-      maxRounds: Int = 50): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .unionByName(docs.select(col("doc_id").as("src"), col("doc_id").as("dst")))
-      .localCheckpoint()
-    var labels = docs.select(col("doc_id").as("v"), col("doc_id").as("lbl")).localCheckpoint()
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0)
-    var prevSum = labelSum(labels)
-    var changed = true
-    var round = 0
-    while (changed && round < maxRounds) {
-      round += 1
-      val next = edges
-        .join(labels, col("src") === col("v"))
-        .groupBy(col("dst"))
-        .agg(min(col("lbl")).as("lbl"))
-        .select(col("dst").as("v"), col("lbl"))
-        .localCheckpoint()
-      val s = labelSum(next)
-      changed = s.compareTo(prevSum) != 0
-      prevSum = s
-      labels = next
-    }
-    if (changed) throw new IllegalStateException(
-      s"connected components did not converge within $maxRounds rounds")
-    labels.select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
-  }
-
-  /** [[dedupClusters]] with the fixpoint loop over the same MinHash-LSH
-    * candidate pairs — TextOpsAltSpec pins it equal to the unrolled oracle
-    * form at sf0.001/0.01 and strictly better on a synthetic deep chain.
-    */
-  def dedupClustersFixpoint(spark: SparkSession, sf: String): DataFrame =
-    connectedComponentsFixpoint(
-      Tables.documents(spark, sf).select(col("doc_id")),
-      minhashCandidatePairs(spark, sf).select(col("doc_a"), col("doc_b")))
-      .orderBy(col("doc_id"))
-
-  /** Oracle for [[dedupClustersFixpoint]]: DuckDB's WITH RECURSIVE runs
-    * the SAME loop-until-fixpoint the Spark side runs, so the fixpoint
-    * form gets a true fixpoint oracle instead of borrowing the unrolled
-    * one (which would silently agree only up to [[CcRounds]] hops).
-    * `reach(v, lbl)` is the transitive closure over the symmetric edge
-    * set — lbl is in v's component — seeded with (d, d) for every
-    * document; min(lbl) per v is the component minimum, exactly
-    * [[connectedComponentsFixpoint]]'s cluster_id. Closure size is
+  /** Oracle for `dedup_clusters_fixpoint` and `dedup_clusters_stars`
+    * (both [[dedupClustersStars]]): DuckDB's WITH RECURSIVE runs a
+    * loop-until-fixpoint, so the looped form gets a true fixpoint oracle
+    * instead of borrowing the unrolled one (which would silently agree
+    * only up to [[CcRounds]] hops). `reach(v, lbl)` is the transitive
+    * closure over the symmetric edge set — lbl is in v's component —
+    * seeded with (d, d) for every document; min(lbl) per v is the
+    * component minimum, exactly [[starsCc]]'s cluster_id. Closure size is
     * Σ|C|² over components — candidate-pair components are tiny dup
     * clusters, so this stays small even though the corpus is not.
     */
@@ -625,10 +565,12 @@ object TextOps {
 
   // -------------------------------- north star: large-star/small-star CC
   /** Large-star/small-star connected components (Kiveris et al. 2014,
-    * "Connected Components in MapReduce and Beyond" — the alternation the
-    * r9/r10 verdicts asked to close) — the DEEP-DIAMETER form of
-    * [[connectedComponentsFixpoint]]. Min-label propagation pays one round
-    * per hop of component diameter; the star alternation contracts paths
+    * "Connected Components in MapReduce and Beyond") — the
+    * loop-until-fixpoint form of [[dedupClusters]]: the round count is
+    * driven by convergence instead of the fixed oracle-expressible
+    * unroll, so a deeper-than-[[CcRounds]]-hop chain merges fully instead
+    * of silently under-merging. Min-label propagation pays one round per
+    * hop of component diameter; the star alternation contracts paths
     * roughly geometrically, so round count is ~log(diameter), not
     * diameter.
     *
@@ -637,11 +579,9 @@ object TextOps {
     * diameter is 1 at sf0.01, 2 at sf0.1, **12 at sf1** (3 961 components;
     * two at diameter 11 and two at 12, max cluster 583 docs) — diameter
     * GROWS with corpus size, so a fixed unroll ([[CcRounds]]) or a
-    * diameter-bound loop is the wrong 100 TB posture. Measured round
-    * counts over the sf1 pair graph (BENCH_NOTES §21, identical
-    * labels): stars 5 vs label loop 11, equal wall time at this scale
-    * (4.9 s both — a stars round does ~2 aggregates + 2 joins vs the
-    * label round's 1 + 1), with the gap opening as diameter grows.
+    * diameter-bound loop is the wrong 100 TB posture. Over the sf1 pair
+    * graph (BENCH_NOTES §21, identical labels) stars took 5 rounds where
+    * the min-label loop this kernel replaced took 11.
     *
     * Round = large-star then small-star over an edge set kept oriented
     * max→min:
@@ -650,13 +590,18 @@ object TextOps {
     *  - small-star: per vertex u (edges now (u, v<u)), connect every
     *    smaller neighbor and u itself to m = min(Γ(u) ∪ {u}).
     * Both emit edges (x, m) with m < x, so endpoint values only ever
-    * decrease; at the joint fixpoint the edge set is exactly
-    * {(v, min(C)) : v ∈ C, v ≠ min(C)} per component C, and labels read
-    * off directly. Convergence is checked EXACTLY per round — the union
-    * of consecutive edge sets has the same distinct count as both — on
-    * the candidate-pair graph (dup-pair-sized, tiny next to the corpus),
-    * not on corpus-sized state. Per-round localCheckpoint for the same
-    * lineage reason as the label loop.
+    * decrease; at the joint fixpoint the edge set is a star forest
+    * {(v, min(C)) : v ∈ C, v ≠ min(C)} per component C. Convergence is
+    * tested as exactly that: ONE aggregate over the pair-graph-sized edge
+    * set, before round 1 too — every source has exactly one out-edge and
+    * no target is also a source. Then each source points at its
+    * component minimum and labels read off the edges, with no extra
+    * confirming round and no set-equality count (BENCH_NOTES §63: an
+    * already-star-shaped pair graph needs 0 rounds). The edge
+    * checkpoints are lazy, so that test's job is also the one that
+    * materialises them. `maxRounds` bounds the loop against a
+    * pathological graph; hitting it raises rather than returning
+    * non-converged labels.
     */
   private[graft] def starsCc(
       docs: DataFrame,
@@ -666,11 +611,17 @@ object TextOps {
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
+    def isStarForest(e: DataFrame): Boolean = e
+      .select(col("u").as("x"), lit(1).as("out"), lit(0).as("in"))
+      .unionByName(e.select(col("v").as("x"), lit(0).as("out"), lit(1).as("in")))
+      .groupBy(col("x"))
+      .agg(sum(col("out")).as("out"), max(col("in")).as("in"))
+      .where(col("out") > 1 || (col("out") === 1 && col("in") === 1))
+      .count() == 0L
     var edges = oriented(
-      pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))).localCheckpoint()
-    var nEdges = edges.count()
+      pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))).localCheckpoint(eager = false)
+    var converged = isStarForest(edges)
     var rounds = 0
-    var converged = nEdges == 0L
     while (!converged && rounds < maxRounds) {
       rounds += 1
       // large-star over symmetric neighborhoods: (v, m) for v > u
@@ -688,8 +639,7 @@ object TextOps {
       // 4 SortMergeJoins / 14 stages per round → 4 / 1 / 11 with it;
       // measured per-round loop time at sf1 (5 rounds, matched windows)
       // 7.37 → 5.55 s (−25%), sf0.1 flat-to-better. Pair-graph-sized
-      // state, same bounded-intermediate posture as the per-round `next`
-      // checkpoint below.
+      // state, same bounded-intermediate posture as the `next` checkpoint.
       val large = sym.join(mLarge, Seq("u"))
         .where(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
@@ -698,36 +648,32 @@ object TextOps {
         .localCheckpoint()
       // small-star over the (u, v<u) orientation: (x, m) for x ∈ Γ(u) ∪ {u} \ {m}
       val mSmall = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val next = large.join(mSmall, Seq("u"))
+      edges = large.join(mSmall, Seq("u"))
         .where(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .unionByName(mSmall.select(col("u"), col("m").as("v")))
         .where(col("u") =!= col("v"))
         .distinct()
-        .localCheckpoint()
-      val nNext = next.count()
-      // exact set equality: |A ∪ B| = |A| = |B|
-      converged = nNext == nEdges &&
-        next.unionByName(edges).distinct().count() == nNext
-      edges = next
-      nEdges = nNext
+        .localCheckpoint(eager = false)
+      converged = isStarForest(edges)
     }
     if (!converged) throw new IllegalStateException(
       s"star CC did not converge within $maxRounds rounds")
-    val lbl = edges.groupBy(col("u")).agg(min(col("v")).as("lbl"))
-      .select(col("u").as("doc_id"), col("lbl"))
+    // star forest: each source's one out-edge is its component minimum
+    val lbl = edges.select(col("u").as("doc_id"), col("v").as("lbl"))
     val labels = docs.select(col("doc_id"))
       .join(lbl, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
     (labels, rounds)
   }
 
-  /** [[dedupClusters]]' contract via the star alternation — identical
-    * output to [[dedupClustersFixpoint]] (same pairs, same component-min
-    * labels), so it shares the WITH RECURSIVE transitive-closure oracle;
-    * TextOpsAltSpec additionally pins stars == label-fixpoint on the
-    * corpus and on planted deep-diameter graphs where the label loop's
-    * round count blows up.
+  /** [[dedupClusters]]' contract run to convergence by [[starsCc]] over
+    * the same MinHash-LSH candidate pairs — registered as both
+    * `dedup_clusters_fixpoint` and `dedup_clusters_stars`, checked against
+    * the WITH RECURSIVE transitive-closure oracle; TextOpsAltSpec pins it
+    * equal to a union-find reference on the corpus at every SF and on
+    * seeded random graphs, and shows the logarithmic round count on a
+    * planted deep chain.
     */
   def dedupClustersStars(spark: SparkSession, sf: String): DataFrame =
     starsCc(
@@ -1590,7 +1536,7 @@ object TextOps {
     ("dedup_minhash_probe", dedupMinhashProbe _, dedupMinhashLshSql),
     ("dedup_edit_distance", dedupEditDistance _, dedupEditDistanceSql),
     ("dedup_clusters", dedupClusters _, dedupClustersSql),
-    ("dedup_clusters_fixpoint", dedupClustersFixpoint _, dedupClustersFixpointSql),
+    ("dedup_clusters_fixpoint", dedupClustersStars _, dedupClustersFixpointSql),
     ("dedup_clusters_stars", dedupClustersStars _, dedupClustersFixpointSql),
     ("dedup_simhash", dedupSimhash _, dedupSimhashSql),
     ("dedup_ngram_jaccard", dedupNgramJaccard _, dedupNgramJaccardSql),

@@ -23,20 +23,24 @@ object Sources {
     StructField("url", StringType, nullable = false),
     StructField("active", BooleanType, nullable = true)))
 
-  /** A2 — CSV ingest with explicit schema (header row skipped). */
+  /** A2 — CSV ingest with explicit schema (header row skipped).
+    * Library surface listed in the README layout; SourcesSpec is its only caller. */
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  /** A3 — JSON-lines ingest with explicit schema. */
+  /** A3 — JSON-lines ingest with explicit schema.
+    * Library surface listed in the README layout; SourcesSpec is its only caller. */
   def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** A4 — raw text ingest (one row per line, column `value`). */
+  /** A4 — raw text ingest (one row per line, column `value`).
+    * Library surface listed in the README layout; SourcesSpec is its only caller. */
   def readText(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path)
 
   /** A4 — whole-file binary ingest (path, modificationTime, length,
     * content) — the raw-HTML page-capture shape.
+    * Library surface listed in the README layout; SourcesSpec is its only caller.
     */
   def readBinary(spark: SparkSession, pathGlob: String): DataFrame =
     spark.read.format("binaryFile").load(pathGlob)
@@ -44,6 +48,7 @@ object Sources {
   /** A6 — partitioned parquet sink: the stage/state directory layout of
     * the reference's directory cache. Partition values become directory
     * keys, giving free partition pruning on read.
+    * Library surface listed in the README layout; SourcesSpec is its only caller.
     */
   def writePartitioned(df: DataFrame, path: String, partitionCols: String*): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
@@ -58,7 +63,8 @@ object Sources {
     (if (singleFile) df.coalesce(1) else df).write.mode("overwrite").json(path)
 
   /** A5′ — CSV report sink with header (the Sheets-export round-trip);
-    * `singleFile` semantics as in [[writeJsonReport]]. */
+    * `singleFile` semantics as in [[writeJsonReport]].
+    * Library surface listed in the README layout; SourcesSpec is its only caller. */
   def writeCsvReport(df: DataFrame, path: String, singleFile: Boolean = true): Unit =
     (if (singleFile) df.coalesce(1) else df).write.mode("overwrite").option("header", "true").csv(path)
 
@@ -66,10 +72,13 @@ object Sources {
     * interchange with ORC-native warehouses. Same predicate-pushdown /
     * column-pruning surface as parquet (SourcesSpec pins the round-trip
     * and the pushed filter).
+    * Library surface listed in the README layout; SourcesSpec is its only caller.
     */
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
 
+  /** A5″ — ORC source, the read side of [[writeOrc]].
+    * Library surface listed in the README layout; SourcesSpec is its only caller. */
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 }

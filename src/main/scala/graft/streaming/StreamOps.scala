@@ -29,7 +29,8 @@ object StreamOps {
     events.withColumn("ts", col("ts").cast("timestamp"))
 
   // ---------------------------------------------------------------- §2.J1
-  /** Tumbling 1-hour counts — works unchanged on batch and stream. */
+  /** Tumbling 1-hour counts — works unchanged on batch and stream.
+    * Library surface listed in the README layout; StreamingSpec is its only caller. */
   def tumblingHourly(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour").as("w"))
@@ -37,7 +38,8 @@ object StreamOps {
       .select(col("w.start").as("hour_start"), col("n_events"))
 
   // ---------------------------------------------------------------- §2.J3
-  /** Session windows with a 30-minute gap, per user. */
+  /** Session windows with a 30-minute gap, per user.
+    * Library surface listed in the README layout; StreamingSpec is its only caller. */
   def sessionWindows(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "1 hour")
@@ -46,7 +48,8 @@ object StreamOps {
       .select(col("user_id"), col("w.start").as("session_start"), col("n_events"))
 
   // ---------------------------------------------------------------- §2.J5
-  /** Streaming dedup by event_id bounded by the watermark. */
+  /** Streaming dedup by event_id bounded by the watermark.
+    * Library surface listed in the README layout; StreamingSpec is its only caller. */
   def dedupWithinWatermark(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
@@ -64,6 +67,7 @@ object StreamOps {
     * throws on batch input; the batch twin substitutes
     * dropDuplicates("event_id") — StreamingSpec pins the two equal on the
     * same data.
+    * Library surface listed in the README layout; StreamingSpec is its only caller.
     */
   def cleanDedupProfile(events: DataFrame): DataFrame =
     events
@@ -200,6 +204,7 @@ object StreamOps {
 
   /** changeDetect via transformWithState (requires the RocksDB state store
     * provider — set spark.sql.streaming.stateStore.providerClass).
+    * Library surface listed in the README layout; StreamingSpec is its only caller.
     */
   def changeDetectTws(events: Dataset[(Long, Event)]): Dataset[Change] = {
     import events.sparkSession.implicits._
@@ -209,7 +214,8 @@ object StreamOps {
       .transformWithState(new TypeChangeProcessor, TimeMode.None(), OutputMode.Append())
   }
 
-  /** Batch twin of [[changeDetect]] for the equivalence test. */
+  /** Batch twin of [[changeDetect]] for the equivalence test.
+    * Kept as the reference StreamingSpec's J6 tests compare both streaming forms against. */
   def changeDetectBatch(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
@@ -523,6 +529,7 @@ object StreamOps {
     * Intra-batch duplicates resolve exactly like [[bloomDedup]]: the
     * lowest-event-id row of a new key is the definitely-new survivor;
     * its intra-batch duplicates are emitted as candidates.
+    * Library surface listed in the README layout; StreamingSpec is its only caller.
     */
   def bloomDedupTagged(
       events: Dataset[(Long, Event)],

@@ -58,50 +58,40 @@ class TextOpsAltSpec extends AnyFunSuite {
     }
   }
 
-  test("dedup_clusters: 4 rounds reach the fixpoint, labels are component minima") {
-    import org.apache.spark.sql.functions._
-    import graft.queries.TextOps
-    // all SFs including the bench surface: a component whose min-id vertex
-    // sits more than CcRounds hops from some member would surface here
-    Seq(Sf0001, Sf001, "/root/testdata/sf0.1").foreach { sf =>
-      val got = TextOps.dedupClusters(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      // ground truth: union-find over the candidate pairs
-      val pairs = TextOps.dedupMinhashLsh(spark, sf).select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      got.foreach { case (doc, cluster) =>
-        assert(cluster === find(doc), s"sf=$sf doc=$doc")
-      }
-      assert(pairs.nonEmpty && got.values.toSet.size < got.size, s"sf=$sf: no nontrivial cluster")
+  /** Independent connected-components reference: union-find over `pairs`,
+    * smaller root wins, so every vertex maps to its component minimum
+    * (a vertex in no pair maps to itself). */
+  private def unionFind(pairs: Iterable[(Long, Long)]): Long => Long = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    find
   }
 
-  test("fixpoint connected components == unrolled form on the corpus; converges past the unroll depth on a deep chain") {
-    import org.apache.spark.sql.functions._
-    import graft.queries.TextOps
-    import spark.implicits._
-    // same output contract as the oracle-checked unroll on the real corpus
-    Seq(Sf0001, Sf001).foreach { sf =>
-      val unrolled = TextOps.dedupClusters(spark, sf).collect().map(r => (r.getLong(0), r.getLong(1)))
-      val fixpoint = TextOps.dedupClustersFixpoint(spark, sf).collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(fixpoint === unrolled, s"sf=$sf")
+  test("dedup_clusters: 4 rounds reach the fixpoint, labels are component minima") {
+    // all SFs including the bench surface: a component whose min-id vertex
+    // sits more than CcRounds hops from some member would surface here.
+    // The converging kernel's two registered names answer the same
+    // contract and are checked against the same union-find ground truth.
+    Seq(Sf0001, Sf001, "/root/testdata/sf0.1").foreach { sf =>
+      val pairs = graft.queries.TextOps.dedupMinhashLsh(spark, sf).select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      val find = unionFind(pairs)
+      Seq("dedup_clusters", "dedup_clusters_fixpoint", "dedup_clusters_stars").foreach { q =>
+        val got = SparkEntry.queries(q)(spark, sf).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toMap
+        got.foreach { case (doc, cluster) =>
+          assert(cluster === find(doc), s"$q sf=$sf doc=$doc")
+        }
+        assert(pairs.nonEmpty && got.values.toSet.size < got.size, s"$q sf=$sf: no nontrivial cluster")
+      }
     }
-    // a 9-vertex chain needs 8 min-label hops — deeper than the CcRounds=4
-    // unroll can merge; the fixpoint loop must collapse it to one cluster
-    val docs = (1L to 9L).toDF("doc_id")
-    val chain = (1L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = TextOps.connectedComponentsFixpoint(docs, chain).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(labels === (1L to 9L).map(_ -> 1L).toMap)
   }
 
   test("df cap bounds the candidate-pair stream on a boilerplate-heavy corpus") {
@@ -154,40 +144,76 @@ class TextOpsAltSpec extends AnyFunSuite {
     assert(math.abs(jac - 16.0 / 18.0) < 1e-12, s"jaccard=$jac")
   }
 
-  test("large-star/small-star CC == label fixpoint on the corpus; logarithmic rounds on deep-diameter graphs") {
+  test("large-star/small-star CC: logarithmic rounds on deep-diameter graphs, 0 rounds on a star forest, raises at maxRounds") {
     import spark.implicits._
     import graft.queries.TextOps
-    // contract equality on the real candidate graph (shared oracle)
-    Seq(Sf0001, Sf001).foreach { sf =>
-      val viaLabels = TextOps.dedupClustersFixpoint(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val viaStars = TextOps.dedupClustersStars(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      assert(viaStars === viaLabels, s"sf=$sf")
-    }
-    // a 200-vertex chain has diameter 199: the label loop needs one round
-    // per hop (> its 50-round default guard → raises), while the star
-    // alternation contracts it in a handful of rounds
+    def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // (the corpus labels are checked against union-find in the
+    // dedup_clusters test above, at every SF)
+    // a 200-vertex chain has diameter 199: min-label propagation would
+    // need one round per hop, while the star alternation contracts it in
+    // a handful of rounds
     val docs = (1L to 200L).toDF("doc_id")
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val (labels, rounds) = TextOps.starsCc(docs, chain)
-    assert(labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ===
-      (1L to 200L).map(_ -> 1L).toMap)
-    assert(rounds <= 12, s"stars took $rounds rounds on a 199-hop chain")
+    assert(labelsOf(labels) === (1L to 200L).map(_ -> 1L).toMap)
+    assert(rounds <= 8, s"stars took $rounds rounds on a 199-hop chain")
+    // too few rounds raise instead of returning unconverged labels
     intercept[IllegalStateException] {
-      TextOps.connectedComponentsFixpoint(docs, chain, maxRounds = 20)
+      TextOps.starsCc(docs, chain, maxRounds = 1)
     }
     // mixed shape: two components (a 37-chain offset by 1000 and a star
     // plus isolated docs) — labels are component minima, isolateds self
     val docs2 = ((1L to 40L) ++ (1001L to 1037L)).toDF("doc_id")
     val pairs2 = ((1001L until 1037L).map(i => (i, i + 1)) ++ // chain
       (2L to 30L).map(i => (1L, i))).toDF("doc_a", "doc_b")   // star at 1
-    val (labels2, _) = TextOps.starsCc(docs2, pairs2)
-    val got2 = labels2.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val want2 =
       ((1L to 30L).map(_ -> 1L) ++ (31L to 40L).map(d => d -> d) ++
         (1001L to 1037L).map(_ -> 1001L)).toMap
-    assert(got2 === want2)
+    assert(labelsOf(TextOps.starsCc(docs2, pairs2)._1) === want2)
+    // a pair graph that is already a star forest (each star centred on
+    // its minimum) is the fixpoint itself: 0 rounds
+    val stars3 = ((2L to 30L).map(i => (1L, i)) ++ (1002L to 1037L).map(i => (i, 1001L)))
+      .toDF("doc_a", "doc_b")
+    val (labels3, rounds3) = TextOps.starsCc(docs2, stars3)
+    assert(rounds3 === 0)
+    assert(labelsOf(labels3) ===
+      want2 ++ (1002L to 1037L).map(_ -> 1001L))
+  }
+
+  test("large-star/small-star CC == union-find on seeded random graphs (chains, stars, cliques, isolated vertices, duplicate pairs)") {
+    import spark.implicits._
+    import graft.queries.TextOps
+    // 24 fixed-seed cases of <= 40 vertices, ~26 s at local[4]. Vertex
+    // ids are a shuffled sample of 1..1000, so a component's minimum sits
+    // anywhere along its chain or star, not at a convenient end.
+    val rnd = new scala.util.Random(20261018L)
+    (1 to 24).foreach { c =>
+      val ids = rnd.shuffle((1L to 1000L).toVector).take(10 + rnd.nextInt(31))
+      val pairs = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+      var rest = ids
+      while (rest.nonEmpty) {
+        val k = math.min(rest.size, 1 + rnd.nextInt(8))
+        val comp = rest.take(k)
+        rest = rest.drop(k)
+        rnd.nextInt(4) match {
+          case 0 => pairs ++= comp.zip(comp.tail)                             // chain
+          case 1 => pairs ++= comp.tail.map(v => (comp.head, v))               // star
+          case 2 => pairs ++= comp.combinations(2).map(p => (p(0), p(1)))     // clique
+          case _ =>                                                            // isolated
+        }
+      }
+      // duplicate pairs, in either orientation
+      if (pairs.nonEmpty) pairs ++= Seq.fill(1 + rnd.nextInt(4)) {
+        val (a, b) = pairs(rnd.nextInt(pairs.size))
+        if (rnd.nextBoolean()) (a, b) else (b, a)
+      }
+      val find = unionFind(pairs)
+      val (labels, _) = TextOps.starsCc(ids.toDF("doc_id"), pairs.toSeq.toDF("doc_a", "doc_b"))
+      val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(got === ids.map(d => d -> find(d)).toMap, s"case $c: pairs=$pairs")
+    }
   }
 
   /** Naive complete reference for [[TextOps.exactSubstringDedup]]: ALL
