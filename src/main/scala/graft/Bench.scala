@@ -187,33 +187,18 @@ object Bench {
     // 2.20× headline was pure host degradation, adjudicable only by a judge
     // re-measuring both engines. The canary makes a taxed window
     // machine-readable: `canary_s` is the suite's timing of the compute-
-    // bound knn_brute_force row (measured here directly when a dev subset
-    // excludes it), `window_tax` is canary_s over the committed cross-run
-    // floor for THIS scale factor (docs/bench_floors*.json — resolved by
-    // last-path-segment equality when the retry-gating floors map is
-    // inapplicable, so sf1/sf3 artifacts self-report too). window_tax ≈ 1 ⇒ trust
-    // absolutes; window_tax ≫ 1 ⇒ the whole run is inflated by roughly
-    // that factor and only same-window comparisons are meaningful.
+    // bound knn_brute_force row, `window_tax` is canary_s over the
+    // committed cross-run floor for THIS scale factor (docs/bench_floors*.json
+    // — resolved by last-path-segment equality when the retry-gating floors
+    // map is inapplicable, so sf1/sf3 artifacts self-report too).
+    // window_tax ≈ 1 ⇒ trust absolutes; window_tax ≫ 1 ⇒ the whole run is
+    // inflated by roughly that factor and only same-window comparisons are
+    // meaningful. Suite-timed only: a full run always times the row, and a
+    // dev subset without it (or a run where it failed every iteration,
+    // which `errors` shows) reports `canary_src` "none".
     val CanaryQuery = "knn_brute_force"
-    // Out-of-band canary gating (ADVICE r12): a SPARK_GRAFT_ONLY dev subset
-    // that excludes the canary does NOT silently pay 3 extra full-sfDir
-    // knn_brute_force runs — and an oob min-of-2 has far less warmup/retry
-    // machinery than the suite path, so its tax reads high. Subset runs
-    // skip it unless SPARK_GRAFT_CANARY=force; the artifact records which
-    // path produced canary_s in `canary_src` ("suite" | "oob" | "none").
-    val oobAllowed = only.isEmpty || sys.env.get("SPARK_GRAFT_CANARY").contains("force")
-    val canaryS: Option[Double] = timed.get(CanaryQuery).orElse {
-      if (!oobAllowed) None
-      else SparkEntry.queries.get(CanaryQuery).flatMap { fn =>
-        try { runAction(fn(spark, sfDir)) } catch { case _: Throwable => () } // warm codegen
-        (1 to 2).map(_ => timeOnce(fn)).collect { case (t, None) => t }
-          .minOption.map(round3)
-      }
-    }
-    val canarySrc =
-      if (timed.contains(CanaryQuery)) "suite"
-      else if (canaryS.isDefined) "oob"
-      else "none"
+    val canaryS: Option[Double] = timed.get(CanaryQuery)
+    val canarySrc = if (canaryS.isDefined) "suite" else "none"
     // canary floor: the retry-gating floors map when applicable, else the
     // resolved floors file, else — when an env-supplied floors file lacks
     // the canary row (ADVICE r13) — the segment-resolved per-sf floors

@@ -1097,11 +1097,11 @@ object TextOps {
     * 8-grams present (stride-aligned) in more than this many documents are
     * HOT and leave the candidate join entirely. 64 keeps the cold
     * candidate volume ≤ 64 rows per probe gram by construction while
-    * being far above any non-boilerplate df (fixture max = 4); override
-    * via the session conf for corpora with heavier boilerplate.
+    * being far above any non-boilerplate df (fixture max = 4); callers
+    * with heavier boilerplate pass their own cap to
+    * [[exactSubstringDedupCapped]].
     */
-  private[graft] val XsubSeedDfCapConf = "spark.graft.xsub.seedDfCap"
-  private[graft] val XsubSeedDfCapDefault = 64
+  private val XsubSeedDfCap = 64
 
   /** Hot-seed-defended exact-substring dedup (VERDICT r11 item 3) —
     * IDENTICAL output contract to [[exactSubstringDedup]], different
@@ -1198,16 +1198,13 @@ object TextOps {
     (coldCandidates, hotDocs, hotPairs)
   }
 
-  /** Registered form of [[exactSubstringDedupCapped]]; cap from the
-    * session conf ([[XsubSeedDfCapConf]], default 64). Shares
-    * [[dedupExactSubstringSql]] — identical output to the base form by
-    * the exactness argument, cross-checked per round, not assumed.
+  /** Registered form of [[exactSubstringDedupCapped]] at the
+    * [[XsubSeedDfCap]] of 64. Shares [[dedupExactSubstringSql]] — identical
+    * output to the base form by the exactness argument, cross-checked per
+    * round, not assumed.
     */
-  def dedupExactSubstringCapped(spark: SparkSession, sf: String): DataFrame = {
-    val cap = spark.conf.getOption(XsubSeedDfCapConf)
-      .map(_.toInt).getOrElse(XsubSeedDfCapDefault)
-    exactSubstringDedupCapped(Tables.documents(spark, sf), cap)
-  }
+  def dedupExactSubstringCapped(spark: SparkSession, sf: String): DataFrame =
+    exactSubstringDedupCapped(Tables.documents(spark, sf), XsubSeedDfCap)
 
   /** Exact-substring REWRITE — the full Lee et al. 2022 output: rather
     * than dropping whole documents, remove every duplicated ≥50-token

@@ -97,19 +97,21 @@ class GenBudgetSpec extends AnyFunSuite {
     * in a builder is the regression. */
   private val jobBudget: Map[String, Int] = Map(
     // localCheckpoint chains: k-means/IVF training, CC rounds with their
-    // convergence probes, the overlap report's flag union
-    "ann_ivf" -> 18,
-    "cluster_topics" -> 20,
+    // convergence probes, the overlap report's flag union. The three
+    // in-query IVF names: the (k, m, g) read, the training chain and the
+    // one checkpointed top-2 assignment (cluster_topics adds ctc's checkpoint)
+    "ann_ivf" -> 14,
+    "cluster_topics" -> 16,
     "dedup_clusters" -> 2,
     // both names run TextOps.starsCc: a star-forest test before round 1,
     // then a large-star checkpoint and a star-forest test per round
     "dedup_clusters_fixpoint" -> 4,
     "dedup_clusters_stars" -> 4,
     "dedup_overlap_report" -> 16,
-    "dedup_semantic" -> 18,
+    "dedup_semantic" -> 14,
     // IndexStore builds (cold) and the index read's schema job, paid
     // once per index path per JVM (Tables.parquet)
-    "ann_ivf_probe" -> 20,
+    "ann_ivf_probe" -> 16,
     "cluster_topics_probe" -> 3,
     "dedup_embedding_doc_probe" -> 2,
     "dedup_embedding_lsh_eqmass_probe" -> 4,

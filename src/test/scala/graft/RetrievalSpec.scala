@@ -229,6 +229,11 @@ class RetrievalSpec extends AnyFunSuite {
       Vectors.clusterTopics(spark, sf).select(col("cell")).distinct().count()
     assert(cells(Sf0001) === 8L, "sf0.001 (n=500) must floor at k=8")
     assert(cells("/root/testdata/sf0.1") === 16L, "sf0.1 (n=2000) must train k=16")
+    // the driver-side sizes every IVF plan is built from: (k, m, g) with
+    // m = min(n, 25·k) training rows and g = ceil(sqrt(k)) super-cells
+    def sizes(sf: String): (Int, Int, Int) = Vectors.ivfKParams(Tables.embeddings(spark, sf))
+    assert(sizes(Sf0001) === ((8, 200, 3)))
+    assert(sizes("/root/testdata/sf0.1") === ((16, 400, 4)))
   }
 
   test("dsir_importance_topk: scores recompute exactly from plain-Scala hashed-bucket multinomials") {
