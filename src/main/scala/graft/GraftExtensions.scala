@@ -7,7 +7,7 @@ import graft.functions.{BloomContains, BpeApply, CharBigramCounts, DistinctNgram
 
 /** Session extension (SURVEY §2.K4 surface): registers the library's native
   * functions into the SQL function registry, so the raw-SQL surface
-  * (api.SqlSurface / spark.sql) reaches the same codegen expressions as the
+  * (Tables.sql / spark.sql) reaches the same codegen expressions as the
   * Column API.
   *
   * Wire-up options, both standard Spark:

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
 
 /** Table registry (SURVEY.md §1.2): the single place that knows how to load
@@ -133,6 +136,48 @@ object Tables {
       if (n <= 1) df else df.repartition(n)
     }
   }
+
+  /** Runs SQL `text` over the tables of `sfDir`: the one SQL seam.
+    *
+    * The text is parsed with the session parser, and each relation that
+    * names one of [[names]] becomes [[table]]'s plan, so the spread and a
+    * persisted table's cached relation apply exactly as they do to a
+    * DataFrame builder. No view is registered: the session's catalog is
+    * the same after the call as before. A CTE name shadows a table name in
+    * its scope; an unknown name is left to the analyzer, which raises
+    * TABLE_OR_VIEW_NOT_FOUND.
+    */
+  def sql(spark: SparkSession, sfDir: String, text: String): DataFrame = {
+    val tables = names.toSet
+    def bind(p: LogicalPlan, ctes: Set[String]): LogicalPlan = p match {
+      // CTE bodies are not children: each sees the CTEs defined before it
+      case w: UnresolvedWith =>
+        val scopes = w.cteRelations.scanLeft(ctes)((seen, cte) => seen + cte._1.toLowerCase)
+        val bodies = w.cteRelations.zip(scopes).map { case ((n, body, depth), seen) =>
+          (n, bind(body, seen).asInstanceOf[SubqueryAlias], depth)
+        }
+        w.copy(child = bind(w.child, scopes.last), cteRelations = bodies)
+      case UnresolvedRelation(Seq(n), _, _) if tables(n.toLowerCase) && !ctes(n.toLowerCase) =>
+        table(spark, sfDir, n.toLowerCase).queryExecution.analyzed
+      case other =>
+        other.mapChildren(bind(_, ctes)).transformExpressions {
+          case s: SubqueryExpression => s.withNewPlan(bind(s.plan, ctes))
+        }
+    }
+    val plan = bind(spark.sessionState.sqlParser.parsePlan(text), Set.empty)
+    try ofRows.invoke(null, spark, plan).asInstanceOf[DataFrame]
+    catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+  }
+
+  /** A registry entry whose builder IS its oracle text, so the two cannot
+    * drift apart: `(name, Tables.sql(_, _, text), text)`. */
+  def sqlFirst(name: String, text: String): (String, (SparkSession, String) => DataFrame, String) =
+    (name, sql(_, _, text), text)
+
+  /** `classic.Dataset.ofRows(session, plan)`: public in bytecode but
+    * private[sql] to Scala, so reached through one reflective handle. */
+  private lazy val ofRows = Class.forName("org.apache.spark.sql.classic.Dataset").getMethod(
+    "ofRows", Class.forName("org.apache.spark.sql.classic.SparkSession"), classOf[LogicalPlan])
 
   /** Convenience loaders used by the query builders. */
   def lineitem(s: SparkSession, sf: String): DataFrame = table(s, sf, "lineitem")

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Run-over-run change detection (SURVEY §0.3 steps 6–7 — the reference's
@@ -17,31 +16,6 @@ import graft.Tables
   * production shape: one shuffle on the key, O(1) per-key state.
   */
 object ChangeDetect {
-
-  def changeDetect(spark: SparkSession, sf: String): DataFrame = {
-    val docs = Tables.documents(spark, sf)
-    val prev = docs
-      .where(col("doc_id") % 3 =!= 0)
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("prev_hash"))
-    val curr = docs
-      .where(col("doc_id") % 2 =!= 0)
-      .select(
-        col("doc_id"),
-        md5(
-          when(col("doc_id") % 5 === 0, concat(col("text"), lit("#v2")))
-            .otherwise(col("text"))
-            .cast("binary")).as("curr_hash"))
-    prev
-      .join(curr, Seq("doc_id"), "full")
-      .withColumn(
-        "status",
-        when(col("prev_hash").isNull, "added")
-          .when(col("curr_hash").isNull, "removed")
-          .when(col("prev_hash") =!= col("curr_hash"), "changed")
-          .otherwise("unchanged"))
-      .select(col("doc_id"), col("status"))
-      .orderBy(col("doc_id"))
-  }
 
   val changeDetectSql: String =
     """WITH prev AS (
@@ -62,17 +36,11 @@ object ChangeDetect {
   /** Per-run summary — the reference's change-list report (counts by
     * status) [R:change_list.py ~med].
     */
-  def changeSummary(spark: SparkSession, sf: String): DataFrame =
-    changeDetect(spark, sf)
-      .groupBy(col("status"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("status"))
-
   val changeSummarySql: String =
     s"""SELECT status, COUNT(*) AS n FROM (${changeDetectSql.replace("ORDER BY doc_id", "")}) GROUP BY status ORDER BY status"""
 
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
-    ("change_detect", changeDetect _, changeDetectSql),
-    ("change_summary", changeSummary _, changeSummarySql)
+    Tables.sqlFirst("change_detect", changeDetectSql),
+    Tables.sqlFirst("change_summary", changeSummarySql)
   )
 }

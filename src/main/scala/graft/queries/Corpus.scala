@@ -67,21 +67,6 @@ object Corpus {
     * sampling state, stable under re-partitioning — the property that
     * matters when the split must be identical across reruns at 100 TB.
     */
-  def splitTrainTest(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .documents(spark, sf)
-      .select(
-        col("doc_id"),
-        col("lang"),
-        substring(md5(concat(col("doc_id").cast("string"), lit("#split:42")).cast("binary")), 1, 2)
-          .as("bucket"),
-        when(
-          substring(md5(concat(col("doc_id").cast("string"), lit("#split:42")).cast("binary")), 1, 2) < "29",
-          "test")
-          .otherwise("train")
-          .as("split"))
-      .orderBy(col("doc_id"))
-
   val splitTrainTestSql: String =
     """SELECT doc_id, lang,
       |  substring(md5(doc_id || '#split:42'), 1, 2) AS bucket,
@@ -276,7 +261,7 @@ object Corpus {
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
     ("doc_chunking", docChunking _, docChunkingSql),
     ("chunk_dedup", chunkDedup _, chunkDedupSql),
-    ("split_train_test", splitTrainTest _, splitTrainTestSql),
+    Tables.sqlFirst("split_train_test", splitTrainTestSql),
     ("repetition_score", repetitionScore _, repetitionScoreSql),
     ("contamination_check", contaminationCheck _, contaminationCheckSql),
     ("corpus_yield_report", corpusYieldReport _, corpusYieldReportSql)

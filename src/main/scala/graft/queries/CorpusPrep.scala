@@ -101,20 +101,11 @@ object CorpusPrep {
   /** Deterministic stratified downsampling (data mixing): per-language keep
     * rates — 25% for the dominant 'en', 50% for everything else — decided
     * by an md5 bucket of (doc_id, salt), the same hash-split machinery as
-    * Corpus.splitTrainTest. Pure per-row projection + filter: identical
-    * output on any cluster layout, any rerun, any partitioning — the
+    * split_train_test. Pure per-row projection + filter: identical output
+    * on any cluster layout, any rerun, any partitioning — the
     * property a 100 TB sampling pass must have (a rand()-based sample
     * re-draws per task retry).
     */
-  def stratifiedSample(spark: SparkSession, sf: String): DataFrame =
-    Tables.documents(spark, sf)
-      .withColumn(
-        "bucket",
-        substring(md5(concat(col("doc_id").cast("string"), lit("#samp:7")).cast("binary")), 1, 2))
-      .where(col("bucket") < when(col("lang") === "en", lit("40")).otherwise(lit("80")))
-      .select(col("doc_id"), col("lang"), col("bucket"))
-      .orderBy(col("doc_id"))
-
   val stratifiedSampleSql: String =
     """SELECT doc_id, lang, substring(md5(doc_id || '#samp:7'), 1, 2) AS bucket
       |FROM documents
@@ -318,7 +309,7 @@ object CorpusPrep {
     * [p10, p90] band, and report the band + yield. The bounds table is one
     * row per lang — broadcast back onto the corpus; percentile() /
     * percentile_cont parity is the same pairing as
-    * Scalars.percentileSummary: both interpolate linearly but the float
+    * percentile_summary: both interpolate linearly but the float
     * evaluation order differs in the last ulp, so the bounds are rounded
     * to 4 dp on both sides (they are output columns AND filter bounds —
     * rounding before the filter keeps the two engines' kept-sets equal).
@@ -403,21 +394,6 @@ object CorpusPrep {
     * key the aggregation just partitioned by, so Spark reuses that
     * partitioning — two corpus shuffles total at any scale.
     */
-  def crossSourceDedup(spark: SparkSession, sf: String): DataFrame = {
-    val h = Tables.documents(spark, sf)
-      .select(col("source"), md5(col("text").cast("binary")).as("h"))
-    val spread = h.groupBy(col("h")).agg(countDistinct(col("source")).as("n_sources"))
-    h.join(spread, Seq("h"))
-      .groupBy(col("source"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("n_sources") > 1, 1L).otherwise(0L)).as("n_cross_dup"))
-      .withColumn(
-        "cross_dup_rate",
-        col("n_cross_dup").cast("double") / col("n_docs").cast("double"))
-      .orderBy(col("source"))
-  }
-
   val crossSourceDedupSql: String =
     """WITH hs AS (
       |  SELECT source, md5(text) AS h FROM documents
@@ -534,14 +510,14 @@ object CorpusPrep {
 
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
     ("pack_sequences", packSequences _, packSequencesSql),
-    ("stratified_sample", stratifiedSample _, stratifiedSampleSql),
+    Tables.sqlFirst("stratified_sample", stratifiedSampleSql),
     ("weighted_sample", weightedSample _, weightedSampleSql),
     ("pii_scrub", piiScrub _, piiScrubSql),
     ("source_mix_report", sourceMixReport _, sourceMixReportSql),
     ("vocab_coverage", vocabCoverage _, vocabCoverageSql),
     ("length_quantile_filter", lengthQuantileFilter _, lengthQuantileFilterSql),
     ("shard_assignment", shardAssignment _, shardAssignmentSql),
-    ("cross_source_dedup", crossSourceDedup _, crossSourceDedupSql),
+    Tables.sqlFirst("cross_source_dedup", crossSourceDedupSql),
     ("dedup_bloom_prefilter", dedupBloomPrefilter _, dedupBloomPrefilterSql),
     ("token_histogram", tokenHistogram _, tokenHistogramSql)
   )

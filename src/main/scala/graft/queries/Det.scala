@@ -22,11 +22,6 @@ object Det {
     * double. Oracle twin: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE). */
   def sumMoney(c: Column): Column = sum(dec2(c)).cast("double")
 
-  /** Order-independent AVG: exact decimal sum divided by count, in double.
-    * Oracle twin: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*).
-    * (double / bigint division of identical operands is deterministic.) */
-  def avgMoney(c: Column): Column = sumMoney(c) / count(lit(1))
-
   /** Conf key: when "true", [[graft.Tables.table]] spreads every loaded
     * table across the session's cores (the rule is on
     * `Tables.spreadIfEnabled`). Set ONLY by the local harness sessions;

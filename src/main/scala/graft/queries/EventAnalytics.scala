@@ -213,25 +213,10 @@ object EventAnalytics {
     * (§2.J6). Version starts are rows whose type differs from the previous
     * row (lag); valid_to is the NEXT version start (lead over the filtered
     * stream), null while current. Windows partition by user — the bounded
-    * unit of locality.
+    * unit of locality. valid_to is the final ORDER BY tiebreaker because
+    * (user_id, valid_from, event_type) is not total when two same-type
+    * version starts share one timestamp (no fixture has such a tie yet).
     */
-  def scd2Intervals(spark: SparkSession, sf: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(spark, sf)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-      .where(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-      .withColumn("valid_to", lead(col("ts"), 1).over(w))
-      .select(
-        col("user_id"), col("event_type"), col("ts").as("valid_from"), col("valid_to"),
-        col("valid_to").isNull.as("is_current"))
-      // valid_to as final tiebreaker: (user_id, valid_from, event_type) is
-      // not total when two same-type version starts share one timestamp —
-      // latent on current fixtures (zero (user_id, ts) ties) but the
-      // positional compare would report spurious mismatches if data grew one
-      .orderBy(col("user_id"), col("valid_from"), col("event_type"), col("valid_to"))
-  }
-
   val scd2IntervalsSql: String =
     """WITH marked AS (
       |  SELECT user_id, event_type, ts, event_id,
@@ -326,7 +311,7 @@ object EventAnalytics {
     ("funnel_stages", funnelStages _, funnelStagesSql),
     ("cohort_retention", cohortRetention _, cohortRetentionSql),
     ("click_view_attribution", clickViewAttribution _, clickViewAttributionSql),
-    ("scd2_intervals", scd2Intervals _, scd2IntervalsSql),
+    Tables.sqlFirst("scd2_intervals", scd2IntervalsSql),
     ("sketch_countmin_hh", sketchCountminHh _, sketchCountminHhSql)
   )
 }

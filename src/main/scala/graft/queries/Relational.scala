@@ -6,12 +6,14 @@ import graft.Tables
 import Det._
 
 /** Relational core (SURVEY §2.B/C/D/F/G): projection, filtering, joins,
-  * aggregation, sort/limit/distinct, set ops — all as declarative
-  * DataFrame programs so Catalyst owns pushdown, pruning, join selection
-  * and partial aggregation. Scale posture: no collect, no driver loops;
-  * broadcast hints only on genuinely small dimensions (region/nation and
-  * inline bucket tables); everything else shuffles on its join/group keys
-  * and relies on AQE for runtime re-planning.
+  * aggregation, sort/limit/distinct, set ops — all declarative, so
+  * Catalyst owns pushdown, pruning, join selection and partial
+  * aggregation. Where the oracle text already is the plan, the name runs
+  * that text through [[graft.Tables.sql]]; the rest are DataFrame
+  * programs. Scale posture: no collect, no driver loops; broadcast only
+  * for genuinely small dimensions (region/nation and inline bucket
+  * tables); everything else shuffles on its join/group keys and relies
+  * on AQE for runtime re-planning.
   */
 object Relational {
 
@@ -19,21 +21,6 @@ object Relational {
   /** Flagship: TPC-H Q1-shaped pricing summary (SURVEY §7.2).
     * Scan + pushed filter + two-phase hash agg + total-order sort.
     */
-  def aggGroupBy(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .lineitem(spark, sf)
-      .where(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sumMoney(col("l_quantity")).as("sum_qty"),
-        sumMoney(col("l_extendedprice")).as("sum_base_price"),
-        sum(dec2(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec2(col("l_discount"))))
-          .cast("double")
-          .as("sum_disc_price"),
-        avgMoney(col("l_quantity")).as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
   val aggGroupBySql: String =
     """SELECT l_returnflag, l_linestatus,
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -50,17 +37,6 @@ object Relational {
   /** Project / rename / derive: the "source table" projection generalized.
     * Column pruning must reach the parquet scan (only 5 of 6 columns read).
     */
-  def scanProject(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .orders(spark, sf)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey").as("customer_id"),
-        col("o_totalprice"),
-        year(col("o_orderdate")).cast("long").as("o_year"),
-        substring(col("o_orderpriority"), 1, 1).cast("long").as("priority_code"))
-      .orderBy(col("o_orderkey"))
-
   val scanProjectSql: String =
     """SELECT o_orderkey, o_custkey AS customer_id, o_totalprice,
       |  CAST(year(o_orderdate) AS BIGINT) AS o_year,
@@ -71,18 +47,6 @@ object Relational {
   /** Filters: equality, IN, BETWEEN-style range, LIKE, NULL guard — all of
     * which Catalyst pushes into the parquet scan (verify via PushedFilters).
     */
-  def filterPredicates(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .orders(spark, sf)
-      .where(
-        col("o_orderstatus").isin("F", "O") &&
-          col("o_totalprice").between(50000, 200000) &&
-          col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-          col("o_orderpriority").like("1-%") &&
-          col("o_custkey").isNotNull)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderpriority"))
-      .orderBy(col("o_orderkey"))
-
   val filterPredicatesSql: String =
     """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority
       |FROM orders
@@ -146,18 +110,6 @@ object Relational {
   /** Inner equi-join, large×large: lineitem ⋈ orders on the natural key.
     * Shuffles both sides on orderkey; AQE picks the physical join.
     */
-  def joinInner(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .lineitem(spark, sf)
-      .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"), "inner")
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n_lineitems"),
-        sum(dec2(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec2(col("l_discount"))))
-          .cast("double")
-          .as("revenue"))
-      .orderBy(col("o_orderpriority"))
-
   val joinInnerSql: String =
     """SELECT o_orderpriority, COUNT(*) AS n_lineitems,
       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -167,20 +119,10 @@ object Relational {
 
   // ---------------------------------------------------------------- §2.C2
   /** Broadcast joins against the tiny dims: customer ⋈ nation ⋈ region.
-    * nation (25 rows) and region (5 rows) ship to every executor; the fact
-    * side never shuffles. This is the pattern that survives 100 TB facts.
+    * nation (25 rows) and region (5 rows) fall under the broadcast
+    * threshold and ship to every executor; the fact side never shuffles.
+    * This is the pattern that survives 100 TB facts.
     */
-  def joinBroadcast(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .customer(spark, sf)
-      .join(broadcast(Tables.nation(spark, sf)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, sf)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"))
-      .agg(
-        count(lit(1)).as("n_customers"),
-        sumMoney(col("c_acctbal")).as("sum_acctbal"))
-      .orderBy(col("r_name"))
-
   val joinBroadcastSql: String =
     """SELECT r_name, COUNT(*) AS n_customers,
       |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
@@ -212,14 +154,6 @@ object Relational {
   /** Left outer join: every customer keeps a row even with zero orders
     * (the "sources with no capture this run" semantic).
     */
-  def joinLeftOuter(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .customer(spark, sf)
-      .join(Tables.orders(spark, sf), col("c_custkey") === col("o_custkey"), "left")
-      .groupBy(col("c_custkey"))
-      .agg(count(col("o_orderkey")).as("n_orders"), sumMoney(col("o_totalprice")).as("total_spend"))
-      .orderBy(col("c_custkey"))
-
   val joinLeftOuterSql: String =
     """SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
@@ -231,24 +165,6 @@ object Relational {
     * keys vs event user ids) — the "reconcile two runs' source lists"
     * semantic. Aggregates first so the outer join is small×small.
     */
-  def joinFullOuter(spark: SparkSession, sf: String): DataFrame = {
-    val custSide = Tables
-      .customer(spark, sf)
-      .groupBy(col("c_custkey").as("id"))
-      .agg(count(lit(1)).as("n_cust"))
-    val evSide = Tables
-      .events(spark, sf)
-      .groupBy(col("user_id").as("id"))
-      .agg(count(lit(1)).as("n_events"))
-    custSide
-      .join(evSide, Seq("id"), "full")
-      .select(
-        col("id"),
-        coalesce(col("n_cust"), lit(0L)).as("n_cust"),
-        coalesce(col("n_events"), lit(0L)).as("n_events"))
-      .orderBy(col("id"))
-  }
-
   val joinFullOuterSql: String =
     """SELECT COALESCE(c.id, e.id) AS id,
       |  COALESCE(n_cust, 0) AS n_cust,
@@ -402,16 +318,6 @@ object Relational {
 
   // ---------------------------------------------------------------- §2.D2
   /** Global (ungrouped) aggregate: run totals. */
-  def aggGlobal(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .lineitem(spark, sf)
-      .agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("l_orderkey")).as("n_orders"),
-        sumMoney(col("l_extendedprice")).as("sum_price"),
-        min(col("l_shipdate")).as("min_shipdate"),
-        max(col("l_shipdate")).as("max_shipdate"))
-
   val aggGlobalSql: String =
     """SELECT COUNT(*) AS n_rows,
       |  COUNT(DISTINCT l_orderkey) AS n_orders,
@@ -446,20 +352,6 @@ object Relational {
     * Null grain markers are coalesced to '(all)' so ordering and the
     * oracle compare are null-free.
     */
-  def aggRollup(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .customer(spark, sf)
-      .join(broadcast(Tables.nation(spark, sf)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, sf)), col("n_regionkey") === col("r_regionkey"))
-      .rollup(col("r_name"), col("n_name"))
-      .agg(count(lit(1)).as("n_customers"), sumMoney(col("c_acctbal")).as("sum_acctbal"))
-      .select(
-        coalesce(col("r_name"), lit("(all)")).as("r_name"),
-        coalesce(col("n_name"), lit("(all)")).as("n_name"),
-        col("n_customers"),
-        col("sum_acctbal"))
-      .orderBy(col("r_name"), col("n_name"))
-
   val aggRollupSql: String =
     """SELECT COALESCE(r_name, '(all)') AS r_name,
       |  COALESCE(n_name, '(all)') AS n_name,
@@ -472,17 +364,6 @@ object Relational {
       |ORDER BY 1, 2""".stripMargin
 
   /** Cube over (status, priority): all four grains. */
-  def aggCube(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .orders(spark, sf)
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"))
-      .select(
-        coalesce(col("o_orderstatus"), lit("(all)")).as("o_orderstatus"),
-        coalesce(col("o_orderpriority"), lit("(all)")).as("o_orderpriority"),
-        col("n_orders"))
-      .orderBy(col("o_orderstatus"), col("o_orderpriority"))
-
   val aggCubeSql: String =
     """SELECT COALESCE(o_orderstatus, '(all)') AS o_orderstatus,
       |  COALESCE(o_orderpriority, '(all)') AS o_orderpriority,
@@ -512,17 +393,6 @@ object Relational {
   /** Pivot (status × segment matrix) in the portable SUM(CASE WHEN) form —
     * same math Spark's .pivot() plans, but oracle-safe.
     */
-  def aggPivotManual(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .orders(spark, sf)
-      .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(
-        sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L)).as("n_f"),
-        sum(when(col("o_orderstatus") === "O", 1L).otherwise(0L)).as("n_o"),
-        sum(when(col("o_orderstatus") === "P", 1L).otherwise(0L)).as("n_p"))
-      .orderBy(col("c_mktsegment"))
-
   val aggPivotManualSql: String =
     """SELECT c_mktsegment,
       |  CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
@@ -533,26 +403,9 @@ object Relational {
 
   // ---------------------------------------------------------------- §2.D5+
   /** Explicit GROUPING SETS (beyond rollup/cube): exactly the three grains
-    * (flag, status) / (flag) / (), via the Spark 4 groupingSets API —
-    * planned as a single Expand + aggregate, one shuffle for all grains.
+    * (flag, status) / (flag) / (), planned as a single Expand + aggregate,
+    * one shuffle for all grains.
     */
-  def aggGroupingSets(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .lineitem(spark, sf)
-      .groupingSets(
-        Seq(Seq(col("l_returnflag"), col("l_linestatus")), Seq(col("l_returnflag")), Seq.empty),
-        col("l_returnflag"),
-        col("l_linestatus"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(dec2(col("l_quantity"))).cast("double").as("sum_qty"))
-      .select(
-        coalesce(col("l_returnflag"), lit("(all)")).as("l_returnflag"),
-        coalesce(col("l_linestatus"), lit("(all)")).as("l_linestatus"),
-        col("n_rows"),
-        col("sum_qty"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
   val aggGroupingSetsSql: String =
     """SELECT COALESCE(l_returnflag, '(all)') AS l_returnflag,
       |  COALESCE(l_linestatus, '(all)') AS l_linestatus,
@@ -566,13 +419,6 @@ object Relational {
   /** Top-k: planned as TakeOrderedAndProject (no global sort of the full
     * table — each partition keeps k rows, driver merges k·p).
     */
-  def topkOrders(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .orders(spark, sf)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      .limit(10)
-
   val topkOrdersSql: String =
     """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
       |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin
@@ -642,28 +488,12 @@ object Relational {
 
   // ---------------------------------------------------------------- §2.F3
   /** distinct over a projection. */
-  def distinctValues(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .orders(spark, sf)
-      .select(col("o_orderstatus"), col("o_orderpriority"))
-      .distinct()
-      .orderBy(col("o_orderstatus"), col("o_orderpriority"))
-
   val distinctValuesSql: String =
     """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
       |ORDER BY o_orderstatus, o_orderpriority""".stripMargin
 
   // ---------------------------------------------------------------- §2.G1
   /** UNION (distinct) of two key sets. */
-  def setopUnion(spark: SparkSession, sf: String): DataFrame = {
-    val ev = Tables.events(spark, sf)
-    ev.where(col("event_type") === "click")
-      .select(col("user_id"))
-      .unionByName(ev.where(col("event_type") === "error").select(col("user_id")))
-      .distinct()
-      .orderBy(col("user_id"))
-  }
-
   val setopUnionSql: String =
     """SELECT user_id FROM events WHERE event_type = 'click'
       |UNION
@@ -672,18 +502,6 @@ object Relational {
 
   // ---------------------------------------------------------------- §2.G2
   /** INTERSECT: finished orders that also had a returned lineitem. */
-  def setopIntersect(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .orders(spark, sf)
-      .where(col("o_orderstatus") === "F")
-      .select(col("o_orderkey").as("okey"))
-      .intersect(
-        Tables
-          .lineitem(spark, sf)
-          .where(col("l_returnflag") === "R")
-          .select(col("l_orderkey").as("okey")))
-      .orderBy(col("okey"))
-
   val setopIntersectSql: String =
     """SELECT o_orderkey AS okey FROM orders WHERE o_orderstatus = 'F'
       |INTERSECT
@@ -694,18 +512,6 @@ object Relational {
   /** EXCEPT: the removed-page detection semantic (set difference) —
     * finished orders with no returned lineitem.
     */
-  def setopExcept(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .orders(spark, sf)
-      .where(col("o_orderstatus") === "F")
-      .select(col("o_orderkey").as("okey"))
-      .except(
-        Tables
-          .lineitem(spark, sf)
-          .where(col("l_returnflag") === "R")
-          .select(col("l_orderkey").as("okey")))
-      .orderBy(col("okey"))
-
   val setopExceptSql: String =
     """SELECT o_orderkey AS okey FROM orders WHERE o_orderstatus = 'F'
       |EXCEPT
@@ -717,22 +523,6 @@ object Relational {
     * revenue, top-10. Fact sides shuffle on the join keys; the final top-k
     * is TakeOrderedAndProject.
     */
-  def q3JoinTopk(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .customer(spark, sf)
-      .where(col("c_mktsegment") === "BUILDING")
-      .join(Tables.orders(spark, sf), col("c_custkey") === col("o_custkey"))
-      .where(col("o_orderdate") < lit("1999-01-01").cast("timestamp_ntz"))
-      .join(Tables.lineitem(spark, sf), col("o_orderkey") === col("l_orderkey"))
-      .where(col("l_shipdate") > lit("1996-01-01").cast("timestamp_ntz"))
-      .groupBy(col("o_orderkey"), col("o_orderdate"))
-      .agg(
-        sum(dec2(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec2(col("l_discount"))))
-          .cast("double")
-          .as("revenue"))
-      .orderBy(col("revenue").desc, col("o_orderkey").asc)
-      .limit(10)
-
   val q3JoinTopkSql: String =
     """SELECT o_orderkey, o_orderdate,
       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -749,27 +539,6 @@ object Relational {
     * lineitem/orders/customer shuffle on their keys, supplier joins on
     * (suppkey + matching nation), nation/region broadcast.
     */
-  def q5Multijoin(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .lineitem(spark, sf)
-      .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
-      .where(
-        col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-          col("o_orderdate") < lit("1999-01-01").cast("timestamp_ntz"))
-      .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
-      .join(
-        Tables.supplier(spark, sf),
-        col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(Tables.nation(spark, sf)), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, sf)), col("n_regionkey") === col("r_regionkey"))
-      .where(col("r_name") === "ASIA")
-      .groupBy(col("n_name"))
-      .agg(
-        sum(dec2(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec2(col("l_discount"))))
-          .cast("double")
-          .as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name").asc)
-
   val q5MultijoinSql: String =
     """SELECT n_name,
       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -786,13 +555,6 @@ object Relational {
       |ORDER BY revenue DESC, n_name ASC""".stripMargin
 
   /** BASELINE.md distinct_users_daily: exact distinct users per day. */
-  def distinctUsersDaily(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .events(spark, sf)
-      .groupBy(date_trunc("day", col("ts")).as("day"))
-      .agg(countDistinct(col("user_id")).as("n_users"))
-      .orderBy(col("day"))
-
   val distinctUsersDailySql: String =
     """SELECT date_trunc('day', ts) AS day, COUNT(DISTINCT user_id) AS n_users
       |FROM events GROUP BY 1 ORDER BY day""".stripMargin
@@ -851,38 +613,38 @@ object Relational {
     * BASELINE row-for-row.
     */
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
-    ("agg_groupby", aggGroupBy _, aggGroupBySql),
-    ("q1_pricing_summary", aggGroupBy _, aggGroupBySql),
-    ("q3_join_topk", q3JoinTopk _, q3JoinTopkSql),
-    ("q5_multijoin", q5Multijoin _, q5MultijoinSql),
-    ("distinct_users_daily", distinctUsersDaily _, distinctUsersDailySql),
+    Tables.sqlFirst("agg_groupby", aggGroupBySql),
+    Tables.sqlFirst("q1_pricing_summary", aggGroupBySql),
+    Tables.sqlFirst("q3_join_topk", q3JoinTopkSql),
+    Tables.sqlFirst("q5_multijoin", q5MultijoinSql),
+    Tables.sqlFirst("distinct_users_daily", distinctUsersDailySql),
     ("approx_distinct_linear", approxDistinctLinear _, approxDistinctLinearSql),
-    ("scan_project", scanProject _, scanProjectSql),
-    ("filter_predicates", filterPredicates _, filterPredicatesSql),
+    Tables.sqlFirst("scan_project", scanProjectSql),
+    Tables.sqlFirst("filter_predicates", filterPredicatesSql),
     ("case_when_classify", caseWhenClassify _, caseWhenClassifySql),
     ("cast_coalesce", castCoalesce _, castCoalesceSql),
-    ("join_inner", joinInner _, joinInnerSql),
-    ("join_broadcast", joinBroadcast _, joinBroadcastSql),
+    Tables.sqlFirst("join_inner", joinInnerSql),
+    Tables.sqlFirst("join_broadcast", joinBroadcastSql),
     ("join_sortmerge", joinSortMerge _, joinSortMergeSql),
-    ("join_left_outer", joinLeftOuter _, joinLeftOuterSql),
-    ("join_full_outer", joinFullOuter _, joinFullOuterSql),
+    Tables.sqlFirst("join_left_outer", joinLeftOuterSql),
+    Tables.sqlFirst("join_full_outer", joinFullOuterSql),
     ("join_semi", joinSemi _, joinSemiSql),
     ("join_anti", joinAnti _, joinAntiSql),
     ("join_range", joinRange _, joinRangeSql),
     ("join_asof", joinAsof _, joinAsofSql),
     ("join_skew_salted", joinSkewSalted _, joinSkewSaltedSql),
     ("layout_zorder", layoutZorder _, layoutZorderSql),
-    ("agg_global", aggGlobal _, aggGlobalSql),
+    Tables.sqlFirst("agg_global", aggGlobalSql),
     ("agg_count_distinct", aggCountDistinct _, aggCountDistinctSql),
-    ("agg_rollup", aggRollup _, aggRollupSql),
-    ("agg_cube", aggCube _, aggCubeSql),
-    ("agg_grouping_sets", aggGroupingSets _, aggGroupingSetsSql),
+    Tables.sqlFirst("agg_rollup", aggRollupSql),
+    Tables.sqlFirst("agg_cube", aggCubeSql),
+    Tables.sqlFirst("agg_grouping_sets", aggGroupingSetsSql),
     ("agg_collect_sorted", aggCollectSorted _, aggCollectSortedSql),
-    ("agg_pivot_manual", aggPivotManual _, aggPivotManualSql),
-    ("topk_orders", topkOrders _, topkOrdersSql),
-    ("distinct_values", distinctValues _, distinctValuesSql),
-    ("setop_union", setopUnion _, setopUnionSql),
-    ("setop_intersect", setopIntersect _, setopIntersectSql),
-    ("setop_except", setopExcept _, setopExceptSql)
+    Tables.sqlFirst("agg_pivot_manual", aggPivotManualSql),
+    Tables.sqlFirst("topk_orders", topkOrdersSql),
+    Tables.sqlFirst("distinct_values", distinctValuesSql),
+    Tables.sqlFirst("setop_union", setopUnionSql),
+    Tables.sqlFirst("setop_intersect", setopIntersectSql),
+    Tables.sqlFirst("setop_except", setopExceptSql)
   )
 }

@@ -115,16 +115,6 @@ object Scalars {
   /** Daily event rollup: count, exact distinct users, decimal-exact value
     * sum per day (BASELINE's distinct_users_daily generalized).
     */
-  def dailyCounts(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .events(spark, sf)
-      .groupBy(date_trunc("day", col("ts")).as("day"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users"),
-        sumMoney(col("value")).as("total_value"))
-      .orderBy(col("day"))
-
   val dailyCountsSql: String =
     """SELECT date_trunc('day', ts) AS day,
       |  COUNT(*) AS n_events,
@@ -283,25 +273,14 @@ object Scalars {
       |  GROUP BY event_type
       |) ORDER BY event_type""".stripMargin
 
-  /** Exact percentiles (interpolating). Spark `percentile()` and DuckDB
-    * `percentile_cont` both sort exactly and interpolate linearly, but the
-    * interpolation formula's float evaluation order differs between the
-    * engines, so the last ulp can disagree (observed at sf1:
+  /** Exact percentiles (interpolating). Spark (which plans
+    * `percentile_cont` as `percentile()`) and DuckDB both sort exactly and
+    * interpolate linearly, but the formula's float evaluation order
+    * differs between the engines, so the last ulp can disagree (observed at sf1:
     * 115.95 vs 115.95000000000002 — the sf0.1 data happened to match
     * bit-for-bit). Both sides therefore round the interpolated output to
     * 4 dp; min/max are raw (exact, no interpolation).
     */
-  def percentileSummary(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .events(spark, sf)
-      .groupBy(col("event_type"))
-      .agg(
-        round(expr("percentile(value, 0.5)"), 4).as("p50"),
-        round(expr("percentile(value, 0.9)"), 4).as("p90"),
-        min(col("value")).as("min_v"),
-        max(col("value")).as("max_v"))
-      .orderBy(col("event_type"))
-
   val percentileSummarySql: String =
     """SELECT event_type,
       |  round(percentile_cont(0.5) WITHIN GROUP (ORDER BY value), 4) AS p50,
@@ -350,21 +329,6 @@ object Scalars {
   /** Second string family: split_part, replace, translate, reverse,
     * repeat, left/right, greatest/least.
     */
-  def stringFuncs2(spark: SparkSession, sf: String): DataFrame =
-    Tables.documents(spark, sf)
-      .select(
-        col("doc_id"),
-        expr("split_part(text, ' ', 2)").as("second_word"),
-        expr("replace(substring(text, 1, 30), 'the', 'THE')").as("replaced_head"),
-        expr("translate(lang, 'aeiou', 'AEIOU')").as("lang_translated"),
-        reverse(col("lang")).as("lang_reversed"),
-        expr("repeat(lang, 2)").as("lang_doubled"),
-        expr("left(text, 8)").as("head8"),
-        expr("right(text, 8)").as("tail8"),
-        greatest(col("n_chars"), col("doc_id")).as("greatest_v"),
-        least(col("n_chars"), col("doc_id")).as("least_v"))
-      .orderBy(col("doc_id"))
-
   val stringFuncs2Sql: String =
     """SELECT doc_id,
       |  split_part(text, ' ', 2) AS second_word,
@@ -380,14 +344,14 @@ object Scalars {
 
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
     ("stats_funcs", statsFuncs _, statsFuncsSql),
-    ("percentile_summary", percentileSummary _, percentileSummarySql),
+    Tables.sqlFirst("percentile_summary", percentileSummarySql),
     ("array_setops", arraySetops _, arraySetopsSql),
-    ("string_funcs2", stringFuncs2 _, stringFuncs2Sql),
+    Tables.sqlFirst("string_funcs2", stringFuncs2Sql),
     ("string_funcs", stringFuncs _, stringFuncsSql),
     ("regex_clean", regexClean _, regexCleanSql),
     ("hash_md5_dedup", hashMd5Dedup _, hashMd5DedupSql),
     ("date_funcs", dateFuncs _, dateFuncsSql),
-    ("daily_counts", dailyCounts _, dailyCountsSql),
+    Tables.sqlFirst("daily_counts", dailyCountsSql),
     ("math_funcs", mathFuncs _, mathFuncsSql),
     ("json_extract_agg", jsonExtractAgg _, jsonExtractAggSql),
     ("array_funcs", arrayFuncs _, arrayFuncsSql),

@@ -125,17 +125,6 @@ object TextOps {
 
   // ---------------------------------------------------------------- §2.I5
   /** Corpus profile by (lang, source). */
-  def docsProfile(spark: SparkSession, sf: String): DataFrame =
-    Tables
-      .documents(spark, sf)
-      .groupBy(col("lang"), col("source"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("total_chars"),
-        min(col("n_chars")).as("min_chars"),
-        max(col("n_chars")).as("max_chars"))
-      .orderBy(col("lang"), col("source"))
-
   val docsProfileSql: String =
     """SELECT lang, source, COUNT(*) AS n_docs,
       |  CAST(SUM(n_chars) AS BIGINT) AS total_chars, min(n_chars) AS min_chars, max(n_chars) AS max_chars
@@ -1527,7 +1516,7 @@ object TextOps {
     ("tokenize_wordcount", tokenizeWordcount _, tokenizeWordcountSql),
     ("ngram_bigrams", ngramBigrams _, ngramBigramsSql),
     ("dedup_docs_exact", dedupDocsExact _, dedupDocsExactSql),
-    ("docs_profile", docsProfile _, docsProfileSql),
+    Tables.sqlFirst("docs_profile", docsProfileSql),
     ("tfidf_top_terms", tfidfTopTerms _, tfidfTopTermsSql),
     ("dedup_minhash_lsh", dedupMinhashLsh _, dedupMinhashLshSql),
     ("dedup_minhash_probe", dedupMinhashProbe _, dedupMinhashLshSql),

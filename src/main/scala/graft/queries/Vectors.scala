@@ -1188,7 +1188,7 @@ object Vectors {
        |), train_sample AS (
        |  -- the deterministic Lloyd training sample: the m lowest vec_ids,
        |  -- m = min(n, 25·k) from the same adaptive params (Spark twin:
-       |  -- trainCells' vec_id < m broadcast filter)
+       |  -- trainCells' literal vec_id < m filter)
        |  SELECT e.vec_id, e.embedding FROM embeddings e, ($ivfKSql) p
        |  WHERE e.vec_id < p.m
        |), assign1 AS (

@@ -187,22 +187,6 @@ object Windows {
 
   // ---------------------------------------------------------------- §2.E3
   /** Running (cumulative) sum + count per user over event time. */
-  def windowRunningSum(spark: SparkSession, sf: String): DataFrame = {
-    val w = Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables
-      .events(spark, sf)
-      .select(
-        col("event_id"),
-        col("user_id"),
-        col("ts"),
-        sum(dec2(col("value"))).over(w).cast("double").as("running_value"),
-        count(lit(1)).over(w).as("running_n"))
-      .orderBy(col("event_id"))
-  }
-
   val windowRunningSumSql: String =
     """SELECT event_id, user_id, ts,
       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS running_value,
@@ -212,22 +196,6 @@ object Windows {
       |ORDER BY event_id""".stripMargin
 
   /** Moving average over the last 4 events (current + 3 preceding). */
-  def windowMovingAvg(spark: SparkSession, sf: String): DataFrame = {
-    val w = Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(-3, Window.currentRow)
-    Tables
-      .events(spark, sf)
-      .select(
-        col("event_id"),
-        col("user_id"),
-        col("ts"),
-        (sum(dec2(col("value"))).over(w).cast("double") / count(lit(1)).over(w))
-          .as("moving_avg_value"))
-      .orderBy(col("event_id"))
-  }
-
   val windowMovingAvgSql: String =
     """SELECT event_id, user_id, ts,
       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) / COUNT(*) OVER w AS moving_avg_value
@@ -398,8 +366,8 @@ object Windows {
     ("window_rank_twophase", windowRankTwoPhase _, windowRankSql),
     ("window_first_last_nth", windowFirstLastNth _, windowFirstLastNthSql),
     ("window_lag_change_detect", windowLagChangeDetect _, windowLagChangeDetectSql),
-    ("window_running_sum", windowRunningSum _, windowRunningSumSql),
-    ("window_moving_avg", windowMovingAvg _, windowMovingAvgSql),
+    Tables.sqlFirst("window_running_sum", windowRunningSumSql),
+    Tables.sqlFirst("window_moving_avg", windowMovingAvgSql),
     ("dedup_latest", dedupLatest _, dedupLatestSql),
     ("window_topk_per_group", windowTopkPerGroup _, windowTopkPerGroupSql),
     ("sessionize", sessionize _, sessionizeSql)

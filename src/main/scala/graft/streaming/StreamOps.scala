@@ -151,22 +151,24 @@ object StreamOps {
       .groupByKey(_._1)
       .flatMapGroupsWithState[String, Change](OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[(Long, Event)], state: GroupState[String]) =>
-          // micro-batch iterators carry no order guarantee: order by event_id
-          val ordered = rows.map(_._2).toSeq.sortBy(_.event_id)
-          var prev = state.getOption
-          val out = ordered.flatMap { e =>
-            val change = prev match {
-              case Some(p) if p != e.event_type =>
-                Some(Change(userId, e.event_id, p, e.event_type))
-              case _ => None
-            }
-            prev = Some(e.event_type)
-            change
-          }
-          state.update(prev.getOrElse(""))
+          val (out, last) = changeStep(userId, rows, state.getOption)
+          last.foreach(state.update)
           out.iterator
       }
   }
+
+  /** The per-key step of both change detectors: `rows` folded in event_id
+    * order (micro-batch iterators carry no order guarantee) over the key's
+    * previous type. Returns the changes and the last type seen; each
+    * streaming API only reads and writes its own state around it.
+    */
+  private def changeStep(
+      key: Long, rows: Iterator[(Long, Event)], prev: Option[String]): (Seq[Change], Option[String]) =
+    rows.map(_._2).toSeq.sortBy(_.event_id).foldLeft((Vector.empty[Change], prev)) {
+      case ((out, last), e) =>
+        val change = last.filter(_ != e.event_type).map(p => Change(key, e.event_id, p, e.event_type))
+        (out ++ change, Some(e.event_type))
+    }
 
   /** [[changeDetect]] on Spark 4's transformWithState API — the successor
     * to flatMapGroupsWithState (typed ValueState handles, RocksDB-backed
@@ -187,17 +189,8 @@ object StreamOps {
         key: Long,
         rows: Iterator[(Long, Event)],
         timerValues: TimerValues): Iterator[Change] = {
-      val ordered = rows.map(_._2).toSeq.sortBy(_.event_id)
-      var prev = Option(lastType.get())
-      val out = ordered.flatMap { e =>
-        val change = prev match {
-          case Some(p) if p != e.event_type => Some(Change(key, e.event_id, p, e.event_type))
-          case _ => None
-        }
-        prev = Some(e.event_type)
-        change
-      }
-      prev.foreach(lastType.update)
+      val (out, last) = changeStep(key, rows, Option(lastType.get()))
+      last.foreach(lastType.update)
       out.iterator
     }
   }

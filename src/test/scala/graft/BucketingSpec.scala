@@ -75,9 +75,8 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("SQL surface: raw spark.sql over registered views matches the DSL query") {
-    graft.api.SqlSurface.registerViews(spark, Sf0001)
-    val viaSql = spark
-      .sql("""SELECT o_orderstatus, COUNT(*) AS n FROM orders
+    val viaSql = Tables
+      .sql(spark, Sf0001, """SELECT o_orderstatus, COUNT(*) AS n FROM orders
              |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
       .collect()
       .map(r => (r.getString(0), r.getLong(1)))

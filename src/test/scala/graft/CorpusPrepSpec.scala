@@ -57,8 +57,8 @@ class CorpusPrepSpec extends AnyFunSuite {
   }
 
   test("stratified_sample: deterministic, bucket predicate holds, binomial rate bounds") {
-    val a = CorpusPrep.stratifiedSample(spark, Sf0001).collect().toSeq
-    val b = CorpusPrep.stratifiedSample(spark, Sf0001).collect().toSeq
+    val a = SparkEntry.queries("stratified_sample")(spark, Sf0001).collect().toSeq
+    val b = SparkEntry.queries("stratified_sample")(spark, Sf0001).collect().toSeq
     assert(a === b) // md5 of doc_id, not rand(): rerun-identical
     a.foreach { r =>
       val thresh = if (r.getString(1) == "en") "40" else "80"
@@ -134,7 +134,7 @@ class CorpusPrepSpec extends AnyFunSuite {
   }
 
   test("cross_source_dedup: totals partition the corpus, matches an independent formulation") {
-    val got = CorpusPrep.crossSourceDedup(spark, Sf0001).collect()
+    val got = SparkEntry.queries("cross_source_dedup")(spark, Sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
     assert(got.map(_._2).sum === 500L)
     got.foreach { case (_, n, dup) => assert(dup >= 0 && dup <= n) }

@@ -52,9 +52,8 @@ class EdgeCaseSpec extends AnyFunSuite {
 
   test("K4: GraftExtensions registers vec_dot into the SQL surface, matching the Column API") {
     GraftExtensions.register(spark)
-    graft.api.SqlSurface.registerViews(spark, Sf0001)
-    val viaSql = spark
-      .sql("SELECT vec_id, vec_dot(embedding, embedding) AS d FROM embeddings ORDER BY vec_id")
+    val viaSql = Tables
+      .sql(spark, Sf0001, "SELECT vec_id, vec_dot(embedding, embedding) AS d FROM embeddings ORDER BY vec_id")
       .collect()
     val viaCol = Tables
       .embeddings(spark, Sf0001)
@@ -63,7 +62,7 @@ class EdgeCaseSpec extends AnyFunSuite {
       .collect()
     assert(viaSql.toSeq === viaCol.toSeq)
     // arity error surfaces at analysis, not execution
-    intercept[Exception](spark.sql("SELECT vec_dot(embedding) FROM embeddings").collect())
+    intercept[Exception](Tables.sql(spark, Sf0001, "SELECT vec_dot(embedding) FROM embeddings").collect())
   }
 
   test("K1: a scalar UDF reproduces the built-in it would replace (and why we don't use one)") {

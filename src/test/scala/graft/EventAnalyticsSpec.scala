@@ -52,7 +52,7 @@ class EventAnalyticsSpec extends AnyFunSuite {
   }
 
   test("scd2_intervals: chained validity, one current version per user, types alternate") {
-    val rows = EventAnalytics.scd2Intervals(spark, Sf0001).collect()
+    val rows = SparkEntry.queries("scd2_intervals")(spark, Sf0001).collect()
       .map(r => (r.getLong(0), r.getString(1),
         r.getAs[java.time.LocalDateTime](2), Option(r.getAs[java.time.LocalDateTime](3))))
     rows.groupBy(_._1).foreach { case (_, vs) =>

@@ -75,9 +75,9 @@ class LawsSpec extends AnyFunSuite {
   }
 
   test("split_train_test invariants: pure function of doc_id, test fraction near 41/256") {
-    import graft.queries.Corpus
-    val s1 = Corpus.splitTrainTest(spark, Sf0001).collect().map(r => r.getLong(0) -> r.getString(3))
-    val s2 = Corpus.splitTrainTest(spark, Sf0001).collect().map(r => r.getLong(0) -> r.getString(3))
+    val split = SparkEntry.queries("split_train_test")
+    val s1 = split(spark, Sf0001).collect().map(r => r.getLong(0) -> r.getString(3))
+    val s2 = split(spark, Sf0001).collect().map(r => r.getLong(0) -> r.getString(3))
     assert(s1.toSeq === s2.toSeq) // deterministic
     val frac = s1.count(_._2 == "test").toDouble / s1.length
     assert(math.abs(frac - 41.0 / 256) < 0.06, s"test fraction $frac") // 3σ-ish on 500 docs

@@ -142,6 +142,22 @@ class RegistryLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"session built or cores read outside graft.Session:\n${offenders.mkString("\n")}")
   }
 
+  test("one SQL seam: only graft/Tables.scala parses SQL text or registers a view") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val seamCalls = Seq("sqlParser", "spark.sql(", "createOrReplaceTempView")
+    def stripComments(s: String): String =
+      s.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
+    val offenders = for {
+      p <- Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      if p.toString.endsWith(".scala") && !p.endsWith(Paths.get("graft/Tables.scala"))
+      src = stripComments(Files.readString(p))
+      call <- seamCalls
+      if src.contains(call)
+    } yield s"$p: $call (use Tables.sql)"
+    assert(offenders.isEmpty, s"SQL run outside Tables.sql:\n${offenders.mkString("\n")}")
+  }
+
   test("VecDot codegen expression is bit-identical to the HOF fold it replaced") {
     // regression guard for the custom Expression: the generated-code loop
     // must keep the exact left-fold semantics the oracle assumes

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import SharedSpark._
 
@@ -42,6 +43,29 @@ class TablesSpec extends AnyFunSuite {
     val region = Tables.region(s, Sf001)
     assert(region.rdd.getNumPartitions === 1)
     assert(!region.queryExecution.executedPlan.toString.contains("Exchange"))
+  }
+
+  test("Tables.sql binds table names in CTE bodies and subqueries, lets a CTE shadow a table, keeps no state") {
+    def n(text: String): Long = Tables.sql(spark, Sf0001, text).head().getLong(0)
+    val views = spark.catalog.listTables().collect().map(_.name).toSet
+    // a table named inside a CTE body, and one inside an IN (SELECT …) subquery
+    assert(n("WITH o AS (SELECT o_orderkey FROM orders) SELECT COUNT(*) FROM o") === 1500L)
+    assert(n("SELECT COUNT(*) FROM customer WHERE c_custkey IN (SELECT o_custkey FROM orders)") ===
+      Tables.customer(spark, Sf0001).join(Tables.orders(spark, Sf0001),
+        col("c_custkey") === col("o_custkey"), "left_semi").count())
+    // a CTE named orders shadows the table, but only where it is in scope
+    assert(n("WITH orders AS (SELECT 7L AS x) SELECT x FROM orders") === 7L)
+    assert(n("WITH a AS (SELECT COUNT(*) AS c FROM orders), orders AS (SELECT 7L AS x) SELECT c FROM a") === 1500L)
+    val unknown = intercept[org.apache.spark.sql.AnalysisException](
+      Tables.sql(spark, Sf0001, "SELECT * FROM no_such_table"))
+    assert(unknown.getCondition === "TABLE_OR_VIEW_NOT_FOUND")
+    assert(spark.catalog.listTables().collect().map(_.name).toSet === views)
+    // a persisted table's cached relation is substituted like a builder's
+    val orders = Tables.orders(spark, Sf0001).persist()
+    try {
+      val plan = Tables.sql(spark, Sf0001, "SELECT o_orderkey FROM orders").queryExecution.withCachedData
+      assert(plan.collectFirst { case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r }.nonEmpty)
+    } finally orders.unpersist()
   }
 
   test("embeddings are fixed 64-dim float arrays") {
