@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -35,25 +34,12 @@ object Curation {
     * the content hash, so a task holds one duplicate cluster, never the
     * corpus — the same bounded-partition shape as dedup_docs_exact.
     */
-  def dedupKeepBest(spark: SparkSession, sf: String): DataFrame = {
-    val wH = Window.partitionBy(col("h"))
-    Tables.documents(spark, sf)
-      .withColumn("h", md5(col("text").cast("binary")))
-      .withColumn(
-        "rn",
-        row_number().over(wH.orderBy(col("n_chars").desc, col("doc_id"))))
-      .withColumn("n_dups", count(lit(1)).over(wH))
-      .where(col("rn") === 1)
-      .select(col("doc_id"), col("h"), col("n_chars"), col("n_dups"))
-      .orderBy(col("doc_id"))
-  }
-
   val dedupKeepBestSql: String =
     """SELECT doc_id, h, n_chars, n_dups FROM (
-      |  SELECT doc_id, md5(text) AS h, n_chars,
-      |    row_number() OVER (PARTITION BY md5(text) ORDER BY n_chars DESC, doc_id) AS rn,
-      |    COUNT(*) OVER (PARTITION BY md5(text)) AS n_dups
-      |  FROM documents
+      |  SELECT *,
+      |    row_number() OVER (PARTITION BY h ORDER BY n_chars DESC, doc_id) AS rn,
+      |    COUNT(*) OVER (PARTITION BY h) AS n_dups
+      |  FROM (SELECT *, md5(text) AS h FROM documents)
       |) WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
   // ----------------------------------------------------- token diversity
@@ -394,7 +380,7 @@ object Curation {
       |) ORDER BY doc_id""".stripMargin
 
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
-    ("dedup_keep_best", dedupKeepBest _, dedupKeepBestSql),
+    Tables.sqlFirst("dedup_keep_best", dedupKeepBestSql),
     ("quality_logit_score", qualityLogitScore _, qualityLogitScoreSql),
     ("token_diversity", tokenDiversity _, tokenDiversitySql),
     ("source_similarity", sourceSimilarity _, sourceSimilaritySql),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import Det.{dec2, sumMoney}
+import Det.dec2
 
 /** Round-5 event-analytics operators: the product-analytics queries an
   * events pipeline serves beyond plain windows — time-based RANGE frames,
@@ -76,37 +76,6 @@ object EventAnalytics {
     * ordering check on the minima — which mis-staged a user whose only
     * in-order click came after an early stray click; ADVICE r5 item 1.)
     */
-  def funnelStages(spark: SparkSession, sf: String): DataFrame = {
-    val wAll = Window.partitionBy()
-    val wu = Window.partitionBy(col("user_id"))
-    Tables.events(spark, sf)
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .withColumn("t_view", min(when(col("event_type") === "view", col("ts"))).over(wu))
-      .withColumn(
-        "t_click",
-        min(when(col("event_type") === "click" && col("ts") > col("t_view"), col("ts"))).over(wu))
-      .withColumn(
-        "t_purchase",
-        min(when(col("event_type") === "purchase" && col("ts") > col("t_click"), col("ts"))).over(wu))
-      .groupBy(col("user_id"))
-      .agg(
-        min(col("t_view")).as("t_view"),
-        min(col("t_click")).as("t_click"),
-        min(col("t_purchase")).as("t_purchase"))
-      .withColumn(
-        "stage",
-        when(col("t_view").isNull, "0_none")
-          .when(col("t_click").isNull, "1_view")
-          .when(col("t_purchase").isNull, "2_click")
-          .otherwise("3_purchase"))
-      .groupBy(col("stage"))
-      .agg(count(lit(1)).as("n_users"))
-      .withColumn(
-        "user_share",
-        col("n_users").cast("double") / sum(col("n_users")).over(wAll).cast("double"))
-      .orderBy(col("stage"))
-  }
-
   val funnelStagesSql: String =
     """WITH w1 AS (
       |  SELECT user_id, event_type, ts,
@@ -134,10 +103,12 @@ object EventAnalytics {
       |    WHEN t_purchase IS NULL THEN '2_click'
       |    ELSE '3_purchase' END AS stage
       |  FROM per_user
+      |), counted AS (
+      |  SELECT stage, COUNT(*) AS n_users FROM staged GROUP BY stage
       |)
-      |SELECT stage, COUNT(*) AS n_users,
-      |  CAST(COUNT(*) AS DOUBLE) / CAST(SUM(COUNT(*)) OVER () AS DOUBLE) AS user_share
-      |FROM staged GROUP BY stage ORDER BY stage""".stripMargin
+      |SELECT stage, n_users,
+      |  CAST(n_users AS DOUBLE) / CAST(SUM(n_users) OVER () AS DOUBLE) AS user_share
+      |FROM counted ORDER BY stage""".stripMargin
 
   // ---------------------------------------------------- cohort retention
   /** Weekly cohort retention: users cohorted by the Monday week of their
@@ -182,28 +153,13 @@ object EventAnalytics {
     * (user_id) drives a hash/sort-merge join with the time bounds as join
     * filters — never a BNLJ — so the shuffle is user-keyed at any scale.
     */
-  def clickViewAttribution(spark: SparkSession, sf: String): DataFrame = {
-    val e = Tables.events(spark, sf)
-    val v = e.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"), col("ts").as("view_ts"))
-    val c = e.where(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("click_ts"))
-    c.join(
-        v,
-        col("user_id") === col("v_user") &&
-          col("view_ts") <= col("click_ts") &&
-          col("view_ts") >= col("click_ts") - expr("INTERVAL 30 MINUTES"))
-      .select(col("user_id"), col("click_id"), col("view_id"), col("click_ts"), col("view_ts"))
-      .orderBy(col("click_id"), col("view_id"))
-  }
-
   val clickViewAttributionSql: String =
-    """SELECT c.user_id, c.event_id AS click_id, v.event_id AS view_id,
-      |  c.ts AS click_ts, v.ts AS view_ts
-      |FROM events c JOIN events v
-      |  ON c.user_id = v.user_id
-      | AND c.event_type = 'click' AND v.event_type = 'view'
-      | AND v.ts <= c.ts AND v.ts >= c.ts - INTERVAL 30 MINUTE
+    """SELECT user_id, click_id, view_id, click_ts, view_ts
+      |FROM (SELECT user_id, event_id AS click_id, ts AS click_ts
+      |      FROM events WHERE event_type = 'click')
+      |JOIN (SELECT user_id AS v_user, event_id AS view_id, ts AS view_ts
+      |      FROM events WHERE event_type = 'view')
+      |  ON user_id = v_user AND view_ts <= click_ts AND view_ts >= click_ts - INTERVAL 30 MINUTE
       |ORDER BY click_id, view_id""".stripMargin
 
   // --------------------------------------------------------- SCD2 history
@@ -308,9 +264,9 @@ object EventAnalytics {
 
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
     ("window_rolling_range", windowRollingRange _, windowRollingRangeSql),
-    ("funnel_stages", funnelStages _, funnelStagesSql),
+    Tables.sqlFirst("funnel_stages", funnelStagesSql),
     ("cohort_retention", cohortRetention _, cohortRetentionSql),
-    ("click_view_attribution", clickViewAttribution _, clickViewAttributionSql),
+    Tables.sqlFirst("click_view_attribution", clickViewAttributionSql),
     Tables.sqlFirst("scd2_intervals", scd2IntervalsSql),
     ("sketch_countmin_hh", sketchCountminHh _, sketchCountminHhSql)
   )

@@ -101,11 +101,14 @@ object TextOps {
   /** Exact dedup: md5 content hash, deterministic survivor (lowest doc_id)
     * via row_number — never dropDuplicates (survivor = partition luck).
     */
-  def dedupDocsExact(spark: SparkSession, sf: String): DataFrame =
-    dedupDocsExactFrom(Tables.documents(spark, sf))
+  val dedupDocsExactSql: String =
+    """SELECT doc_id, content_md5 FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY content_md5 ORDER BY doc_id) AS rn
+      |  FROM (SELECT *, md5(text) AS content_md5 FROM documents)
+      |) WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
-  /** [[dedupDocsExact]] over a caller-supplied documents frame (text-keyed;
-    * the overlap report's shared-corpus seam). */
+  /** [[dedupDocsExactSql]] over a caller-supplied documents frame
+    * (text-keyed; the overlap report's shared-corpus seam). */
   private[graft] def dedupDocsExactFrom(docs: DataFrame): DataFrame =
     docs
       .withColumn("content_md5", md5(col("text").cast("binary")))
@@ -115,13 +118,6 @@ object TextOps {
       .where(col("rn") === 1)
       .select(col("doc_id"), col("content_md5"))
       .orderBy(col("doc_id"))
-
-  val dedupDocsExactSql: String =
-    """SELECT doc_id, content_md5 FROM (
-      |  SELECT doc_id, md5(text) AS content_md5,
-      |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-      |  FROM documents
-      |) WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------- §2.I5
   /** Corpus profile by (lang, source). */
@@ -1515,7 +1511,7 @@ object TextOps {
     ("pipeline_clean_dedup_profile", pipelineCleanDedupProfile _, pipelineCleanDedupProfileSql),
     ("tokenize_wordcount", tokenizeWordcount _, tokenizeWordcountSql),
     ("ngram_bigrams", ngramBigrams _, ngramBigramsSql),
-    ("dedup_docs_exact", dedupDocsExact _, dedupDocsExactSql),
+    Tables.sqlFirst("dedup_docs_exact", dedupDocsExactSql),
     Tables.sqlFirst("docs_profile", docsProfileSql),
     ("tfidf_top_terms", tfidfTopTerms _, tfidfTopTermsSql),
     ("dedup_minhash_lsh", dedupMinhashLsh _, dedupMinhashLshSql),

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import Det._
 
 /** Window functions (SURVEY §2.E) + sessionization (§2.J3 batch form).
   *
@@ -23,51 +22,26 @@ object Windows {
   // ---------------------------------------------------------------- §2.E1+E5
   /** Ranking family: rank/dense_rank/percent_rank/cume_dist over a
     * tie-bearing order, plus row_number/ntile over a fully-deterministic
-    * order. Top-10 per market segment.
+    * order. Top-10 per market segment. The integer ranks are cast to
+    * BIGINT: DuckDB's window functions already emit BIGINT and Spark's emit
+    * INT, and one dtype in both engines keeps the typed hash compare exact.
     */
-  def windowRank(spark: SparkSession, sf: String): DataFrame =
-    windowRankOn(Tables.customer(spark, sf))
-
-  /** The window-form body over any (c_mktsegment, c_custkey, c_acctbal)
-    * frame — exposed so tests can stress tie-heavy synthetic inputs. */
-  private[graft] def windowRankOn(cust: DataFrame): DataFrame = {
-    val wTie = Window.partitionBy(col("c_mktsegment")).orderBy(col("c_acctbal").desc)
-    val wUnique = Window
-      .partitionBy(col("c_mktsegment"))
-      .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
-    cust
-      .select(
-        col("c_mktsegment"),
-        col("c_custkey"),
-        col("c_acctbal"),
-        // ranks cast to long: DuckDB's window functions emit BIGINT, and
-        // exact dtype parity keeps the driver's typed hash trivially safe
-        rank().over(wTie).cast("long").as("rnk"),
-        dense_rank().over(wTie).cast("long").as("drnk"),
-        percent_rank().over(wTie).as("prnk"),
-        cume_dist().over(wTie).as("cdist"),
-        row_number().over(wUnique).cast("long").as("rn"),
-        ntile(4).over(wUnique).cast("long").as("quartile"))
-      .where(col("rn") <= 10)
-      .orderBy(col("c_mktsegment"), col("rn"))
-  }
-
   val windowRankSql: String =
     """SELECT * FROM (
       |  SELECT c_mktsegment, c_custkey, c_acctbal,
-      |    rank() OVER w_tie AS rnk,
-      |    dense_rank() OVER w_tie AS drnk,
+      |    CAST(rank() OVER w_tie AS BIGINT) AS rnk,
+      |    CAST(dense_rank() OVER w_tie AS BIGINT) AS drnk,
       |    percent_rank() OVER w_tie AS prnk,
       |    cume_dist() OVER w_tie AS cdist,
-      |    row_number() OVER w_uni AS rn,
-      |    ntile(4) OVER w_uni AS quartile
+      |    CAST(row_number() OVER w_uni AS BIGINT) AS rn,
+      |    CAST(ntile(4) OVER w_uni AS BIGINT) AS quartile
       |  FROM customer
       |  WINDOW w_tie AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC),
       |         w_uni AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC)
       |) WHERE rn <= 10
       |ORDER BY c_mktsegment, rn""".stripMargin
 
-  /** The SCALE-SAFE twin of [[windowRank]] (round-8): the rank family over
+  /** The SCALE-SAFE twin of window_rank (round-8): the rank family over
     * a LOW-cardinality partition key (5 segments) caps the window form at
     * 5 tasks — fine while a segment fits one task (the documented
     * boundary), a wall at 100 TB. This form never sorts a segment: the
@@ -156,33 +130,18 @@ object Windows {
   // ---------------------------------------------------------------- §2.E2
   /** lag-based change detection — the reference's prev-hash vs new-hash
     * compare relationalized: per-user value delta and type-change flag.
+    * The flag reads `prev_type` from the inner query, so the window pass
+    * computes each lag once.
     */
-  def windowLagChangeDetect(spark: SparkSession, sf: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables
-      .events(spark, sf)
-      .select(
-        col("event_id"),
-        col("user_id"),
-        col("ts"),
-        col("event_type"),
-        lag(col("event_type"), 1).over(w).as("prev_type"),
-        (dec2(col("value")) - dec2(lag(col("value"), 1).over(w))).cast("double").as("value_delta"))
-      .withColumn(
-        "type_changed",
-        when(col("prev_type").isNull, lit(null).cast("boolean"))
-          .otherwise(col("event_type") =!= col("prev_type")))
-      .orderBy(col("event_id"))
-  }
-
   val windowLagChangeDetectSql: String =
-    """SELECT event_id, user_id, ts, event_type,
-      |  lag(event_type, 1) OVER w AS prev_type,
-      |  CAST(CAST(value AS DECIMAL(18,2)) - CAST(lag(value, 1) OVER w AS DECIMAL(18,2)) AS DOUBLE) AS value_delta,
-      |  CASE WHEN lag(event_type, 1) OVER w IS NULL THEN NULL
-      |       ELSE event_type <> lag(event_type, 1) OVER w END AS type_changed
-      |FROM events
-      |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    """SELECT event_id, user_id, ts, event_type, prev_type, value_delta,
+      |  CASE WHEN prev_type IS NULL THEN NULL ELSE event_type <> prev_type END AS type_changed
+      |FROM (
+      |  SELECT event_id, user_id, ts, event_type,
+      |    lag(event_type, 1) OVER w AS prev_type,
+      |    CAST(CAST(value AS DECIMAL(18,2)) - CAST(lag(value, 1) OVER w AS DECIMAL(18,2)) AS DOUBLE) AS value_delta
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
       |ORDER BY event_id""".stripMargin
 
   // ---------------------------------------------------------------- §2.E3
@@ -207,26 +166,13 @@ object Windows {
   /** Latest-per-key dedup: keep the newest event per user via row_number
     * (never `dropDuplicates` — the survivor there is partition-order luck).
     */
-  def dedupLatest(spark: SparkSession, sf: String): DataFrame = {
-    val w = Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    Tables
-      .events(spark, sf)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"), col("value"))
-      .orderBy(col("user_id"))
-  }
-
   val dedupLatestSql: String =
     """SELECT user_id, event_id, ts, event_type, value FROM (
-      |  SELECT user_id, event_id, ts, event_type, value,
+      |  SELECT *,
       |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
       |  FROM events
       |) WHERE rn = 1 ORDER BY user_id""".stripMargin
 
-  /** Top-3 orders by price per market segment. */
   /** Top-3 orders per market segment — the LOW-cardinality top-k-per-group
     * shape (5 distinct segments). Round-8 restructure: a single window
     * partitioned by segment caps parallelism at 5 tasks — at sf3 that
@@ -289,33 +235,13 @@ object Windows {
     * lag + cumulative sum — two window passes over one shuffle on user_id.
     * (The streaming twin uses session_window; see graft.streaming.)
     */
-  def sessionize(spark: SparkSession, sf: String): DataFrame = {
-    val wOrder = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val wRun = wOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables
-      .events(spark, sf)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(wOrder))
-      .withColumn(
-        "new_session",
-        when(col("ts") - col("prev_ts") > expr("INTERVAL '30' MINUTE"), 1).otherwise(0))
-      .withColumn("session_id", sum(col("new_session")).over(wRun).cast("long"))
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        min(col("ts")).as("session_start"),
-        max(col("ts")).as("session_end"),
-        sumMoney(col("value")).as("session_value"))
-      .orderBy(col("user_id"), col("session_id"))
-  }
-
   val sessionizeSql: String =
     """WITH marked AS (
-      |  SELECT user_id, ts, event_id, value,
-      |    CASE WHEN ts - lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) > INTERVAL 30 MINUTE
-      |         THEN 1 ELSE 0 END AS new_session
-      |  FROM events
+      |  SELECT *, CASE WHEN ts - prev_ts > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_session
+      |  FROM (SELECT *, lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+      |        FROM events)
       |), sess AS (
-      |  SELECT user_id, ts, value,
+      |  SELECT *,
       |    CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
       |  FROM marked
       |)
@@ -331,29 +257,14 @@ object Windows {
     * UNBOUNDED FOLLOWING — the default last_value frame stops at CURRENT
     * ROW, a classic silent-wrong-answer; both engines pin the full frame
     * explicitly). Deterministic because the ordering (ts, event_id) is
-    * unique per partition.
+    * unique per partition. Spelled `first`/`last`, which both engines
+    * accept as frame aggregates; Spark's `first_value`/`last_value` are the
+    * same functions under another name.
     */
-  def windowFirstLastNth(spark: SparkSession, sf: String): DataFrame = {
-    val w = Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables
-      .events(spark, sf)
-      .select(
-        col("event_id"),
-        col("user_id"),
-        col("value"),
-        first(col("value")).over(w).as("first_value"),
-        last(col("value")).over(w).as("last_value"),
-        nth_value(col("value"), 2).over(w).as("second_value"))
-      .orderBy(col("event_id"))
-  }
-
   val windowFirstLastNthSql: String =
     """SELECT event_id, user_id, value,
-      |  first_value(value) OVER w AS first_value,
-      |  last_value(value) OVER w AS last_value,
+      |  first(value) OVER w AS first_value,
+      |  last(value) OVER w AS last_value,
       |  nth_value(value, 2) OVER w AS second_value
       |FROM events
       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
@@ -361,15 +272,15 @@ object Windows {
       |ORDER BY event_id""".stripMargin
 
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
-    ("window_rank", windowRank _, windowRankSql),
+    Tables.sqlFirst("window_rank", windowRankSql),
     // identical output by construction — same oracle (scale-safe twin)
     ("window_rank_twophase", windowRankTwoPhase _, windowRankSql),
-    ("window_first_last_nth", windowFirstLastNth _, windowFirstLastNthSql),
-    ("window_lag_change_detect", windowLagChangeDetect _, windowLagChangeDetectSql),
+    Tables.sqlFirst("window_first_last_nth", windowFirstLastNthSql),
+    Tables.sqlFirst("window_lag_change_detect", windowLagChangeDetectSql),
     Tables.sqlFirst("window_running_sum", windowRunningSumSql),
     Tables.sqlFirst("window_moving_avg", windowMovingAvgSql),
-    ("dedup_latest", dedupLatest _, dedupLatestSql),
+    Tables.sqlFirst("dedup_latest", dedupLatestSql),
     ("window_topk_per_group", windowTopkPerGroup _, windowTopkPerGroupSql),
-    ("sessionize", sessionize _, sessionizeSql)
+    Tables.sqlFirst("sessionize", sessionizeSql)
   )
 }

@@ -16,7 +16,7 @@ class CurationSpec extends AnyFunSuite {
       .select(col("doc_id"), md5(col("text").cast("binary")).as("h"), col("n_chars"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     val clusters = docs.groupBy(_._2)
-    val got = Curation.dedupKeepBest(spark, Sf0001).collect()
+    val got = SparkEntry.queries("dedup_keep_best")(spark, Sf0001).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     // one survivor per distinct hash
     assert(got.length === clusters.size)

@@ -43,8 +43,8 @@ class EdgeCaseSpec extends AnyFunSuite {
     val one = Tables.events(spark, Sf0001).orderBy("event_id").limit(1)
     val dir = java.nio.file.Files.createTempDirectory("graft-one").toString
     one.write.mode("overwrite").parquet(dir)
-    // windowLagChangeDetect over that single event: prev_* must be null
-    val row = graft.queries.Windows.windowLagChangeDetect(spark, Sf0001)
+    // window_lag_change_detect over that single event: prev_* must be null
+    val row = SparkEntry.queries("window_lag_change_detect")(spark, Sf0001)
       .orderBy("event_id").limit(1).head()
     assert(row.isNullAt(row.fieldIndex("prev_type")))
     assert(row.isNullAt(row.fieldIndex("value_delta")))

@@ -24,7 +24,7 @@ class EventAnalyticsSpec extends AnyFunSuite {
   }
 
   test("funnel_stages: conserves users, shares normalize, stages only deepen with evidence") {
-    val rows = EventAnalytics.funnelStages(spark, Sf0001).collect()
+    val rows = SparkEntry.queries("funnel_stages")(spark, Sf0001).collect()
     val nUsers = Tables.events(spark, Sf0001).select(col("user_id")).distinct().count()
     assert(rows.map(_.getLong(1)).sum === nUsers)
     val shareSum = rows.map(_.getDouble(2)).sum
@@ -33,7 +33,7 @@ class EventAnalyticsSpec extends AnyFunSuite {
   }
 
   test("click_view_attribution: every pair in bounds; agrees with the streaming operator's batch twin") {
-    val rows = EventAnalytics.clickViewAttribution(spark, Sf0001).collect()
+    val rows = SparkEntry.queries("click_view_attribution")(spark, Sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (clickTs, viewTs) =

@@ -207,37 +207,25 @@ class ExtrasSpec extends AnyFunSuite {
     assert(recall >= 0.5, s"semantic dedup recall = $recall over ${exactDropSet.size} dups")
   }
 
-  test("I4: spark.ml MinHashLSH finds every exact-duplicate pair at distance 0") {
-    import org.apache.spark.ml.feature.{HashingTF, MinHashLSH, Tokenizer}
+  test("I4: dedup_minhash_lsh pairs every exact-duplicate document at all 4 bands") {
     // sf0.1 is the only scale factor whose documents table contains exact
-    // duplicates (8 of them, measured)
+    // duplicates (8 of them, measured). The operator's domain is documents
+    // with >= 3 tokens: shorter ones have no 3-token shingle, hence no
+    // signature, and are out of scope here by design.
     val Sf01 = "/root/testdata/sf0.1"
-    val docs = Tables.documents(spark, Sf01).select(col("doc_id"), lower(col("text")).as("text"))
-    val tok = new Tokenizer().setInputCol("text").setOutputCol("tokens")
-    val tf = new HashingTF().setInputCol("tokens").setOutputCol("features").setNumFeatures(1024)
-    val feats = tf.transform(tok.transform(docs)).select("doc_id", "features")
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("sig").setNumHashTables(8)
-    val model = lsh.fit(feats)
-    val pairs = model
-      .approxSimilarityJoin(feats, feats, 0.1, "dist")
-      .select(
-        col("datasetA.doc_id").as("a"),
-        col("datasetB.doc_id").as("b"),
-        col("dist"))
-      .where(col("a") < col("b"))
-    // ground truth: docs sharing an md5 must be found at jaccard distance 0
-    val dupPairs = Tables
-      .documents(spark, Sf01)
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
-      .as("x")
-      .join(
-        Tables.documents(spark, Sf01)
-          .select(col("doc_id").as("doc_id2"), md5(col("text").cast("binary")).as("h")).as("y"),
-        "h")
-      .where(col("doc_id") < col("doc_id2"))
-      .select(col("doc_id").as("a"), col("doc_id2").as("b"))
-    val missed = dupPairs.join(pairs.where(col("dist") === 0.0), Seq("a", "b"), "left_anti").count()
-    assert(missed === 0, s"$missed exact-duplicate pairs missed by MinHashLSH")
+    val pairs = SparkEntry.queries("dedup_minhash_lsh")(spark, Sf01)
+    // ground truth: shingled docs sharing an md5, each pair once (a < b)
+    def hashed(id: String) = Tables.documents(spark, Sf01)
+      .where(size(split(lower(col("text")), " ")) >= 3)
+      .select(col("doc_id").as(id), md5(col("text").cast("binary")).as("h"))
+    val dupPairs = hashed("doc_a").join(hashed("doc_b"), "h")
+      .where(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"))
+    // identical text => identical signature => every band matches
+    val missed = dupPairs
+      .join(pairs.where(col("n_shared_bands") === 4), Seq("doc_a", "doc_b"), "left_anti")
+      .count()
+    assert(missed === 0, s"$missed exact-duplicate pairs missed by dedup_minhash_lsh")
     assert(dupPairs.count() > 0, "fixture should contain exact duplicates")
   }
 
@@ -262,7 +250,7 @@ class ExtrasSpec extends AnyFunSuite {
   test("window_rank_twophase == window_rank bit-for-bit at two SFs") {
     import graft.queries.Windows
     Seq(Sf0001, "/root/testdata/sf0.01").foreach { sf =>
-      val window = Windows.windowRank(spark, sf).collect().map(_.toSeq)
+      val window = SparkEntry.queries("window_rank")(spark, sf).collect().map(_.toSeq)
       val twoPhase = Windows.windowRankTwoPhase(spark, sf).collect().map(_.toSeq)
       assert(twoPhase === window, s"mismatch at $sf")
     }
@@ -278,7 +266,11 @@ class ExtrasSpec extends AnyFunSuite {
       seg <- Seq("A", "B", "C"); i <- 0 until 400
     } yield (seg, (seg.hashCode.abs * 1000 + i).toLong, Seq(1.0, 2.0, 2.0, 7.5)(i % 4))
     val df = rows.toDF("c_mktsegment", "c_custkey", "c_acctbal")
-    val viaWindow = Windows.windowRankOn(df).collect().map(_.toSeq)
+    // window_rank is its SQL text: run it over the frame as `customer`
+    df.createOrReplaceTempView("customer")
+    val viaWindow =
+      try spark.sql(Windows.windowRankSql).collect().map(_.toSeq)
+      finally spark.catalog.dropTempView("customer")
     val viaTwoPhase = Windows.windowRankTwoPhaseOn(df).collect().map(_.toSeq)
     assert(viaTwoPhase === viaWindow)
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.{Relational, Windows}
+import graft.queries.Relational
 import SharedSpark._
 
 /** Algebraic laws (SURVEY §5.2.4): randomized small-input properties with a
@@ -39,7 +39,7 @@ class LawsSpec extends AnyFunSuite {
   }
 
   test("sessionize invariants on sf0.001: partition of events, ordered spans") {
-    val sessions = Windows.sessionize(spark, Sf0001).cache()
+    val sessions = SparkEntry.queries("sessionize")(spark, Sf0001).cache()
     val events = Tables.events(spark, Sf0001)
     assert(sessions.agg(sum("n_events")).head().getLong(0) === events.count())
     assert(sessions.where(col("session_start") > col("session_end")).count() === 0)

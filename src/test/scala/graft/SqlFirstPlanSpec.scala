@@ -28,7 +28,11 @@ object SqlFirstPlans {
     "cross_source_dedup", "stratified_sample",
     "change_detect", "change_summary",
     "window_moving_avg", "window_running_sum",
-    "scd2_intervals", "split_train_test", "docs_profile")
+    "scd2_intervals", "split_train_test", "docs_profile",
+    "case_when_classify", "join_sortmerge", "join_semi", "join_anti", "join_range",
+    "math_funcs", "dedup_docs_exact", "dedup_keep_best", "funnel_stages",
+    "click_view_attribution", "window_rank", "window_first_last_nth",
+    "window_lag_change_detect", "dedup_latest", "sessionize")
 
   def normalize(plan: String, sfDir: String): String =
     plan.replace(sfDir, "<sf>")

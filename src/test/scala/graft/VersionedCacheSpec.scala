@@ -86,4 +86,29 @@ class VersionedCacheSpec extends AnyFunSuite {
     val byStatus = diff.groupBy("status").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byStatus === Map("removed" -> 2L, "added" -> 2L, "changed" -> 1L, "unchanged" -> 5L))
   }
+
+  test("latest: same-run ties resolve by content hash on any layout") {
+    val path = java.nio.file.Files.createTempDirectory("graft-cache").toString + "/docs"
+    // run 2 holds 4 rows for every key, spread over 4 files, so which row
+    // a reducer sees first depends on the layout
+    val rows = spark.range(400)
+      .select((col("id") % 100).as("doc_id"), md5(col("id").cast("string")).as("h"))
+    VersionedCache.appendRun(rows.where(col("doc_id") < 50), path, "r1")
+    VersionedCache.appendRun(rows.repartition(4), path, "r2")
+
+    def survivors(partitions: Int): Seq[(Long, String, String)] = {
+      val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+      val prior = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(keys(0), partitions.toString)
+      spark.conf.set(keys(1), "false")
+      try VersionedCache.latest(spark, path, "doc_id").collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("h"), r.getAs[String]("run_id")))
+        .sortBy(_._1).toSeq
+      finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val one = survivors(1)
+    assert(one.map(_._1) === (0L until 100L))
+    assert(one.forall(_._3 == "r2"))
+    assert(survivors(8) === one)
+  }
 }
