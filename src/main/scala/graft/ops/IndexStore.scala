@@ -1,26 +1,51 @@
 package graft.ops
 
-/** Persisted-index lifecycle shared by every `*_probe` regime (IVF, radix
-  * LSH, equal-mass LSH, text MinHash-LSH): a deterministic recipe writes
-  * its index ONCE per (scale-factor dir, source-data fingerprint) under
-  * the JVM temp root, and probes only ever read a COMPLETE index.
+import graft.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Persisted-index lifecycle shared by every `*_probe` regime. Each index
+  * is ONE [[IndexStore.Index]] declaration — family tag, source table, part
+  * name and a deterministic recipe over that table — and this object owns
+  * the rest: the index is written ONCE per (scale-factor dir, source-data
+  * fingerprint) to `<java.io.tmpdir>/<family>/<sftag>_<fp>/<part>/`, is
+  * complete once `<part>/_SUCCESS` exists, and is read back through
+  * [[graft.Tables.parquet]], whose schema cache is safe here because a
+  * committed directory never changes.
   *
   * Two invariants carry the whole design:
   *   - The directory NAME embeds a fingerprint of the exact source bytes
-  *     (name + size + mtime of every data file), so regenerating testdata
-  *     in place can never serve a stale index — the new fingerprint
-  *     simply misses and the next probe rebuilds.
+  *     (name + size + mtime of every data file), and the recipe reads that
+  *     same table, so regenerating testdata in place can never serve a
+  *     stale index — the new fingerprint simply misses and the next probe
+  *     rebuilds.
   *   - Builds stage into `dir.tmp.<pid>` and ATOMIC-rename into place, so
   *     a concurrent JVM building the same (fingerprinted, hence identical
   *     — recipes are deterministic) index either wins the rename or finds
   *     the winner's complete directory and discards its own staging copy.
-  *     No reader ever sees a half-written index.
-  *
-  * Every index is written through [[buildOnce]] and nothing else; probes
-  * read the committed part through [[graft.Tables.parquet]], whose schema
-  * cache is safe here because a committed directory never changes.
+  *     No reader ever sees a half-written index, and a failed build
+  *     leaves no staging copy behind.
   */
 object IndexStore {
+
+  /** One persisted index. `family` is a versioned name like
+    * "graft_ivf_v5" — bump the version when the index FORMAT or recipe
+    * changes. `recipe` receives the loaded `source` table (the one the
+    * fingerprint keys on) and returns the frame persisted as `part`.
+    */
+  final case class Index(family: String, source: String, part: String)(
+      recipe: DataFrame => DataFrame) {
+
+    /** Build-if-absent; returns the committed index directory. */
+    def build(spark: SparkSession, sf: String): String =
+      buildOnce(indexDir(family, sf, Tables.path(sf, source)), s"$part/_SUCCESS") { staging =>
+        recipe(Tables.table(spark, sf, source))
+          .write.mode("overwrite").parquet(s"$staging/$part")
+      }
+
+    /** The committed part, built first if absent. */
+    def read(spark: SparkSession, sf: String): DataFrame =
+      Tables.parquet(spark, s"${build(spark, sf)}/$part")
+  }
 
   /** Fingerprint of the source data under `root` (a parquet file or
     * directory of parts): name + length + mtime of every non-hidden file,
@@ -36,11 +61,10 @@ object IndexStore {
     java.lang.Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sig))
   }
 
-  /** Canonical index directory for `family` (a versioned name like
-    * "graft_ivf_v5" — bump the version when the index FORMAT or recipe
-    * changes), keyed by scale-factor tag + source fingerprint.
+  /** Index directory for `family`, keyed by scale-factor tag + source
+    * fingerprint.
     */
-  def indexDir(family: String, sf: String, sourcePath: String): String = {
+  private def indexDir(family: String, sf: String, sourcePath: String): String = {
     val tag = sf.replaceAll("[^A-Za-z0-9.]+", "_")
     s"${sys.props("java.io.tmpdir")}/$family/${tag}_${sourceFingerprint(sourcePath)}"
   }
@@ -49,12 +73,15 @@ object IndexStore {
     * returned as-is (the dir name embeds the source fingerprint, so an
     * existing index IS the one this build would produce); otherwise
     * `write` populates a staging dir which is then atomically committed.
+    * A `write` that throws has its staging dir deleted, then the error
+    * propagates.
     */
-  def buildOnce(dir: String, marker: String)(write: String => Unit): String = {
+  private[graft] def buildOnce(dir: String, marker: String)(write: String => Unit): String = {
     if (new java.io.File(s"$dir/$marker").exists()) return dir
     val staging = java.nio.file.Paths.get(
       s"$dir.tmp.${java.lang.ProcessHandle.current().pid()}")
-    write(staging.toString)
+    try write(staging.toString)
+    catch { case e: Throwable => deleteTree(staging); throw e }
     commitAtomically(staging, dir, marker)
     dir
   }
@@ -73,11 +100,17 @@ object IndexStore {
     catch {
       case e: java.nio.file.FileSystemException =>
         if (!new java.io.File(s"$dir/$marker").exists()) throw e
-        val walk = java.nio.file.Files.walk(staging)
-        try
-          walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(p => java.nio.file.Files.delete(p))
-        finally walk.close()
+        deleteTree(staging)
     }
   }
+
+  /** Deletes `root` and everything under it, if it exists. */
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root)) {
+      val walk = java.nio.file.Files.walk(root)
+      try
+        walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
 }

@@ -235,14 +235,8 @@ object DocEmbed {
 
   // ------------------------------------------------ persisted-index regime
   /** v1: (doc_id, norm, bkt, v), 16 signed-bigram dims + sign bucket. */
-  private def docEmbedIndexDir(sf: String): String =
-    graft.ops.IndexStore.indexDir("graft_docemb_v1", sf, Tables.path(sf, "documents"))
-
-  def buildDocEmbedIndex(spark: SparkSession, sf: String): String =
-    graft.ops.IndexStore.buildOnce(docEmbedIndexDir(sf), "vecs/_SUCCESS") { staging =>
-      featurizedVectors(Tables.documents(spark, sf))
-        .write.mode("overwrite").parquet(s"$staging/vecs")
-    }
+  private[graft] val docEmbedIndex =
+    graft.ops.IndexStore.Index("graft_docemb_v1", "documents", "vecs")(featurizedVectors)
 
   /** Persisted-index regime of [[dedupEmbeddingDocLsh]] — the same
     * train/probe split every dedup family carries (minhash, substring,
@@ -256,7 +250,7 @@ object DocEmbed {
     * probe registers against the SAME oracle SQL.
     */
   def dedupEmbeddingDocProbe(spark: SparkSession, sf: String): DataFrame =
-    screenOverVectors(Tables.parquet(spark, s"${buildDocEmbedIndex(spark, sf)}/vecs"))
+    screenOverVectors(docEmbedIndex.read(spark, sf))
 
   val dedupEmbeddingDocLshSql: String = {
     val compSums = (0 until Dims)

@@ -438,7 +438,7 @@ object Retrieval {
     * row multiplication.
     */
   def ngramNoveltyProbe(spark: SparkSession, sf: String): DataFrame = {
-    val ref = Tables.parquet(spark, s"${buildShingleIndex(spark, sf)}/shingles")
+    val ref = shingleIndex.read(spark, sf)
       .select(col("sh"), lit(1).as("seen"))
     val probe = TextOps.distinctShinglesPerRow(
       Tables.documents(spark, sf)
@@ -455,22 +455,16 @@ object Retrieval {
 
   /** Reference-corpus distinct-shingle index: one partial-agg distinct
     * shuffle over the non-probe split, persisted as a single `sh` column.
+    * v1: distinct reference shingles of the doc_id % 10 <> 0 split.
     */
-  def buildShingleIndex(spark: SparkSession, sf: String): String =
-    graft.ops.IndexStore.buildOnce(shingleIndexDir(sf), "shingles/_SUCCESS") { staging =>
+  private[graft] val shingleIndex =
+    graft.ops.IndexStore.Index("graft_shset_v1", "documents", "shingles") { docs =>
       // per-row pre-dedup (codegen DistinctNgrams) shrinks the exploded
       // stream before the global distinct's partial aggregate
-      TextOps.distinctShinglesPerRow(
-        Tables.documents(spark, sf)
-          .where(col("doc_id") % 10 =!= 0))
+      TextOps.distinctShinglesPerRow(docs.where(col("doc_id") % 10 =!= 0))
         .select(col("sh"))
         .distinct()
-        .write.mode("overwrite").parquet(s"$staging/shingles")
     }
-
-  /** v1: distinct reference shingles of the doc_id % 10 <> 0 split. */
-  private def shingleIndexDir(sf: String): String =
-    graft.ops.IndexStore.indexDir("graft_shset_v1", sf, Tables.path(sf, "documents"))
 
   val ngramNoveltyProbeSql: String =
     """WITH probe AS (

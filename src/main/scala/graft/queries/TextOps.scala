@@ -231,17 +231,13 @@ object TextOps {
     * [[dedupClusters]] (which consumes pairs as graph edges).
     */
   private[graft] def minhashCandidatePairs(spark: SparkSession, sf: String): DataFrame =
-    bandPairs(minhashBandTable(spark, sf))
+    bandPairs(minhashBandTableOf(Tables.documents(spark, sf)))
 
   /** The (doc_id, band, band_hash) table the LSH self-join runs over —
     * the artifact a production deployment persists per corpus version
-    * ([[dedupMinhashProbe]]) and the in-query build step everywhere else.
+    * ([[dedupMinhashProbe]]) and the in-query build step everywhere else,
+    * over any documents frame (the overlap report passes its shared corpus).
     */
-  private[queries] def minhashBandTable(spark: SparkSession, sf: String): DataFrame =
-    minhashBandTableOf(Tables.documents(spark, sf))
-
-  /** [[minhashBandTable]] over a caller-supplied documents frame (the
-    * overlap report's shared-corpus seam). */
   private[graft] def minhashBandTableOf(docs: DataFrame): DataFrame = {
     // No distinct() on shingles: min() is idempotent over duplicates, so
     // deduplication would only add a shuffle without changing any minhash.
@@ -291,17 +287,12 @@ object TextOps {
     * and it registers under the SAME oracle.
     */
   def dedupMinhashProbe(spark: SparkSession, sf: String): DataFrame =
-    bandPairs(Tables.parquet(spark, s"${buildMinhashIndex(spark, sf)}/bands"))
+    bandPairs(minhashIndex.read(spark, sf))
       .orderBy(col("doc_a"), col("doc_b"))
 
-  def buildMinhashIndex(spark: SparkSession, sf: String): String =
-    graft.ops.IndexStore.buildOnce(minhashIndexDir(sf), "bands/_SUCCESS") { staging =>
-      minhashBandTable(spark, sf).write.mode("overwrite").parquet(s"$staging/bands")
-    }
-
   /** v1: (doc_id, band, band_hash), 8 minhashes × 4 bands of 2 rows. */
-  private def minhashIndexDir(sf: String): String =
-    graft.ops.IndexStore.indexDir("graft_mhlsh_v1", sf, Tables.path(sf, "documents"))
+  private[graft] val minhashIndex =
+    graft.ops.IndexStore.Index("graft_mhlsh_v1", "documents", "bands")(minhashBandTableOf)
 
   def dedupMinhashLsh(spark: SparkSession, sf: String): DataFrame =
     minhashCandidatePairs(spark, sf).orderBy(col("doc_a"), col("doc_b"))
@@ -1063,20 +1054,12 @@ object TextOps {
     * [[dedupExactSubstring]]; registers under the SAME oracle.
     */
   def dedupExactSubstringProbe(spark: SparkSession, sf: String): DataFrame =
-    exactSubstringDedupWithIndex(
-      Tables.documents(spark, sf),
-      Tables.parquet(spark, s"${buildXsubIndex(spark, sf)}/seeds"))
-
-  def buildXsubIndex(spark: SparkSession, sf: String): String =
-    graft.ops.IndexStore.buildOnce(xsubIndexDir(sf), "seeds/_SUCCESS") { staging =>
-      tokenWindows(Tables.documents(spark, sf), SubstrSeedLen,
-        SubstrRunLen - SubstrSeedLen + 1)
-        .write.mode("overwrite").parquet(s"$staging/seeds")
-    }
+    exactSubstringDedupWithIndex(Tables.documents(spark, sf), xsubIndex.read(spark, sf))
 
   /** v1: (doc_id, h) md5 of 8-token seed grams at stride-43 starts. */
-  private def xsubIndexDir(sf: String): String =
-    graft.ops.IndexStore.indexDir("graft_xsub_v1", sf, Tables.path(sf, "documents"))
+  private[graft] val xsubIndex =
+    graft.ops.IndexStore.Index("graft_xsub_v1", "documents", "seeds")(
+      tokenWindows(_, SubstrSeedLen, SubstrRunLen - SubstrSeedLen + 1))
 
   /** Seed-bucket df cap for [[exactSubstringDedupCapped]]: index seed
     * 8-grams present (stride-aligned) in more than this many documents are

@@ -502,9 +502,6 @@ object Vectors {
     * post-candidate attach joins (see [[lshScoredPairs]]).
     * docs/LSH_OCCUPANCY.md measured its occupancy.
     */
-  private def lshBucketTable(spark: SparkSession, sf: String): DataFrame =
-    lshBucketTableOf(Tables.embeddings(spark, sf))
-
   private[graft] def lshBucketTableOf(e: DataFrame): DataFrame = {
     // 1-row aggregate, broadcast onto every row: the same adaptive-bits
     // formula the SQL twin computes (see lshNbSql).
@@ -609,7 +606,7 @@ object Vectors {
     * 6.4 → 2.3 s warm (sf1→sf3 exponents 1.52/1.16 → ≤ 1.1).
     */
   private def lshScoredPairs(spark: SparkSession, sf: String): DataFrame =
-    lshScoredPairsOf(lshBucketTable(spark, sf))
+    lshScoredPairsOf(lshBucketTableOf(Tables.embeddings(spark, sf)))
 
   /** The same scored self-join over ANY bucket table with the (vec_id,
     * embedding, norm, t, bkt) schema — shared by the equal-width radix
@@ -669,18 +666,14 @@ object Vectors {
     * self-join + exact re-rank. Bucketing is deterministic (sign bits +
     * an in-plan count), so output is identical to knn_lsh_bucketed and it
     * registers under the SAME oracle.
+    *
+    * v1: round-9 bucket-table format (vec_id, embedding, norm, t, bkt).
     */
-  def buildLshIndex(spark: SparkSession, sf: String): String =
-    graft.ops.IndexStore.buildOnce(lshIndexDir(sf), "buckets/_SUCCESS") { staging =>
-      lshBucketTable(spark, sf).write.mode("overwrite").parquet(s"$staging/buckets")
-    }
-
-  /** v1: round-9 bucket-table format (vec_id, embedding, norm, t, bkt). */
-  private def lshIndexDir(sf: String): String =
-    graft.ops.IndexStore.indexDir("graft_lsh_v1", sf, Tables.path(sf, "embeddings"))
+  private[graft] val lshIndex =
+    graft.ops.IndexStore.Index("graft_lsh_v1", "embeddings", "buckets")(lshBucketTableOf)
 
   def knnLshProbe(spark: SparkSession, sf: String): DataFrame = {
-    val tb = Tables.parquet(spark, s"${buildLshIndex(spark, sf)}/buckets")
+    val tb = lshIndex.read(spark, sf)
     top20DistinctPairs(
       tb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("t"), col("bkt"))
         .join(
@@ -701,21 +694,15 @@ object Vectors {
     * in-query form and it registers under the SAME oracle.
     */
   def dedupEmbeddingLshEqmassProbe(spark: SparkSession, sf: String): DataFrame =
-    lshDedupPost(lshScoredPairsOf(
-      Tables.parquet(spark, s"${buildLshEqmassIndex(spark, sf)}/buckets")))
-
-  def buildLshEqmassIndex(spark: SparkSession, sf: String): String =
-    graft.ops.IndexStore.buildOnce(lshEqmassIndexDir(sf), "buckets/_SUCCESS") { staging =>
-      lshBucketTableEqualMass(Tables.embeddings(spark, sf))
-        .write.mode("overwrite").parquet(s"$staging/buckets")
-    }
+    lshDedupPost(lshScoredPairsOf(lshEqmassIndex.read(spark, sf)))
 
   /** v1: same (vec_id, embedding, norm, t, bkt) format as the radix index
     * but histogram-binned — the two schemes bucket differently, so each
     * versions under its own root and they can never serve each other.
     */
-  private def lshEqmassIndexDir(sf: String): String =
-    graft.ops.IndexStore.indexDir("graft_lsh_eqm_v1", sf, Tables.path(sf, "embeddings"))
+  private[graft] val lshEqmassIndex =
+    graft.ops.IndexStore.Index("graft_lsh_eqm_v1", "embeddings", "buckets")(
+      lshBucketTableEqualMass)
 
   // ---------------------------------------------------------------- §2.D9/I9
   /** Per-label centroids, element-wise: posexplode → exact-decimal mean per
@@ -1003,29 +990,23 @@ object Vectors {
   }
 
   /** The one IVF model path: read the sizes, train the quantizer, assign
-    * every vector its top-2 cells. Returns (cells, top-2 assignment
-    * (rn, cell, vec_id, embedding)). Every IVF name reads this assignment
-    * — in-query through [[ivfAssigned]], persisted through
-    * [[buildIvfIndex]] — so all six agree by construction.
+    * every vector its top-2 cells (rn, cell, vec_id, embedding). Every IVF
+    * name reads this assignment — in-query through [[ivfAssigned]],
+    * persisted through [[ivfIndex]] — so all six agree by construction.
     */
-  private def ivfModel(emb: DataFrame): (DataFrame, DataFrame) = {
+  private def ivfModel(emb: DataFrame): DataFrame = {
     val (k, m, g) = ivfKParams(emb)
-    val cells = trainCells(emb, k, m)
-    (cells, assignTop2(emb, cells, g))
+    assignTop2(emb, trainCells(emb, k, m), g)
   }
 
   /** The in-query regime's top-2 assignment — the IVF index artifact
-    * (cell → members) that [[buildIvfIndex]] persists. Materialized because
+    * (cell → members) that [[ivfIndex]] persists. Materialized because
     * ann_ivf (probes + inverted file) and dedup_semantic (the pair
     * self-join) each read it twice, and every read re-ran the routing
     * chain; cluster_topics reads it once, inside ctc's job.
     */
   private def ivfAssigned(spark: SparkSession, sf: String): DataFrame =
-    ivfModel(Tables.embeddings(spark, sf))._2.localCheckpoint()
-
-  /** The persisted regime's top-2 assignment (built once per index path). */
-  private def ivfAssignedPersisted(spark: SparkSession, sf: String): DataFrame =
-    Tables.parquet(spark, s"${buildIvfIndex(spark, sf)}/assigned")
+    ivfModel(Tables.embeddings(spark, sf)).localCheckpoint()
 
   /** Probe-2 search over a materialized top-2 assignment table. */
   private def probeAssigned(assigned2: DataFrame): DataFrame = {
@@ -1063,8 +1044,8 @@ object Vectors {
     * k-means TRAINING (2 Lloyd steps, each a broadcast-assign + fixed-point
     * mean recompute, materialized via localCheckpoint) re-run on every
     * call — by design. A production deployment trains the quantizer and
-    * builds the inverted file ONCE per corpus version and persists both
-    * (exactly the artifacts [[buildIvfIndex]] writes); steady-state query
+    * builds the inverted file ONCE per corpus version and persists it
+    * (exactly the artifact [[ivfIndex]] writes); steady-state query
     * cost is only the probe join. The bench number is therefore
     * train+build+query end-to-end, not amortized query latency — documented
     * in docs/BENCH_NOTES.md rather than hidden by caching model state
@@ -1074,36 +1055,24 @@ object Vectors {
     probeAssigned(ivfAssigned(spark, sf))
 
   /** The persisted-index regime of [[annIvf]] (VERDICT r5 item 3): BUILD
-    * writes the trained cells and the top-2 assignment table — the coarse
-    * quantizer and the inverted file, the two artifacts a 100 TB
+    * writes the top-2 assignment table — the inverted file a 100 TB
     * deployment ships per corpus version — to parquet ONCE per (sf,
-    * library version); PROBE reads the assignment table and runs only the
-    * probe-2 join. Identical output to ann_ivf (training is fully
-    * deterministic), so it registers under the SAME oracle; the bench line
-    * for this query is steady-state query latency, while ann_ivf's stays
-    * train+build+query end-to-end.
+    * source fingerprint); PROBE reads it and runs only the probe-2 join.
+    * Identical output to ann_ivf (training is fully deterministic), so it
+    * registers under the SAME oracle; the bench line for this query is
+    * steady-state query latency, while ann_ivf's stays train+build+query
+    * end-to-end.
+    *
+    * v5: round-9 recipe — v4 (train-on-sample Lloyd + two-level routed
+    * assignment) plus the self-pinned cell→super mapping (ADVICE r8: no
+    * empty supers). Older indexes would serve assignments computed under
+    * the unpinned routing.
     */
-  def buildIvfIndex(spark: SparkSession, sf: String): String =
-    graft.ops.IndexStore.buildOnce(ivfIndexDir(sf), "assigned/_SUCCESS") { staging =>
-      val (cells, assigned2) = ivfModel(Tables.embeddings(spark, sf))
-      cells.write.mode("overwrite").parquet(s"$staging/cells")
-      assigned2.write.mode("overwrite").parquet(s"$staging/assigned")
-    }
-
-  /** Index location: one directory per (scale-factor dir, SOURCE-DATA
-    * fingerprint) under the JVM temp root — [[graft.ops.IndexStore]]'s
-    * staleness contract. The version tag marks the index FORMAT — bump it
-    * when the training recipe changes.
-    */
-  private def ivfIndexDir(sf: String): String =
-    // v5: round-9 recipe — v4 (train-on-sample Lloyd + two-level routed
-    // assignment) plus the self-pinned cell→super mapping (ADVICE r8: no
-    // empty supers). Older indexes would serve assignments computed under
-    // the unpinned routing.
-    graft.ops.IndexStore.indexDir("graft_ivf_v5", sf, Tables.path(sf, "embeddings"))
+  private[graft] val ivfIndex =
+    graft.ops.IndexStore.Index("graft_ivf_v5", "embeddings", "assigned")(ivfModel)
 
   def annIvfProbe(spark: SparkSession, sf: String): DataFrame =
-    probeAssigned(ivfAssignedPersisted(spark, sf))
+    probeAssigned(ivfIndex.read(spark, sf))
 
   /** Oracle-side dot of a float list against a double centroid list — the
     * identical left fold the Spark side uses. Shared by the annIvf and
@@ -1246,7 +1215,7 @@ object Vectors {
     * Scale posture: this is the semantic analog of dedup_embedding_lsh —
     * the pair space shrinks from n² to Σ cell², with the cluster key as
     * the ONE shuffle key; the cluster assignment is the same artifact the
-    * IVF index persists (buildIvfIndex), so a 100 TB deployment amortizes
+    * IVF index persists (ivfIndex), so a 100 TB deployment amortizes
     * training across both ANN search and dedup. Unlike the LSH variant
     * (random-hyperplane buckets can split a true near-dup pair across
     * buckets), k-means cells follow the data's density, which is why
@@ -1262,13 +1231,13 @@ object Vectors {
 
   /** The persisted-quantizer regime of [[dedupSemantic]] (VERDICT r6 item
     * 2): reuses the SAME on-disk top-2 assignment table the IVF index
-    * ships ([[buildIvfIndex]] — one training run amortized across ANN
+    * ships ([[ivfIndex]] — one training run amortized across ANN
     * search and semantic dedup, the SemDeDup deployment shape), so only
     * the within-cell pair join runs per call. Training is deterministic,
     * so output is identical and it registers under the same oracle.
     */
   def dedupSemanticProbe(spark: SparkSession, sf: String): DataFrame =
-    semanticFromAssigned(ivfAssignedPersisted(spark, sf))
+    semanticFromAssigned(ivfIndex.read(spark, sf))
 
   /** Within-cell near-dup search over a top-2 assignment table — the
     * shared tail of [[dedupSemantic]] (in-query training) and
@@ -1403,7 +1372,7 @@ object Vectors {
     * output is identical — same oracle.
     */
   def clusterTopicsProbe(spark: SparkSession, sf: String): DataFrame =
-    topicsFromAssignment(spark, sf, ivfAssignedPersisted(spark, sf))
+    topicsFromAssignment(spark, sf, ivfIndex.read(spark, sf))
 
   /** Shared tail of [[clusterTopics]] / [[clusterTopicsProbe]]: token lift
     * profile over the rank-1 rows of a top-2 assignment — each vector's

@@ -90,13 +90,11 @@ class ExtrasSpec extends AnyFunSuite {
     assert(qRecall >= 0.6, s"quantized recall@3 = $qRecall")
   }
 
-  test("ann_ivf_probe: build persists cells + inverted file, probe output == in-query training output") {
+  test("ann_ivf_probe: build persists the inverted file, probe output == in-query training output") {
     import graft.queries.Vectors
-    val dir = Vectors.buildIvfIndex(spark, Sf0001)
-    // both model artifacts on disk: coarse quantizer + top-2 assignment table
-    assert(new java.io.File(s"$dir/cells/_SUCCESS").exists())
+    val dir = Vectors.ivfIndex.build(spark, Sf0001)
+    // the one model artifact on disk: the top-2 assignment table
     assert(new java.io.File(s"$dir/assigned/_SUCCESS").exists())
-    assert(spark.read.parquet(s"$dir/cells").count() > 0)
     val probe = Vectors.annIvfProbe(spark, Sf0001).collect().map(_.toSeq)
     val full = Vectors.annIvf(spark, Sf0001).collect().map(_.toSeq)
     assert(probe === full)
@@ -126,7 +124,7 @@ class ExtrasSpec extends AnyFunSuite {
 
   test("dedup_semantic_probe: shares the persisted IVF artifact, output == in-query training output") {
     import graft.queries.Vectors
-    val dir = Vectors.buildIvfIndex(spark, Sf0001)
+    val dir = Vectors.ivfIndex.build(spark, Sf0001)
     // ONE on-disk artifact serves both ANN search and semantic dedup
     assert(new java.io.File(s"$dir/assigned/_SUCCESS").exists())
     val probe = Vectors.dedupSemanticProbe(spark, Sf0001).collect().map(_.toSeq)
@@ -137,11 +135,19 @@ class ExtrasSpec extends AnyFunSuite {
 
   test("dedup_embedding_lsh_eqmass_probe: persists histogram-binned buckets, probe == in-query form") {
     import graft.queries.Vectors
-    val dir = Vectors.buildLshEqmassIndex(spark, Sf0001)
+    val dir = Vectors.lshEqmassIndex.build(spark, Sf0001)
     assert(new java.io.File(s"$dir/buckets/_SUCCESS").exists())
     assert(spark.read.parquet(s"$dir/buckets").count() > 0)
     val probe = Vectors.dedupEmbeddingLshEqmassProbe(spark, Sf0001).collect().map(_.toSeq)
     val full = Vectors.dedupEmbeddingLshEqualMass(spark, Sf0001).collect().map(_.toSeq)
+    assert(probe === full)
+    assert(probe.nonEmpty)
+  }
+
+  test("knn_lsh_probe: persisted bucket table, probe output == knn_lsh_bucketed") {
+    import graft.queries.Vectors
+    val probe = Vectors.knnLshProbe(spark, Sf0001).collect().map(_.toSeq)
+    val full = Vectors.knnLshBucketed(spark, Sf0001).collect().map(_.toSeq)
     assert(probe === full)
     assert(probe.nonEmpty)
   }

@@ -33,6 +33,22 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(!root.listFiles().exists(_.getName.contains(".tmp.")))
   }
 
+  test("a write that throws leaves no staging dir and no index, and the error propagates") {
+    val root = tmpRoot()
+    val dir = s"$root/idx"
+    val e = intercept[IllegalStateException] {
+      IndexStore.buildOnce(dir, "part/_SUCCESS") { staging =>
+        // a half-written part, then the recipe fails
+        val p = new java.io.File(s"$staging/part")
+        assert(p.mkdirs())
+        java.nio.file.Files.writeString(p.toPath.resolve("data-0"), "partial")
+        throw new IllegalStateException("recipe failed")
+      }
+    }
+    assert(e.getMessage === "recipe failed")
+    assert(root.listFiles().isEmpty, root.listFiles().map(_.getName).toSeq)
+  }
+
   test("losing a concurrent commit discards the staging copy and keeps the winner") {
     val root = tmpRoot()
     val dir = s"$root/idx"

@@ -106,21 +106,32 @@ class RegistryLintSpec extends AnyFunSuite {
       "rand(" -> "nondeterministic function",
       "udf(" -> "scala UDF (kills codegen; use built-ins or a Catalyst Expression)",
       "spark.read.parquet(" -> "schema-inference job per read (use Tables.parquet)")
-    // one persisted-index path: ops/ owns the legitimate use (IndexStore's commit)
-    val bannedOutsideOps = Seq(
-      "commitAtomically(" -> "hand-rolled index commit (use IndexStore.buildOnce)")
+    // one persisted-index path: IndexStore alone places, writes, marks and
+    // commits an index; every other file declares an IndexStore.Index
+    val indexStore = Paths.get("graft/ops/IndexStore.scala")
+    val indexPath = Seq(
+      "buildOnce(" -> "hand-rolled index build",
+      "indexDir(" -> "hand-placed index directory",
+      "/_SUCCESS" -> "hand-named index marker",
+      "commitAtomically(" -> "hand-rolled index commit")
     // lint CODE only: scaladoc legitimately discusses the banned calls
     // (e.g. Skew.scala documents WHY monotonically_increasing_id is unsafe)
     def stripComments(s: String): String =
       s.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
-    val offenders = for {
+    val offenders = (for {
       dir <- queryDirs
       p <- Files.walk(Paths.get(dir)).iterator().asScala
       if p.toString.endsWith(".scala")
       src = stripComments(Files.readString(p))
-      (pat, why) <- banned ++ (if (dir.endsWith("/ops")) Nil else bannedOutsideOps)
+      (pat, why) <- banned
       if src.contains(pat)
-    } yield s"$p: $pat ($why)"
+    } yield s"$p: $pat ($why)") ++ (for {
+      p <- Files.walk(Paths.get("src/main/scala")).iterator().asScala.toSeq
+      if p.toString.endsWith(".scala") && !p.endsWith(indexStore)
+      src = stripComments(Files.readString(p))
+      (pat, why) <- indexPath
+      if src.contains(pat)
+    } yield s"$p: $pat ($why; declare an IndexStore.Index)")
     assert(offenders.isEmpty, s"discipline violations:\n${offenders.mkString("\n")}")
   }
 

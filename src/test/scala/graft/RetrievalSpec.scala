@@ -196,8 +196,7 @@ class RetrievalSpec extends AnyFunSuite {
     assert(got.forall(r => r._4 >= 1L && r._5 > 0.0))
     // independent recompute from the persisted IVF index (deterministic
     // training => identical assignment) + raw doc tokens
-    val dir = Vectors.buildIvfIndex(spark, Sf0001)
-    val inv = spark.read.parquet(s"$dir/assigned")
+    val inv = Vectors.ivfIndex.read(spark, Sf0001)
       .where(col("rn") === 1)
       .select(col("vec_id"), col("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap

@@ -15,7 +15,7 @@ class TextOpsAltSpec extends AnyFunSuite {
     assert(viaProbe === inQuery && viaProbe.nonEmpty)
     // the committed index is complete on disk and a second probe serves
     // from it (marker mtime unchanged — no rebuild)
-    val dir = TextOps.buildMinhashIndex(spark, Sf001)
+    val dir = TextOps.minhashIndex.build(spark, Sf001)
     val marker = new java.io.File(s"$dir/bands/_SUCCESS")
     assert(marker.exists())
     val mtime = marker.lastModified()
@@ -330,7 +330,7 @@ class TextOpsAltSpec extends AnyFunSuite {
     val inQuery = TextOps.dedupExactSubstring(spark, Sf001).collect().toSeq
     val viaProbe = TextOps.dedupExactSubstringProbe(spark, Sf001).collect().toSeq
     assert(viaProbe === inQuery && viaProbe.nonEmpty)
-    val dir = TextOps.buildXsubIndex(spark, Sf001)
+    val dir = TextOps.xsubIndex.build(spark, Sf001)
     val marker = new java.io.File(s"$dir/seeds/_SUCCESS")
     assert(marker.exists())
     val mtime = marker.lastModified()
