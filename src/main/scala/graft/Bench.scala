@@ -52,18 +52,16 @@ object Bench {
   private[graft] def shortLine(total: Double, head: Seq[(String, Double)],
       headKey: String, headTotal: Double, nQueries: Int, errJson: String,
       sfDir: String, iters: Int, retries: Int, inflJson: String,
-      inflAdjJson: String, canaryJson: String, cached: Boolean,
-      confJson: String): String =
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(head)},"$headKey":$headTotal,"n_queries":$nQueries,"full":"bench_out.json","errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":$cached,"action":"noop",$confJson}"""
+      inflAdjJson: String, canaryJson: String, confJson: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(head)},"$headKey":$headTotal,"n_queries":$nQueries,"full":"bench_out.json","errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":true,"action":"noop",$confJson}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
     val spark = Session.bench(sfDir)
-    // Warm-cache the input tables (default on; SPARK_GRAFT_CACHE=false for
-    // the cold-scan variant); bench_out.json records the mode in `cached`.
-    val cached = sys.env.getOrElse("SPARK_GRAFT_CACHE", "true").toBoolean
-    if (cached) cacheTables(spark, sfDir)
+    // Warm-cache the input tables; both JSON lines record it as
+    // `"cached":true`.
+    cacheTables(spark, sfDir)
     // Dev-only subset filter: SPARK_GRAFT_ONLY=headline (the BASELINE.md
     // 10-query suite) or a comma-separated query-name list. Used for quick
     // local A/Bs; the driver never sets it. A filtered run does NOT write
@@ -287,10 +285,9 @@ object Bench {
       s""""aqe":$aqe,"shuffle":$sh,"broadcast":"$bc""""
     }
     val line = shortLine(total, head, headKey, headTotal, timed.size, errJson,
-      sfDir, iters, retries, inflJson, inflAdjJson, canaryJson, cached,
-      confJson)
+      sfDir, iters, retries, inflJson, inflAdjJson, canaryJson, confJson)
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed.toSeq)},"baseline10_total":$headTotal,"errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":$cached,"action":"noop",$confJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed.toSeq)},"baseline10_total":$headTotal,"errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":true,"action":"noop",$confJson}"""
     if (only.isEmpty) try {
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(fullLine) finally w.close()

@@ -35,8 +35,9 @@ object Session {
   }
 
   /** The bench posture, shared by `graft.Bench` and the plan tools
-    * (PlanAudit, PlanFormatted) so their plans are the benched plans. Each
-    * `SPARK_GRAFT_*` session override is read here only.
+    * (PlanAudit, PlanFormatted) so their plans are the benched plans. Every
+    * value is fixed here; only the shuffle-partition count derives from the
+    * data (see shuffleDefault below).
     *
     * Logs at ERROR, not WARN: each WindowExec "No Partition Defined" WARN
     * is ~190 chars and the round-4 run emitted 8 of them — ~1.5 KB of the
@@ -44,9 +45,8 @@ object Session {
     */
   def bench(sfDir: String): SparkSession =
     local(logLevel = "ERROR", conf = Map(
-      // data-adaptive default, env-overridable — see shuffleDefault below
-      "spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", shuffleDefault(cpus, inputBytes(sfDir)).toString),
+      // data-adaptive — see shuffleDefault below
+      "spark.sql.shuffle.partitions" -> shuffleDefault(cpus, inputBytes(sfDir)).toString,
       Tables.EventsNanosConf -> "true",
       // 8MB threshold (round-8 matrix A/B, docs/BENCH_NOTES.md): true
       // dimension tables (≤ a few MB) still broadcast, but the 150 k-row
@@ -54,7 +54,7 @@ object Session {
       // broadcast build cost ~0.3–0.4 s/query (q3 1.09 → 0.67 s as a
       // shuffle join). That is also the honest scale plan: at 100 TB a
       // fact side is never broadcast-able.
-      "spark.sql.autoBroadcastJoinThreshold" -> sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "8MB"),
+      "spark.sql.autoBroadcastJoinThreshold" -> "8MB",
       // AQE off for the local bench (round-8 matrix A/B): with pre-spread
       // cached inputs and sub-second stages, AQE's per-stage
       // materialize-and-replan roundtrips cost 0.05–0.3 s/query and its
@@ -63,10 +63,10 @@ object Session {
       // it on — this is harness latency tuning, recorded in the artifact.
       // It also keeps static plans inspectable: the adaptive wrapper
       // hides codegen spans and exchange reuse until execution.
-      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "false"),
+      "spark.sql.adaptive.enabled" -> "false",
       // local-harness opt-in: test tables are single-row-group files, so
       // Tables spreads the corpus tables across cores at load
-      graft.queries.Det.SpreadConf -> sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true")))
+      graft.queries.Det.SpreadConf -> "true"))
 
   /** Input bytes of the scale-factor directory (recursive over the table
     * files/dirs) — the signal the shuffle-partition default derives from. */
@@ -94,8 +94,8 @@ object Session {
     * production mechanism is AQE coalescing per stage (kept OFF locally:
     * measured r8, re-measured r15 — AQE's replan roundtrips also break
     * this library's ReuseExchange shapes, dedup_overlap_report 15.3 →
-    * 51.1 s at sf1). SPARK_GRAFT_SHUFFLE still overrides; the sf0.1
-    * default is unchanged vs r14, so the driver's bench stays comparable.
+    * 51.1 s at sf1). The sf0.1 value is unchanged vs r14, so sf0.1
+    * bench lines stay comparable.
     */
   private[graft] def shuffleDefault(cpus: Int, bytes: Long): Int =
     math.max(8L, math.min(cpus.toLong, (bytes + (32L << 20) - 1) / (32L << 20))).toInt

@@ -133,12 +133,7 @@ object CorpusPrep {
     * combined aggregation. Exact: pruning non-top-8-of-a-salt rows can
     * never remove a global top-8 row.
     */
-  /** Registered binding: 8 survivors per language. */
-  def weightedSample(spark: SparkSession, sf: String): DataFrame =
-    weightedSample(spark, sf, 8)
-
-  /** Library entry point: caller-chosen per-group sample size. */
-  def weightedSample(spark: SparkSession, sf: String, perLang: Int): DataFrame = {
+  def weightedSample(spark: SparkSession, sf: String): DataFrame = {
     val race = Tables.documents(spark, sf)
       .select(col("lang"), col("doc_id"), col("n_chars"),
         (round(
@@ -150,14 +145,14 @@ object CorpusPrep {
       .groupBy(col("lang"), pmod(col("doc_id"), lit(64)).as("salt"))
       .agg(slice(
         array_sort(collect_list(struct((-col("race_key")).as("nk"), col("doc_id"), col("n_chars")))),
-        1, perLang).as("top"))
+        1, 8).as("top"))
       .select(col("lang"), explode(col("top")).as("t"))
       .select(col("lang"), col("t.doc_id").as("doc_id"),
         col("t.n_chars").as("n_chars"), (-col("t.nk")).as("race_key"))
     partial
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("lang")).orderBy(col("race_key").desc, col("doc_id").asc)))
-      .where(col("rn") <= perLang)
+      .where(col("rn") <= 8)
       .select(col("lang"), col("doc_id"), col("n_chars"), col("race_key"))
       .orderBy(col("lang"), col("doc_id"))
   }

@@ -47,12 +47,6 @@ object Retrieval {
     * and the only full-corpus passes are the tokenize (linear, map-side
     * combined groupBy for dl) and the final TakeOrdered top-20. No
     * windows, no all-pairs, nothing driver-side.
-    */
-  /** Registered binding: the fixture probe-term set, top-20. */
-  def bm25Topk(spark: SparkSession, sf: String): DataFrame =
-    bm25Topk(spark, sf, Bm25Terms, 20)
-
-  /** Library entry point: caller-chosen probe terms and result size.
     *
     * Precondition (part of the contract, ADVICE r14 item 1): rows with a
     * NULL doc_id are dropped by the explicit seed filter below. The seed
@@ -60,7 +54,7 @@ object Retrieval {
     * whose doc_id is a key (the fixture's is); a caller whose data can
     * carry null doc_ids must assign surrogate ids first.
     */
-  def bm25Topk(spark: SparkSession, sf: String, terms: Seq[String], k: Int): DataFrame = {
+  def bm25Topk(spark: SparkSession, sf: String): DataFrame = {
     // isNotNull seeds: data-level no-ops that mirror the constraints the
     // scoring joins infer into only their copies of the dl / tf subtrees —
     // without them the subtrees stop canonicalizing equal and each
@@ -78,7 +72,7 @@ object Retrieval {
       count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
     val tf = toks
-      .where(col("token").isin(terms: _*))
+      .where(col("token").isin(Bm25Terms: _*))
       .groupBy(col("token"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
     // count(when(tf ≥ 1, tf)), not count(1): the §42(b) pruning defense,
@@ -110,7 +104,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_terms"),
         (sum(col("contrib_fx")).cast("double") / lit(Fx)).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+      .limit(20)
   }
 
   val bm25TopkSql: String = {

@@ -638,12 +638,18 @@ object Vectors {
       .orderBy(col("dot").desc, col("vec_a").asc, col("vec_b").asc)
       .limit(20)
 
-  def knnLshBucketed(spark: SparkSession, sf: String): DataFrame =
-    // dot computed in the bucket join (lshScoredPairs); see
-    // top20DistinctPairs for why no full distinct shuffle is needed
+  /** Shared kNN tail of [[knnLshBucketed]] / [[knnLshProbe]] over a bucket
+    * table: dot computed in the bucket join (the unused norms are pruned
+    * away); see top20DistinctPairs for why no full distinct shuffle is
+    * needed.
+    */
+  private def lshKnnOf(tb: DataFrame): DataFrame =
     top20DistinctPairs(
-      lshScoredPairs(spark, sf)
+      lshScoredPairsOf(tb)
         .select(col("vec_a"), col("vec_b"), dot(col("emb_a"), col("emb_b")).as("dot")))
+
+  def knnLshBucketed(spark: SparkSession, sf: String): DataFrame =
+    lshKnnOf(lshBucketTableOf(Tables.embeddings(spark, sf)))
 
   val knnLshBucketedSql: String = {
     s"""WITH cand AS (
@@ -672,16 +678,8 @@ object Vectors {
   private[graft] val lshIndex =
     graft.ops.IndexStore.Index("graft_lsh_v1", "embeddings", "buckets")(lshBucketTableOf)
 
-  def knnLshProbe(spark: SparkSession, sf: String): DataFrame = {
-    val tb = lshIndex.read(spark, sf)
-    top20DistinctPairs(
-      tb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("t"), col("bkt"))
-        .join(
-          tb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"), col("t"), col("bkt")),
-          Seq("t", "bkt"))
-        .where(col("vec_a") < col("vec_b"))
-        .select(col("vec_a"), col("vec_b"), dot(col("emb_a"), col("emb_b")).as("dot")))
-  }
+  def knnLshProbe(spark: SparkSession, sf: String): DataFrame =
+    lshKnnOf(lshIndex.read(spark, sf))
 
   /** The persisted-index regime of [[dedupEmbeddingLshEqualMass]] — the
     * registered skew-defense path gets the same train/probe split its
@@ -1124,17 +1122,6 @@ object Vectors {
        |    FROM $srcRel e CROSS JOIN $cellsRel c)
        |  WHERE rn = 1""".stripMargin
 
-  /** Rank-1 assignment over the routed candidate cells (vsupRel gives each
-    * vector's ≤ 2 supers; csupRel maps cells to supers).
-    */
-  private def assignCte(csupRel: String, vsupRel: String, srcRel: String): String =
-    s"""SELECT cell, vec_id, embedding FROM (
-       |    SELECT cs.cell, e.vec_id, e.embedding,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${cellDot("e.embedding", "cs.cvec")} DESC, cs.cell ASC) AS rn
-       |    FROM $srcRel e JOIN $vsupRel v ON v.vec_id = e.vec_id JOIN $csupRel cs ON cs.sc = v.sc)
-       |  WHERE rn = 1""".stripMargin
-
   private def centCte(assignRel: String): String =
     s"""SELECT cell, list(centroid ORDER BY pos) AS cvec FROM (
        |    SELECT cell, i AS pos,
@@ -1378,8 +1365,7 @@ object Vectors {
     * profile over the rank-1 rows of a top-2 assignment — each vector's
     * nearest cell, argmax (dot DESC, cell ASC).
     */
-  private def topicsFromAssignment(spark: SparkSession, sf: String, assigned2: DataFrame,
-      topN: Int = 3): DataFrame = {
+  private def topicsFromAssignment(spark: SparkSession, sf: String, assigned2: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val inv = assigned2.where(col("rn") === 1).select(col("vec_id"), col("cell"))
     // The explicit isNotNull pair is a data-level no-op (cell is a routed
@@ -1424,7 +1410,7 @@ object Vectors {
       .withColumn("lift", lift)
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("cell")).orderBy(col("lift").desc, col("token").asc)))
-      .where(col("rank") <= topN)
+      .where(col("rank") <= 3)
       .select(col("cell").cast("long").as("cell"), col("rank").cast("long").as("rank"),
         col("token"), col("c_tc"), col("lift"))
       .orderBy(col("cell"), col("rank"))

@@ -54,19 +54,17 @@ object Sources {
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
   /** A5′ — JSON-lines report sink: the reference persisted each run's
-    * change-list report as JSON [R:change_list.py ~med].
-    * `singleFile = true` (default, matching the reference's one-report-file
-    * shape) coalesces to one task — use ONLY for small report frames; pass
-    * false for a distributed one-file-per-partition write of large frames.
+    * change-list report as JSON [R:change_list.py ~med], one report file.
+    * Coalesces to one task, so it is for small report frames only.
     */
-  def writeJsonReport(df: DataFrame, path: String, singleFile: Boolean = true): Unit =
-    (if (singleFile) df.coalesce(1) else df).write.mode("overwrite").json(path)
+  def writeJsonReport(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").json(path)
 
-  /** A5′ — CSV report sink with header (the Sheets-export round-trip);
-    * `singleFile` semantics as in [[writeJsonReport]].
+  /** A5′ — CSV report sink with header (the Sheets-export round-trip); one
+    * file, like [[writeJsonReport]].
     * Library surface listed in the README layout; SourcesSpec is its only caller. */
-  def writeCsvReport(df: DataFrame, path: String, singleFile: Boolean = true): Unit =
-    (if (singleFile) df.coalesce(1) else df).write.mode("overwrite").option("header", "true").csv(path)
+  def writeCsvReport(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
   /** A5″ — ORC sink + source: Spark's second built-in columnar format, for
     * interchange with ORC-native warehouses. Same predicate-pushdown /

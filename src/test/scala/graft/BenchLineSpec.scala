@@ -28,7 +28,7 @@ class BenchLineSpec extends AnyFunSuite {
     val confJson = """"aqe":false,"shuffle":32,"broadcast":"8MB""""
     val line = Bench.shortLine(9999.999, head, "baseline10_total", 999.999,
       154, errJson, "/tmp/graft_testdata/sf1", 3, 12, inflated, inflated,
-      canaryJson, cached = true, confJson = confJson)
+      canaryJson, confJson)
     // sbt's batch-mode trailer ("[success] Total time: ...") plus Spark
     // shutdown stragglers have measured < 200 chars; leave 300 of margin.
     assert(line.length <= 1700,

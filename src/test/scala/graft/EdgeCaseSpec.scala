@@ -40,10 +40,7 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("lag over a single-row partition is null; sessionize of one event is one session") {
-    val one = Tables.events(spark, Sf0001).orderBy("event_id").limit(1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-one").toString
-    one.write.mode("overwrite").parquet(dir)
-    // window_lag_change_detect over that single event: prev_* must be null
+    // the lowest event_id opens its partition, so it has no lag: prev_* must be null
     val row = SparkEntry.queries("window_lag_change_detect")(spark, Sf0001)
       .orderBy("event_id").limit(1).head()
     assert(row.isNullAt(row.fieldIndex("prev_type")))
@@ -84,30 +81,32 @@ class EdgeCaseSpec extends AnyFunSuite {
   test("quantizer family survives degenerate corpora: n < k floor, and n = 1") {
     import graft.queries.Vectors
     import spark.implicits._
-    def mkCorpus(n: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_tiny_sf").toString
-      val emb = (0 until n).map { i =>
-        (i.toLong, Array.tabulate(64)(d => ((i * 31 + d * 7) % 13 - 6).toFloat / 7f))
-      }.toDF("vec_id", "embedding")
-      emb.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val docs = (0 until n).map(i => (i.toLong, s"tiny doc number $i words here")).toDF("doc_id", "text")
-      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      dir
+    withTempDir("graft_tiny_sf") { root =>
+      def mkCorpus(n: Int): String = {
+        val dir = s"$root/n$n"
+        val emb = (0 until n).map { i =>
+          (i.toLong, Array.tabulate(64)(d => ((i * 31 + d * 7) % 13 - 6).toFloat / 7f))
+        }.toDF("vec_id", "embedding")
+        emb.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+        val docs = (0 until n).map(i => (i.toLong, s"tiny doc number $i words here")).toDF("doc_id", "text")
+        docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        dir
+      }
+      // n = 5 < the adaptive-k floor of 8: init yields 5 cells, g = 3 supers
+      val sf5 = mkCorpus(5)
+      val ivf5 = Vectors.annIvf(spark, sf5).collect()
+      assert(ivf5.nonEmpty)
+      assert(ivf5.forall(r => r.getLong(0) != r.getLong(2)), "self-neighbor leaked")
+      assert(ivf5.forall(r => r.getLong(1) >= 1 && r.getLong(1) <= 3))
+      Vectors.dedupSemantic(spark, sf5).collect() // soundness: must not throw
+      assert(Vectors.clusterTopics(spark, sf5).collect().nonEmpty)
+      val q5r = Vectors.knnQuantized(spark, sf5).collect()
+      assert(q5r.forall(r => r.getLong(0) != r.getLong(2)))
+      // n = 1: one vector, no possible neighbor — empty results, no throw
+      val sf1 = mkCorpus(1)
+      assert(Vectors.annIvf(spark, sf1).collect().isEmpty)
+      assert(Vectors.dedupSemantic(spark, sf1).collect().isEmpty)
+      assert(Vectors.knnQuantized(spark, sf1).collect().isEmpty)
     }
-    // n = 5 < the adaptive-k floor of 8: init yields 5 cells, g = 3 supers
-    val sf5 = mkCorpus(5)
-    val ivf5 = Vectors.annIvf(spark, sf5).collect()
-    assert(ivf5.nonEmpty)
-    assert(ivf5.forall(r => r.getLong(0) != r.getLong(2)), "self-neighbor leaked")
-    assert(ivf5.forall(r => r.getLong(1) >= 1 && r.getLong(1) <= 3))
-    Vectors.dedupSemantic(spark, sf5).collect() // soundness: must not throw
-    assert(Vectors.clusterTopics(spark, sf5).collect().nonEmpty)
-    val q5r = Vectors.knnQuantized(spark, sf5).collect()
-    assert(q5r.forall(r => r.getLong(0) != r.getLong(2)))
-    // n = 1: one vector, no possible neighbor — empty results, no throw
-    val sf1 = mkCorpus(1)
-    assert(Vectors.annIvf(spark, sf1).collect().isEmpty)
-    assert(Vectors.dedupSemantic(spark, sf1).collect().isEmpty)
-    assert(Vectors.knnQuantized(spark, sf1).collect().isEmpty)
   }
 }

@@ -138,19 +138,48 @@ class RegistryLintSpec extends AnyFunSuite {
   test("one session seam: only graft/Session.scala builds a SparkSession or reads SPARK_GRAFT_CPUS") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    // the pattern is a regex so this file's own source never matches it
+    // the patterns are regexes so this file's own source never matches them
     val builder = "SparkSession\\s*\\.\\s*builder\\s*\\(".r
     val cpusVar = "\"SPARK_GRAFT_CPUS\""
+    // The option surface. Only the mains and the tools read the environment
+    // or JVM properties, and only the six variables below; the library reads
+    // none but IndexStore's temp root, a deployment path. The only session
+    // confs of the library's own are the two below.
+    val envRead = "\\b(sys\\s*\\.\\s*(env|props)|System\\s*\\.\\s*(getenv|getProperty))".r
+    val envReaders = Seq("graft/Session.scala", "graft/Bench.scala", "graft/Verify.scala")
+    val envVar = "\"(SPARK_GRAFT_\\w+)\"".r
+    val envVars = Set("CPUS", "SF_DIR", "ITERS", "ONLY", "FLOORS", "VERIFY_ONLY").map("SPARK_GRAFT_" + _)
+    val tmpRoot = "graft/ops/IndexStore.scala" -> "sys.props(\"java.io.tmpdir\")"
+    val graftKey = "\"(spark\\.graft\\.[^\"]*)\"".r
+    val graftKeys = Set(
+      "graft/queries/Det.scala" -> queries.Det.SpreadConf,
+      "graft/queries/Vectors.scala" -> queries.Vectors.AllPairsMaxRowsConf)
+    def stripComments(s: String): String =
+      s.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
+    def hits(dir: String, rel: String, src: String): Seq[String] = {
+      val seam = if (rel == "graft/Session.scala") Nil else Seq(
+        builder.findFirstIn(src).map(_ => "builder call (use graft.Session)"),
+        Option.when(dir == "src/main/scala" && src.contains(cpusVar))(s"$cpusVar (use Session.cpus)")).flatten
+      val options = if (dir != "src/main/scala") Nil else {
+        val code = stripComments(src)
+        val read =
+          if (envReaders.contains(rel) || rel.startsWith("graft/tools/")) None
+          else envRead.findFirstIn(if (rel == tmpRoot._1) code.replace(tmpRoot._2, "") else code)
+        read.map(r => s"$r (an option read outside the mains and tools)").toSeq ++
+          envVar.findAllMatchIn(code).map(_.group(1)).filterNot(envVars)
+            .map(v => s"$v (an environment option beyond the six in use)") ++
+          graftKey.findAllMatchIn(code).map(_.group(1)).filterNot(k => graftKeys(rel -> k))
+            .map(k => s"\"$k\" (a session conf beyond Det.SpreadConf and Vectors.AllPairsMaxRowsConf)")
+      }
+      seam ++ options
+    }
     val offenders = for {
       dir <- Seq("src/main/scala", "src/test/scala")
       p <- Files.walk(Paths.get(dir)).iterator().asScala
-      if p.toString.endsWith(".scala") && !p.endsWith(Paths.get("graft/Session.scala"))
-      src = Files.readString(p)
-      hit <- Seq(
-        builder.findFirstIn(src).map(_ => "builder call (use graft.Session)"),
-        Option.when(dir == "src/main/scala" && src.contains(cpusVar))(s"$cpusVar (use Session.cpus)")).flatten
+      if p.toString.endsWith(".scala")
+      hit <- hits(dir, Paths.get(dir).relativize(p).toString, Files.readString(p))
     } yield s"$p: $hit"
-    assert(offenders.isEmpty, s"session built or cores read outside graft.Session:\n${offenders.mkString("\n")}")
+    assert(offenders.isEmpty, s"session built, cores or options read outside graft.Session:\n${offenders.mkString("\n")}")
   }
 
   test("one SQL seam: only graft/Tables.scala parses SQL text or registers a view") {

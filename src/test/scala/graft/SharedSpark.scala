@@ -10,4 +10,17 @@ object SharedSpark {
 
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
+
+  /** Runs `f` on a fresh directory under `java.io.tmpdir` named `prefix…`
+    * and deletes the directory, with everything written into it, after. */
+  def withTempDir[A](prefix: String)(f: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir.toString)
+    finally {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
+  }
 }
