@@ -170,18 +170,11 @@ object Corpus {
     * survivor convention (lowest (doc_id, chunk_id) wins) — one Catalyst
     * plan, one chunk-hash-keyed shuffle over the chunk stream.
     */
-  def chunkDedup(spark: SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    docChunking(spark, sf)
-      .withColumn("chunk_md5", md5(col("chunk_text").cast("binary")))
-      .withColumn(
-        "rn",
-        row_number().over(
-          Window.partitionBy(col("chunk_md5")).orderBy(col("doc_id"), col("chunk_id"))))
-      .where(col("rn") === 1)
+  def chunkDedup(spark: SparkSession, sf: String): DataFrame =
+    Det.firstPer(docChunking(spark, sf).withColumn("chunk_md5", md5(col("chunk_text").cast("binary"))),
+        col("chunk_md5"))(col("doc_id"), col("chunk_id"))
       .select(col("doc_id"), col("chunk_id"), col("chunk_md5"), col("n_chunk_tokens"))
       .orderBy(col("doc_id"), col("chunk_id"))
-  }
 
   val chunkDedupSql: String = {
     // docChunkingSql minus its final ORDER BY, reused as the chunk source
@@ -208,7 +201,6 @@ object Corpus {
     * shuffles); this shape is 1 scan, window + final agg.
     */
   def corpusYieldReport(spark: SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val stop = Seq("the", "and", "of", "to", "in", "is", "a", "an")
     val flagged = Tables.documents(spark, sf)
       .withColumn("toks", filter(tokensCol, t => t =!= ""))
@@ -219,12 +211,8 @@ object Corpus {
       .withColumn(
         "pass_quality",
         col("n_tokens") >= 10 && col("n_stop") * 2 <= col("n_tokens"))
-      .withColumn(
-        "rn",
-        row_number().over(
-          Window.partitionBy(col("pass_quality"), md5(col("text").cast("binary")))
-            .orderBy(col("doc_id"))))
-      .withColumn("survivor", col("pass_quality") && col("rn") === 1)
+      .transform(Det.ranked(_, col("pass_quality"), md5(col("text").cast("binary")))(col("doc_id")))
+      .withColumn("survivor", col("pass_quality") && Det.isFirst)
     flagged
       .groupBy(col("lang"), col("source"))
       .agg(

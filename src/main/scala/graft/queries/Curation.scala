@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -237,7 +237,7 @@ object Curation {
     val e = Tables.embeddings(spark, sf)
       .select(
         col("vec_id"), col("label"),
-        floor(graft.functions.VecDot.vec_dot(col("embedding"), col("embedding")) * lit(1048576.0))
+        floor(Vectors.normSq * lit(1048576.0))
           .cast("long").as("norm2_q"))
     val stats = e.groupBy(col("label"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("norm2_q")).as("s_q"))
@@ -253,14 +253,10 @@ object Curation {
       .orderBy(col("label"))
   }
 
-  private def norm2Sql(v: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len($v) + 1), " +
-      s"i -> CAST($v[i] AS DOUBLE) * CAST($v[i] AS DOUBLE))), (acc, x) -> acc + x)"
-
   val embeddingOutliersSql: String =
     s"""WITH e AS (
       |  SELECT vec_id, label,
-      |    CAST(floor(${norm2Sql("embedding")} * 1048576.0) AS BIGINT) AS norm2_q
+      |    CAST(floor(${Vectors.dotSql("embedding", "embedding")} * 1048576.0) AS BIGINT) AS norm2_q
       |  FROM embeddings
       |), stats AS (
       |  SELECT label, COUNT(*) AS n_vecs, CAST(SUM(norm2_q) AS BIGINT) AS s_q
@@ -330,26 +326,8 @@ object Curation {
     * Feature/score arithmetic is sequenced identically in both engines
     * (left-to-right double fold), so scores hash-match bit-for-bit.
     */
-  def qualityLogitScore(spark: SparkSession, sf: String): DataFrame = {
-    val toks = filter(TextOps.tokensCol, t => t =!= "")
-    Tables.documents(spark, sf)
-      .select(
-        col("doc_id"), col("source"),
-        toks.as("t"),
-        length(regexp_replace(col("text"), " ", "")).cast("double").as("nonspace"))
-      .select(
-        col("doc_id"), col("source"),
-        size(col("t")).cast("double").as("n_tokens"),
-        (size(expr("filter(t, x -> x in ('the','and','of','to','in','is','a','an'))")).cast("double")
-          / size(col("t"))).as("stop_ratio"),
-        (col("nonspace") / size(col("t"))).as("mean_tok_len"),
-        (size(array_distinct(col("t"))).cast("double") / size(col("t"))).as("distinct_ratio"))
-      .withColumn("x_len", least(col("n_tokens") / 100.0, lit(1.0)))
-      .withColumn(
-        "z",
-        lit(-1.0) + col("x_len") * 2.0 + col("stop_ratio") * 1.5 +
-          (col("mean_tok_len") / 10.0) * 0.8 + col("distinct_ratio") * 1.2)
-      .withColumn("score", col("z") / (lit(1.0) + abs(col("z"))))
+  def qualityLogitScore(spark: SparkSession, sf: String): DataFrame =
+    qualityScored(qualityInput(spark, sf, col("source")), col("doc_id"), col("source"))
       .select(
         col("doc_id"), col("source"), col("score"),
         (col("score") >= 0.2).as("pass"))
@@ -357,6 +335,35 @@ object Curation {
       // sampler (r12 sweep) — see Det.sortBarrier
       .transform(Det.sortBarrier(col("doc_id")))
       .orderBy(col("doc_id"))
+
+  /** The quality model's input: `doc_id`, `keep`, `t` (the non-empty
+    * tokens) and `nonspace` (the count of non-space characters). */
+  private[queries] def qualityInput(spark: SparkSession, sf: String, keep: Column*): DataFrame =
+    Tables.documents(spark, sf).select(Seq(col("doc_id")) ++ keep ++ Seq(
+      filter(TextOps.tokensCol, t => t =!= "").as("t"),
+      length(regexp_replace(col("text"), " ", "")).cast("double").as("nonspace")): _*)
+
+  /** The quality model over [[qualityInput]]: `keep` plus the four
+    * features, the linear score `z` and its squash `score`. A document
+    * with no non-empty token has a NULL divisor, so its ratios and score
+    * are NULL, as in the twin. */
+  private[queries] def qualityScored(docs: DataFrame, keep: Column*): DataFrame = {
+    // not nullif: its rewrite plans a `_common_expr_<n>` projection whose
+    // name counts up per JVM, so the plan text would not repeat
+    val n = when(size(col("t")) > 0, size(col("t")))
+    docs
+      .select(keep ++ Seq(
+        size(col("t")).cast("double").as("n_tokens"),
+        (size(expr("filter(t, x -> x in ('the','and','of','to','in','is','a','an'))")).cast("double")
+          / n).as("stop_ratio"),
+        (col("nonspace") / n).as("mean_tok_len"),
+        (size(array_distinct(col("t"))).cast("double") / n).as("distinct_ratio")): _*)
+      .withColumn("x_len", least(col("n_tokens") / 100.0, lit(1.0)))
+      .withColumn(
+        "z",
+        lit(-1.0) + col("x_len") * 2.0 + col("stop_ratio") * 1.5 +
+          (col("mean_tok_len") / 10.0) * 0.8 + col("distinct_ratio") * 1.2)
+      .withColumn("score", col("z") / (lit(1.0) + abs(col("z"))))
   }
 
   val qualityLogitScoreSql: String =

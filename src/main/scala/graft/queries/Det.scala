@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Determinism helpers (SURVEY §7.4): the DuckDB oracle hash-matches output
@@ -21,6 +22,21 @@ object Det {
   /** Order-independent SUM of a money-grain double column, emitted as
     * double. Oracle twin: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE). */
   def sumMoney(c: Column): Column = sum(dec2(c)).cast("double")
+
+  /** `df` plus `rn`, each row's `row_number()` within its `partitionBy`
+    * group in `orderBy` order. Oracle twin: `row_number() OVER (PARTITION
+    * BY … ORDER BY …) AS rn`. */
+  def ranked(df: DataFrame, partitionBy: Column*)(orderBy: Column*): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)))
+
+  /** True on the first-ranked row of its group (`rn` = 1). */
+  val isFirst: Column = col("rn") === 1
+
+  /** The survivor rule: one row per `partitionBy` key, the first in
+    * `orderBy` order (`rn` stays on the frame). Oracle twin: the ranked
+    * subquery filtered `WHERE rn = 1`. */
+  def firstPer(df: DataFrame, partitionBy: Column*)(orderBy: Column*): DataFrame =
+    ranked(df, partitionBy: _*)(orderBy: _*).where(isFirst)
 
   /** Conf key: when "true", [[graft.Tables.table]] spreads every loaded
     * table across the session's cores (the rule is on

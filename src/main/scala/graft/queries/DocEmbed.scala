@@ -225,10 +225,7 @@ object DocEmbed {
       .select(col("a_id"), col("b_id"),
         (dot.cast("double") / (col("a_norm") * col("b_norm"))).as("cosine"))
       .where(col("cosine") >= CosineThreshold)
-    pairs
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("b_id")).orderBy(col("a_id"))))
-      .where(col("rn") === 1)
+    Det.firstPer(pairs, col("b_id"))(col("a_id"))
       .select(col("b_id").as("dup_id"), col("a_id").as("canonical_id"), col("cosine"))
       .orderBy(col("dup_id"))
   }

@@ -205,6 +205,15 @@ object Refinery {
       |)
       |ORDER BY doc_id""".stripMargin
 
+  /** The word histogram (w, wn): each non-empty token's count over
+    * `docs`. Oracle twin: the `wf` CTE. */
+  private def wordFreq(docs: DataFrame): DataFrame =
+    docs
+      .select(explode(tokensCol).as("w"))
+      .where(col("w") =!= "")
+      .groupBy(col("w"))
+      .agg(count(lit(1)).as("wn"))
+
   // ------------------------------------------------ BPE merge candidates
   /** One BPE-training iteration: frequency of every adjacent character
     * pair across the corpus, weighted by word frequency — the
@@ -219,12 +228,7 @@ object Refinery {
     * TakeOrderedAndProject.
     */
   def bpeMergePairs(spark: SparkSession, sf: String): DataFrame = {
-    val wf = Tables.documents(spark, sf)
-      .select(explode(tokensCol).as("w"))
-      .where(col("w") =!= "")
-      .groupBy(col("w"))
-      .agg(count(lit(1)).as("wn"))
-    wf.where(length(col("w")) >= 2)
+    wordFreq(Tables.documents(spark, sf)).where(length(col("w")) >= 2)
       .select(col("wn"), explode(expr(
         "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("pair"))
       .groupBy(col("pair"))
@@ -285,12 +289,7 @@ object Refinery {
     * sf0.001 and a hand-computed tiny-corpus trace.
     */
   def bpeLearnMerges(docs: DataFrame, k: Int): Seq[(String, String)] = {
-    val wf = docs
-      .select(explode(tokensCol).as("w"))
-      .where(col("w") =!= "")
-      .groupBy(col("w"))
-      .agg(count(lit(1)).as("wn"))
-    var state = wf
+    var state = wordFreq(docs)
       .select(col("wn"),
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("s"))
       .localCheckpoint()
@@ -342,18 +341,13 @@ object Refinery {
     * constant.
     */
   def bpeEncode(spark: SparkSession, sf: String): DataFrame = {
-    val wf = Tables.documents(spark, sf)
-      .select(explode(tokensCol).as("w"))
-      .where(col("w") =!= "")
-      .groupBy(col("w"))
-      .agg(count(lit(1)).as("wn"))
     // The rank sweep runs as ONE codegen expression, not k chained
     // mergePairFold projections: CollapseProject re-inlines chained
     // fold steps into a ~4^k-node expression (measured: plan text 7 KB
     // at k=1 → 1.0 MB at k=6 with 43 s execution; k=12 never returned —
     // BENCH_NOTES §22). RefinerySpec pins the
     // expression element-for-element to the fold form at collapsible k.
-    wf.select(col("wn"),
+    wordFreq(Tables.documents(spark, sf)).select(col("wn"),
       explode(graft.functions.BpeApply.bpe_apply(col("w"), BpeMerges)).as("symbol"))
       .groupBy(col("symbol"))
       .agg(sum(col("wn")).as("n"))
@@ -405,13 +399,8 @@ object Refinery {
     * array expression (distinct × count inside the row, O(doc_len²) on a
     * bounded document, zero shuffles), NOT a per-(doc, token) aggregation.
     */
-  def gopherQualityRules(spark: SparkSession, sf: String): DataFrame = {
-    val toks = filter(tokensCol, t => t =!= "")
-    Tables.documents(spark, sf)
-      .select(
-        col("doc_id"), col("source"),
-        toks.as("t"),
-        length(regexp_replace(col("text"), " ", "")).cast("double").as("nonspace"))
+  def gopherQualityRules(spark: SparkSession, sf: String): DataFrame =
+    Curation.qualityInput(spark, sf, col("source"))
       // ADVICE r7: a doc whose text is all spaces tokenizes to an empty
       // array; the /size(t) ratios would go NULL (consistently in both
       // engines, but NaN-divergent in the spec's local recompute). Such a
@@ -439,7 +428,6 @@ object Refinery {
       // Det.sortBarrier
       .transform(Det.sortBarrier(col("doc_id")))
       .orderBy(col("doc_id"))
-  }
 
   val gopherQualityRulesSql: String =
     """SELECT doc_id, source,
@@ -477,27 +465,9 @@ object Refinery {
     * 2^40 fixed-point domain so aggregation order cannot move a bit.
     */
   def qualityCalibration(spark: SparkSession, sf: String): DataFrame = {
-    val toks = filter(tokensCol, t => t =!= "")
-    val scored = Tables.documents(spark, sf)
-      .select(
-        col("doc_id"),
-        toks.as("t"),
-        length(regexp_replace(col("text"), " ", "")).cast("double").as("nonspace"))
-      // same empty-token-array guard as gopherQualityRules (ADVICE r7)
-      .where(size(col("t")) >= 1)
-      .select(
-        col("doc_id"),
-        size(col("t")).cast("double").as("n_tokens"),
-        (size(expr("filter(t, x -> x in ('the','and','of','to','in','is','a','an'))")).cast("double")
-          / size(col("t"))).as("stop_ratio"),
-        (col("nonspace") / size(col("t"))).as("mean_tok_len"),
-        (size(array_distinct(col("t"))).cast("double") / size(col("t"))).as("distinct_ratio"))
-      .withColumn("x_len", least(col("n_tokens") / 100.0, lit(1.0)))
-      .withColumn(
-        "z",
-        lit(-1.0) + col("x_len") * 2.0 + col("stop_ratio") * 1.5 +
-          (col("mean_tok_len") / 10.0) * 0.8 + col("distinct_ratio") * 1.2)
-      .withColumn("score", col("z") / (lit(1.0) + abs(col("z"))))
+    // same empty-token-array guard as gopherQualityRules (ADVICE r7)
+    val scored = Curation.qualityScored(
+      Curation.qualityInput(spark, sf).where(size(col("t")) >= 1), col("doc_id"))
     scored
       .select(
         floor(col("score") * 20.0).as("band"),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -110,12 +109,8 @@ object TextOps {
   /** [[dedupDocsExactSql]] over a caller-supplied documents frame
     * (text-keyed; the overlap report's shared-corpus seam). */
   private[graft] def dedupDocsExactFrom(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("content_md5", md5(col("text").cast("binary")))
-      .withColumn(
-        "rn",
-        row_number().over(Window.partitionBy(col("content_md5")).orderBy(col("doc_id"))))
-      .where(col("rn") === 1)
+    Det.firstPer(docs.withColumn("content_md5", md5(col("text").cast("binary"))),
+        col("content_md5"))(col("doc_id"))
       .select(col("doc_id"), col("content_md5"))
       .orderBy(col("doc_id"))
 
@@ -170,12 +165,7 @@ object TextOps {
       .withColumn(
         "score",
         (col("tf") * col("n_docs")).cast("double") / col("df").cast("double"))
-    scored
-      .withColumn(
-        "rn",
-        row_number().over(
-          Window.partitionBy(col("doc_id")).orderBy(col("score").desc, col("token").asc)))
-      .where(col("rn") === 1)
+    Det.firstPer(scored, col("doc_id"))(col("score").desc, col("token").asc)
       .select(col("doc_id"), col("token"), col("tf"), col("df"), col("score"))
       .orderBy(col("doc_id"))
   }
@@ -371,8 +361,7 @@ object TextOps {
       // `BETWEEN 0 AND 16`, not `<= 16`.
       .withColumn("dist", levenshtein(col("text_a"), col("text_b"), 16).cast("long"))
       .where(col("dist").between(0, 16))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("doc_b")).orderBy(col("doc_a"))))
-      .where(col("rn") === 1)
+      .transform(Det.firstPer(_, col("doc_b"))(col("doc_a")))
       .select(col("doc_b").as("dup_id"), col("doc_a").as("kept_by"), col("dist"))
       .orderBy(col("dup_id"))
   }
@@ -1012,10 +1001,7 @@ object TextOps {
       .join(grams.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared_grams"))
-    confirmed
-      .withColumn("rn",
-        row_number().over(Window.partitionBy(col("doc_b")).orderBy(col("doc_a"))))
-      .where(col("rn") === 1)
+    Det.firstPer(confirmed, col("doc_b"))(col("doc_a"))
       .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"), col("n_shared_grams"))
       .orderBy(col("doc_id"))
   }
@@ -1456,10 +1442,8 @@ object TextOps {
         regexp_replace(lower(col("text")), "\\b(the|a|an|of|and|to|in|is)\\b", ""))
       .withColumn("n_tokens", size(filter(split(col("clean_text"), " "), t => t =!= "")))
       .where(col("n_tokens") >= 10)
-    val deduped = cleaned
-      .withColumn("h", md5(col("clean_text").cast("binary")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("h")).orderBy(col("doc_id"))))
-      .where(col("rn") === 1)
+    val deduped = Det.firstPer(cleaned.withColumn("h", md5(col("clean_text").cast("binary"))),
+      col("h"))(col("doc_id"))
     deduped
       .groupBy(col("lang"), col("source"))
       .agg(

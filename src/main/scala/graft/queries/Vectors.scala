@@ -30,9 +30,28 @@ object Vectors {
     graft.functions.VecDot.vec_dot(a, b)
 
   /** The oracle twin of `dot` — identical fold order and bracketing. */
-  private def dotSql(a: String, b: String): String =
+  private[queries] def dotSql(a: String, b: String): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len($a) + 1), " +
       s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))), (acc, x) -> acc + x)"
+
+  /** The embedding's self-product ‖v‖², the `dot` fold of `embedding`
+    * with itself. */
+  private[queries] def normSq: Column = dot(col("embedding"), col("embedding"))
+
+  /** The embedding's L2 norm. Oracle twin: [[normCteSql]]. */
+  private def norm: Column = sqrt(normSq)
+
+  /** Cosine of a pair from its vectors and norms (`emb_a`, `emb_b`,
+    * `norm_a`, `norm_b`). Oracle twin: `dot / (a.norm * b.norm)`. */
+  private def cosine: Column = dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b"))
+
+  /** The oracle's `e` CTE: every embedding with its [[norm]]. */
+  private def normCteSql: String =
+    s"""e AS (
+       |  SELECT vec_id, embedding,
+       |    sqrt(${dotSql("embedding", "embedding")}) AS norm
+       |  FROM embeddings
+       |)""".stripMargin
 
   /** Input-size bound for the deliberate O(n²) all-pairs operators
     * (knn_brute_force / cosine_topk / dedup_embedding_cosine). They exist
@@ -116,9 +135,7 @@ object Vectors {
     // embeddingQuantize (ADVICE r8). Fixtures contain no zero vectors, so
     // current hashes are unchanged.
     val q8 = Tables.embeddings(spark, sf)
-      .withColumn(
-        "norm",
-        sqrt(expr("aggregate(embedding, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))
+      .withColumn("norm", norm)
       .select(
         col("vec_id"),
         expr("transform(embedding, x -> IF(norm = 0D, 0L, CAST(round(CAST(x AS DOUBLE) / norm * 127.0) AS BIGINT)))")
@@ -166,28 +183,24 @@ object Vectors {
     * same all-pairs join. cosine = dot / (norm_a · norm_b); sqrt is IEEE
     * correctly-rounded, division exact → deterministic.
     */
-  def cosineTopk(spark: SparkSession, sf: String): DataFrame = {
-    guardAllPairs(spark, Tables.embeddings(spark, sf).select(col("vec_id")), "cosine_topk")
-    val e = Tables
-      .embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding"), sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
+  def cosineTopk(spark: SparkSession, sf: String): DataFrame =
+    allPairsCosine(spark, sf, "cosine_topk")
+      .orderBy(col("cosine").desc, col("vec_a").asc, col("vec_b").asc)
+      .limit(20)
+
+  /** Every pair vec_a < vec_b of the embeddings with its cosine — the
+    * guarded O(n²) frame of [[cosineTopk]] and [[dedupEmbeddingCosine]]. */
+  private def allPairsCosine(spark: SparkSession, sf: String, op: String): DataFrame = {
+    guardAllPairs(spark, Tables.embeddings(spark, sf).select(col("vec_id")), op)
+    val e = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"), norm.as("norm"))
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("norm").as("norm_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"), col("norm").as("norm_b"))
     a.join(b, col("vec_a") < col("vec_b"))
-      .select(
-        col("vec_a"),
-        col("vec_b"),
-        (dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b"))).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_a").asc, col("vec_b").asc)
-      .limit(20)
+      .select(col("vec_a"), col("vec_b"), cosine.as("cosine"))
   }
 
   val cosineTopkSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(${dotSql("embedding", "embedding")}) AS norm
-       |  FROM embeddings
-       |)
+    s"""WITH $normCteSql
        |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        |  ${dotSql("a.embedding", "b.embedding")} / (a.norm * b.norm) AS cosine
        |FROM e a JOIN e b ON a.vec_id < b.vec_id
@@ -225,9 +238,7 @@ object Vectors {
     * audit, the corpus pass is the cost.
     */
   def contaminationSemantic(spark: SparkSession, sf: String): DataFrame = {
-    val e = Tables.embeddings(spark, sf).select(
-      col("vec_id"), col("embedding"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
+    val e = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"), norm.as("norm"))
     val bench = e.where(col("vec_id") % 50 === 0).select(
         col("vec_id").as("bench_id"), col("embedding").as("bemb"), col("norm").as("bnorm"))
       .orderBy(col("bench_id")).limit(256)
@@ -246,11 +257,7 @@ object Vectors {
   }
 
   val contaminationSemanticSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(${dotSql("embedding", "embedding")}) AS norm
-       |  FROM embeddings
-       |), b AS (
+    s"""WITH $normCteSql, b AS (
        |  SELECT vec_id AS bench_id, embedding AS bemb, norm AS bnorm
        |  FROM e WHERE vec_id % 50 = 0
        |  ORDER BY bench_id LIMIT 256
@@ -282,34 +289,14 @@ object Vectors {
     * candidates instead of the all-pairs join — same downstream operators,
     * swapped candidate generator.
     */
-  def dedupEmbeddingCosine(spark: SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    guardAllPairs(spark, Tables.embeddings(spark, sf).select(col("vec_id")), "dedup_embedding_cosine")
-    val e = Tables
-      .embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding"), sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
-    val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("norm").as("norm_a"))
-    val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"), col("norm").as("norm_b"))
-    a.join(b, col("vec_a") < col("vec_b"))
-      .select(
-        col("vec_a"),
-        col("vec_b"),
-        (dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b"))).as("cosine"))
-      .where(col("cosine") >= 0.4)
-      .withColumn(
-        "rn",
-        row_number().over(Window.partitionBy(col("vec_b")).orderBy(col("vec_a").asc)))
-      .where(col("rn") === 1)
+  def dedupEmbeddingCosine(spark: SparkSession, sf: String): DataFrame =
+    Det.firstPer(allPairsCosine(spark, sf, "dedup_embedding_cosine").where(col("cosine") >= 0.4),
+        col("vec_b"))(col("vec_a").asc)
       .select(col("vec_b").as("dup_id"), col("vec_a").as("canonical_id"), col("cosine"))
       .orderBy(col("dup_id"))
-  }
 
   val dedupEmbeddingCosineSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(${dotSql("embedding", "embedding")}) AS norm
-       |  FROM embeddings
-       |), pairs AS (
+    s"""WITH $normCteSql, pairs AS (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        |    ${dotSql("a.embedding", "b.embedding")} / (a.norm * b.norm) AS cosine
        |  FROM e a JOIN e b ON a.vec_id < b.vec_id
@@ -343,18 +330,10 @@ object Vectors {
     * distinct, keep-lowest-id canonical per duplicate.
     */
   private def lshDedupPost(scored: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    scored
-      .select(
-        col("vec_a"),
-        col("vec_b"),
-        (dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b"))).as("cosine"))
+    val pairs = scored.select(col("vec_a"), col("vec_b"), cosine.as("cosine"))
       .where(col("cosine") >= 0.4)
       .distinct()
-      .withColumn(
-        "rn",
-        row_number().over(Window.partitionBy(col("vec_b")).orderBy(col("vec_a").asc)))
-      .where(col("rn") === 1)
+    Det.firstPer(pairs, col("vec_b"))(col("vec_a").asc)
       .select(col("vec_b").as("dup_id"), col("vec_a").as("canonical_id"), col("cosine"))
       .orderBy(col("dup_id"))
   }
@@ -394,11 +373,7 @@ object Vectors {
        |), cand AS (
        |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
        |  FROM bt a JOIN bt b ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id < b.vec_id
-       |), e AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(${dotSql("embedding", "embedding")}) AS norm
-       |  FROM embeddings
-       |), pairs AS (
+       |), $normCteSql, pairs AS (
        |  SELECT cand.vec_a, cand.vec_b,
        |    ${dotSql("a.embedding", "b.embedding")} / (a.norm * b.norm) AS cosine
        |  FROM cand
@@ -414,11 +389,7 @@ object Vectors {
   val dedupEmbeddingLshSql: String =
     s"""WITH cand AS (
        |  $lshCandidateUnionSql
-       |), e AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(${dotSql("embedding", "embedding")}) AS norm
-       |  FROM embeddings
-       |), pairs AS (
+       |), $normCteSql, pairs AS (
        |  SELECT cand.vec_a, cand.vec_b,
        |    ${dotSql("a.embedding", "b.embedding")} / (a.norm * b.norm) AS cosine
        |  FROM cand
@@ -479,6 +450,17 @@ object Vectors {
   private def LshTargetOccupancy = 125.0
   private def lshNbSql: String =
     s"SELECT LEAST(65536, GREATEST(16, CAST(CEIL(COUNT(*) / $LshTargetOccupancy) AS INT))) AS nb FROM embeddings"
+  /** The bucket count nb, an aggregate over the embeddings (see above). */
+  private def lshNb: Column =
+    least(lit(65536), greatest(lit(16), ceil(count(lit(1)) / LshTargetOccupancy))).cast("long").as("nb")
+  /** Table t's 16-bit sign integer s over dims 16t+1 … 16t+16, the first
+    * dimension the high bit. */
+  private def lshSignInt(t: Int): Column = aggregate(
+    transform(
+      sequence(lit(16 * t + 1), lit(16 * t + 16)),
+      i => when(element_at(col("embedding"), i) > 0f, 1L).otherwise(0L)),
+    lit(0L),
+    (acc, b) => acc * 2 + b)
   private[queries] def lshCandidateUnionSql: String = {
     def bucketExpr(t: Int) =
       s"CAST(FLOOR(list_reduce(list_prepend(CAST(0 AS BIGINT), " +
@@ -505,24 +487,13 @@ object Vectors {
   private[graft] def lshBucketTableOf(e: DataFrame): DataFrame = {
     // 1-row aggregate, broadcast onto every row: the same adaptive-bits
     // formula the SQL twin computes (see lshNbSql).
-    val params = e.agg(
-      least(lit(65536), greatest(lit(16), ceil(count(lit(1)) / LshTargetOccupancy)))
-        .cast("long").as("nb"))
+    val params = e.agg(lshNb)
     // radix bin of the table's 16-bit sign integer — see the adjacent
     // lshCandidateUnionSql scaladoc for the scheme and its bounds
-    def bucketFor(t: Int) = floor(
-      aggregate(
-        transform(
-          sequence(lit(16 * t + 1), lit(16 * t + 16)),
-          i => when(element_at(col("embedding"), i) > 0f, 1L).otherwise(0L)),
-        lit(0L),
-        (acc, b) => acc * 2 + b) * col("nb") / lit(65536.0)).cast("long")
+    def bucketFor(t: Int) = floor(lshSignInt(t) * col("nb") / lit(65536.0)).cast("long")
     val buckets = array((0 until 4).map(t => struct(lit(t).as("t"), bucketFor(t).as("bkt"))): _*)
     e.crossJoin(broadcast(params))
-      .select(
-        col("vec_id"), col("embedding"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("norm"),
-        explode(buckets).as("b"))
+      .select(col("vec_id"), col("embedding"), norm.as("norm"), explode(buckets).as("b"))
       .select(col("vec_id"), col("embedding"), col("norm"), col("b.t").as("t"), col("b.bkt").as("bkt"))
   }
 
@@ -553,22 +524,10 @@ object Vectors {
     */
   private[graft] def lshBucketTableEqualMass(e: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val params = e.agg(
-      least(lit(65536), greatest(lit(16), ceil(count(lit(1)) / LshTargetOccupancy)))
-        .cast("long").as("nb"),
-      count(lit(1)).as("n"))
-    def signInt(t: Int) = aggregate(
-      transform(
-        sequence(lit(16 * t + 1), lit(16 * t + 16)),
-        i => when(element_at(col("embedding"), i) > 0f, 1L).otherwise(0L)),
-      lit(0L),
-      (acc, b) => acc * 2 + b)
-    val sints = array((0 until 4).map(t => struct(lit(t).as("t"), signInt(t).as("s"))): _*)
+    val params = e.agg(lshNb, count(lit(1)).as("n"))
+    val sints = array((0 until 4).map(t => struct(lit(t).as("t"), lshSignInt(t).as("s"))): _*)
     val vs = e
-      .select(
-        col("vec_id"), col("embedding"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("norm"),
-        explode(sints).as("b"))
+      .select(col("vec_id"), col("embedding"), norm.as("norm"), explode(sints).as("b"))
       .select(col("vec_id"), col("embedding"), col("norm"), col("b.t").as("t"), col("b.s").as("s"))
     // (t, s) histogram — ≤ 4·2¹⁶ rows by construction — then the running
     // mass BEFORE each s (4 bounded window partitions, one per table)
@@ -1010,7 +969,7 @@ object Vectors {
   private def probeAssigned(assigned2: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val inverted = assigned2
-      .where(col("rn") === 1)
+      .where(Det.isFirst)
       .select(col("cell"), col("vec_id"), col("embedding"))
     val probed = assigned2
       .where(col("rn") <= 2 && col("vec_id") < 10)
@@ -1231,8 +1190,7 @@ object Vectors {
     * [[dedupSemanticProbe]] (persisted index).
     */
   private def semanticFromAssigned(assigned2: DataFrame, shuffleHash: Boolean = false): DataFrame = {
-    val member = assigned2
-      .withColumn("norm", sqrt(dot(col("embedding"), col("embedding"))))
+    val member = assigned2.withColumn("norm", norm)
     val a = member.select(
       col("cell"), col("vec_id").as("vec_a"), col("embedding").as("emb_a"), col("norm").as("norm_a"))
     val b = member.select(
@@ -1261,7 +1219,7 @@ object Vectors {
     val bSide = if (shuffleHash && localHarness) b.hint("shuffle_hash") else b
     a.join(bSide, Seq("cell"))
       .where(col("vec_a") < col("vec_b"))
-      .where(dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")) >= 0.4)
+      .where(cosine >= 0.4)
       // a pair sharing both probe cells appears twice — countDistinct, not
       // count, and the grouping collapses the duplicates
       .groupBy(col("vec_b"))
@@ -1300,9 +1258,7 @@ object Vectors {
     */
   def embeddingQuantize(spark: SparkSession, sf: String): DataFrame =
     Tables.embeddings(spark, sf)
-      .withColumn(
-        "norm",
-        sqrt(expr("aggregate(embedding, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))
+      .withColumn("norm", norm)
       .select(
         col("vec_id"), col("norm"),
         // comma-joined string, not array<int>: the oracle-compare surface
@@ -1367,7 +1323,7 @@ object Vectors {
     */
   private def topicsFromAssignment(spark: SparkSession, sf: String, assigned2: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val inv = assigned2.where(col("rn") === 1).select(col("vec_id"), col("cell"))
+    val inv = assigned2.where(Det.isFirst).select(col("vec_id"), col("cell"))
     // The explicit isNotNull pair is a data-level no-op (cell is a routed
     // int, token survives `<> ''`) that mirrors the constraints the lift
     // joins below infer into ONLY the main stream's copy of this subtree —

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Structured Streaming operators (SURVEY §2.J). Every transform here takes
   * a DataFrame that may be batch OR streaming — the ScalaTest suite runs
@@ -463,38 +464,59 @@ object StreamOps {
       capacityPerShard: Long = 1 << 20,
       fpp: Double = 0.01): Dataset[Event] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.util.sketch.BloomFilter
+    // duplicate rows are dropped as they stream by, so peak memory is
+    // O(new keys in the batch), never O(batch rows)
+    bloomShards(events, shards, capacityPerShard, fpp) { (rows, bloom) =>
+      // deterministic emit order (the emitted set is tiny vs the batch)
+      firstNewPerKey(rows, bloom)(_ => ()).values.toArray.sortBy(_.event_id).iterator
+    }
+  }
+
+  /** The shard step of [[bloomDedup]] and [[bloomDedupTagged]]: events
+    * grouped into `shards` state groups by key hash; per group and
+    * micro-batch, the shard's filter is read from state (or created),
+    * `batch` consumes the rows, probing and updating the filter, and the
+    * filter is written back before `batch`'s output is returned. */
+  private def bloomShards[O: Encoder](
+      events: Dataset[(Long, Event)], shards: Int, capacityPerShard: Long, fpp: Double)(
+      batch: (Iterator[(Long, Event)], BloomFilter) => Iterator[O]): Dataset[O] = {
+    import events.sparkSession.implicits._
     events
       .groupByKey { case (key, _) => ((key % shards) + shards) % shards }
-      .flatMapGroupsWithState[Array[Byte], Event](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+      .flatMapGroupsWithState[Array[Byte], O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: Long, rows: Iterator[(Long, Event)], state: GroupState[Array[Byte]]) =>
           val bloom = state.getOption
             .map(b => BloomFilter.readFrom(b))
             .getOrElse(BloomFilter.create(capacityPerShard, fpp))
-          // SINGLE streaming pass (ADVICE r6: the earlier
-          // rows.toSeq.sortBy materialized + sorted the whole shard batch
-          // on one task's heap): the keep-lowest-event-id survivor
-          // convention only needs the MIN event per definitely-new key, so
-          // track that in a map keyed by the batch's NEW keys. Peak memory
-          // is O(new keys in batch), never O(batch rows) — duplicate rows
-          // are dropped as they stream by. (Residual assumption, now
-          // explicit: one shard's NEW-key set for one micro-batch fits an
-          // executor heap; size `shards` to the micro-batch, not the
-          // stream.)
-          val newMin = scala.collection.mutable.LongMap.empty[Event]
-          rows.foreach { case (key, e) =>
-            if (!bloom.mightContainLong(key)) {
-              val cur = newMin.getOrNull(key)
-              if (cur == null || e.event_id < cur.event_id) newMin.update(key, e)
-            }
-          }
-          newMin.foreachKey(bloom.putLong)
+          val out = batch(rows, bloom)
           val bos = new java.io.ByteArrayOutputStream()
           bloom.writeTo(bos)
           state.update(bos.toByteArray)
-          // deterministic emit order (the emitted set is tiny vs the batch)
-          newMin.values.toArray.sortBy(_.event_id).iterator
+          out
       }
+  }
+
+  /** One SINGLE streaming pass (ADVICE r6: an earlier form sorted the whole
+    * shard batch on one task's heap) over a shard's rows: the
+    * lowest-event-id row of each key `bloom` has not seen, with every other
+    * row handed to `dropped` as it streams by; the new keys are then added
+    * to `bloom`. (Residual assumption: one shard's NEW-key set for one
+    * micro-batch fits an executor heap; size `shards` to the micro-batch,
+    * not the stream.) */
+  private def firstNewPerKey(rows: Iterator[(Long, Event)], bloom: BloomFilter)(
+      dropped: Event => Unit): scala.collection.mutable.LongMap[Event] = {
+    val newMin = scala.collection.mutable.LongMap.empty[Event]
+    rows.foreach { case (key, e) =>
+      if (bloom.mightContainLong(key)) dropped(e)
+      else {
+        val cur = newMin.getOrNull(key)
+        if (cur == null) newMin.update(key, e)
+        else if (e.event_id < cur.event_id) { dropped(cur); newMin.update(key, e) }
+        else dropped(e)
+      }
+    }
+    newMin.foreachKey(bloom.putLong)
+    newMin
   }
 
   /** Two-tier EXACT streaming dedup (VERDICT r6 item 4): [[bloomDedup]]
@@ -530,31 +552,11 @@ object StreamOps {
       capacityPerShard: Long = 1 << 20,
       fpp: Double = 0.01): Dataset[(Event, Boolean)] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.util.sketch.BloomFilter
-    events
-      .groupByKey { case (key, _) => ((key % shards) + shards) % shards }
-      .flatMapGroupsWithState[Array[Byte], (Event, Boolean)](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[(Long, Event)], state: GroupState[Array[Byte]]) =>
-          val bloom = state.getOption
-            .map(b => BloomFilter.readFrom(b))
-            .getOrElse(BloomFilter.create(capacityPerShard, fpp))
-          val newMin = scala.collection.mutable.LongMap.empty[Event]
-          val candidates = scala.collection.mutable.ArrayBuffer.empty[Event]
-          rows.foreach { case (key, e) =>
-            if (bloom.mightContainLong(key)) candidates += e
-            else {
-              val cur = newMin.getOrNull(key)
-              if (cur == null) newMin.update(key, e)
-              else if (e.event_id < cur.event_id) { candidates += cur; newMin.update(key, e) }
-              else candidates += e
-            }
-          }
-          newMin.foreachKey(bloom.putLong)
-          val bos = new java.io.ByteArrayOutputStream()
-          bloom.writeTo(bos)
-          state.update(bos.toByteArray)
-          (newMin.values.map((_, true)) ++ candidates.map((_, false)))
-            .toArray.sortBy(_._1.event_id).iterator
-      }
+    bloomShards(events, shards, capacityPerShard, fpp) { (rows, bloom) =>
+      val candidates = scala.collection.mutable.ArrayBuffer.empty[Event]
+      val newMin = firstNewPerKey(rows, bloom)(candidates += _)
+      (newMin.values.map((_, true)) ++ candidates.map((_, false)))
+        .toArray.sortBy(_._1.event_id).iterator
+    }
   }
 }

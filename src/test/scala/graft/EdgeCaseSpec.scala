@@ -109,4 +109,20 @@ class EdgeCaseSpec extends AnyFunSuite {
       assert(Vectors.knnQuantized(spark, sf1).collect().isEmpty)
     }
   }
+
+  test("quality_logit_score: a document with no non-empty token scores NULL, as in its twin") {
+    withTempDir("graft_empty_docs") { sf =>
+      Seq((1L, "the cat sat on a mat"), (2L, ""), (3L, "   "))
+        .map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$sf/documents.parquet")
+      val rows = SparkEntry.queries("quality_logit_score")(spark, sf).collect()
+      assert(rows.map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
+      // 6 tokens, 2 stopwords, 15 non-space chars, all distinct:
+      // z = -1 + 0.12 + 0.5 + 0.2 + 1.2 = 1.02, score = z / (1 + z)
+      assert(math.abs(rows(0).getDouble(2) - 1.02 / 2.02) < 1e-12)
+      assert(rows(0).getBoolean(3))
+      rows.drop(1).foreach(r => assert(r.isNullAt(2) && r.isNullAt(3), r.toString))
+    }
+  }
 }

@@ -198,6 +198,29 @@ class RegistryLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"SQL run outside Tables.sql:\n${offenders.mkString("\n")}")
   }
 
+  test("one definition per shared formula: the survivor rule only in Det, no HOF norm fold in the queries") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    // (pattern, where it may appear, what to use instead)
+    val rules = Seq(
+      ("col\\(\"rn\"\\)\\s*===\\s*1\\b".r, (rel: String) => rel == "graft/queries/Det.scala",
+        "Det.firstPer / Det.isFirst"),
+      ("aggregate\\(\\s*embedding\\b".r, (rel: String) => !rel.startsWith("graft/queries/"),
+        "the VecDot norm, Vectors.normSq"))
+    def stripComments(s: String): String =
+      s.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
+    val offenders = for {
+      p <- Files.walk(root).iterator().asScala.toSeq
+      if p.toString.endsWith(".scala")
+      rel = root.relativize(p).toString
+      code = stripComments(Files.readString(p))
+      (pat, allowed, use) <- rules
+      if !allowed(rel) && pat.findFirstIn(code).isDefined
+    } yield s"$p: ${pat.regex} (use $use)"
+    assert(offenders.isEmpty, s"a shared formula typed out again:\n${offenders.mkString("\n")}")
+  }
+
   test("VecDot codegen expression is bit-identical to the HOF fold it replaced") {
     // regression guard for the custom Expression: the generated-code loop
     // must keep the exact left-fold semantics the oracle assumes

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -16,9 +15,14 @@ import SharedSpark._
 class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
+  /** The suite's scratch root, deleted when the suite ends. */
+  private var suiteDir: String = _
+  override def run(testName: Option[String], args: org.scalatest.Args): org.scalatest.Status =
+    withTempDir("graft-stream-src") { dir => suiteDir = dir; super.run(testName, args) }
+
   /** events sf0.001 with TimestampType ts, persisted once for file-source use. */
   private lazy val stagedDir: String = {
-    val dir = Files.createTempDirectory("graft-stream-src").toString
+    val dir = s"$suiteDir/events"
     StreamOps
       .withEventTime(Tables.events(spark, Sf0001))
       .coalesce(1)
@@ -138,32 +142,34 @@ class StreamingSpec extends AnyFunSuite {
 
   test("J5 dedup within watermark drops exact duplicate event_ids") {
     // duplicate every event: stream must emit each event_id exactly once
-    val dupDir = Files.createTempDirectory("graft-stream-dup").toString
-    batchEvents.union(batchEvents).coalesce(1).write.mode("overwrite").parquet(dupDir)
-    val src = spark.readStream.schema(batchEvents.schema).parquet(dupDir)
-    val got = runStream(StreamOps.dedupWithinWatermark(src), "append", "j5")
-    assert(got.count() === batchEvents.count())
-    assert(got.select("event_id").distinct().count() === got.count())
+    withTempDir("graft-stream-dup") { dupDir =>
+      batchEvents.union(batchEvents).coalesce(1).write.mode("overwrite").parquet(dupDir)
+      val src = spark.readStream.schema(batchEvents.schema).parquet(dupDir)
+      val got = runStream(StreamOps.dedupWithinWatermark(src), "append", "j5")
+      assert(got.count() === batchEvents.count())
+      assert(got.select("event_id").distinct().count() === got.count())
+    }
   }
 
   test("EP composed clean->dedup->profile: streaming (complete mode) == batch twin") {
     // duplicated source: the dedup stage must make the duplicates invisible
     // to the profile aggregation
-    val dupDir = Files.createTempDirectory("graft-stream-ep").toString
-    batchEvents.union(batchEvents).coalesce(1).write.mode("overwrite").parquet(dupDir)
-    val src = spark.readStream.schema(batchEvents.schema).parquet(dupDir)
-    val got = runStream(StreamOps.cleanDedupProfile(src), "complete", "ep")
-    val want = batchEvents
-      .where(col("event_type") =!= "error")
-      .dropDuplicates("event_id")
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-      .select(col("w.start").as("hour_start"), col("n_events"), col("total_value"))
-    assert(sortedRows(got) === sortedRows(want))
-    // the value aggregate is real data, not incidental zeros
-    assert(got.where(col("total_value") =!= 0.0).count() > 0)
+    withTempDir("graft-stream-ep") { dupDir =>
+      batchEvents.union(batchEvents).coalesce(1).write.mode("overwrite").parquet(dupDir)
+      val src = spark.readStream.schema(batchEvents.schema).parquet(dupDir)
+      val got = runStream(StreamOps.cleanDedupProfile(src), "complete", "ep")
+      val want = batchEvents
+        .where(col("event_type") =!= "error")
+        .dropDuplicates("event_id")
+        .groupBy(window(col("ts"), "1 hour").as("w"))
+        .agg(
+          count(lit(1)).as("n_events"),
+          sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
+        .select(col("w.start").as("hour_start"), col("n_events"), col("total_value"))
+      assert(sortedRows(got) === sortedRows(want))
+      // the value aggregate is real data, not incidental zeros
+      assert(got.where(col("total_value") =!= 0.0).count() > 0)
+    }
   }
 
   test("J6 stateful change detection: streaming == batch lag() twin") {
@@ -402,25 +408,26 @@ class StreamingSpec extends AnyFunSuite {
     // documents sf0.001 as a 3-file parquet dir; maxFilesPerTrigger=1
     // forces 3 micro-batches, so lines whose two documents land in
     // DIFFERENT batches exercise the cross-batch state path.
-    val docsDir = Files.createTempDirectory("graft-stream-lines").toString
-    val docs = Tables.documents(spark, Sf0001).select(col("doc_id"), col("text"))
-    docs.repartition(3).write.mode("overwrite").parquet(docsDir)
-    val staged = spark.read.parquet(docsDir)
-    val src = spark.readStream.schema(staged.schema)
-      .option("maxFilesPerTrigger", 1).parquet(docsDir)
-    val got = runStream(StreamOps.lineBoilerMaintain(src), "append", "lbm")
-    // independent batch formulation: lines with >= 2 distinct documents
-    val want = graft.queries.Refinery.docLines(staged)
-      .groupBy(col("line_text"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .where(col("df") >= 2)
-      .select(col("line_text"))
-    assert(want.count() > 0, "fixture must contain boilerplate lines")
-    assert(sortedRows(got) === sortedRows(want))
-    // exactly-once emission: no line appears twice across micro-batches
-    assert(got.count() === got.distinct().count())
-    // the same function doubles as its own batch twin
-    assert(sortedRows(StreamOps.lineBoilerMaintain(staged)) === sortedRows(want))
+    withTempDir("graft-stream-lines") { docsDir =>
+      val docs = Tables.documents(spark, Sf0001).select(col("doc_id"), col("text"))
+      docs.repartition(3).write.mode("overwrite").parquet(docsDir)
+      val staged = spark.read.parquet(docsDir)
+      val src = spark.readStream.schema(staged.schema)
+        .option("maxFilesPerTrigger", 1).parquet(docsDir)
+      val got = runStream(StreamOps.lineBoilerMaintain(src), "append", "lbm")
+      // independent batch formulation: lines with >= 2 distinct documents
+      val want = graft.queries.Refinery.docLines(staged)
+        .groupBy(col("line_text"))
+        .agg(countDistinct(col("doc_id")).as("df"))
+        .where(col("df") >= 2)
+        .select(col("line_text"))
+      assert(want.count() > 0, "fixture must contain boilerplate lines")
+      assert(sortedRows(got) === sortedRows(want))
+      // exactly-once emission: no line appears twice across micro-batches
+      assert(got.count() === got.distinct().count())
+      // the same function doubles as its own batch twin
+      assert(sortedRows(StreamOps.lineBoilerMaintain(staged)) === sortedRows(want))
+    }
   }
 
   test("L' streaming MinHash-LSH: candidate pairs == batch, across micro-batches") {
@@ -559,33 +566,34 @@ class StreamingSpec extends AnyFunSuite {
     // restored from the checkpointed state store, not rebuilt from the
     // (gone) earlier micro-batches. foreachBatch sink because the memory
     // sink does not participate in checkpoint recovery.
-    val ckdir = Files.createTempDirectory("graft-ckpt-mh").toString
-    val input = MemoryStream[(Long, String)](spark)
-    val sinkRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-    def startQ() = StreamOps
-      .minhashDedupStream(input.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckdir)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        sinkRows.synchronized { sinkRows ++= rows }
-        ()
-      }
-      .start()
-    val dupText = "alpha beta gamma delta epsilon zeta"
-    val q1 = startQ()
-    try {
-      input.addData(Seq((1L, dupText), (10L, "one two three four five six")))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    input.addData(Seq((2L, dupText)))
-    val q2 = startQ()
-    try q2.processAllAvailable() finally q2.stop()
-    val pairs = sinkRows.synchronized(sinkRows.toList)
-    assert(pairs.count { case (a, b, _) => a == 1L && b == 2L } === 4,
-      s"identical docs must collide in all 4 bands across the restart, got $pairs")
-    assert(!pairs.exists { case (a, b, _) => a == 10L || b == 10L },
-      "the unrelated doc must pair with nothing")
+    withTempDir("graft-ckpt-mh") { ckdir =>
+      val input = MemoryStream[(Long, String)](spark)
+      val sinkRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
+      def startQ() = StreamOps
+        .minhashDedupStream(input.toDF().toDF("doc_id", "text"))
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckdir)
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+          sinkRows.synchronized { sinkRows ++= rows }
+          ()
+        }
+        .start()
+      val dupText = "alpha beta gamma delta epsilon zeta"
+      val q1 = startQ()
+      try {
+        input.addData(Seq((1L, dupText), (10L, "one two three four five six")))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      input.addData(Seq((2L, dupText)))
+      val q2 = startQ()
+      try q2.processAllAvailable() finally q2.stop()
+      val pairs = sinkRows.synchronized(sinkRows.toList)
+      assert(pairs.count { case (a, b, _) => a == 1L && b == 2L } === 4,
+        s"identical docs must collide in all 4 bands across the restart, got $pairs")
+      assert(!pairs.exists { case (a, b, _) => a == 10L || b == 10L },
+        "the unrelated doc must pair with nothing")
+    }
   }
 
   test("streaming novelty screen: shingle state survives a checkpointed restart") {
@@ -593,34 +601,35 @@ class StreamingSpec extends AnyFunSuite {
     // still be judged seen when it reappears AFTER it — the per-shingle
     // boolean is restored from the checkpointed state store. foreachBatch
     // sink because the memory sink does not participate in recovery.
-    val ckdir = Files.createTempDirectory("graft-ckpt-nov").toString
-    val input = MemoryStream[(Long, String)](spark)
-    val sinkRows = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Boolean)]
-    def startQ() = StreamOps
-      .noveltyScreenStream(input.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckdir)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val rows = df.collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2)))
-        sinkRows.synchronized { sinkRows ++= rows }
-        ()
-      }
-      .start()
-    val q1 = startQ()
-    try {
-      input.addData(Seq((1L, "alpha beta gamma delta")))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    input.addData(Seq((2L, "alpha beta gamma epsilon")))
-    val q2 = startQ()
-    try q2.processAllAvailable() finally q2.stop()
-    val rows = sinkRows.synchronized(sinkRows.toList)
-    // doc 1: both its shingles unseen; doc 2: "alpha beta gamma" was
-    // introduced pre-restart so it must be judged SEEN post-restart,
-    // while "beta gamma epsilon" is genuinely new
-    assert(rows.toSet === Set(
-      (1L, "alpha beta gamma", true), (1L, "beta gamma delta", true),
-      (2L, "alpha beta gamma", false), (2L, "beta gamma epsilon", true)), rows.toString)
+    withTempDir("graft-ckpt-nov") { ckdir =>
+      val input = MemoryStream[(Long, String)](spark)
+      val sinkRows = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Boolean)]
+      def startQ() = StreamOps
+        .noveltyScreenStream(input.toDF().toDF("doc_id", "text"))
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckdir)
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val rows = df.collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2)))
+          sinkRows.synchronized { sinkRows ++= rows }
+          ()
+        }
+        .start()
+      val q1 = startQ()
+      try {
+        input.addData(Seq((1L, "alpha beta gamma delta")))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      input.addData(Seq((2L, "alpha beta gamma epsilon")))
+      val q2 = startQ()
+      try q2.processAllAvailable() finally q2.stop()
+      val rows = sinkRows.synchronized(sinkRows.toList)
+      // doc 1: both its shingles unseen; doc 2: "alpha beta gamma" was
+      // introduced pre-restart so it must be judged SEEN post-restart,
+      // while "beta gamma epsilon" is genuinely new
+      assert(rows.toSet === Set(
+        (1L, "alpha beta gamma", true), (1L, "beta gamma delta", true),
+        (2L, "alpha beta gamma", false), (2L, "beta gamma epsilon", true)), rows.toString)
+    }
   }
 
   test("L' streaming MinHash-LSH: bucket cap bounds a hot bucket's state and output") {

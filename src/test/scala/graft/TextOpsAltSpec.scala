@@ -110,38 +110,39 @@ class TextOpsAltSpec extends AnyFunSuite {
         Seq(
           (100L, s"$boiler shared tail tokens here differ only slightly alpha", "en", "web"),
           (101L, s"$boiler shared tail tokens here differ only slightly beta", "en", "web"))
-    val tmp = java.nio.file.Files.createTempDirectory("jaccard_cap").toString
-    docs.toDF("doc_id", "text", "lang", "source")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    withTempDir("jaccard_cap") { tmp =>
+      docs.toDF("doc_id", "text", "lang", "source")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
 
-    // candidate-pair arithmetic: the join emits df·(df−1)/2 rows per bigram
-    val bigrams = Tables.documents(spark, tmp)
-      .select(col("doc_id"), col("lang"), col("source"),
-        split(lower(col("text")), " ").as("t"))
-      .where(size(col("t")) >= 2)
-      .select(col("doc_id"), col("lang"), col("source"), explode(expr(
-        "transform(sequence(1, size(t) - 1), i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"))
-        .as("bg"))
-      .distinct()
-    val dfreq = bigrams.groupBy(col("lang"), col("source"), col("bg")).agg(count(lit(1)).as("df"))
-    val cap = TextOps.JaccardDfCap.toLong
-    val Seq(cappedPairs, uncappedPairs) = Seq(col("df") <= cap, lit(true)).map { cond =>
-      dfreq.where(cond)
-        .agg(sum(col("df") * (col("df") - 1) / 2).cast("long")).head().getLong(0)
+      // candidate-pair arithmetic: the join emits df·(df−1)/2 rows per bigram
+      val bigrams = Tables.documents(spark, tmp)
+        .select(col("doc_id"), col("lang"), col("source"),
+          split(lower(col("text")), " ").as("t"))
+        .where(size(col("t")) >= 2)
+        .select(col("doc_id"), col("lang"), col("source"), explode(expr(
+          "transform(sequence(1, size(t) - 1), i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"))
+          .as("bg"))
+        .distinct()
+      val dfreq = bigrams.groupBy(col("lang"), col("source"), col("bg")).agg(count(lit(1)).as("df"))
+      val cap = TextOps.JaccardDfCap.toLong
+      val Seq(cappedPairs, uncappedPairs) = Seq(col("df") <= cap, lit(true)).map { cond =>
+        dfreq.where(cond)
+          .agg(sum(col("df") * (col("df") - 1) / 2).cast("long")).head().getLong(0)
+      }
+      // 9 boilerplate bigrams × 62·61/2 pairs each dominate the uncapped
+      // stream; the cap removes exactly that quadratic bucket
+      assert(uncappedPairs > 15000, s"synthetic corpus not hot enough: $uncappedPairs")
+      assert(cappedPairs * 100 < uncappedPairs,
+        s"cap should cut the pair stream ≥100×: capped=$cappedPairs uncapped=$uncappedPairs")
+
+      // ...and the operator still finds exactly the planted pair, with the
+      // EXACT jaccard — capped bigrams still count in the intersection
+      val out = TextOps.dedupNgramJaccard(spark, tmp).collect()
+      assert(out.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((100L, 101L)))
+      val jac = out.head.getDouble(3)
+      // 17 bigrams each (9 boiler + 8 tail), 16 shared → 16/18
+      assert(math.abs(jac - 16.0 / 18.0) < 1e-12, s"jaccard=$jac")
     }
-    // 9 boilerplate bigrams × 62·61/2 pairs each dominate the uncapped
-    // stream; the cap removes exactly that quadratic bucket
-    assert(uncappedPairs > 15000, s"synthetic corpus not hot enough: $uncappedPairs")
-    assert(cappedPairs * 100 < uncappedPairs,
-      s"cap should cut the pair stream ≥100×: capped=$cappedPairs uncapped=$uncappedPairs")
-
-    // ...and the operator still finds exactly the planted pair, with the
-    // EXACT jaccard — capped bigrams still count in the intersection
-    val out = TextOps.dedupNgramJaccard(spark, tmp).collect()
-    assert(out.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((100L, 101L)))
-    val jac = out.head.getDouble(3)
-    // 17 bigrams each (9 boiler + 8 tail), 16 shared → 16/18
-    assert(math.abs(jac - 16.0 / 18.0) < 1e-12, s"jaccard=$jac")
   }
 
   test("large-star/small-star CC: logarithmic rounds on deep-diameter graphs, 0 rounds on a star forest, raises at maxRounds") {
