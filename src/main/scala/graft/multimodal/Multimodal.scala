@@ -369,15 +369,7 @@ object Multimodal {
     extractMeta(spark, syntheticMedia(spark, sf))
       .select(col("doc_id"), col("media_type"), col("width"), col("height"),
         col("sample_rate"), col("channels"), col("n_samples"))
-      // Barrier on the SKINNY metadata (7 scalar columns, one row per
-      // media item) before the total sort: a global ORDER BY range-samples
-      // its child to pick partition bounds, and without a barrier that
-      // sampling pass re-ran the entire encode+decode pipeline — stage
-      // attribution at sf1 showed two ~8 s codec stages for one query
-      // (docs/BENCH_NOTES.md round-8 §5). The payloads never flow into
-      // the sort. See Det.sortBarrier.
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
 
   val multimodalMetaSql: String =
     """SELECT doc_id,
@@ -405,10 +397,7 @@ object Multimodal {
         col("height"),
         expr("CAST(width AS BIGINT) * 256 div greatest(width, height)").as("out_w"),
         expr("CAST(height AS BIGINT) * 256 div greatest(width, height)").as("out_h"))
-      // same skinny-metadata barrier as multimodalMeta: the sort's
-      // range-sampling pass must not re-run the PNG encode
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
 
   val multimodalResizeSql: String =
     """SELECT doc_id, width, height,
@@ -437,10 +426,7 @@ object Multimodal {
         col("duration_s"),
         explode(expr("sequence(0, duration_s * 4 - 1, 8)")).as("frame_no"))
       .withColumn("t_offset_s", col("frame_no").cast("double") / 4.0)
-      // same skinny barrier: the sort sampling must not re-run the WAV
-      // encode (the frame rows carry 4 scalar columns)
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"), col("frame_no"))
+      .transform(Det.sortedBy(col("doc_id"), col("frame_no")))
 
   val multimodalFrameSampleSql: String =
     """SELECT doc_id, duration_s, unnest(range(0, duration_s * 4, 8)) AS frame_no,
@@ -479,8 +465,7 @@ object Multimodal {
       }
       .toDF("doc_id", "n_values", "peak_abs", "sum_sq")
       .withColumn("rms", sqrt(col("sum_sq").cast("double") / col("n_values")))
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
   }
 
   /** The synthetic sample formula (pcmSamples): value i of doc d is
@@ -598,10 +583,7 @@ object Multimodal {
       .foldLeft(hashes) { (df, b) =>
         df.withColumn(s"band$b", shiftright(col("ahash"), 16 * b).bitwiseAND(lit(0xffffL)))
       }
-      // the PNG decode + aHash pass must not run twice for the sort
-      // sampler (r12 sweep: 0.8 s sampler CPU) — see Det.sortBarrier
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
   }
 
   /** Near-dup candidate pairs by hamming-LSH over the aHash: 4 disjoint

@@ -24,6 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the winner's complete directory and discards its own staging copy.
   *     No reader ever sees a half-written index, and a failed build
   *     leaves no staging copy behind.
+  * A commit deletes the family's directories for the same scale-factor
+  * tag and another fingerprint: they index source data that is gone.
   */
 object IndexStore {
 
@@ -72,7 +74,8 @@ object IndexStore {
   /** Build-if-absent: if `dir/marker` exists the index is complete and is
     * returned as-is (the dir name embeds the source fingerprint, so an
     * existing index IS the one this build would produce); otherwise
-    * `write` populates a staging dir which is then atomically committed.
+    * `write` populates a staging dir which is then atomically committed,
+    * and the indexes `dir` supersedes are deleted ([[deleteSuperseded]]).
     * A `write` that throws has its staging dir deleted, then the error
     * propagates.
     */
@@ -83,7 +86,23 @@ object IndexStore {
     try write(staging.toString)
     catch { case e: Throwable => deleteTree(staging); throw e }
     commitAtomically(staging, dir, marker)
+    deleteSuperseded(java.nio.file.Paths.get(dir))
     dir
+  }
+
+  /** Deletes the siblings of a committed `<sftag>_<fp>` index directory
+    * that are named `<sftag>_<other fp>`: the same family and scale factor,
+    * built from source data that no longer exists. Other tags, staging
+    * dirs (`….tmp.<pid>`) and a `dir` not named `<sftag>_<fp>` are left
+    * alone. */
+  private def deleteSuperseded(dir: java.nio.file.Path): Unit = {
+    val name = dir.getFileName.toString
+    val prefix = name.take(name.lastIndexOf('_') + 1)
+    val siblings = Option(dir.getParent.toFile.listFiles()).toSeq.flatten
+    if (prefix.nonEmpty)
+      siblings.map(_.getName)
+        .filter(n => n != name && n.startsWith(prefix) && n.drop(prefix.length).matches("[0-9a-f]+"))
+        .foreach(n => deleteTree(dir.resolveSibling(n)))
   }
 
   /** Atomic-rename `staging` into place as `dir`. Linux rename(2) onto an

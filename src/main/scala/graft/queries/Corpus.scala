@@ -42,10 +42,7 @@ object Corpus {
             "array_join(slice(t, (i - 1) * 24 + 1, 32), ' ') AS chunk_text))"))
           .as("c"))
       .select(col("doc_id"), col("c.chunk_id"), col("c.n_chunk_tokens"), col("c.chunk_text"))
-      // the chunk-struct transform + Generate must not run twice for the
-      // sort sampler (r12 sweep) — see Det.sortBarrier
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"), col("chunk_id"))
+      .transform(Det.sortedBy(col("doc_id"), col("chunk_id")))
 
   val docChunkingSql: String =
     """SELECT doc_id, c.chunk_id AS chunk_id, c.n_chunk_tokens AS n_chunk_tokens,
@@ -83,9 +80,7 @@ object Corpus {
     val bigrams = Tables.documents(spark, sf)
       .select(col("doc_id"), tokensCol.as("t"))
       .where(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(t) - 1), i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"))
-        .as("bg"))
+      .select(col("doc_id"), explode(expr(TextOps.wordNgramsSql(2))).as("bg"))
     bigrams
       .groupBy(col("doc_id"), col("bg"))
       .agg(count(lit(1)).as("n"))
@@ -201,13 +196,10 @@ object Corpus {
     * shuffles); this shape is 1 scan, window + final agg.
     */
   def corpusYieldReport(spark: SparkSession, sf: String): DataFrame = {
-    val stop = Seq("the", "and", "of", "to", "in", "is", "a", "an")
-    val flagged = Tables.documents(spark, sf)
-      .withColumn("toks", filter(tokensCol, t => t =!= ""))
-      .withColumn("n_tokens", size(col("toks")).cast("long"))
+    val flagged = TextOps.withWordCount(Tables.documents(spark, sf))
       .withColumn(
         "n_stop",
-        size(filter(col("toks"), t => t.isin(stop: _*))).cast("long"))
+        size(filter(col("toks"), t => t.isin(TextOps.Stopwords: _*))).cast("long"))
       .withColumn(
         "pass_quality",
         col("n_tokens") >= 10 && col("n_stop") * 2 <= col("n_tokens"))
@@ -224,13 +216,13 @@ object Corpus {
   }
 
   val corpusYieldReportSql: String =
-    """WITH flagged AS (
+    s"""WITH flagged AS (
       |  SELECT doc_id, lang, source, text, n_tokens, n_stop,
       |    (n_tokens >= 10 AND n_stop * 2 <= n_tokens) AS pass_quality
       |  FROM (
       |    SELECT doc_id, lang, source, text,
       |      CAST(len(toks) AS BIGINT) AS n_tokens,
-      |      CAST(len(list_filter(toks, t -> t IN ('the','and','of','to','in','is','a','an'))) AS BIGINT) AS n_stop
+      |      CAST(len(list_filter(toks, t -> t IN ${TextOps.StopwordsSql})) AS BIGINT) AS n_stop
       |    FROM (SELECT doc_id, lang, source, text,
       |            list_filter(string_split(lower(text), ' '), t -> t <> '') AS toks
       |          FROM documents))

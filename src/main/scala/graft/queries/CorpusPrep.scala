@@ -24,13 +24,6 @@ import graft.Tables
   */
 object CorpusPrep {
 
-  /** Non-empty tokens + their count, the shape most operators here start
-    * from. Consistent with Corpus.corpusYieldReport's filtered counting.
-    */
-  private def withTokenCount(df: DataFrame): DataFrame =
-    df.withColumn("toks", filter(TextOps.tokensCol, t => t =!= ""))
-      .withColumn("n_tokens", size(col("toks")).cast("long"))
-
   // ----------------------------------------------------- sequence packing
   /** Concat-and-chunk sequence packing (the GPT-style training-shard
     * layout): per language, documents concatenate in doc_id order and the
@@ -51,7 +44,7 @@ object CorpusPrep {
     * scan/prefix-sum decomposition.
     */
   def packSequences(spark: SparkSession, sf: String): DataFrame = {
-    val d = withTokenCount(Tables.documents(spark, sf))
+    val d = TextOps.withWordCount(Tables.documents(spark, sf))
       .select(col("doc_id"), col("lang"), col("n_tokens"))
       .withColumn("bkt", expr("doc_id div 1024"))
     // phase 1: bucket totals -> exclusive prefix per (lang, bucket). The
@@ -221,7 +214,7 @@ object CorpusPrep {
     val wAll = Window.partitionBy()
     val wCum = Window.orderBy(col("tokens").desc, col("source"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withTokenCount(Tables.documents(spark, sf))
+    TextOps.withWordCount(Tables.documents(spark, sf))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tokens"))
       .withColumn(
@@ -257,7 +250,7 @@ object CorpusPrep {
     */
   def vocabCoverage(spark: SparkSession, sf: String): DataFrame = {
     val tok = Tables.documents(spark, sf)
-      .select(col("doc_id"), explode(filter(TextOps.tokensCol, t => t =!= "")).as("token"))
+      .select(col("doc_id"), explode(TextOps.wordsCol).as("token"))
     // Top-100 via orderBy().limit(): Spark plans TakeOrderedAndProject —
     // each partition keeps its local top 100 and only those reach the
     // driver-side merge. The round-4 form (row_number over a global window)
@@ -310,7 +303,7 @@ object CorpusPrep {
     * rounding before the filter keeps the two engines' kept-sets equal).
     */
   def lengthQuantileFilter(spark: SparkSession, sf: String): DataFrame = {
-    val d = withTokenCount(Tables.documents(spark, sf))
+    val d = TextOps.withWordCount(Tables.documents(spark, sf))
       .select(col("doc_id"), col("lang"), col("n_tokens"))
     val bounds = d.groupBy(col("lang"))
       .agg(
@@ -352,7 +345,7 @@ object CorpusPrep {
     */
   def shardAssignment(spark: SparkSession, sf: String): DataFrame = {
     val wAll = Window.partitionBy()
-    withTokenCount(Tables.documents(spark, sf))
+    TextOps.withWordCount(Tables.documents(spark, sf))
       .withColumn(
         "shard",
         substring(md5(concat(col("doc_id").cast("string"), lit("#shard:3")).cast("binary")), 1, 1))
@@ -427,8 +420,7 @@ object CorpusPrep {
     * exact confirm ≡ exact join), so plain SQL expresses the semantics.
     */
   def dedupBloomPrefilter(spark: SparkSession, sf: String): DataFrame = {
-    val pfx = array_join(
-      slice(filter(TextOps.tokensCol, t => t =!= lit("")), 1, 10), " ")
+    val pfx = array_join(slice(TextOps.wordsCol, 1, 10), " ")
     val docs = Tables.documents(spark, sf).select(
       col("doc_id"), col("source"), pfx.as("pfx"))
     val ref = docs.where(col("doc_id") % 10 === 0).select(col("pfx")).distinct()
@@ -488,7 +480,7 @@ object CorpusPrep {
     * max-doc-length/width, never by corpus size.
     */
   def tokenHistogram(spark: SparkSession, sf: String): DataFrame =
-    withTokenCount(Tables.documents(spark, sf))
+    TextOps.withWordCount(Tables.documents(spark, sf))
       .withColumn("bin_lo", expr("(n_tokens div 10) * 10"))
       .groupBy(col("bin_lo"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tokens"))

@@ -23,7 +23,7 @@ import graft.Tables
 object Curation {
 
   private def tokCount: org.apache.spark.sql.Column =
-    size(filter(TextOps.tokensCol, t => t =!= "")).cast("long")
+    size(TextOps.wordsCol).cast("long")
 
   // ----------------------------------------------------- dedup keep-best
   /** Exact dedup with a QUALITY survivor policy: within each content-hash
@@ -53,7 +53,7 @@ object Curation {
     */
   def tokenDiversity(spark: SparkSession, sf: String): DataFrame =
     Tables.documents(spark, sf)
-      .select(col("doc_id"), explode(filter(TextOps.tokensCol, t => t =!= "")).as("token"))
+      .select(col("doc_id"), explode(TextOps.wordsCol).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
@@ -96,7 +96,7 @@ object Curation {
     */
   def sourceSimilarity(spark: SparkSession, sf: String): DataFrame = {
     val st = Tables.documents(spark, sf)
-      .select(col("source"), explode(filter(TextOps.tokensCol, t => t =!= "")).as("token"))
+      .select(col("source"), explode(TextOps.wordsCol).as("token"))
       .distinct()
     val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("n_tok"))
     val inter = st.as("a")
@@ -331,16 +331,13 @@ object Curation {
       .select(
         col("doc_id"), col("source"), col("score"),
         (col("score") >= 0.2).as("pass"))
-      // the tokenize + HOF feature pass must not run twice for the sort
-      // sampler (r12 sweep) — see Det.sortBarrier
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
 
   /** The quality model's input: `doc_id`, `keep`, `t` (the non-empty
     * tokens) and `nonspace` (the count of non-space characters). */
   private[queries] def qualityInput(spark: SparkSession, sf: String, keep: Column*): DataFrame =
     Tables.documents(spark, sf).select(Seq(col("doc_id")) ++ keep ++ Seq(
-      filter(TextOps.tokensCol, t => t =!= "").as("t"),
+      TextOps.wordsCol.as("t"),
       length(regexp_replace(col("text"), " ", "")).cast("double").as("nonspace")): _*)
 
   /** The quality model over [[qualityInput]]: `keep` plus the four
@@ -354,7 +351,7 @@ object Curation {
     docs
       .select(keep ++ Seq(
         size(col("t")).cast("double").as("n_tokens"),
-        (size(expr("filter(t, x -> x in ('the','and','of','to','in','is','a','an'))")).cast("double")
+        (size(expr(s"filter(t, x -> x in ${TextOps.StopwordsSql})")).cast("double")
           / n).as("stop_ratio"),
         (col("nonspace") / n).as("mean_tok_len"),
         (size(array_distinct(col("t"))).cast("double") / n).as("distinct_ratio")): _*)
@@ -367,7 +364,7 @@ object Curation {
   }
 
   val qualityLogitScoreSql: String =
-    """SELECT doc_id, source, score, score >= 0.2 AS pass FROM (
+    s"""SELECT doc_id, source, score, score >= 0.2 AS pass FROM (
       |  SELECT doc_id, source, z / (1.0 + abs(z)) AS score FROM (
       |    SELECT doc_id, source,
       |      -1.0 + least(n_tokens / 100.0, 1.0) * 2.0 + stop_ratio * 1.5
@@ -375,7 +372,7 @@ object Curation {
       |    FROM (
       |      SELECT doc_id, source,
       |        CAST(len(t) AS DOUBLE) AS n_tokens,
-      |        CAST(len(list_filter(t, x -> x IN ('the','and','of','to','in','is','a','an'))) AS DOUBLE) / len(t) AS stop_ratio,
+      |        CAST(len(list_filter(t, x -> x IN ${TextOps.StopwordsSql})) AS DOUBLE) / len(t) AS stop_ratio,
       |        CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(t) AS mean_tok_len,
       |        CAST(len(list_distinct(t)) AS DOUBLE) / len(t) AS distinct_ratio
       |      FROM (

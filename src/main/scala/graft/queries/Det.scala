@@ -4,15 +4,20 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Determinism helpers (SURVEY §7.4): the DuckDB oracle hash-matches output
-  * bit-for-bit, so float aggregates must be reduction-order-independent.
-  *
-  * Strategy: round inputs into exact decimals, aggregate in decimal (exact,
-  * associative → identical regardless of partition/merge order on any
-  * cluster size), then cast the final value to double. Both engines perform
-  * the identical exact-decimal computation, so results match at 100 TB just
-  * as they do at sf0.01. This is also codegen-friendly: Spark's decimal
-  * sum stays inside whole-stage codegen.
+/** Determinism rules (SURVEY §7.4): the DuckDB oracle hash-matches output
+  * bit-for-bit, so no result may depend on reduction order, partitioning
+  * or sampling. The rules, each defined once here:
+  *   - Money sums run in exact decimal ([[dec2]], [[sumMoney]]): decimal
+  *     addition is associative, so every partition/merge order gives the
+  *     same value, and Spark's decimal sum stays inside whole-stage codegen.
+  *   - Score sums run in the 2^40 fixed-point domain ([[Fx]], [[toFx]],
+  *     [[fromFx]]): each double term is floored to an integer first, the
+  *     integer sum is exact in any order, and one final division returns
+  *     to double.
+  *   - A survivor is the first row per key in a total order ([[ranked]],
+  *     [[isFirst]], [[firstPer]]), never `dropDuplicates`.
+  *   - A heavy projection reaches its contract sort through a keyed
+  *     exchange ([[sortedBy]]).
   */
 object Det {
   /** Cast to an exact 2-decimal value (money-grain inputs in the test data
@@ -45,8 +50,21 @@ object Det {
     */
   val SpreadConf = "spark.graft.spreadSmallScans"
 
-  /** Keyed exchange barrier between a heavy per-row projection and its
-    * contract ORDER BY (use via `.transform(Det.sortBarrier(col(...)))`).
+  /** 2^40, the fixed-point scale of every exact score sum. Score terms
+    * are O(10), so 8 terms × 10 × 2^40 ≈ 2^46.3 — far inside int64.
+    * [[FxSql]] is its oracle spelling. */
+  val Fx = 1099511627776.0
+  val FxSql = "1099511627776.0"
+
+  /** A double term in the fixed-point domain: `floor(x * Fx)`. Oracle twin:
+    * `CAST(FLOOR(x * 1099511627776.0) AS BIGINT)`. */
+  def toFx(x: Column): Column = floor(x * lit(Fx))
+
+  /** A fixed-point sum back as double: `CAST(s AS DOUBLE) / Fx`. */
+  def fromFx(s: Column): Column = s.cast("double") / lit(Fx)
+
+  /** `df` sorted by `keys` (the contract ORDER BY), behind a keyed exchange
+    * on the first key.
     *
     * orderBy plans a range exchange whose partition bounds SAMPLING
     * re-executes the child plan; when the child is an expensive
@@ -65,5 +83,6 @@ object Det {
     * defensive sortBeforeRepartition and sizes with
     * spark.sql.shuffle.partitions instead of a literal.
     */
-  def sortBarrier(key: Column)(df: DataFrame): DataFrame = df.repartition(key)
+  def sortedBy(keys: Column*)(df: DataFrame): DataFrame =
+    df.repartition(keys.head).orderBy(keys: _*)
 }

@@ -76,9 +76,7 @@ object DocEmbed {
     TextOps.ensureTokens(docs)
       .select(col("doc_id"), col("t"))
       .where(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(t) - 1), i -> md5(cast(concat(element_at(t, i), ' ', element_at(t, i + 1)) as binary)))"))
-        .as("h"))
+      .select(col("doc_id"), explode(expr(TextOps.wordNgramsSql(2, hashed = true))).as("h"))
       .select(col("doc_id"), col("h"),
         when(substring(col("h"), 2, 1).isin("8", "9", "a", "b", "c", "d", "e", "f"), 1L)
           .otherwise(-1L).as("s"))
@@ -199,7 +197,7 @@ object DocEmbed {
     val shared = vecs.where(col("doc_id").isNotNull)
     // count(when(norm ≥ 0 AND size(v) ≥ 0, doc_id)), not count(1): the
     // §42(b) pruning defense, round-15 form (the bm25/tfidf/kl rationale
-    // in Retrieval.bm25Topk's dfreq). Catalyst prunes unreferenced
+    // in TextOps.docFreq). Catalyst prunes unreferenced
     // aggregate expressions, and a bare count narrows this branch's copy
     // of the featurizer to {bkt}, splitting the plan back into two
     // featurizer subtrees. The when() keeps all three payload columns

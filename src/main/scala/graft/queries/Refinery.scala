@@ -42,10 +42,6 @@ object Refinery {
   /** The family-wide tokenizer — shared with TextOps (see its scaladoc). */
   private def tokensCol = TextOps.tokensCol
 
-  /** 2^40 fixed-point scale shared with Retrieval (see its scaladoc). */
-  private val Fx = 1099511627776.0
-  private val FxSql = "1099511627776.0"
-
   // ------------------------------------------------ line-level dedup
   /** Line-level boilerplate removal with document rebuild: segment each
     * document into consecutive 8-token "lines", drop every line whose
@@ -154,23 +150,14 @@ object Refinery {
     * there is NO explode and NO shuffle before the contract sort. Cost is
     * linear in corpus tokens; memory is bounded by document length.
     *
-    * The keyed repartition before the contract sort is a SAMPLER
-    * BARRIER (r11): with the projection feeding orderBy directly, the
-    * range exchange's bounds sampler re-executes the whole md5 + window-
-    * minima pipeline a second time (sf1, BENCH_NOTES §26: two 0.86 s stages,
-    * 24 s CPU each, identical 50k-row reads). The barrier shuffles only
-    * the five small RESULT columns, so the sampler re-reads a shuffle
-    * file instead. A/B at sf1: 2.10 → 1.25 s wall, and the
-    * doubled 24 core-s projection stage collapses to one.
+    * The contract sort goes through [[Det.sortedBy]] (BENCH_NOTES §26:
+    * 2.10 → 1.25 s wall at sf1).
     */
   def winnowFingerprints(spark: SparkSession, sf: String): DataFrame =
     Tables.documents(spark, sf)
       .select(col("doc_id"), tokensCol.as("t"))
       .where(size(col("t")) >= 6)
-      .select(col("doc_id"), expr(
-        "transform(sequence(1, size(t) - 2), " +
-          "i -> md5(cast(concat(element_at(t, i), ' ', element_at(t, i + 1), ' ', element_at(t, i + 2)) as binary)))")
-        .as("hs"))
+      .select(col("doc_id"), expr(TextOps.wordNgramsSql(3, hashed = true)).as("hs"))
       .select(col("doc_id"), col("hs"), expr(
         "array_distinct(transform(sequence(1, size(hs) - 3), j -> array_min(slice(hs, j, 4))))")
         .as("sel"))
@@ -181,11 +168,7 @@ object Refinery {
         array_min(col("sel")).as("fp_min"),
         (size(col("sel")).cast("double") / (size(col("hs")) - lit(3)).cast("double"))
           .as("density"))
-      // keyed, not round-robin: hashpartitioning skips RoundRobin's
-      // defensive sortBeforeRepartition and scales with
-      // spark.sql.shuffle.partitions instead of a literal
-      .repartition(col("doc_id"))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
 
   val winnowFingerprintsSql: String =
     """SELECT doc_id,
@@ -411,7 +394,7 @@ object Refinery {
         col("doc_id"), col("source"),
         size(col("t")).cast("long").as("n_tokens"),
         (col("nonspace") / size(col("t"))).as("mean_tok_len"),
-        expr("size(array_distinct(filter(t, x -> x in ('the','and','of','to','in','is','a','an'))))")
+        expr(s"size(array_distinct(filter(t, x -> x in ${TextOps.StopwordsSql})))")
           .cast("long").as("n_stop"),
         (expr("array_max(transform(array_distinct(t), u -> size(filter(t, x -> x = u))))")
           .cast("double") / size(col("t"))).as("top_share"))
@@ -423,14 +406,10 @@ object Refinery {
         (col("top_share") <= 0.125).as("r_rep"))
       .withColumn("pass",
         col("r_len") && col("r_mean_len") && col("r_stop") && col("r_rep"))
-      // the O(len²) top_share array expression must not run twice for the
-      // sort sampler (r12 sweep: 1.15 s sampler CPU vs 3.7 s real) — see
-      // Det.sortBarrier
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
 
   val gopherQualityRulesSql: String =
-    """SELECT doc_id, source,
+    s"""SELECT doc_id, source,
       |  n_tokens >= 25 AS r_len,
       |  mean_tok_len >= 4.0 AND mean_tok_len <= 10.0 AS r_mean_len,
       |  n_stop >= 2 AS r_stop,
@@ -441,7 +420,7 @@ object Refinery {
       |  SELECT doc_id, source,
       |    CAST(len(t) AS BIGINT) AS n_tokens,
       |    CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(t) AS mean_tok_len,
-      |    CAST(len(list_distinct(list_filter(t, x -> x IN ('the','and','of','to','in','is','a','an')))) AS BIGINT) AS n_stop,
+      |    CAST(len(list_distinct(list_filter(t, x -> x IN ${TextOps.StopwordsSql}))) AS BIGINT) AS n_stop,
       |    CAST(list_max(list_transform(list_distinct(t), u -> len(list_filter(t, x -> x = u)))) AS DOUBLE) / len(t) AS top_share
       |  FROM (
       |    SELECT doc_id, source, text,
@@ -475,14 +454,14 @@ object Refinery {
       .groupBy(col("band"))
       .agg(
         count(lit(1)).as("n_docs"),
-        sum(floor(col("score") * Fx)).as("sum_fx"),
+        sum(Det.toFx(col("score"))).as("sum_fx"),
         sum(col("n_tokens").cast("long")).as("sum_tok"),
         sum(when(col("score") >= 0.2, 1L).otherwise(0L)).as("n_pass"))
       .select(
         col("band"),
         (col("band") / 20.0).as("band_lo"),
         col("n_docs"),
-        (col("sum_fx").cast("double") / (col("n_docs").cast("double") * Fx)).as("mean_score"),
+        (col("sum_fx").cast("double") / (col("n_docs").cast("double") * Det.Fx)).as("mean_score"),
         (col("sum_tok").cast("double") / col("n_docs").cast("double")).as("mean_tokens"),
         col("n_pass"))
       .orderBy(col("band"))
@@ -497,7 +476,7 @@ object Refinery {
       |    FROM (
       |      SELECT doc_id,
       |        CAST(len(t) AS DOUBLE) AS n_tokens,
-      |        CAST(len(list_filter(t, x -> x IN ('the','and','of','to','in','is','a','an'))) AS DOUBLE) / len(t) AS stop_ratio,
+      |        CAST(len(list_filter(t, x -> x IN ${TextOps.StopwordsSql})) AS DOUBLE) / len(t) AS stop_ratio,
       |        CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(t) AS mean_tok_len,
       |        CAST(len(list_distinct(t)) AS DOUBLE) / len(t) AS distinct_ratio
       |      FROM (
@@ -510,13 +489,13 @@ object Refinery {
       |), banded AS (
       |  SELECT CAST(FLOOR(score * 20.0) AS BIGINT) AS band,
       |    CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |    CAST(SUM(CAST(FLOOR(score * $FxSql) AS BIGINT)) AS BIGINT) AS sum_fx,
+      |    CAST(SUM(CAST(FLOOR(score * ${Det.FxSql}) AS BIGINT)) AS BIGINT) AS sum_fx,
       |    CAST(SUM(CAST(n_tokens AS BIGINT)) AS BIGINT) AS sum_tok,
       |    CAST(SUM(CASE WHEN score >= 0.2 THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
       |  FROM scored GROUP BY 1
       |)
       |SELECT band, band / 20.0 AS band_lo, n_docs,
-      |  CAST(sum_fx AS DOUBLE) / (CAST(n_docs AS DOUBLE) * $FxSql) AS mean_score,
+      |  CAST(sum_fx AS DOUBLE) / (CAST(n_docs AS DOUBLE) * ${Det.FxSql}) AS mean_score,
       |  CAST(sum_tok AS DOUBLE) / CAST(n_docs AS DOUBLE) AS mean_tokens,
       |  n_pass
       |FROM banded ORDER BY band""".stripMargin

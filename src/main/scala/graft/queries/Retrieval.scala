@@ -24,12 +24,6 @@ import graft.Tables
   */
 object Retrieval {
 
-  /** 2^40: the shared fixed-point scale for score summation. Score terms
-    * are O(10), so 8 terms × 10 × 2^40 ≈ 2^46.3 — far inside int64.
-    */
-  private val Fx = 1099511627776.0
-  private val FxSql = "1099511627776.0"
-
   /** The BM25 probe-term set: one rare token (`dup` — the near-duplicate
     * marker the generator plants, df ≈ 1% of docs, idf ≈ 4.3) and three
     * mid-frequency ones, so the ranking exercises the idf spread rather
@@ -75,22 +69,7 @@ object Retrieval {
       .where(col("token").isin(Bm25Terms: _*))
       .groupBy(col("token"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
-    // count(when(tf ≥ 1, tf)), not count(1): the §42(b) pruning defense,
-    // round-15 form. A bare row count per token lets column pruning drop
-    // tf's count from this branch's copy of the aggregate, and the
-    // narrowed exchange no longer canonicalizes with the scoring stream's
-    // — re-running the filtered explode just for df. The when() keeps tf
-    // REFERENCED so the subtree stays full-width (bit-identical: tf =
-    // count(1) ≥ 1 always, so the branch never yields null and the count
-    // equals count(*)); a bare count(tf) does NOT work — tf's attribute
-    // is non-nullable, so Catalyst rewrites count(tf) to count(1) and the
-    // reference vanishes (measured: 2 → 3 Generates). This replaces the
-    // r14 first()+vacuous-disjunct anchor (ADVICE r14 item 3): no extra
-    // aggregate state, no filter for an upgrade to constant-fold away,
-    // and the count IS the df output, so it can never be pruned.
-    val dfreq = tf
-      .groupBy(col("token"))
-      .agg(count(when(col("tf") >= 1, col("tf"))).as("df"))
+    val dfreq = TextOps.docFreq(tf)
     val idf = round(
       log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)), 8)
     val tfFactor = (col("tf") * lit(2.2)) /
@@ -99,10 +78,10 @@ object Retrieval {
       .join(broadcast(dfreq), Seq("token"))
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(stats))
-      .select(col("doc_id"), floor(idf * tfFactor * lit(Fx)).as("contrib_fx"))
+      .select(col("doc_id"), Det.toFx(idf * tfFactor).as("contrib_fx"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms"),
-        (sum(col("contrib_fx")).cast("double") / lit(Fx)).as("score"))
+        Det.fromFx(sum(col("contrib_fx"))).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(20)
   }
@@ -127,10 +106,10 @@ object Retrieval {
        |    CAST(FLOOR(
        |      ROUND(LN((n_docs - df + CAST(0.5 AS DOUBLE)) / (df + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)), 8)
        |      * ((tf * CAST(2.2 AS DOUBLE)) / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / avgdl)))
-       |      * $FxSql) AS BIGINT) AS contrib_fx
+       |      * ${Det.FxSql}) AS BIGINT) AS contrib_fx
        |  FROM tf JOIN dfreq USING (token) JOIN dl USING (doc_id) CROSS JOIN stats
        |)
-       |SELECT doc_id, COUNT(*) AS n_terms, CAST(SUM(contrib_fx) AS DOUBLE) / $FxSql AS score
+       |SELECT doc_id, COUNT(*) AS n_terms, CAST(SUM(contrib_fx) AS DOUBLE) / ${Det.FxSql} AS score
        |FROM scored GROUP BY doc_id
        |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin
   }
@@ -174,7 +153,7 @@ object Retrieval {
     val srcTot = srcTok.groupBy(col("source")).agg(sum(col("c_st")).as("n_s"))
     val corpusTok = srcTok.groupBy(col("token")).agg(sum(col("c_st")).as("c_t"))
     // count(c_t), not count(1): the §42(b) pruning defense, round-15 form
-    // (same as bm25's dfreq). A bare count over corpusTok lets column
+    // (same as TextOps.docFreq). A bare count over corpusTok lets column
     // pruning drop c_t, collapse the aggregate to distinct tokens, and
     // prune `source` out of the scan — that branch then no longer
     // canonicalizes with the shared srcTok exchange and re-runs the whole
@@ -192,10 +171,10 @@ object Retrieval {
       .crossJoin(broadcast(vocab))
       .crossJoin(broadcast(tot))
       .select(col("source"),
-        floor(p * round(log2(p / q), 8) * lit(Fx)).as("term_fx"))
+        Det.toFx(p * round(log2(p / q), 8)).as("term_fx"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_tokens_observed"),
-        (sum(col("term_fx")).cast("double") / lit(Fx)).as("kl_bits"))
+        Det.fromFx(sum(col("term_fx"))).as("kl_bits"))
       .orderBy(col("source"))
   }
 
@@ -217,12 +196,12 @@ object Retrieval {
        |    CAST(FLOOR(
        |      ((c_st + CAST(1.0 AS DOUBLE)) / (n_s + v))
        |      * ROUND(LOG2(((c_st + CAST(1.0 AS DOUBLE)) / (n_s + v)) / ((c_t + CAST(1.0 AS DOUBLE)) / (n + v))), 8)
-       |      * $FxSql) AS BIGINT) AS term_fx
+       |      * ${Det.FxSql}) AS BIGINT) AS term_fx
        |  FROM src_tok JOIN corpus_tok USING (token) JOIN src_tot USING (source)
        |  CROSS JOIN vocab CROSS JOIN tot
        |)
        |SELECT source, COUNT(*) AS n_tokens_observed,
-       |  CAST(SUM(term_fx) AS DOUBLE) / $FxSql AS kl_bits
+       |  CAST(SUM(term_fx) AS DOUBLE) / ${Det.FxSql} AS kl_bits
        |FROM terms GROUP BY source ORDER BY source""".stripMargin
 
   // ------------------------------------------------------ bigram_lm_score
@@ -302,14 +281,11 @@ object Retrieval {
       .join(broadcast(c1.withColumnRenamed("a", "bg_a")),
         expr("substring(bg, 1, 1) = bg_a"))
       .select(col("doc_id"), col("cnt"),
-        floor(round(log2(col("c2") / col("c1")), 8) * lit(Fx)).as("ll_fx"))
+        Det.toFx(round(log2(col("c2") / col("c1")), 8)).as("ll_fx"))
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_bigrams"),
-        ((-sum(col("cnt") * col("ll_fx"))).cast("double") / lit(Fx) / sum(col("cnt"))).as("avg_nll"))
-      // the sort sampler re-ran the final reduction (r12 sweep: 0.7 s
-      // sampler CPU over the 463k-row exchange) — see Det.sortBarrier
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+        (Det.fromFx(-sum(col("cnt") * col("ll_fx"))) / sum(col("cnt"))).as("avg_nll"))
+      .transform(Det.sortedBy(col("doc_id")))
   }
 
   val bigramLmScoreSql: String =
@@ -322,11 +298,11 @@ object Retrieval {
        |  SELECT substr(bg, 1, 1) AS a, COUNT(*) AS c1 FROM big GROUP BY 1
        |), scored AS (
        |  SELECT doc_id,
-       |    CAST(FLOOR(ROUND(LOG2(c2.c2 / c1.c1), 8) * $FxSql) AS BIGINT) AS ll_fx
+       |    CAST(FLOOR(ROUND(LOG2(c2.c2 / c1.c1), 8) * ${Det.FxSql}) AS BIGINT) AS ll_fx
        |  FROM big JOIN c2 USING (bg) JOIN c1 ON substr(big.bg, 1, 1) = c1.a
        |)
        |SELECT doc_id, COUNT(*) AS n_bigrams,
-       |  CAST(-SUM(ll_fx) AS DOUBLE) / $FxSql / COUNT(*) AS avg_nll
+       |  CAST(-SUM(ll_fx) AS DOUBLE) / ${Det.FxSql} / COUNT(*) AS avg_nll
        |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   // -------------------------------------------------------- ngram_novelty
@@ -540,9 +516,9 @@ object Retrieval {
     val ll = bucketStats
       .crossJoin(broadcast(totals))
       .select(col("b"),
-        floor(round(log2(
+        Det.toFx(round(log2(
           ((col("p") + lit(1L)).cast("double") * (col("qt") + lit(DsirBuckets))) /
-            ((col("q") + lit(1L)).cast("double") * (col("pt") + lit(DsirBuckets)))), 8) * lit(Fx))
+            ((col("q") + lit(1L)).cast("double") * (col("pt") + lit(DsirBuckets)))), 8))
           .as("ll_fx"))
     docBuckets
       .join(broadcast(ll), Seq("b"))
@@ -583,7 +559,7 @@ object Retrieval {
     dsirDocScores(spark, sf)
       .withColumn("race_fx",
         col("score_fx") +
-          floor(round(-log(-log(u)) / lit(math.log(2.0)), 8) * lit(Fx)).cast("long"))
+          Det.toFx(round(-log(-log(u)) / lit(math.log(2.0)), 8)).cast("long"))
       .orderBy(col("race_fx").desc, col("doc_id").asc)
       .limit(100)
   }
@@ -610,7 +586,7 @@ object Retrieval {
        |  SELECT b,
        |    CAST(FLOOR(ROUND(LOG2(
        |      (CAST(p + 1 AS DOUBLE) * (qt + 1024)) /
-       |      (CAST(q + 1 AS DOUBLE) * (pt + 1024))), 8) * $FxSql) AS BIGINT) AS ll_fx
+       |      (CAST(q + 1 AS DOUBLE) * (pt + 1024))), 8) * ${Det.FxSql}) AS BIGINT) AS ll_fx
        |  FROM bs CROSS JOIN tot
        |), scores AS (
        |  SELECT doc_id, lang, CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -629,7 +605,7 @@ object Retrieval {
        |SELECT doc_id, lang, n_tokens, score_fx,
        |  score_fx + CAST(FLOOR(ROUND(
        |    -LN(-LN((CAST(('0x' || substring(md5(doc_id || '#dsir:13'), 1, 13)) AS BIGINT) + 1)
-       |      / 4503599627370497.0)) / LN(2), 8) * $FxSql) AS BIGINT) AS race_fx
+       |      / 4503599627370497.0)) / LN(2), 8) * ${Det.FxSql}) AS BIGINT) AS race_fx
        |FROM scores ORDER BY race_fx DESC, doc_id ASC LIMIT 100""".stripMargin
 
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(

@@ -283,7 +283,7 @@ object Scalars {
     * joined to a string before comparison.
     */
   def arraySetops(spark: SparkSession, sf: String): DataFrame = {
-    val toks = split(lower(col("text")), " ")
+    val toks = TextOps.tokensCol
     Tables.documents(spark, sf)
       .select(
         col("doc_id"),
@@ -295,10 +295,7 @@ object Scalars {
         array_join(array_sort(array_distinct(filter(col("head10"), t => array_contains(col("mid10"), t)))), ",").as("intersect_toks"),
         array_join(array_sort(array_distinct(filter(col("head10"), t => !array_contains(col("mid10"), t)))), ",").as("except_toks"),
         size(array_distinct(col("head10"))).cast("long").as("n_distinct_head"))
-      // four interpreted array-HOF columns per row — barrier them out of
-      // the sort sampler's re-execution (Det.sortBarrier)
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
   }
 
   val arraySetopsSql: String =

@@ -69,7 +69,6 @@ object StreamShaped {
     * the monitor's sink.
     */
   def streamDriftChi2(spark: SparkSession, sf: String): DataFrame = {
-    val Fx = 1099511627776.0
     val ev = Tables.events(spark, sf).select(col("ts"), col("event_type"))
     val tot = ev.agg(count(lit(1)).as("n"))
     val expe = ev.groupBy(col("event_type")).agg(count(lit(1)).as("c_t"))
@@ -85,15 +84,15 @@ object StreamShaped {
       .crossJoin(broadcast(tot))
       .join(obs, Seq("hour_start", "event_type"), "left")
       .withColumn("obs", coalesce(col("obs"), lit(0L)))
-      .select(col("hour_start"), floor(term * lit(Fx)).as("fx"))
+      .select(col("hour_start"), Det.toFx(term).as("fx"))
       .groupBy(col("hour_start"))
       .agg(count(lit(1)).as("n_types"),
-        (sum(col("fx")).cast("double") / lit(Fx)).as("chi2"))
+        Det.fromFx(sum(col("fx"))).as("chi2"))
       .orderBy(col("hour_start"))
   }
 
   val streamDriftChi2Sql: String =
-    """WITH ev AS (SELECT ts, event_type FROM events
+    s"""WITH ev AS (SELECT ts, event_type FROM events
       |), tot AS (SELECT COUNT(*) AS n FROM ev
       |), expe AS (SELECT event_type, COUNT(*) AS c_t FROM ev GROUP BY 1
       |), obs AS (
@@ -110,7 +109,7 @@ object StreamShaped {
       |  CAST(SUM(CAST(FLOOR(
       |    ((obs - (CAST(c_t AS DOUBLE) / n) * n_w) * (obs - (CAST(c_t AS DOUBLE) / n) * n_w))
       |      / ((CAST(c_t AS DOUBLE) / n) * n_w)
-      |    * 1099511627776.0) AS BIGINT)) AS DOUBLE) / 1099511627776.0 AS chi2
+      |    * ${Det.FxSql}) AS BIGINT)) AS DOUBLE) / ${Det.FxSql} AS chi2
       |FROM grid GROUP BY 1 ORDER BY hour_start""".stripMargin
 
   val registry: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(

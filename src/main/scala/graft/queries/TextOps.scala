@@ -30,6 +30,32 @@ object TextOps {
     */
   private[queries] def tokensCol: Column = split(lower(col("text")), " ")
 
+  /** The non-empty words: [[tokensCol]] without its empty strings. A def,
+    * so each call builds its own lambda (plans number lambda variables in
+    * the order they are built). */
+  private[queries] def wordsCol: Column = filter(tokensCol, t => t =!= "")
+
+  /** `df` plus `toks` ([[wordsCol]]) and its size `n_tokens` (long). */
+  private[queries] def withWordCount(df: DataFrame): DataFrame =
+    df.withColumn("toks", wordsCol)
+      .withColumn("n_tokens", size(col("toks")).cast("long"))
+
+  /** The stopword set of every quality screen. */
+  private[queries] val Stopwords = Seq("the", "and", "of", "to", "in", "is", "a", "an")
+
+  /** [[Stopwords]] as a SQL list, `('the','and',…)`, for builder and
+    * oracle texts alike. */
+  private[queries] val StopwordsSql = Stopwords.map(w => s"'$w'").mkString("(", ",", ")")
+
+  /** SQL text of the word `n`-gram array over the token array `t`: gram
+    * `i` is tokens `i` to `i + n - 1` joined by single spaces, or that
+    * gram's md5 hex when `hashed`. */
+  private[graft] def wordNgramsSql(n: Int, hashed: Boolean = false): String = {
+    val gram = (0 until n).map(k => if (k == 0) "element_at(t, i)" else s"element_at(t, i + $k)")
+      .mkString("concat(", ", ' ', ", ")")
+    s"transform(sequence(1, size(t) - ${n - 1}), i -> ${if (hashed) s"md5(cast($gram as binary))" else gram})"
+  }
+
   /** Ensure a `t` token-array column (the [[tokensCol]] split) on a
     * documents-shaped frame — pass-through when the caller already carries
     * one. This is the shared-corpus seam (VERDICT r12 item 4): the overlap
@@ -79,9 +105,7 @@ object TextOps {
       .documents(spark, sf)
       .select(tokensCol.as("t"))
       .where(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(t) - 1), i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"))
-        .as("bigram"))
+      .select(explode(expr(wordNgramsSql(2))).as("bigram"))
       .groupBy(col("bigram"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("bigram").asc)
@@ -147,17 +171,8 @@ object TextOps {
     // (doc, token) row for a hot token ("the") lands on ONE reducer. The
     // groupBy gets map-side partial aggregation (bounded per-key state on
     // every node), and the join-back's skew is an AQE-splittable stream
-    // side — the 100 TB-safe shape. count(when(tf ≥ 1, tf)), not
-    // count(1), is the §42(b) pruning defense (round-15 form — see
-    // Retrieval.bm25Topk's dfreq for the full rationale; bit-identical:
-    // tf ≥ 1 always, and a bare count(tf) gets rewritten to count(1)
-    // because tf is non-nullable, losing the reference): without the tf
-    // reference this branch's copy of tf drops the tf count, its exchange
-    // narrows, and the explode re-runs just for df. Replaces the r14
-    // first()+vacuous-disjunct anchor.
-    val dfreq = tf
-      .groupBy(col("token"))
-      .agg(count(when(col("tf") >= 1, col("tf"))).as("df"))
+    // side — the 100 TB-safe shape.
+    val dfreq = docFreq(tf)
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val scored = tf
       .join(dfreq, Seq("token"))
@@ -186,6 +201,25 @@ object TextOps {
       |      n.n_docs
       |    FROM tf CROSS JOIN n)
       |) WHERE rn = 1 ORDER BY doc_id""".stripMargin
+
+  /** Document frequency `df` per `token` of a (token, doc_id, tf) frame.
+    *
+    * count(when(tf ≥ 1, tf)), not count(1): the §42(b) pruning defense,
+    * round-15 form. A bare row count per token lets column pruning drop
+    * tf's count from this branch's copy of the aggregate, and the
+    * narrowed exchange no longer canonicalizes with the scoring stream's
+    * — re-running the tokenize explode just for df. The when() keeps tf
+    * REFERENCED so the subtree stays full-width (bit-identical: tf =
+    * count(1) ≥ 1 always, so the branch never yields null and the count
+    * equals count(*)); a bare count(tf) does NOT work — tf's attribute
+    * is non-nullable, so Catalyst rewrites count(tf) to count(1) and the
+    * reference vanishes (measured: 2 → 3 Generates). This replaces the
+    * r14 first()+vacuous-disjunct anchor (ADVICE r14 item 3): no extra
+    * aggregate state, no filter for an upgrade to constant-fold away,
+    * and the count IS the df output, so it can never be pruned.
+    */
+  private[queries] def docFreq(tf: DataFrame): DataFrame =
+    tf.groupBy(col("token")).agg(count(when(col("tf") >= 1, col("tf"))).as("df"))
 
   // ------------------------------------------------------- north star: LSH
   /** MinHash + LSH near-duplicate candidate pairs.
@@ -234,17 +268,19 @@ object TextOps {
     val shingles = ensureTokens(docs)
       .select(col("doc_id"), col("t"))
       .where(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(t) - 2), i -> concat(element_at(t, i), ' ', element_at(t, i + 1), ' ', element_at(t, i + 2)))"))
-        .as("sh"))
+      .select(col("doc_id"), explode(expr(wordNgramsSql(3))).as("sh"))
     // All 8 seeded minhashes as columns of ONE aggregation — a single
     // shuffle keyed by doc_id, no 8× row explosion, no collect_list.
     // (Restructured from an explode-seeds formulation: 22.5 s → ~2 s at
     // sf0.1; identical output.)
     val minAggs = (0 until 8).map(i =>
       min(md5(concat(col("sh"), lit(s"#$i")).cast("binary"))).as(s"m$i"))
-    val minhash = shingles.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*)
-    // 4 bands of 2 rows: band key = md5 of the concatenated member hashes.
+    minhashBandRows(shingles.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*))
+  }
+
+  /** (doc_id, band, band_hash) from a (doc_id, m0 … m7) minhash frame: 4
+    * bands of 2 rows, band key = md5 of the concatenated member hashes. */
+  private def minhashBandRows(minhash: DataFrame): DataFrame = {
     val bandArr = array((0 until 4).map(bnd =>
       struct(
         lit(bnd).as("band"),
@@ -310,21 +346,13 @@ object TextOps {
     * shingles and are dropped, exactly as in the batch plan.
     */
   private[graft] def minhashBands(docs: DataFrame): DataFrame = {
-    val shingles = expr(
-      "transform(sequence(1, size(t) - 2), i -> concat(element_at(t, i), ' ', element_at(t, i + 1), ' ', element_at(t, i + 2)))")
     val minhashes = (0 until 8).map(i =>
       array_min(expr(s"transform(shs, s -> md5(cast(concat(s, '#$i') as binary)))")).as(s"m$i"))
-    val bandArr = array((0 until 4).map(bnd =>
-      struct(
-        lit(bnd).as("band"),
-        md5(concat(col(s"m${2 * bnd}"), col(s"m${2 * bnd + 1}")).cast("binary")).as("h"))): _*)
-    docs
+    minhashBandRows(docs
       .select(col("doc_id"), tokensCol.as("t"))
       .where(size(col("t")) >= 3)
-      .select(col("doc_id"), shingles.as("shs"))
-      .select(col("doc_id") +: minhashes: _*)
-      .select(col("doc_id"), explode(bandArr).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.h").as("band_hash"))
+      .select(col("doc_id"), expr(wordNgramsSql(3)).as("shs"))
+      .select(col("doc_id") +: minhashes: _*))
   }
 
   // ------------------------------------- north star: edit-distance dedup
@@ -839,20 +867,7 @@ object TextOps {
         col("n_shared").cast("double") / (col("n_a") + col("n_b") - col("n_shared")).cast("double"))
       .where(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("n_shared"), col("jaccard"))
-      // repartition BARRIER before the contract sort (r11): orderBy plans a
-      // range exchange whose bounds SAMPLING re-executes the stage feeding
-      // it — here the final agg + both hot joins + every array_intersect.
-      // Stage attribution at sf1 (BENCH_NOTES §26) showed two 4.3 s
-      // stages each reading the identical 1.68M-row exchange with ~30 s CPU
-      // apiece: the whole reduce pipeline ran TWICE. The round-robin
-      // exchange materializes the (tiny, post-threshold) pair set so the
-      // sampler re-reads a shuffle file instead of recomputing the plan. Costs one extra shuffle of the
-      // RESULT rows only — scale-safe by construction.
-      // keyed, not round-robin: hashpartitioning skips RoundRobin's
-      // defensive sortBeforeRepartition and scales with
-      // spark.sql.shuffle.partitions instead of a literal
-      .repartition(col("doc_a"))
-      .orderBy(col("doc_a"), col("doc_b"))
+      .transform(Det.sortedBy(col("doc_a"), col("doc_b")))
   }
 
   val dedupNgramJaccardSql: String =
@@ -968,16 +983,20 @@ object TextOps {
     * ([[dedupExactSubstringProbe]]) plugs into. */
   private def exactSubstringDedupWithIndex(docs: DataFrame, index: DataFrame): DataFrame = {
     // probe: every seed start; index: stride-aligned starts only (1, 44, 87 …)
-    val seeds = tokenWindows(docs, SubstrSeedLen)
-    val candidates = seeds.select(col("doc_id").as("p_doc"), col("h"))
+    confirmSharedRunPairs(docs, seedCandidates(tokenWindows(docs, SubstrSeedLen), index))
+  }
+
+  /** Stage 1 of the exact-substring family: distinct unordered pairs
+    * (doc_a < doc_b) of different docs whose probe seed `h` is in the
+    * (doc_id, h) index. */
+  private def seedCandidates(seeds: DataFrame, index: DataFrame): DataFrame =
+    seeds.select(col("doc_id").as("p_doc"), col("h"))
       .join(index.select(col("doc_id").as("i_doc"), col("h")), Seq("h"))
       .where(col("p_doc") =!= col("i_doc"))
       .select(
         least(col("p_doc"), col("i_doc")).as("doc_a"),
         greatest(col("p_doc"), col("i_doc")).as("doc_b"))
       .distinct()
-    confirmSharedRunPairs(docs, candidates)
-  }
 
   /** Stage 2 of the exact-substring family, shared by all three regimes:
     * given CANDIDATE pairs (doc_a < doc_b), confirm exactly which share a
@@ -1128,14 +1147,7 @@ object TextOps {
     // broadcast the overhead is the stride-index df agg alone).
     val hot = seedDf.where(col("df") > cap).select(col("h"))
     val seeds = tokenWindows(docs, SubstrSeedLen).repartition(col("h"))
-    val coldCandidates = seeds.select(col("doc_id").as("p_doc"), col("h"))
-      .join(index.join(broadcast(hot), Seq("h"), "left_anti")
-        .select(col("doc_id").as("i_doc"), col("h")), Seq("h"))
-      .where(col("p_doc") =!= col("i_doc"))
-      .select(
-        least(col("p_doc"), col("i_doc")).as("doc_a"),
-        greatest(col("p_doc"), col("i_doc")).as("doc_b"))
-      .distinct()
+    val coldCandidates = seedCandidates(seeds, index.join(broadcast(hot), Seq("h"), "left_anti"))
     // hot membership is ANY-position (probe-side stream): the escalation's
     // completeness needs the probe doc of a hot-seeded run too, and it can
     // hold the seed anywhere
@@ -1336,10 +1348,7 @@ object TextOps {
         size(split(col("text"), " ")).cast("long").as("n_ws_tokens"),
         regexp_count(col("text"), lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]")).cast("long").as("n_bpe_tokens"),
         regexp_count(col("text"), lit("[a-z]{7,}")).cast("long").as("n_long_tokens"))
-      // the triple-regex pass must not run twice for the sort sampler
-      // (r12 sweep: 1.34 s sampler CPU) — see Det.sortBarrier
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
 
   val tokenCountSql: String =
     """SELECT doc_id,
@@ -1357,9 +1366,9 @@ object TextOps {
       .select(
         col("doc_id"),
         length(col("text")).cast("long").as("n_chars_m"),
-        size(split(lower(col("text")), " ")).cast("long").as("n_tokens"),
+        size(tokensCol).cast("long").as("n_tokens"),
         length(regexp_replace(col("text"), " ", "")).cast("long").as("n_nonspace"),
-        expr("size(filter(split(lower(text), ' '), x -> x in ('the','and','of','to','in','is','a','an')))")
+        expr(s"size(filter(split(lower(text), ' '), x -> x in $StopwordsSql))")
           .cast("long")
           .as("n_stop"))
       .withColumn("mean_token_len", col("n_nonspace").cast("double") / col("n_tokens"))
@@ -1374,7 +1383,7 @@ object TextOps {
       .orderBy(col("doc_id"))
 
   val textQualityScoreSql: String =
-    """SELECT doc_id, n_chars_m, n_tokens,
+    s"""SELECT doc_id, n_chars_m, n_tokens,
       |  CAST(n_nonspace AS DOUBLE) / n_tokens AS mean_token_len,
       |  CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio,
       |  CASE WHEN n_tokens < 10 THEN 'too_short'
@@ -1386,7 +1395,7 @@ object TextOps {
       |    CAST(length(text) AS BIGINT) AS n_chars_m,
       |    CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
       |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_nonspace,
-      |    CAST(len(list_filter(string_split(lower(text), ' '), x -> x IN ('the','and','of','to','in','is','a','an'))) AS BIGINT) AS n_stop
+      |    CAST(len(list_filter(string_split(lower(text), ' '), x -> x IN $StopwordsSql)) AS BIGINT) AS n_stop
       |  FROM documents
       |) ORDER BY doc_id""".stripMargin
 
@@ -1412,10 +1421,7 @@ object TextOps {
       .select(
         col("doc_id"),
         graft.functions.MinGramMd5.min_gram_md5(col("text"), 8).as("fingerprint"))
-      // min-gram hashing is the whole query — keep it out of the sort
-      // sampler's re-execution (Det.sortBarrier)
-      .transform(Det.sortBarrier(col("doc_id")))
-      .orderBy(col("doc_id"))
+      .transform(Det.sortedBy(col("doc_id")))
 
   val docFingerprintSql: String =
     """SELECT doc_id, min(md5(substring(text, i, 8))) AS fingerprint

@@ -678,14 +678,18 @@ object Vectors {
     */
   private val Fixed = 4503599627370496.0
 
+  /** Exact mean of `v` over the group in the 2^52 fixed-point domain. */
+  private def fixedMean(v: Column): Column =
+    sum((v.cast("double") * lit(Fixed)).cast("long").cast("decimal(38,0)"))
+      .cast("double") / (count(lit(1)) * lit(Fixed))
+
   def aggVectorCentroid(spark: SparkSession, sf: String): DataFrame =
     Tables
       .embeddings(spark, sf)
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy(col("label"), col("pos").cast("long").as("pos"))
       .agg(
-        (sum((col("v").cast("double") * lit(Fixed)).cast("long").cast("decimal(38,0)"))
-          .cast("double") / (count(lit(1)) * lit(Fixed))).as("centroid"),
+        fixedMean(col("v")).as("centroid"),
         count(lit(1)).as("n_vectors"))
       .orderBy(col("label"), col("pos"))
 
@@ -819,8 +823,7 @@ object Vectors {
     assigned
       .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy(col("cell"), col("pos"))
-      .agg((sum((col("v").cast("double") * lit(Fixed)).cast("long").cast("decimal(38,0)"))
-        .cast("double") / (count(lit(1)) * lit(Fixed))).as("centroid"))
+      .agg(fixedMean(col("v")).as("centroid"))
       .groupBy(col("cell"))
       .agg(expr("transform(array_sort(collect_list(struct(pos, centroid))), s -> s.centroid)")
         .as("cvec"))
@@ -1269,10 +1272,7 @@ object Vectors {
         concat_ws(",",
           expr("transform(embedding, x -> IF(norm = 0D, '0', CAST(CAST(round(CAST(x AS DOUBLE) / norm * 127.0) AS INT) AS STRING)))"))
           .as("qvec"))
-      // the per-vector norm + int8 transform must not run twice for the
-      // sort sampler (r12 sweep) — see Det.sortBarrier
-      .transform(Det.sortBarrier(col("vec_id")))
-      .orderBy(col("vec_id"))
+      .transform(Det.sortedBy(col("vec_id")))
 
   val embeddingQuantizeSql: String =
     """WITH n AS (

@@ -5,7 +5,8 @@ import graft.ops.IndexStore
 import SharedSpark.withTempDir
 
 /** Lifecycle invariants of the shared persisted-index store — the
-  * machinery under every `*_probe` regime. Filesystem-only: no Spark.
+  * machinery under every `*_probe` regime. Filesystem-only, except the
+  * rebuild test, which builds a real index with the shared session.
   */
 class IndexStoreSpec extends AnyFunSuite {
 
@@ -101,6 +102,31 @@ class IndexStoreSpec extends AnyFunSuite {
       val fp2 = IndexStore.sourceFingerprint(data.toString)
       java.nio.file.Files.writeString(data.toPath.resolve("_SUCCESS"), "")
       assert(IndexStore.sourceFingerprint(data.toString) === fp2)
+    }
+  }
+
+  test("a rebuild after the source changes deletes the superseded index of that scale factor") {
+    withTempDir("ixprune") { sf =>
+      val spark = SharedSpark.spark
+      import spark.implicits._
+      val docs = Tables.path(sf, "documents")
+      // the family lives inside the temp dir, which takes it away after
+      val family = s"${new java.io.File(sf).getName}/graft_prune_v1"
+      val index = IndexStore.Index(family, "documents", "part")(_.select("doc_id"))
+      Seq(1L, 2L).toDF("doc_id").write.parquet(docs)
+      val first = new java.io.File(index.build(spark, sf))
+      val familyDir = first.getParentFile
+      // a commit must leave another scale factor's index and a staging dir alone
+      val keep = Seq("_other_sf_0abc", s"${first.getName}.tmp.999")
+      keep.foreach(n => assert(new java.io.File(familyDir, n).mkdirs()))
+      Seq(1L, 2L, 3L).toDF("doc_id").write.mode("overwrite").parquet(docs)
+      val second = new java.io.File(index.build(spark, sf))
+      assert(second.getName !== first.getName)
+      val tag = first.getName.take(first.getName.lastIndexOf('_') + 1)
+      val left = familyDir.listFiles().map(_.getName).toSeq
+      assert(left.filter(n => n.startsWith(tag) && !n.contains(".tmp.")) === Seq(second.getName))
+      assert(left.sorted === (keep :+ second.getName).sorted)
+      assert(index.read(spark, sf).count() === 3)
     }
   }
 }

@@ -202,12 +202,22 @@ class RegistryLintSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val root = Paths.get("src/main/scala")
+    val inDet = (rel: String) => rel == "graft/queries/Det.scala"
+    val inTextOps = (rel: String) => rel == "graft/queries/TextOps.scala"
+    // a call's argument list, up to two levels of nested parentheses
+    val args = "(?:[^()]|\\((?:[^()]|\\([^()]*\\))*\\))*"
     // (pattern, where it may appear, what to use instead)
     val rules = Seq(
-      ("col\\(\"rn\"\\)\\s*===\\s*1\\b".r, (rel: String) => rel == "graft/queries/Det.scala",
+      ("col\\(\"rn\"\\)\\s*===\\s*1\\b".r, inDet,
         "Det.firstPer / Det.isFirst"),
       ("aggregate\\(\\s*embedding\\b".r, (rel: String) => !rel.startsWith("graft/queries/"),
-        "the VecDot norm, Vectors.normSq"))
+        "the VecDot norm, Vectors.normSq"),
+      ("1099511627776".r, inDet, "Det.Fx / Det.FxSql, Det.toFx / Det.fromFx"),
+      ("Det\\.sortBarrier".r, inDet, "Det.sortedBy"),
+      (s"\\.repartition\\($args\\)\\s*\\.orderBy\\(".r, inDet, "Det.sortedBy"),
+      ("filter\\((TextOps\\.)?tokensCol\\b".r, inTextOps, "TextOps.wordsCol"),
+      ("element_at\\(t, i \\+ 1\\)".r, inTextOps, "TextOps.wordNgramsSql"),
+      ("'the','and','of'".r, inTextOps, "TextOps.Stopwords / TextOps.StopwordsSql"))
     def stripComments(s: String): String =
       s.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
     val offenders = for {
@@ -306,18 +316,17 @@ class RegistryLintSpec extends AnyFunSuite {
     // transform() lambda + concat Invoke (BENCH_NOTES §20 — ArrayDistinct
     // itself is linear on strings); semantics including element ORDER
     // (first occurrence) must be identical
-    val composed = expr(
-      "array_distinct(transform(sequence(1, size(t) - 2), " +
-        "i -> concat(element_at(t, i), ' ', element_at(t, i + 1), ' ', element_at(t, i + 2))))")
-    val diff = Tables.documents(spark, Sf0001)
-      .select(split(lower(col("text")), " ").as("t"))
-      .where(size(col("t")) >= 3)
-      .select(
-        graft.functions.DistinctNgrams.distinct_ngrams(col("t"), 3).as("native"),
-        composed.as("composed"))
-      .where(not(col("native") <=> col("composed")))
-      .count()
-    assert(diff === 0)
+    val docs = Tables.documents(spark, Sf0001).select(split(lower(col("text")), " ").as("t"))
+    for (n <- Seq(2, 3)) {
+      val diff = docs
+        .where(size(col("t")) >= n)
+        .select(
+          graft.functions.DistinctNgrams.distinct_ngrams(col("t"), n).as("native"),
+          expr(s"array_distinct(${graft.queries.TextOps.wordNgramsSql(n)})").as("composed"))
+        .where(not(col("native") <=> col("composed")))
+        .count()
+      assert(diff === 0, s"n = $n")
+    }
   }
 
   test("DistinctNgrams edge semantics: short arrays, null tokens, n=1") {

@@ -34,8 +34,15 @@ object SqlFirstPlans {
     "click_view_attribution", "window_rank", "window_first_last_nth",
     "window_lag_change_detect", "dedup_latest", "sessionize")
 
+  /** `plan` without what differs between two runs of the same code: the
+    * scale-factor directory, expression ids, `plan_id`s, codegen stage ids,
+    * the temp root and the staging pid of an index build, and the JVM
+    * identity of a Scala lambda (`Multimodal$$$Lambda$<n>/0x…@…`). */
   def normalize(plan: String, sfDir: String): String =
     plan.replace(sfDir, "<sf>")
+      .replace(sys.props("java.io.tmpdir"), "<tmp>")
+      .replaceAll("\\.tmp\\.\\d+", ".tmp.<pid>")
+      .replaceAll("\\$\\$Lambda[^@\\s]*@[0-9a-f]+", "\\$\\$Lambda")
       .replaceAll("#\\d+", "#")
       .replaceAll("plan_id=\\d+", "plan_id=")
       .replaceAll("\\*\\(\\d+\\)", "*()")
