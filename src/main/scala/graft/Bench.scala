@@ -50,27 +50,34 @@ object Bench {
     * plus the round-15 latency-canary pair inside canaryJson.
     */
   private[graft] def shortLine(total: Double, head: Seq[(String, Double)],
-      headKey: String, headTotal: Double, nQueries: Int, errJson: String,
-      sfDir: String, iters: Int, retries: Int, inflJson: String,
-      inflAdjJson: String, canaryJson: String, confJson: String): String =
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(head)},"$headKey":$headTotal,"n_queries":$nQueries,"full":"bench_out.json","errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":true,"action":"noop",$confJson}"""
+      headKey: String, headTotal: Double, nQueries: Int, tail: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(head)},"$headKey":$headTotal,"n_queries":$nQueries,"full":"bench_out.json",$tail"""
+
+  /** The bench_out.json line: every timed query, the same tail. */
+  private[graft] def fullLine(total: Double, timed: Seq[(String, Double)],
+      headTotal: Double, tail: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed)},"baseline10_total":$headTotal,$tail"""
+
+  /** The tail both lines share, from `"errors"` to the closing brace. */
+  private[graft] def lineTail(errJson: String, sfDir: String, iters: Int,
+      retries: Int, inflJson: String, inflAdjJson: String, canaryJson: String,
+      confJson: String): String =
+    s""""errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":true,"action":"noop",$confJson}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
+    // Dev-only subset filter (SparkEntry.select): SPARK_GRAFT_ONLY=headline
+    // (the BASELINE.md 10-query suite) or a comma-separated query-name
+    // list. Used for quick local A/Bs; contract runs never set it. A filtered
+    // run does NOT write bench_out.json (the committed artifact stays
+    // full-suite-only).
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val benchQueries = SparkEntry.select(only)
     val spark = Session.bench(sfDir)
     // Warm-cache the input tables; both JSON lines record it as
     // `"cached":true`.
     cacheTables(spark, sfDir)
-    // Dev-only subset filter: SPARK_GRAFT_ONLY=headline (the BASELINE.md
-    // 10-query suite) or a comma-separated query-name list. Used for quick
-    // local A/Bs; the driver never sets it. A filtered run does NOT write
-    // bench_out.json (the committed artifact stays full-suite-only).
-    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY").map {
-      case "headline" => headline.toSet
-      case csv => csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-    }
-    val benchQueries = only.fold(SparkEntry.queries)(s => SparkEntry.queries.view.filterKeys(s).toMap)
     // Untimed warmup at sfDir: compiles the generated code (Janino) and JITs
     // the hot paths the timed passes will take, including AQE's re-planned
     // stages at this scale.
@@ -131,44 +138,12 @@ object Bench {
     // targeted re-runs (min-merged, early exit once within AcceptWithin×).
     // Rows still inflated after that are listed in `inflated` so a bad
     // total can never pass silently as a plan regression.
-    // Floors are calibrated AT A SCALE FACTOR: docs/bench_floors.json holds
-    // the sf0.1 cross-run floors (the driver's bench posture). At any other
-    // sfDir those floors would mislabel legitimate data growth as host
-    // stalls (a 10× data row is not a transient), so floors apply only to
-    // the sf they were measured at — sf0.1 by default, or an explicit
-    // SPARK_GRAFT_FLOORS=<path> for other scales (docs/bench_floors_sf1.json
-    // is committed for the sf1 scale-proof runs).
-    def readFloors(f: java.io.File): Map[String, Double] =
-      if (!f.exists()) Map.empty
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    // Scale-factor resolution is by LAST PATH SEGMENT EQUALITY, not suffix
-    // (ADVICE r12): a directory merely ending in "sf1" (data/mysf1) must
-    // not silently pick sf1's floors and emit a misleading window_tax.
-    def sfSegment: String = sfDir.replaceAll("/+$", "").split('/').last
-    val perSfFloorsFile: Option[java.io.File] = sfSegment match {
-      case "sf0.1" => Some(new java.io.File("docs/bench_floors.json"))
-      case "sf1"   => Some(new java.io.File("docs/bench_floors_sf1.json"))
-      case "sf3"   => Some(new java.io.File("docs/bench_floors_sf3.json"))
-      case _       => None
-    }
-    val floorsFile: Option[java.io.File] = sys.env.get("SPARK_GRAFT_FLOORS")
-      .map(new java.io.File(_))
-      .orElse(perSfFloorsFile)
-    val floors: Map[String, Double] = {
-      // retry-gating floors apply only at the sf they were measured at:
-      // explicit SPARK_GRAFT_FLOORS, or the default sf0.1 file at sf0.1.
-      val floorsApply = sys.env.contains("SPARK_GRAFT_FLOORS") || sfSegment == "sf0.1"
-      if (!floorsApply) Map.empty else floorsFile.map(readFloors).getOrElse(Map.empty)
-    }
+    val floors = Bench.floors(sfDir, sys.env.get("SPARK_GRAFT_FLOORS"))
     val RetryOver = 5.0; val AcceptWithin = 2.0; val MaxRetries = 2
     var retries = 0
     val results = results0.map {
-      case (name, (Some(t0), err)) if floors.get(name).exists(f => t0 > RetryOver * f) =>
-        val floor = floors(name)
+      case (name, (Some(t0), err)) if floors.retry.get(name).exists(f => t0 > RetryOver * f) =>
+        val floor = floors.retry(name)
         var best = t0
         var left = MaxRetries
         while (left > 0 && best > AcceptWithin * floor) {
@@ -186,30 +161,21 @@ object Bench {
     // re-measuring both engines. The canary makes a taxed window
     // machine-readable: `canary_s` is the suite's timing of the compute-
     // bound knn_brute_force row, `window_tax` is canary_s over the
-    // committed cross-run floor for THIS scale factor (docs/bench_floors*.json
-    // — resolved by last-path-segment equality when the retry-gating floors
-    // map is inapplicable, so sf1/sf3 artifacts self-report too).
+    // committed cross-run floor for THIS scale factor (docs/bench_floors*.json,
+    // resolved by [[floors]], so sf1/sf3 artifacts self-report too).
     // window_tax ≈ 1 ⇒ trust absolutes; window_tax ≫ 1 ⇒ the whole run is
     // inflated by roughly that factor and only same-window comparisons are
     // meaningful. Suite-timed only: a full run always times the row, and a
     // dev subset without it (or a run where it failed every iteration,
     // which `errors` shows) reports `canary_src` "none".
-    val CanaryQuery = "knn_brute_force"
     val canaryS: Option[Double] = timed.get(CanaryQuery)
     val canarySrc = if (canaryS.isDefined) "suite" else "none"
-    // canary floor: the retry-gating floors map when applicable, else the
-    // resolved floors file, else — when an env-supplied floors file lacks
-    // the canary row (ADVICE r13) — the segment-resolved per-sf floors
-    // file, so a custom retry map never silently costs the window_tax.
-    val canaryFloor: Option[Double] = floors.get(CanaryQuery)
-      .orElse(floorsFile.flatMap(f => readFloors(f).get(CanaryQuery)))
-      .orElse(perSfFloorsFile.flatMap(f => readFloors(f).get(CanaryQuery)))
+    val canaryFloor = floors.floorOf(CanaryQuery)
     val windowTax: Option[Double] =
       for (c <- canaryS; f <- canaryFloor if f > 0) yield round3(c / f)
     // JSON-escape the path (ADVICE r13): an env-supplied floors path with
     // a quote or backslash must not corrupt the one-line artifact.
-    val floorsFileJson = floorsFile.fold("null")(f =>
-      "\"" + f.getPath.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+    val floorsFileJson = floors.file.fold("null")(f => Verify.jsonString(f.getPath))
     // Latency canary (round 15, VERDICT r14 item 5): the knn-based
     // window_tax measures COMPUTE-window health, but BENCH_NOTES §51 found
     // a window mode where sub-second rows ran ~2× while compute rows were
@@ -217,11 +183,8 @@ object Bench {
     // BASELINE.md headline row with the most stable sub-second floor, so
     // its floor ratio is the short-row tax. Suite-timed only (q1 is always
     // in a full run; a dev subset without it reports latency_src "none").
-    val LatencyCanary = "q1_pricing_summary"
     val latencyS: Option[Double] = timed.get(LatencyCanary)
-    val latencyFloor: Option[Double] = floors.get(LatencyCanary)
-      .orElse(floorsFile.flatMap(f => readFloors(f).get(LatencyCanary)))
-      .orElse(perSfFloorsFile.flatMap(f => readFloors(f).get(LatencyCanary)))
+    val latencyFloor = floors.floorOf(LatencyCanary)
     val latencyTax: Option[Double] =
       for (c <- latencyS; f <- latencyFloor if f > 0) yield round3(c / f)
     val canaryJson = s""""canary":"$CanaryQuery","canary_s":${canaryS.getOrElse(-1)},"canary_src":"$canarySrc","window_tax":${windowTax.getOrElse(-1)},"latency_canary":"$LatencyCanary","latency_tax":${latencyTax.getOrElse(-1)},"floors_file":$floorsFileJson"""
@@ -242,11 +205,11 @@ object Bench {
     def rowDivisor(floor: Double): Double =
       if (floor < LatencyRowFloorCutoff) latencyDivisor else taxDivisor
     val inflated = results.collect {
-      case (name, (Some(t), _)) if floors.get(name).exists(f => t > AcceptWithin * f) => name
+      case (name, (Some(t), _)) if floors.retry.get(name).exists(f => t > AcceptWithin * f) => name
     }.toSeq.sorted
     val inflatedAdj = results.collect {
       case (name, (Some(t), _))
-        if floors.get(name).exists(f => t / rowDivisor(f) > AcceptWithin * f) => name
+        if floors.retry.get(name).exists(f => t / rowDivisor(f) > AcceptWithin * f) => name
     }.toSeq.sorted
     val errJson = errs.toSeq.sortBy(_._1)
       .map { case (k, e) => "\"" + k + "\":\"" + e + "\"" }
@@ -284,20 +247,53 @@ object Bench {
       val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       s""""aqe":$aqe,"shuffle":$sh,"broadcast":"$bc""""
     }
-    val line = shortLine(total, head, headKey, headTotal, timed.size, errJson,
-      sfDir, iters, retries, inflJson, inflAdjJson, canaryJson, confJson)
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(timed.toSeq)},"baseline10_total":$headTotal,"errors":$errJson,"sf":"$sfDir","iters":$iters,"rescue":1,"retries":$retries,"inflated":$inflJson,"inflated_adj":$inflAdjJson,$canaryJson,"cached":true,"action":"noop",$confJson}"""
+    val tail = lineTail(errJson, sfDir, iters, retries, inflJson, inflAdjJson,
+      canaryJson, confJson)
     if (only.isEmpty) try {
       val w = new java.io.PrintWriter("bench_out.json")
-      try w.println(fullLine) finally w.close()
+      try w.println(fullLine(total, timed.toSeq, headTotal, tail)) finally w.close()
     } catch { case _: Throwable => () }
     // Contract line LAST, after spark.stop(): Spark's shutdown logging (and
     // any lingering executor output) must not land between this line and
     // process exit — the driver parses the JSON line from the output tail.
     spark.stop()
-    println(line)
+    println(shortLine(total, head, headKey, headTotal, timed.size, tail))
     Console.out.flush()
+  }
+
+  /** The compute canary (`window_tax`) and the latency canary
+    * (`latency_tax`); main says why each. */
+  private[graft] val CanaryQuery = "knn_brute_force"
+  private[graft] val LatencyCanary = "q1_pricing_summary"
+
+  /** The floors a run reads: `retry` gates the retries and the inflated
+    * lists, `floorOf` gives a canary its floor, and `file` is the floors
+    * file the artifact names (`floors_file`). */
+  private[graft] final case class Floors(retry: Map[String, Double],
+      floorOf: String => Option[Double], file: Option[java.io.File])
+
+  /** Floors are calibrated AT A SCALE FACTOR (docs/bench_floors.json at
+    * sf0.1, the bench posture; the _sf1/_sf3 files for the scale-proof
+    * runs). Elsewhere they would mislabel legitimate data growth as host
+    * stalls (a 10× data row is not a transient), so the retry floors apply
+    * only where measured: an explicit SPARK_GRAFT_FLOORS file (`envFloors`),
+    * else the sf0.1 file at sf0.1. A canary's floor comes from the explicit
+    * file, else from the per-sf file (ADVICE r13), so sf1/sf3 artifacts
+    * self-report window_tax. The per-sf file is resolved by LAST PATH
+    * SEGMENT EQUALITY (ADVICE r12): data/mysf1 picks no floors. */
+  private[graft] def floors(sfDir: String, envFloors: Option[String]): Floors = {
+    def read(f: Option[java.io.File]): Map[String, Double] =
+      f.filter(_.exists()).fold(Map.empty[String, Double]) { f =>
+        """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(java.nio.file.Files.readString(f.toPath))
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      }
+    val segment = sfDir.replaceAll("/+$", "").split('/').last
+    val sfFile = Map("sf0.1" -> "docs/bench_floors.json", "sf1" -> "docs/bench_floors_sf1.json",
+      "sf3" -> "docs/bench_floors_sf3.json").get(segment).map(new java.io.File(_))
+    val envFile = envFloors.map(new java.io.File(_))
+    val (fileFloors, sfFloors) = (read(envFile), read(sfFile))
+    val retry = if (envFile.isDefined) fileFloors else if (segment == "sf0.1") sfFloors else Map.empty[String, Double]
+    Floors(retry, q => fileFloors.get(q).orElse(sfFloors.get(q)), envFile.orElse(sfFile))
   }
 
   /** Warm-caches every input table. BASELINE.md's DuckDB numbers are WARM
@@ -308,7 +304,7 @@ object Bench {
     * query code changes, and the ~0.2 s single-row-group parquet-open
     * constant per scan (docs/BENCH_NOTES.md component floors) drops out,
     * exactly as it has already dropped out of the DuckDB side. */
-  private def cacheTables(spark: SparkSession, sfDir: String): Unit =
+  private[graft] def cacheTables(spark: SparkSession, sfDir: String): Unit =
     Tables.names.foreach { n =>
       val df = Tables.table(spark, sfDir, n)
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)

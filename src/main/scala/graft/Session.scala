@@ -34,8 +34,8 @@ object Session {
     spark
   }
 
-  /** The bench posture, shared by `graft.Bench` and the plan tools
-    * (PlanAudit, PlanFormatted) so their plans are the benched plans. Every
+  /** The bench posture, shared by `graft.Bench` and the plan tool
+    * (PlanAudit) so its plans are the benched plans. Every
     * value is fixed here; only the shuffle-partition count derives from the
     * data (see shuffleDefault below).
     *
@@ -46,7 +46,7 @@ object Session {
   def bench(sfDir: String): SparkSession =
     local(logLevel = "ERROR", conf = Map(
       // data-adaptive — see shuffleDefault below
-      "spark.sql.shuffle.partitions" -> shuffleDefault(cpus, inputBytes(sfDir)).toString,
+      "spark.sql.shuffle.partitions" -> shuffleDefault(cpus, Tables.onDiskBytes(sfDir)).toString,
       Tables.EventsNanosConf -> "true",
       // 8MB threshold (round-8 matrix A/B, docs/BENCH_NOTES.md): true
       // dimension tables (≤ a few MB) still broadcast, but the 150 k-row
@@ -68,19 +68,10 @@ object Session {
       // Tables spreads the corpus tables across cores at load
       graft.queries.Det.SpreadConf -> "true"))
 
-  /** Input bytes of the scale-factor directory (recursive over the table
-    * files/dirs) — the signal the shuffle-partition default derives from. */
-  private def inputBytes(dir: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
-      else f.length()
-    val d = new java.io.File(dir)
-    if (d.exists()) walk(d) else 0L
-  }
-
   /** Scale-adaptive shuffle-partition default (round 15, VERDICT r14 item
     * 1; guide §2.2 "derive partitioning from input size, not a constant"):
-    * one partition per 32 MB of compressed parquet input, clamped to
+    * one partition per 32 MB of compressed parquet input (the scale-factor
+    * directory's [[Tables.onDiskBytes]]), clamped to
     * [8, cpus]. The 32 MB knee is MEASURED, tax-matched both ways
     * (BENCH_NOTES §55): at sf0.1 (17 MB → 8) shuffle=32 read +19–40% on
     * the shuffle-heavy rows (32 reducer tasks on ≤ 600 k-row stages is

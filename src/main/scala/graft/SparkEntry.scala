@@ -37,4 +37,20 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     allRegistries.collect { case (n, _, sql) if sql.nonEmpty => n -> sql }.toMap
+
+  /** The queries a main runs for a `SPARK_GRAFT_ONLY` value: all for None,
+    * [[Bench.headline]] for `headline`, else a comma-separated name list.
+    * Unregistered names throw, each named: a typo must not pass as an
+    * empty, finished run. */
+  def select(spec: Option[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    spec.fold(all) { s =>
+      val names = if (s == "headline") Bench.headline.toSet
+        else s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(all.contains).toSeq.sorted
+      if (unknown.nonEmpty)
+        throw new IllegalArgumentException(s"SPARK_GRAFT_ONLY: unknown query names: ${unknown.mkString(", ")}")
+      all.view.filterKeys(names).toMap
+    }
+  }
 }

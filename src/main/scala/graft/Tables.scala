@@ -121,12 +121,10 @@ object Tables {
       spark: SparkSession, sfDir: String, name: String, df: DataFrame): DataFrame = {
     if (!spark.conf.getOption(graft.queries.Det.SpreadConf).exists(_.toBoolean)) df
     else {
-      def bytes(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(bytes).sum else f.length()
       val cores = spark.sparkContext.defaultParallelism
       val n =
         if (name == "documents" || name == "embeddings") cores
-        else math.min(cores.toLong, bytes(new java.io.File(path(sfDir, name))) / (256L * 1024) + 1).toInt
+        else math.min(cores.toLong, onDiskBytes(path(sfDir, name)) / (256L * 1024) + 1).toInt
       // n == 1 is a pass-through, not a repartition(1) (r15): a
       // single-partition round-robin exchange adds no parallelism, costs
       // an exchange, and — measured at sf0.01 — defeats ReuseExchange
@@ -135,6 +133,15 @@ object Tables {
       // at sf0.1+ every spread table has n ≥ 2 and plans are unchanged).
       if (n <= 1) df else df.repartition(n)
     }
+  }
+
+  /** Bytes on disk under `path`: a file's length, a directory's files
+    * summed recursively, 0 when nothing is there. */
+  private[graft] def onDiskBytes(path: String): Long = {
+    def walk(f: java.io.File): Long =
+      if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
+      else f.length()
+    walk(new java.io.File(path))
   }
 
   /** Runs SQL `text` over the tables of `sfDir`: the one SQL seam.

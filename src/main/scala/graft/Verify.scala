@@ -5,14 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Dev-only subset (SparkEntry.select): re-verify a few queries without
+    // a full-suite pass. Contract runs never set it.
+    val queries = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = Session.local(Map(Tables.EventsNanosConf -> "true"))
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated query names): re-verify a
-    // single query without a full-suite pass. The driver never sets it.
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = only.fold(SparkEntry.queries)(s => SparkEntry.queries.view.filterKeys(s).toMap)
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -20,21 +17,23 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** `s` as a JSON string literal. Escapes backslash, quote, and ALL
+    * control chars (<0x20) — a tab or CR in an oracle text would
+    * otherwise make the consumer's json.load fail and silently zero the
+    * correctness check. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -1,13 +1,13 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.queries.Det
 
 /** Multimodal column plumbing (north star): image/audio/video payloads as
-  * opaque `binary` columns plus typed metadata, processed partition-wise in
-  * fixed-size batches — the Scala analog of an Arrow-batched decode UDF.
+  * opaque `binary` columns plus typed metadata, decoded partition-wise —
+  * the Scala analog of a decode UDF.
   *
   * The image path is a REAL codec round-trip (VERDICT r5 item 4): the
   * synthetic frame renders each image row as an actual PNG
@@ -46,9 +46,6 @@ object Multimodal {
       channels: Option[Int],
       n_samples: Option[Long],
       checksum_md5: String)
-
-  /** Batch size for partition-wise decode (Arrow-batch-shaped). */
-  val DecodeBatchSize = 64
 
   /** Deterministic image dimensions for doc fields: the GENERATION formula
     * the oracle recomputes in SQL and the decoded PNG header must agree
@@ -317,9 +314,9 @@ object Multimodal {
       .toDF("doc_id", "media_type", "content")
   }
 
-  /** Partition-wise, batched metadata extraction over the binary column.
-    * Runs on executors; no data moves to the driver; batches bound peak
-    * memory per task exactly like an Arrow-batched UDF would.
+  /** Partition-wise metadata extraction over the binary column. Runs on
+    * executors; no data moves to the driver; rows stream through one at a
+    * time, so a task holds one decoded row, not a batch.
     *
     * Division of labor: everything a built-in can compute stays in Catalyst
     * (md5 / octet_length are codegen'd expressions in the projection below —
@@ -343,24 +340,22 @@ object Multimodal {
         // test-pinned references, not the metadata hot path
         lazy val reader = newPngReader()
         lazy val wavReader = newWavReader()
-        rows.grouped(DecodeBatchSize).flatMap { batch =>
-          batch.map { r =>
-            if (r.media_type == "image") {
-              val (w, h) = decodePngHeader(reader, r.content)
-              MediaMeta(r.doc_id, r.media_type, r.byte_len,
-                Some(w), Some(h), None, None, None, r.checksum_md5)
-            } else {
-              val (rate, ch, n) = decodeWavWith(wavReader, r.content)
-              MediaMeta(r.doc_id, r.media_type, r.byte_len,
-                None, None, Some(rate), Some(ch), Some(n), r.checksum_md5)
-            }
+        rows.map { r =>
+          if (r.media_type == "image") {
+            val (w, h) = decodePngHeader(reader, r.content)
+            MediaMeta(r.doc_id, r.media_type, r.byte_len,
+              Some(w), Some(h), None, None, None, r.checksum_md5)
+          } else {
+            val (rate, ch, n) = decodeWavWith(wavReader, r.content)
+            MediaMeta(r.doc_id, r.media_type, r.byte_len,
+              None, None, Some(rate), Some(ch), Some(n), r.checksum_md5)
           }
         }
       }
       .toDF()
   }
 
-  /** Oracle-checkable registration: synthetic media → batched PNG decode →
+  /** Oracle-checkable registration: synthetic media → partition-wise PNG decode →
     * decoded dimensions, ordered. The oracle recomputes the generation
     * formula from the documents table — a mismatch means the real
     * encode/decode round-trip disagreed with the spec.
@@ -569,6 +564,11 @@ object Multimodal {
       .toDF("doc_id", "ahash")
   }
 
+  /** Band `b` (0–3) of the aHash: its `b`-th 16-bit slice, the hamming-LSH
+    * band key. */
+  private def ahashBand(b: Int): Column =
+    shiftright(col("ahash"), 16 * b).bitwiseAND(lit(0xffffL))
+
   /** Registered query: per-image aHash + its 4 hamming-LSH band keys over
     * the corpus's synthetic images, ordered — the INDEX an image-dedup
     * deployment ships per corpus version. Rows-only check by design (no
@@ -581,7 +581,7 @@ object Multimodal {
     val hashes = imageAhash(spark, syntheticMedia(spark, sf, Some("image")))
     (0 until 4)
       .foldLeft(hashes) { (df, b) =>
-        df.withColumn(s"band$b", shiftright(col("ahash"), 16 * b).bitwiseAND(lit(0xffffL)))
+        df.withColumn(s"band$b", ahashBand(b))
       }
       .transform(Det.sortedBy(col("doc_id")))
   }
@@ -601,7 +601,7 @@ object Multimodal {
       explode(array((0 until 4).map(b =>
         struct(
           lit(b).as("band"),
-          shiftright(col("ahash"), 16 * b).bitwiseAND(lit(0xffffL)).as("key"))): _*)).as("bk"))
+          ahashBand(b).as("key"))): _*)).as("bk"))
       .select(col("doc_id"), col("ahash"), col("bk.band").as("band"), col("bk.key").as("key"))
     val a = bands.select(col("doc_id").as("doc_a"), col("ahash").as("ahash_a"), col("band"), col("key"))
     val b = bands.select(col("doc_id").as("doc_b"), col("ahash").as("ahash_b"), col("band"), col("key"))

@@ -22,9 +22,6 @@ import graft.Tables
   */
 object Corpus {
 
-  /** The family-wide tokenizer — shared with TextOps (see its scaladoc). */
-  private def tokensCol = TextOps.tokensCol
-
   // ----------------------------------------------------- chunking
   /** Fixed-size token chunking with overlap (context-window preparation):
     * 32-token chunks, stride 24 (8-token overlap). One output row per
@@ -32,7 +29,7 @@ object Corpus {
     */
   def docChunking(spark: SparkSession, sf: String): DataFrame =
     Tables.documents(spark, sf)
-      .select(col("doc_id"), tokensCol.as("t"))
+      .select(col("doc_id"), TextOps.tokensCol.as("t"))
       .select(
         col("doc_id"),
         explode(expr(
@@ -78,7 +75,7 @@ object Corpus {
     */
   def repetitionScore(spark: SparkSession, sf: String): DataFrame = {
     val bigrams = Tables.documents(spark, sf)
-      .select(col("doc_id"), tokensCol.as("t"))
+      .select(col("doc_id"), TextOps.tokensCol.as("t"))
       .where(size(col("t")) >= 2)
       .select(col("doc_id"), explode(expr(TextOps.wordNgramsSql(2))).as("bg"))
     bigrams
@@ -130,7 +127,7 @@ object Corpus {
     // per row; isolated sf1 1.23 → 0.80 s.
     val shingles = Tables
       .documents(spark, sf)
-      .select(col("doc_id"), tokensCol.as("t"))
+      .select(col("doc_id"), TextOps.tokensCol.as("t"))
       .where(size(col("t")) >= 3)
       .select(col("doc_id"),
         explode(graft.functions.DistinctNgrams.distinct_ngrams(col("t"), 3)).as("sh"))

@@ -130,9 +130,7 @@ object CorpusPrep {
     val race = Tables.documents(spark, sf)
       .select(col("lang"), col("doc_id"), col("n_chars"),
         (round(
-          log((conv(
-            substring(md5(concat(col("doc_id").cast("string"), lit("#wsamp:13")).cast("binary")), 1, 13),
-            16, 10).cast("long") + lit(1)) / lit(4503599627370496.0)), 8)
+          log((Det.md5Draw52("#wsamp:13") + lit(1)) / lit(4503599627370496.0)), 8)
           / col("n_chars")).as("race_key"))
     val partial = race
       .groupBy(col("lang"), pmod(col("doc_id"), lit(64)).as("salt"))

@@ -63,6 +63,15 @@ object Det {
   /** A fixed-point sum back as double: `CAST(s AS DOUBLE) / Fx`. */
   def fromFx(s: Column): Column = s.cast("double") / lit(Fx)
 
+  /** A row's 52-bit uniform draw for `salt`: the first 13 hex digits of
+    * `md5(doc_id || salt)` as a long in [0, 2^52). Each caller maps it into
+    * its own interval. Oracle twin: `CAST(('0x' || substring(md5(doc_id ||
+    * salt), 1, 13)) AS BIGINT)`. */
+  def md5Draw52(salt: String): Column =
+    conv(
+      substring(md5(concat(col("doc_id").cast("string"), lit(salt)).cast("binary")), 1, 13),
+      16, 10).cast("long")
+
   /** `df` sorted by `keys` (the contract ORDER BY), behind a keyed exchange
     * on the first key.
     *

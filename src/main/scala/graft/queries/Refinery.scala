@@ -39,9 +39,6 @@ import graft.Tables
   */
 object Refinery {
 
-  /** The family-wide tokenizer — shared with TextOps (see its scaladoc). */
-  private def tokensCol = TextOps.tokensCol
-
   // ------------------------------------------------ line-level dedup
   /** Line-level boilerplate removal with document rebuild: segment each
     * document into consecutive 8-token "lines", drop every line whose
@@ -155,7 +152,7 @@ object Refinery {
     */
   def winnowFingerprints(spark: SparkSession, sf: String): DataFrame =
     Tables.documents(spark, sf)
-      .select(col("doc_id"), tokensCol.as("t"))
+      .select(col("doc_id"), TextOps.tokensCol.as("t"))
       .where(size(col("t")) >= 6)
       .select(col("doc_id"), expr(TextOps.wordNgramsSql(3, hashed = true)).as("hs"))
       .select(col("doc_id"), col("hs"), expr(
@@ -192,7 +189,7 @@ object Refinery {
     * `docs`. Oracle twin: the `wf` CTE. */
   private def wordFreq(docs: DataFrame): DataFrame =
     docs
-      .select(explode(tokensCol).as("w"))
+      .select(explode(TextOps.tokensCol).as("w"))
       .where(col("w") =!= "")
       .groupBy(col("w"))
       .agg(count(lit(1)).as("wn"))

@@ -552,10 +552,7 @@ object Retrieval {
     * across reruns, retries and cluster layouts.
     */
   def dsirImportanceSample(spark: SparkSession, sf: String): DataFrame = {
-    val h = conv(
-      substring(md5(concat(col("doc_id").cast("string"), lit("#dsir:13")).cast("binary")), 1, 13),
-      16, 10).cast("long")
-    val u = (h + lit(1)).cast("double") / lit(4503599627370497.0)
+    val u = (Det.md5Draw52("#dsir:13") + lit(1)).cast("double") / lit(4503599627370497.0)
     dsirDocScores(spark, sf)
       .withColumn("race_fx",
         col("score_fx") +

@@ -10,20 +10,25 @@ import graft.SparkEntry
   * loop), not at runtime. Plans are built in the bench posture
   * ([[graft.Session.bench]]: AQE off, so the static plan shows codegen
   * spans and exchange reuse; runtime plans can only improve on it), on
-  * uncached parquet, because the audit reads the scans' ReadSchema.
+  * uncached parquet, because the audit reads the scans' ReadSchema — and
+  * the formatted plans it writes with an out dir (`<outDir>/<query>.txt`)
+  * are the evidence record for PushedFilters/ReadSchema claims, which
+  * Bench's InMemoryTableScan would hide (ADVICE r14 item 4).
+  *
+  * Usage: runMain graft.tools.PlanAudit <sfDir> [<outDir>]; SPARK_GRAFT_ONLY
+  * picks the queries as in Bench.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val sfDir = args(0)
+    val outDir = args.lift(1)
+    val queries = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = graft.Session.bench(sfDir)
-    // same subset knob as Bench: SPARK_GRAFT_ONLY=a,b,c audits those rows
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    outDir.foreach(new java.io.File(_).mkdirs())
+    queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString()
+        val df = fn(spark, sfDir)
+        val plan = df.queryExecution.executedPlan.toString()
         def n(pat: String) = pat.r.findAllIn(plan).size
         val joins = Seq(
           "BroadcastHashJoin" -> n("BroadcastHashJoin"),
@@ -46,16 +51,27 @@ object PlanAudit {
         // filter Spark rewrites to partial WindowGroupLimit (wgl = count
         // of map-side pre-limits in the plan).
         val wgl = n("WindowGroupLimit [^\\n]*Partial")
-        val windowKeys = "windowspecdefinition\\((.*?)specifiedwindowframe"
-          .r.findAllMatchIn(plan)
-          .map(_.group(1).split(", ")
-            .filterNot(t => t.contains(" ASC") || t.contains(" DESC") || t.trim.isEmpty)
-            .map(_.trim.takeWhile(_ != '#')).filter(_.nonEmpty).mkString("+"))
-          .map(k => if (k.isEmpty) "GLOBAL" else k)
-          .toSeq.distinct
-        println(f"$name%-28s shuffles=$exchanges%-3d codegenSpans=$codegen%-3d scanCols=${fullScans.mkString("/")}%-12s windows=[${windowKeys.mkString(",")}] wgl=$wgl%-2d joins=[$joins]")
+        val windows = windowKeys(plan)
+          .map(k => if (k.isEmpty) "GLOBAL" else k.mkString("+")).distinct
+        println(f"$name%-28s shuffles=$exchanges%-3d codegenSpans=$codegen%-3d scanCols=${fullScans.mkString("/")}%-12s windows=[${windows.mkString(",")}] wgl=$wgl%-2d joins=[$joins]")
+        outDir.foreach { d =>
+          val w = new java.io.PrintWriter(s"$d/$name.txt")
+          try w.write(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)) finally w.close()
+        }
       } catch { case e: Throwable => println(s"$name AUDIT FAILED: ${e.getMessage.take(100)}") }
     }
     spark.stop()
   }
+
+  /** Each window spec's partition columns in an executed plan's tree
+    * string (order columns carry ASC/DESC and are left out; an empty list
+    * is a global window). */
+  def windowKeys(plan: String): Seq[Seq[String]] =
+    "windowspecdefinition\\((.*?)specifiedwindowframe".r
+      .findAllMatchIn(plan)
+      .map(_.group(1).split(", ").toSeq
+        .filterNot(t => t.contains(" ASC") || t.contains(" DESC") || t.trim.isEmpty)
+        .map(_.trim.takeWhile(_ != '#')).filter(_.nonEmpty))
+      .toSeq
 }

@@ -40,11 +40,7 @@ object PlanCensus {
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
         executions.add(s"-- $funcName FAILED: ${e.getClass.getName}\n${norm(qe)}")
     })
-    Tables.names.foreach { n =>
-      val df = Tables.table(spark, sf, n)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      df.count()
-    }
+    Bench.cacheTables(spark, sf)
     for (name <- SparkEntry.queries.keys.toSeq.sorted; pass <- Seq("cold", "warm"))
       Files.writeString(out.resolve(s"$name.$pass.txt"),
         norm(SparkEntry.queries(name)(spark, sf).queryExecution), UTF_8)

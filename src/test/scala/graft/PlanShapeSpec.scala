@@ -37,16 +37,6 @@ class PlanShapeSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(staticSession, Sf001).queryExecution.executedPlan.toString()
 
-  /** windowspecdefinition partition columns (order columns carry ASC/DESC
-    * markers and are filtered out) — the same extraction PlanAudit prints. */
-  private def windowKeys(p: String): Seq[String] =
-    "windowspecdefinition\\((.*?)specifiedwindowframe".r
-      .findAllMatchIn(p)
-      .flatMap(_.group(1).split(", ")
-        .filterNot(t => t.contains(" ASC") || t.contains(" DESC") || t.trim.isEmpty)
-        .map(_.trim.takeWhile(_ != '#')).filter(_.nonEmpty))
-      .toSeq
-
   /** The report's 7-screen union plan (round 15: the registered query
     * roots at a localCheckpoint of this frame, so the screens' shapes must
     * be pinned on the union builder itself). */
@@ -65,7 +55,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "dedup_embedding_doc_probe" -> plan("dedup_embedding_doc_probe"),
       "dedup_simhash" -> plan("dedup_simhash"))
     for ((q, p) <- plans) {
-      val keys = windowKeys(p)
+      val keys = graft.tools.PlanAudit.windowKeys(p).flatten
       assert(!keys.exists(k => k == "simhash" || k == "bkt"),
         s"$q plans a window partitioned on a bounded signature key: $keys")
     }

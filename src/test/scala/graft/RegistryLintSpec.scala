@@ -142,13 +142,13 @@ class RegistryLintSpec extends AnyFunSuite {
     val builder = "SparkSession\\s*\\.\\s*builder\\s*\\(".r
     val cpusVar = "\"SPARK_GRAFT_CPUS\""
     // The option surface. Only the mains and the tools read the environment
-    // or JVM properties, and only the six variables below; the library reads
+    // or JVM properties, and only the five variables below; the library reads
     // none but IndexStore's temp root, a deployment path. The only session
     // confs of the library's own are the two below.
     val envRead = "\\b(sys\\s*\\.\\s*(env|props)|System\\s*\\.\\s*(getenv|getProperty))".r
     val envReaders = Seq("graft/Session.scala", "graft/Bench.scala", "graft/Verify.scala")
     val envVar = "\"(SPARK_GRAFT_\\w+)\"".r
-    val envVars = Set("CPUS", "SF_DIR", "ITERS", "ONLY", "FLOORS", "VERIFY_ONLY").map("SPARK_GRAFT_" + _)
+    val envVars = Set("CPUS", "SF_DIR", "ITERS", "ONLY", "FLOORS").map("SPARK_GRAFT_" + _)
     val tmpRoot = "graft/ops/IndexStore.scala" -> "sys.props(\"java.io.tmpdir\")"
     val graftKey = "\"(spark\\.graft\\.[^\"]*)\"".r
     val graftKeys = Set(
@@ -167,7 +167,7 @@ class RegistryLintSpec extends AnyFunSuite {
           else envRead.findFirstIn(if (rel == tmpRoot._1) code.replace(tmpRoot._2, "") else code)
         read.map(r => s"$r (an option read outside the mains and tools)").toSeq ++
           envVar.findAllMatchIn(code).map(_.group(1)).filterNot(envVars)
-            .map(v => s"$v (an environment option beyond the six in use)") ++
+            .map(v => s"$v (an environment option beyond the five in use)") ++
           graftKey.findAllMatchIn(code).map(_.group(1)).filterNot(k => graftKeys(rel -> k))
             .map(k => s"\"$k\" (a session conf beyond Det.SpreadConf and Vectors.AllPairsMaxRowsConf)")
       }
@@ -204,6 +204,7 @@ class RegistryLintSpec extends AnyFunSuite {
     val root = Paths.get("src/main/scala")
     val inDet = (rel: String) => rel == "graft/queries/Det.scala"
     val inTextOps = (rel: String) => rel == "graft/queries/TextOps.scala"
+    val inSparkEntry = (rel: String) => rel == "graft/SparkEntry.scala"
     // a call's argument list, up to two levels of nested parentheses
     val args = "(?:[^()]|\\((?:[^()]|\\([^()]*\\))*\\))*"
     // (pattern, where it may appear, what to use instead)
@@ -217,7 +218,8 @@ class RegistryLintSpec extends AnyFunSuite {
       (s"\\.repartition\\($args\\)\\s*\\.orderBy\\(".r, inDet, "Det.sortedBy"),
       ("filter\\((TextOps\\.)?tokensCol\\b".r, inTextOps, "TextOps.wordsCol"),
       ("element_at\\(t, i \\+ 1\\)".r, inTextOps, "TextOps.wordNgramsSql"),
-      ("'the','and','of'".r, inTextOps, "TextOps.Stopwords / TextOps.StopwordsSql"))
+      ("'the','and','of'".r, inTextOps, "TextOps.Stopwords / TextOps.StopwordsSql"),
+      ("filterKeys\\(".r, inSparkEntry, "SparkEntry.select"))
     def stripComments(s: String): String =
       s.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
     val offenders = for {
